@@ -29,6 +29,7 @@ from dbsync_spark.monitor.health import (
 from dbsync_spark.operators.retention import sweep
 from dbsync_spark.operators.status import status_counts
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA, SYNC_STATUS_SCHEMA
+from dbsync_spark.sources.tables import read_state
 from dbsync_spark.streaming.pipeline import SyncPipeline
 
 
@@ -138,26 +139,29 @@ class DbSyncApp:
 
     # -- control loops -------------------------------------------------------
     def _status_df(self, source_db: str):
-        path = os.path.join(self.base_dir, "status", source_db)
-        try:
-            return self.spark.read.schema(SYNC_STATUS_SCHEMA).parquet(path)
-        except Exception:  # noqa: BLE001 - empty dir on first run
-            return self.spark.createDataFrame([], SYNC_STATUS_SCHEMA)
+        return read_state(self.spark,
+                          os.path.join(self.base_dir, "status", source_db),
+                          read_schema=SYNC_STATUS_SCHEMA,
+                          empty_schema=SYNC_STATUS_SCHEMA)
 
     def sync_state(self) -> SyncState:
-        """Global pending/blocked/error/success fold across databases (A1)."""
+        """Global pending/blocked/error/success fold across databases (A1).
+        Holds the control lock, as retention_pass does, so no file it lists
+        is unlinked or swapped before it collects; an HTTP read therefore
+        waits out a running control tick (retry, retention or monitor)."""
         total = SyncState()
-        for db in {r.source_db for r in self.config.syncs}:
-            log_path = os.path.join(self.base_dir, "log", db)
-            try:
-                log = self.spark.read.schema(SYNC_DATA_SCHEMA).parquet(log_path)
-            except Exception:  # noqa: BLE001
-                continue
-            rows = status_counts(log, self._status_df(db)).collect()
-            part = SyncState.from_status_counts(
-                [{"status": r["status"], "cnt": r["cnt"]} for r in rows])
-            for f_ in ("pending", "blocked", "error", "success", "others"):
-                setattr(total, f_, getattr(total, f_) + getattr(part, f_))
+        with self._control_lock:
+            for db in {r.source_db for r in self.config.syncs}:
+                log = read_state(self.spark,
+                                 os.path.join(self.base_dir, "log", db),
+                                 read_schema=SYNC_DATA_SCHEMA)
+                if log is None:
+                    continue
+                rows = status_counts(log, self._status_df(db)).collect()
+                part = SyncState.from_status_counts(
+                    [{"status": r["status"], "cnt": r["cnt"]} for r in rows])
+                for f_ in ("pending", "blocked", "error", "success", "others"):
+                    setattr(total, f_, getattr(total, f_) + getattr(part, f_))
         return total
 
     def monitor_pass(self) -> list[tuple]:
@@ -194,23 +198,24 @@ class DbSyncApp:
         cutoff_expr = F.lit(now) if now is not None else F.current_timestamp()
         cutoff = cutoff_expr - F.expr(
             f"INTERVAL {self.config.sys.dataKeepHours} HOURS")
-        for db in {r.source_db for r in self.config.syncs}:
-            log_path = os.path.join(self.base_dir, "log", db)
-            recover_sweep(log_path)
-            try:
-                log = self.spark.read.schema(SYNC_DATA_SCHEMA).parquet(log_path)
-            except Exception:  # noqa: BLE001
-                continue
-            if mode == "segment":
-                for f in expired_segments(log, self._status_df(db), cutoff):
-                    try:
-                        os.remove(f)
-                    except FileNotFoundError:
-                        pass  # another tick won the race; outcome identical
-            else:
-                kept = sweep(log, self._status_df(db), cutoff)
-                sweep_into_place(kept, log_path)
-        self.status_compaction_pass()
+        with self._control_lock:  # see sync_state
+            for db in {r.source_db for r in self.config.syncs}:
+                log_path = os.path.join(self.base_dir, "log", db)
+                recover_sweep(log_path)
+                log = read_state(self.spark, log_path,
+                                 read_schema=SYNC_DATA_SCHEMA)
+                if log is None:
+                    continue
+                if mode == "segment":
+                    for f in expired_segments(log, self._status_df(db), cutoff):
+                        try:
+                            os.remove(f)
+                        except FileNotFoundError:
+                            pass  # another tick won the race; same outcome
+                else:
+                    kept = sweep(log, self._status_df(db), cutoff)
+                    sweep_into_place(kept, log_path)
+            self.status_compaction_pass()
 
     def status_compaction_pass(self, max_files: int | None = None,
                                target_files: int = 8) -> int:

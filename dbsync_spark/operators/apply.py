@@ -22,7 +22,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -42,10 +42,9 @@ def parse_changes(log: DataFrame, payload_schema: StructType) -> DataFrame:
     ).select("id", "operation", "row.*")
 
 
-def split_corrupt(log: DataFrame, data_col: str = "data"
-                  ) -> tuple[DataFrame, DataFrame]:
-    """(good, bad): route structurally invalid JSON payloads to a
-    dead-letter frame instead of silently null-filling them.
+def valid_payload(data_col: str = "data") -> Column:
+    """True where the JSON payload is structurally valid; a change whose
+    payload is not must be dead-lettered instead of silently null-filled.
 
     The reference treats an unparseable change as an apply failure (ack
     ERR, sync/DataSyncer.scala:156-167) — Jackson throws at
@@ -54,10 +53,8 @@ def split_corrupt(log: DataFrame, data_col: str = "data"
     MERGE it as real data — a silent-corruption hazard. Validity test is
     try_parse_json (variant parse -> NULL on malformed), which matches
     DuckDB's json_valid() on structural validity exactly, is pure codegen
-    (no Python), and folds into the scan — the split costs one predicate,
-    no extra pass."""
-    valid = F.try_parse_json(F.col(data_col)).isNotNull()
-    return log.where(valid), log.where(~valid | F.col(data_col).isNull())
+    (no Python), and folds into the scan — one predicate, no extra pass."""
+    return F.try_parse_json(F.col(data_col)).isNotNull()
 
 
 def last_writer_wins(changes: DataFrame, key_cols: list[str],

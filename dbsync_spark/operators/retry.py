@@ -42,28 +42,33 @@ def key_hash(key: Column) -> Column:
     return F.xxhash64(key)
 
 
-def _run_pass(pending: DataFrame) -> DataFrame:
-    """One retry pass over the not-yet-OK rows: per key-hash group in id
-    order, rows before the first failing row become OK, the first failing
-    row becomes ERR (tries+1), the rest BLK. Rows already OK are never
-    re-applied (ack-once, DataSyncer.scala:141)."""
-    w = Window.partitionBy("key_hash").orderBy("id")
-    ranked = pending.withColumn("_rn", F.row_number().over(w))
+# private state columns: a pass can run over a frame with payload columns
+_STATE_NAMES = {"_key_hash": "key_hash", "_fail_until": "fail_until",
+                "_tries": "tries", "_status": "status"}
+
+
+def run_pass(rows: DataFrame) -> DataFrame:
+    """One retry pass over rows carrying `id`, `_key_hash`, `_fail_until`
+    and `_tries`: per key-hash group in id order, rows before the first
+    failing row (`_tries < _fail_until`) become OK, the first failing row
+    becomes ERR (`_tries`+1), the rest BLK — written to `_status`. Every
+    other column rides along. Rows already OK are never re-applied
+    (ack-once, DataSyncer.scala:141)."""
+    group = Window.partitionBy("_key_hash")
+    ranked = rows.withColumn("_rn", F.row_number().over(group.orderBy("id")))
     # first failing rank per group (NULL if the whole chain succeeds)
     ranked = ranked.withColumn(
         "_ffr",
-        F.min(F.when(F.col("tries") < F.col("fail_until"), F.col("_rn"))).over(
-            Window.partitionBy("key_hash")),
-    )
-    return ranked.select(
-        "id", "key_hash", "fail_until",
-        (F.col("tries") + F.when(F.col("_rn") == F.col("_ffr"), 1).otherwise(0)
-         ).cast("int").alias("tries"),
-        F.when(F.col("_ffr").isNull() | (F.col("_rn") < F.col("_ffr")), STATUS_OK)
-        .when(F.col("_rn") == F.col("_ffr"), STATUS_ERR)
-        .otherwise(STATUS_BLK)
-        .alias("status"),
-    )
+        F.min(F.when(F.col("_tries") < F.col("_fail_until"), F.col("_rn")))
+        .over(group))
+    first = F.col("_rn") == F.col("_ffr")
+    return ranked.withColumns({
+        "_tries": (F.col("_tries") + F.when(first, 1).otherwise(0)).cast("int"),
+        "_status": F.when(F.col("_ffr").isNull()
+                          | (F.col("_rn") < F.col("_ffr")), STATUS_OK)
+        .when(first, STATUS_ERR)
+        .otherwise(STATUS_BLK),
+    }).drop("_rn", "_ffr")
 
 
 def apply_with_retry(changes: DataFrame, key: Column, fail_until: Column,
@@ -83,22 +88,23 @@ def apply_with_retry(changes: DataFrame, key: Column, fail_until: Column,
         initial_tries = F.lit(0)
     state = changes.select(
         F.col("id"),
-        key_hash(key).alias("key_hash"),
-        fail_until.cast("int").alias("fail_until"),
-        initial_tries.cast("int").alias("tries"),
-        F.lit(STATUS_PENDING).alias("status"),
+        key_hash(key).alias("_key_hash"),
+        fail_until.cast("int").alias("_fail_until"),
+        initial_tries.cast("int").alias("_tries"),
+        F.lit(STATUS_PENDING).alias("_status"),
     ).localCheckpoint()
-    done = state.where(F.col("status") == STATUS_OK)  # empty at start
-    pending = state.where(F.col("status") != STATUS_OK)
+    done = state.where(F.col("_status") == STATUS_OK)  # empty at start
+    pending = state
     passes = 0
     while passes < max_passes:
-        result = _run_pass(pending).localCheckpoint()
+        result = run_pass(pending).localCheckpoint()
         passes += 1
-        done = done.unionByName(result.where(F.col("status") == STATUS_OK))
-        pending = result.where(F.col("status") != STATUS_OK)
-        if pending.isEmpty():
+        done = done.unionByName(result.where(F.col("_status") == STATUS_OK))
+        pending = result.where(F.col("_status") != STATUS_OK)
+        # after the last allowed pass an emptiness job changes nothing
+        if passes == max_passes or pending.isEmpty():
             break
-    return done.unionByName(pending), passes
+    return done.unionByName(pending).withColumnsRenamed(_STATE_NAMES), passes
 
 
 def converged_apply(changes: DataFrame, state: DataFrame) -> DataFrame:

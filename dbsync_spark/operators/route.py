@@ -63,16 +63,14 @@ def fanout_targets(log: DataFrame, target_col: str = "targetDb") -> DataFrame:
     return log.withColumn(target_col, F.explode(F.split(F.col(target_col), ",")))
 
 
-def apply_conditions(changes: DataFrame, rule: SyncRule,
-                     op_col: str = "operation") -> DataFrame:
-    """Per-op condition filter over the decoded row image. NOTE the
-    reference's MySQL impl gates U/D on insertCondition
-    (dbopt/MysqlOperation.scala:160,202) — a reference bug; we implement
-    the documented per-op semantics."""
+def condition(rule: SyncRule, op_col: str = "operation"):
+    """The rule's per-op condition as one boolean Column over the decoded
+    row image. NOTE the reference's MySQL impl gates U/D on
+    insertCondition (dbopt/MysqlOperation.scala:160,202) — a reference
+    bug; we implement the documented per-op semantics."""
     op = F.col(op_col)
-    keep = (
+    return (
         (op == "I") & F.expr(rule.insert_condition)
         | (op == "U") & F.expr(rule.update_condition)
         | (op == "D") & F.expr(rule.delete_condition)
     )
-    return changes.where(keep)

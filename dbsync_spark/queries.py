@@ -24,7 +24,7 @@ from dbsync_spark.operators.apply import last_writer_wins, parse_changes
 from dbsync_spark.operators.partition import (assign_partitions,
                                               assign_partitions_portable)
 from dbsync_spark.operators.poll import poll_batch
-from dbsync_spark.operators.route import SyncRule, apply_conditions, fanout_targets, route, rules_df
+from dbsync_spark.operators.route import SyncRule, condition, fanout_targets, route, rules_df
 from dbsync_spark.operators.window_agg import hourly_counts
 from dbsync_spark.sources.tables import read_table
 
@@ -151,7 +151,7 @@ def q_cond_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes = parse_changes(log, EVENTS_PAYLOAD_SCHEMA)
     rule = SyncRule("db1", "public", "events", ("event_id",),
                     insert_condition="value > 0")
-    return apply_conditions(changes, rule).select("id", "event_id", "value")
+    return changes.where(condition(rule)).select("id", "event_id", "value")
 
 
 @_register(
@@ -1748,7 +1748,7 @@ def q_corrupt_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's expected split is purely id-determined); validity =
     try_parse_json, which matches DuckDB json_valid on structural
     validity."""
-    from dbsync_spark.operators.apply import split_corrupt
+    from dbsync_spark.operators.apply import valid_payload
 
     log = build_log_orders(spark, sf_dir)
     mangled = log.withColumn(
@@ -1756,11 +1756,9 @@ def q_corrupt_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("id") % 97 == 0,
                F.expr("substring(data, 1, length(data) - 1)"))
         .otherwise(F.col("data")))
-    good, bad = split_corrupt(mangled)
-    return (good.select(F.col("id").alias("dataId"), F.lit("OK").alias("status"))
-            .unionByName(
-                bad.select(F.col("id").alias("dataId"),
-                           F.lit("ERR").alias("status"))))
+    return mangled.select(
+        F.col("id").alias("dataId"),
+        F.when(valid_payload(), "OK").otherwise("ERR").alias("status"))
 
 
 # Analytic surface beyond the reference (window functions, semi/anti joins,

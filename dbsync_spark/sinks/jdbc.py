@@ -366,7 +366,8 @@ class JdbcTable:
     executemany batching).
 
     Semantics: each batch is reduced last-writer-per-key (max change
-    id), then delivered as watermark-guarded upserts and deletes — every
+    id) by merge_snapshot, the reducer of the parquet targets, then
+    delivered as watermark-guarded upserts and deletes — every
     statement carries the key's winning change id and applies only when
     it ADVANCES the stored `_last_id`, so replaying a micro-batch after
     a crash (or re-delivering any older change) can never clobber newer
@@ -408,23 +409,22 @@ class JdbcTable:
                       pinned: bool = False) -> None:
         from pyspark.sql import functions as F
 
+        from dbsync_spark.operators.apply import (DELETED_COL, LAST_ID_COL,
+                                                  OP_DELETE, OP_INSERT,
+                                                  merge_snapshot)
+
         if key_cols is not None and list(key_cols) != self.key_cols:
             raise ValueError(f"target is keyed on {self.key_cols}, "
                              f"cannot merge on {list(key_cols)}")
         keys = self.key_cols
         payload_cols = [c for c in changes.columns
                         if c not in ("id", "operation")]
-        non_keys = [c for c in payload_cols if c not in keys]
-        winner = changes.groupBy(*keys).agg(
-            F.max_by(F.struct(F.col("operation").alias("operation"),
-                              *[F.col(c).alias(c) for c in non_keys]),
-                     F.col("id")).alias("_w"),
-            F.max("id").alias(self.watermark_col))
-        rows = winner.select(
-            *keys,
-            *[F.col(f"_w.{c}").alias(c) for c in non_keys],
-            self.watermark_col,
-            F.col("_w.operation").alias("operation"))
+        winners = merge_snapshot(None, changes, keys)
+        rows = winners.select(
+            *payload_cols,
+            F.col(LAST_ID_COL).alias(self.watermark_col),
+            F.when(F.col(DELETED_COL), OP_DELETE).otherwise(OP_INSERT)
+            .alias("operation"))
         write_upserts(
             rows.coalesce(self.n_writers),
             dialect=self.dialect, url=self.url, schema=self.schema,

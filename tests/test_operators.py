@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 from dbsync_spark.operators.poll import mark_polled, poll_batch
-from dbsync_spark.operators.route import SyncRule, apply_conditions
+from dbsync_spark.operators.route import SyncRule, condition
 from dbsync_spark.operators.status import ack
 from tests.compare import assert_matches
 
@@ -50,7 +50,7 @@ def test_per_op_conditions(spark):
                     insert_condition="value > 0",
                     update_condition="value > 0",
                     delete_condition="1=1")
-    kept = sorted(r["id"] for r in apply_conditions(df, rule).collect())
+    kept = sorted(r["id"] for r in df.where(condition(rule)).collect())
     # D passes unconditionally; negative I/U are filtered (per-op semantics,
     # not the reference's MySQL bug of reusing insertCondition)
     assert kept == [1, 3, 5]

@@ -29,7 +29,7 @@ def test_streaming_with_failures_then_retry_converges(spark, sf_dir):
         spark, rule, ORDERS_PAYLOAD_SCHEMA,
         log_path=f"{workdir}/log", target_path=f"{workdir}/target",
         status_path=f"{workdir}/status", checkpoint_path=f"{workdir}/ckpt",
-        failure_policy=_fail_once_policy, in_batch_retries=1)
+        failure_policy=_fail_once_policy)
     pipe.run_to_completion()
 
     status1 = current_status(spark.read.parquet(f"{workdir}/status"))
@@ -81,7 +81,7 @@ def test_max_retry_dead_letters(spark, sf_dir):
         spark, rule, ORDERS_PAYLOAD_SCHEMA,
         log_path=f"{workdir}/log", target_path=f"{workdir}/target",
         status_path=f"{workdir}/status", checkpoint_path=f"{workdir}/ckpt",
-        failure_policy=always_fail, in_batch_retries=1, max_retry=2)
+        failure_policy=always_fail, max_retry=2)
     pipe.run_to_completion()
 
     ticks = 0
