@@ -104,13 +104,25 @@ DELETED_COL = "_deleted"
 
 def merge_snapshot(existing: DataFrame | None, changes: DataFrame,
                    key_cols: list[str], id_col: str = "id",
-                   op_col: str = "operation") -> DataFrame:
+                   op_col: str = "operation",
+                   cluster: tuple[str, int] | None = None) -> DataFrame:
     """Cross-batch MERGE that stays correct under replay and out-of-order
     micro-batches: the snapshot carries the winning log id per key
     (_last_id) and keeps deletes as tombstones (_deleted), so re-applying
     an already-seen batch is a no-op and an older change can never clobber
     a newer row or resurrect a deleted one — the streaming analog of the
-    reference's strict per-key ordering. Read through `live_rows`."""
+    reference's strict per-key ordering. Read through `live_rows`.
+
+    `cluster=(col, n)` names a column both inputs carry that is a function
+    of the keys (a hash bucket): the union is hash-partitioned on it into
+    n partitions ONCE and it leads the group keys, so the reduce reuses
+    that exchange and the result stays partitioned on it — a writer that
+    partitions by the same column adds no second shuffle."""
+    if cluster is not None:
+        cluster_col, n_partitions = cluster
+        if existing is not None and cluster_col not in existing.columns:
+            raise ValueError(f"existing snapshot lacks {cluster_col!r}")
+        key_cols = [cluster_col, *key_cols]
     payload_cols = [c for c in changes.columns if c not in (id_col, op_col)]
     incoming = changes.select(id_col, op_col, *payload_cols)
     if existing is not None:
@@ -126,6 +138,8 @@ def merge_snapshot(existing: DataFrame | None, changes: DataFrame,
               for c in payload_cols],
         )
         incoming = base.unionByName(incoming)
+    if cluster is not None:
+        incoming = incoming.repartition(n_partitions, cluster_col)
     winner = incoming.groupBy(*key_cols).agg(
         F.max_by(
             F.struct(F.col(op_col).alias(op_col),

@@ -32,6 +32,10 @@ SCALE_CONFS = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128MB",
     # Skewed-partition splitting thresholds (AQE skew join is already on).
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256MB",
+    # Spark's default, for an object store: a read naming more than 32
+    # paths lists them in a Spark job, since a LIST call costs tens of ms
+    # there. get_spark() lists on the driver (POSIX paths, SCALE.md §12).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "32",
 }
 
 
@@ -89,6 +93,15 @@ def get_spark(app_name: str = "dbsync-spark", shuffle_partitions: int | None = N
         .config("spark.driver.maxResultSize",
                 os.environ.get("SPARK_GRAFT_MAX_RESULT", "4g"))
         .config("spark.ui.enabled", "false")
+        # list files on the driver however many paths a read names: a
+        # stream's trigger reads one path per admitted log file and a
+        # bucketed merge one per touched bucket, and past 32 paths Spark
+        # would list them in a job of one task per path. Log dirs, state
+        # roots and targets are POSIX paths (SCALE.md §12), where a stat
+        # costs microseconds and a task milliseconds; SCALE_CONFS restores
+        # the default for an object store
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1))
         # executors import dbsync_spark by reference inside Pandas-UDF
         # closures; make that a library guarantee, not deployment config
         .config("spark.executorEnv.PYTHONPATH", executor_pythonpath())

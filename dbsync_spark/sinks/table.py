@@ -36,6 +36,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 
 # --- scale-adaptive bucket sizing (OPTIMIZATION r11, guide §2/§6) -------
@@ -249,10 +250,16 @@ class BucketedTable:
 
         1. bucket the batch, collect the touched bucket ids (<= n_buckets
            small ints — the only driver traffic);
-        2. read ONLY those partitions of the existing target (partition
-           pruning on the directory layout);
-        3. merge_snapshot over that slice, re-bucket the result (every
-           output key hashes back into a touched bucket);
+        2. read ONLY those partitions of the existing target, as explicit
+           paths, with the schema the batch implies (its payload columns,
+           `_last_id` with the id's type, `_deleted`): no footer-merge
+           job. The parquet reader null-fills a column an older bucket
+           lacks, skips one the batch no longer carries, and fails on a
+           column whose stored type conflicts with the batch's;
+        3. merge_snapshot over the union of that slice and the batch,
+           clustered on the bucket column: ONE exchange (one partition per
+           touched bucket) feeds both the LWW reduce and the write, so
+           each touched bucket comes out as ~1 file;
         4. write the merged buckets to a STAGING dir (one write, reading
            the live files normally — no self-overwrite), then swap each
            touched bucket in with two atomic renames (live -> .old,
@@ -271,8 +278,6 @@ class BucketedTable:
         slice plus a per-partition staging commit — measured ~2x slower
         per batch locally.)
         """
-        from dbsync_spark.operators.apply import merge_snapshot
-
         if key_cols is not None and list(key_cols) != self.key_cols:
             raise ValueError(f"table is bucketed on {self.key_cols}, "
                              f"cannot merge on {list(key_cols)}")
@@ -280,34 +285,9 @@ class BucketedTable:
         # the merge don't recompute the upstream lineage twice
         if not pinned:
             changes = changes.localCheckpoint()
-        bucketed = changes.withColumn(self.BUCKET_COL, self._bucket_expr())
-        touched = [r[0] for r in
-                   bucketed.select(self.BUCKET_COL).distinct().collect()]
+        touched, out = self._merged_slice(spark, changes)
         if not touched:
             return
-        # read ONLY the touched bucket directories as explicit paths —
-        # no full-table directory listing and no partition discovery per
-        # micro-batch (at object-store scale, listing n_buckets dirs per
-        # batch would dominate the trickle path; locally it is the
-        # biggest slice of the fixed per-batch floor). The bucket
-        # partition column is not inferred from multi-path reads, which
-        # is fine — the merge path drops it anyway.
-        self._recover_buckets()
-        paths = [os.path.join(self.data_path, f"{self.BUCKET_COL}={b}")
-                 for b in touched]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if paths:
-            # mergeSchema: after additive payload evolution, touched
-            # buckets can mix old/new schemas — union-by-name null-fills
-            existing = (spark.read.option("mergeSchema", "true")
-                        .parquet(*paths))
-        else:
-            existing = None
-        merged = merge_snapshot(existing, bucketed.drop(self.BUCKET_COL),
-                                self.key_cols)
-        out = (merged.withColumn(self.BUCKET_COL, self._bucket_expr())
-               # one shuffle of touched-slice-sized data -> ~1 file/bucket
-               .repartition(len(touched), F.col(self.BUCKET_COL)))
         staging = self.data_path + ".staging"
         shutil.rmtree(staging, ignore_errors=True)
         (out.write.mode("overwrite")
@@ -324,6 +304,41 @@ class BucketedTable:
         shutil.rmtree(staging, ignore_errors=True)
         if self.auto_sized:
             self._maybe_resize(spark)
+
+    def _merged_slice(self, spark: SparkSession, changes: DataFrame
+                      ) -> tuple[list[int], DataFrame | None]:
+        """Steps 1-3 of merge_changes: the touched bucket ids and the
+        merged rows of those buckets, `_bucket` column included."""
+        from dbsync_spark.operators.apply import (DELETED_COL, LAST_ID_COL,
+                                                  merge_snapshot)
+
+        bucketed = changes.withColumn(self.BUCKET_COL, self._bucket_expr())
+        touched = [r[0] for r in
+                   bucketed.select(self.BUCKET_COL).distinct().collect()]
+        if not touched:
+            return [], None
+        # read ONLY the touched bucket directories as explicit paths —
+        # no full-table directory listing and no partition discovery per
+        # micro-batch (at object-store scale, listing n_buckets dirs per
+        # batch would dominate the trickle path; locally it is the
+        # biggest slice of the fixed per-batch floor). The bucket column
+        # is not inferred from multi-path reads; it is recomputed from
+        # the keys.
+        self._recover_buckets()
+        paths = [os.path.join(self.data_path, f"{self.BUCKET_COL}={b}")
+                 for b in touched]
+        paths = [p for p in paths if os.path.isdir(p)]
+        existing = None
+        if paths:
+            schema = StructType([
+                *[f for f in changes.schema.fields
+                  if f.name not in ("id", "operation")],
+                StructField(LAST_ID_COL, changes.schema["id"].dataType),
+                StructField(DELETED_COL, BooleanType())])
+            existing = (spark.read.schema(schema).parquet(*paths)
+                        .withColumn(self.BUCKET_COL, self._bucket_expr()))
+        return touched, merge_snapshot(existing, bucketed, self.key_cols,
+                                       cluster=(self.BUCKET_COL, len(touched)))
 
     def _data_bytes(self) -> int:
         total = 0

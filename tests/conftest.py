@@ -39,7 +39,7 @@ SLOW_TESTS = {
     "test_bpe.py::test_reliable_checkpoint_mode_is_bit_identical",
     "test_bpe.py::test_spark_train_equals_reference[6-1-16]",
     "test_bucketed_table.py::test_bucketed_matches_snapshot_path",
-    "test_bucketed_table.py::test_trickle_merge_never_fragments_buckets",
+    "test_bucketed_table.py::test_trickle_merge_never_fragments_buckets[25-32]",
     "test_cluster_index.py::test_compact_preserves_canonical",
     "test_cluster_index.py::test_forget_survives_checkpointed_stream_epoch_numbering",
     "test_cluster_index.py::test_forgetting_cluster_index",

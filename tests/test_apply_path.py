@@ -144,7 +144,56 @@ def _batch(spark, tmp_path):
 # Spark jobs of one process_batch call over LOG into an empty 4-bucket
 # target, pinned the way test_plan_audit pins exchanges: a job more per
 # micro-batch is per-batch latency on every trickle batch.
-JOBS_PER_BATCH = {"plain": 7, "policy": 8, "policy_sqlite": 5}
+JOBS_PER_BATCH = {"plain": 6, "policy": 7, "policy_sqlite": 5}
+
+
+def _last_job_id(sc) -> int:
+    """Highest Spark job id so far (ids are dense, so a difference of two
+    readings counts the jobs between them)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    it = sc._jsc.sc().statusStore().jobsList(
+        sc._jvm.java.util.ArrayList()).iterator()
+    top = -1
+    while it.hasNext():
+        top = max(top, it.next().jobId())
+    return top
+
+
+def test_trigger_runs_no_job_outside_foreach_batch(spark, tmp_path):
+    """One trigger over 40 log files, more than Spark's default parallel-
+    listing threshold (32): the trigger lists them on the driver, so the
+    only Spark jobs it runs are process_batch's own."""
+    log = str(tmp_path / "log")
+    # 40 one-row files from one write: 40 changes over 10 keys
+    spark.range(0, 40, 1, numPartitions=40).select(
+        (F.col("id") + 1).alias("id"),
+        F.lit(RULE.source_db).alias("sourceDb"),
+        F.lit(RULE.target_db).alias("targetDb"),
+        F.lit(RULE.source_schema).alias("schema"),
+        F.lit(RULE.source_table).alias("table"),
+        F.lit("U").alias("operation"),
+        F.to_json(F.struct((F.col("id") % 10).cast("int").alias("k"),
+                           F.col("id").cast("int").alias("v"))).alias("data"),
+        F.lit(T0).alias("createTime")).write.parquet(log)
+    assert len([f for f in os.listdir(log) if f.endswith(".parquet")]) == 40
+
+    sc = spark.sparkContext
+    pipe = _pipe(spark, tmp_path)
+    apply_batch, inside = pipe.process_batch, []
+
+    def counted(batch_df, batch_id):
+        first = _last_job_id(sc)
+        apply_batch(batch_df, batch_id)
+        inside.append(_last_job_id(sc) - first)
+
+    pipe.process_batch = counted
+    before = _last_job_id(sc)
+    pipe.run_to_completion()
+    assert len(inside) == 1  # one trigger admitted all 40 files
+    assert _last_job_id(sc) - before - inside[0] == 0
+    assert len(_final(spark, str(tmp_path / "status"))) == 40
+    got = {r["k"]: r["v"] for r in live_rows(pipe.target.read(spark)).collect()}
+    assert got == {k: 30 + k for k in range(10)}
 
 
 def test_process_batch_acks_every_change_once(spark, tmp_path):

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
@@ -100,7 +101,6 @@ def test_replay_is_idempotent_and_respects_watermark(spark, sf_dir, tmp_path):
 
 
 def test_meta_pins_bucket_count_and_keys(spark, sf_dir, tmp_path):
-    import pytest
 
     ch = _changes(spark, sf_dir).limit(10)
     bt = BucketedTable(str(tmp_path / "bt"), ["o_orderkey"], n_buckets=4)
@@ -117,13 +117,22 @@ def test_additive_schema_evolution(spark, tmp_path):
     """A payload column added mid-stream: existing rows read as NULL for
     it (touched or not — untouched buckets keep the old file schema and
     the mergeSchema read null-fills), new rows carry values, and the
-    snapshot layout behaves identically."""
+    snapshot layout behaves identically. A later batch that drops the
+    column stops carrying it in what that merge rewrites; a batch whose
+    column type conflicts with the stored files fails the merge instead
+    of null-filling it, and leaves the table as it was."""
+    from py4j.protocol import Py4JJavaError
+
     old = spark.createDataFrame(
         [(1, "I", 10, "a"), (2, "I", 20, "b"), (3, "I", 30, "c")],
         "id LONG, operation STRING, k LONG, v STRING")
     new = spark.createDataFrame(
         [(4, "U", 10, "a2", 7.5), (5, "I", 40, "d", 9.0)],
         "id LONG, operation STRING, k LONG, v STRING, w DOUBLE")
+    dropped = spark.createDataFrame(
+        [(6, "U", 40, "d2")], "id LONG, operation STRING, k LONG, v STRING")
+    conflict = spark.createDataFrame(
+        [(7, "U", 10, 3)], "id LONG, operation STRING, k LONG, v LONG")
     for cls, path in ((BucketedTable, "bt"), (ParquetTable, "pt")):
         tbl = (cls(str(tmp_path / path), ["k"], n_buckets=4)
                if cls is BucketedTable else cls(str(tmp_path / path)))
@@ -135,6 +144,29 @@ def test_additive_schema_evolution(spark, tmp_path):
         assert rows[20]["w"] is None and rows[30]["w"] is None  # null-filled
         assert rows[40]["w"] == 9.0
 
+        tbl.merge_changes(spark, dropped, ["k"])
+        rows = {r["k"]: r.asDict() for r in
+                live_rows(tbl.read(spark)).collect()}
+        assert rows[40]["v"] == "d2" and rows[40].get("w") is None
+        if cls is BucketedTable:
+            # the bucket this merge rewrote no longer stores w
+            stored = {b: spark.read.parquet(os.path.join(tbl.data_path, b))
+                      for b in os.listdir(tbl.data_path)}
+            [b40] = [b for b, df in stored.items()
+                     if df.where(F.col("k") == 40).count()]
+            assert "w" not in stored[b40].columns
+        else:
+            assert "w" not in tbl.read(spark).columns
+
+        before = sorted(map(tuple, live_rows(tbl.read(spark)).collect()))
+        with pytest.raises(Exception) as err:
+            tbl.merge_changes(spark, conflict, ["k"])
+        if cls is BucketedTable:
+            assert err.type is Py4JJavaError
+            assert "PARQUET_COLUMN_DATA_TYPE_MISMATCH" in str(err.value)
+        assert sorted(map(tuple, live_rows(tbl.read(spark)).collect())) \
+            == before
+
 
 def test_layout_mismatch_refused_and_migration_works(spark, sf_dir, tmp_path):
     """Opening a snapshot target as bucketed (or vice versa) is refused —
@@ -142,7 +174,6 @@ def test_layout_mismatch_refused_and_migration_works(spark, sf_dir, tmp_path):
     suppresses replay. migrate_snapshot_to_bucketed re-homes the target
     preserving watermarks/tombstones: replaying an OLD batch after
     migration is still a no-op."""
-    import pytest
 
     from dbsync_spark.sinks.table import migrate_snapshot_to_bucketed
 
@@ -273,20 +304,37 @@ def test_rebucket_crash_windows_recovered(spark, sf_dir, tmp_path):
     assert not os.path.isdir(path + ".old")
 
 
-def test_trickle_merge_never_fragments_buckets(spark):
-    """File-count soak (judge r3 item #10, CI-sized): 25 trickle merges
-    with mixed U/D ops — after EVERY merge, no bucket dir holds more
-    than the write fan-out (~1 file), no .old carcasses remain, and the
-    total file count stays bounded by the bucket population. The
-    no-small-files property measured, not asserted (tools/file_soak.py
-    runs the 300-merge version)."""
+@pytest.mark.parametrize("n_merges,n_buckets", [(6, 8), (25, 32)])
+def test_trickle_merge_never_fragments_buckets(spark, n_merges, n_buckets):
+    """File-count soak (judge r3 item #10, CI-sized): trickle merges with
+    mixed U/D ops — after EVERY merge, no bucket dir holds more than the
+    write fan-out (~1 file), no .old carcasses remain, and the total file
+    count stays bounded by the bucket population. The no-small-files
+    property measured, not asserted (tools/file_soak.py runs the
+    300-merge version); the 6-merge case runs by default."""
     from tools.file_soak import run_soak
 
-    result = run_soak(spark, n_merges=25, n_buckets=32)
+    result = run_soak(spark, n_merges=n_merges, n_buckets=n_buckets)
     assert result["worst_seen"]["max_files_per_bucket"] <= 1
     assert result["worst_seen"]["n_old_dirs"] == 0
-    assert result["worst_seen"]["total_files"] <= 32
+    assert result["worst_seen"]["total_files"] <= n_buckets
     assert result["final_rows"] > 0
+
+
+def test_merge_shuffles_once(spark, tmp_path):
+    """The frame merge_changes writes holds exactly ONE exchange, into an
+    empty table and over a stored slice: the LWW reduce reuses the
+    repartition by bucket that the ~1-file-per-bucket write needs."""
+    from dbsync_spark.plans import audit_plan
+
+    bt = BucketedTable(str(tmp_path / "bt"), ["k"], n_buckets=4)
+    batch = spark.createDataFrame(
+        [(1, "I", 10, "a"), (2, "I", 20, "b"), (3, "U", 10, "c")],
+        "id LONG, operation STRING, k LONG, v STRING")
+    for _ in range(2):
+        _touched, out = bt._merged_slice(spark, batch)
+        assert audit_plan(out).n_exchanges == 1
+        bt.merge_changes(spark, batch, ["k"])
 
 
 def test_auto_sized_table_grows_and_preserves_state(spark, sf_dir,
