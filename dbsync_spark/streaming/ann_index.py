@@ -25,8 +25,6 @@ per-row against frozen centroids, so batching cannot change any list.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,17 +36,16 @@ from dbsync_spark.functions.similarity import (
     kmeans_centroids,
     norm,
 )
-
-
 from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import (EpochState, Tombstones,
+                                          load_array, save_array)
 
-class StreamingIvfIndex:
+
+class StreamingIvfIndex(EpochState):
     def __init__(self, spark: SparkSession, root: str, dim: int,
                  n_clusters: int = 16, id_col: str = "vec_id",
                  vec_col: str = "embedding"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.dim = dim
         self.n_clusters = n_clusters
         self.id_col = id_col
@@ -62,10 +59,9 @@ class StreamingIvfIndex:
     def fit(self, corpus: DataFrame, iters: int = 2) -> None:
         """Train and freeze the routing centroids (deterministic
         lowest-id seeding, fixed iterations)."""
-        os.makedirs(self.root, exist_ok=True)
         c = kmeans_centroids(corpus, self.dim, self.n_clusters, iters=iters,
                              id_col=self.id_col, vec_col=self.vec_col)
-        np.save(self._centroid_path, c)
+        save_array(self._centroid_path, c)
         self._centroids = c
 
     def centroids(self) -> np.ndarray:
@@ -75,31 +71,23 @@ class StreamingIvfIndex:
         index generation (a re-fit is a rebuild under a new root; see
         module docstring), so the cache can never be legitimately stale."""
         if self._centroids is None:
-            if not os.path.exists(self._centroid_path):
+            self._centroids = load_array(self._centroid_path)
+            if self._centroids is None:
                 raise RuntimeError(
                     f"no centroids at {self._centroid_path}; call fit() "
                     "before ingesting or querying")
-            self._centroids = np.load(self._centroid_path)
         return self._centroids
 
     def process_batch(self, vectors: DataFrame, epoch_id: int | None = None) -> None:
         """Assign a batch of (id, vector) rows to their inverted lists and
         append (epoch-scoped overwrite — replays are idempotent)."""
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "lists")
+            epoch_id = self._next_epoch("lists")
         assigned = _assign_clusters(
             vectors.select(self.id_col, self.vec_col), self.centroids(),
             self.id_col, self.vec_col, nprobe=1, keep_vec=True)
-        (assigned.select(self.id_col, "cluster", self.vec_col)
-         .write.mode("overwrite")
-         .parquet(f"{self.root}/lists/epoch={epoch_id}"))
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
-
+        self._write_epoch(assigned.select(self.id_col, "cluster",
+                                          self.vec_col), "lists", epoch_id)
     def _lists(self) -> DataFrame | None:
         """The stored inverted-list rows (None before the first batch).
         The Forgetting subclass filters tombstoned vectors here, so
@@ -150,28 +138,11 @@ class StreamingIvfIndex:
         READ-path view, so the Forgetting subclass's tombstoned vectors
         are physically erased here). Quiescent-caller discipline as
         everywhere: run only past the stream's checkpoint."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  list_epochs,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        if pending_compaction(self.root, "lists"):
-            finish_compact(self.root, "lists")
-        eps = list_epochs(self.root, "lists")
-        if not eps or (len(eps) <= 1 and not self._erasure_pending()):
-            return
-        lists = self._lists().select(self.id_col, "cluster", self.vec_col)
-        staged_compact(lists, self.root, "lists", eps)
-        self._mark_erased()
-
-    def _erasure_pending(self) -> bool:
-        return False
-
-    def _mark_erased(self) -> None:
-        return None
+        self._compact_subs({"lists": lambda: self._lists().select(
+            self.id_col, "cluster", self.vec_col)})
 
 
-class ForgettingIvfIndex(StreamingIvfIndex):
+class ForgettingIvfIndex(Tombstones, StreamingIvfIndex):
     """StreamingIvfIndex with right-to-be-forgotten — vector removal is
     LOCAL here (each stored row is one vector; lists are independent and
     centroids are frozen routing, never data-derived state that could
@@ -181,50 +152,16 @@ class ForgettingIvfIndex(StreamingIvfIndex):
     vectors would answer. Forgotten ids are permanently retired
     (re-ingest raises), matching the other forgetting families."""
 
-    def _forgets_schema(self):
-        from pyspark.sql.types import LongType, StructField, StructType
+    _ERASED = "lists"
 
-        return StructType([StructField(self.id_col, LongType())])
-
-    def _forgotten(self) -> DataFrame:
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=self._forgets_schema(),
-                          empty_schema=self._forgets_schema())
-
-    def forget(self, vec_ids: DataFrame, epoch_id: int | None = None
-               ) -> None:
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (vec_ids.select(F.col(self.id_col).cast("long")).distinct()
-         .coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/forgets/epoch={epoch_id}"))
+    def _tomb_key(self) -> str:
+        return self.id_col
 
     def _lists(self) -> DataFrame | None:
         lists = super()._lists()
-        if lists is None:
-            return None
-        return lists.join(self._forgotten(), on=self.id_col, how="anti")
+        return None if lists is None else self._hide(lists)
 
     def process_batch(self, vectors: DataFrame,
                       epoch_id: int | None = None) -> None:
-        clash = (vectors.select(self.id_col)
-                 .join(self._forgotten(), on=self.id_col, how="semi"))
-        if not clash.isEmpty():
-            ids = [r[0] for r in clash.limit(5).collect()]
-            raise ValueError(
-                f"vec_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under new ids")
+        self._reject_retired(vectors)
         return super().process_batch(vectors, epoch_id)
-
-    def _erasure_pending(self) -> bool:
-        from dbsync_spark.streaming.state import erasure_pending
-
-        n = self._forgotten().count()
-        return bool(n) and erasure_pending(self.root, "lists", n)
-
-    def _mark_erased(self) -> None:
-        from dbsync_spark.streaming.state import record_erasure
-
-        n = self._forgotten().count()
-        if n:
-            record_erasure(self.root, "lists", n)

@@ -52,8 +52,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from dbsync_spark.functions.dedup import dedup_clusters_incremental
 from dbsync_spark.sources.tables import read_state
 from dbsync_spark.streaming.dedup_index import StreamingDedupIndex
-from dbsync_spark.streaming.state import (list_epochs, next_epoch,
-                                          write_parts)
+from dbsync_spark.streaming.state import EpochState, write_parts
 
 _LABELS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -61,15 +60,14 @@ _LABELS_SCHEMA = StructType([
 ])
 
 
-class StreamingClusterIndex:
+class StreamingClusterIndex(EpochState):
     """Incremental (doc_id, canonical_id) maintenance over parquet
     state. Call `process_batch` per (doc_id, text) micro-batch (directly
     or via `foreach_batch_handler()`), read `canonical()` any time."""
 
     def __init__(self, spark: SparkSession, root: str, k: int = 3,
                  threshold: float = 0.5, max_iters: int = 20):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.max_iters = max_iters
         self.dedup = StreamingDedupIndex(spark, f"{self.root}/dedup",
                                          k=k, threshold=threshold)
@@ -104,7 +102,7 @@ class StreamingClusterIndex:
         only the CHANGED (doc_id, canonical_id) rows as this epoch's
         delta. Returns the full current labels."""
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "labels")
+            epoch_id = self._next_epoch("labels")
         self.dedup.process_batch(new_docs, epoch_id)
         prior = self._labels_asof(epoch_id).localCheckpoint(eager=False)
         ids = (prior.select("doc_id")
@@ -116,15 +114,9 @@ class StreamingClusterIndex:
                  .where(F.col("_prior_cid").isNull()
                         | (F.col("canonical_id") != F.col("_prior_cid")))
                  .select("doc_id", "canonical_id"))
-        (delta.coalesce(write_parts(self.spark)).write.mode("overwrite")
-         .parquet(f"{self.root}/labels/epoch={epoch_id}"))
+        self._write_epoch(delta.coalesce(write_parts(self.spark)),
+                          "labels", epoch_id)
         return self.canonical()
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
 
     def canonical(self) -> DataFrame:
         """The current (doc_id, canonical_id) table — latest epoch wins
@@ -143,16 +135,7 @@ class StreamingClusterIndex:
         every doc has exactly one row) via the shared crash-safe staged
         swap; the wrapped pair index uses its own staged compaction.
         Quiescent-caller discipline as everywhere."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        if pending_compaction(self.root, "labels"):
-            finish_compact(self.root, "labels")
-        eps = list_epochs(self.root, "labels")
-        if len(eps) > 1:
-            staged_compact(self._labels_asof(None), self.root, "labels",
-                           eps)
+        self._compact_sub("labels", lambda: self._labels_asof(None))
         self.dedup.compact()
 
 
@@ -200,8 +183,7 @@ class ForgettingClusterIndex(StreamingClusterIndex):
                                           k=k, threshold=threshold)
 
     def _label_rows(self) -> DataFrame:
-        return super()._label_rows().join(self.dedup._forgotten(),
-                                          on="doc_id", how="anti")
+        return self.dedup._hide(super()._label_rows())
 
     def forget(self, doc_ids: DataFrame) -> None:
         """Tombstone the ids in the wrapped pair index, then rebuild the
@@ -211,20 +193,12 @@ class ForgettingClusterIndex(StreamingClusterIndex):
         the same state."""
         from dbsync_spark.functions.dedup import dedup_clusters
         from dbsync_spark.streaming.dedup_index import _DOCS_SCHEMA
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
 
-        if pending_compaction(self.root, "labels"):
-            finish_compact(self.root, "labels")
         self.dedup.forget(doc_ids)
-        eps = list_epochs(self.root, "labels")
-        if not eps:
-            return
         # survivors via the index's own tombstone-filtered reader — a raw
-        # dir read would resurrect the forgotten ids
-        ids = self.dedup._read("docs", _DOCS_SCHEMA).select(
-            "doc_id").distinct()
-        labels = dedup_clusters(ids, self.dedup.all_pairs(),
-                                max_iters=self.max_iters)
-        staged_compact(labels, self.root, "labels", eps)
+        # dir read would resurrect the forgotten ids; force: a single
+        # labels epoch is rewritten too
+        self._compact_sub("labels", lambda: dedup_clusters(
+            self.dedup._read("docs", _DOCS_SCHEMA).select("doc_id")
+            .distinct(), self.dedup.all_pairs(), max_iters=self.max_iters),
+            force=True)

@@ -34,7 +34,7 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 from dbsync_spark.functions.sketch import (CMS_DEPTH, CMS_WIDTH,
                                            count_min_build,
                                            count_min_estimate)
-from dbsync_spark.sources.tables import read_state
+from dbsync_spark.streaming.state import EpochState, prune_epochs
 
 _STATE_SCHEMA = StructType([
     StructField("r", IntegerType()),
@@ -43,46 +43,24 @@ _STATE_SCHEMA = StructType([
 ])
 
 
-class StreamingCmsIndex:
+class StreamingCmsIndex(EpochState):
     """Continuous Count-Min frequency sketching over parquet counter
     state. Call `process_batch` per micro-batch (directly or via
     `foreach_batch_handler()`)."""
 
     def __init__(self, spark: SparkSession, root: str, key_col: str,
                  depth: int = CMS_DEPTH, width: int = CMS_WIDTH):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.key_col = key_col
         self.depth = depth
         self.width = width
 
-    def _epochs(self) -> list[int]:
-        import os
-        import re
-
-        try:
-            entries = os.listdir(f"{self.root}/cells")
-        except FileNotFoundError:
-            return []
-        return sorted(int(m.group(1)) for e in entries
-                      if (m := re.fullmatch(r"epoch=(\d+)", e)))
-
-    def _state(self, epoch: int | None) -> DataFrame:
-        if epoch is None:
-            return self.spark.createDataFrame([], _STATE_SCHEMA)
-        return read_state(self.spark, f"{self.root}/cells/epoch={epoch}",
-                          read_schema=_STATE_SCHEMA,
-                          empty_schema=_STATE_SCHEMA)
-
     def process_batch(self, batch: DataFrame,
                       epoch_id: int | None = None) -> None:
         """Sketch one micro-batch and sum it into the counter matrix."""
-        from dbsync_spark.streaming.state import next_epoch
-
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "cells")
-        before = [e for e in self._epochs() if e < epoch_id]
-        prev = self._state(before[-1] if before else None)
+            epoch_id = self._next_epoch("cells")
+        prev = self._latest("cells", _STATE_SCHEMA, before=epoch_id)
 
         bc = count_min_build(batch, self.key_col,
                              depth=self.depth, width=self.width)
@@ -91,14 +69,7 @@ class StreamingCmsIndex:
                   .select(F.col("r").cast("int"),
                           F.col("c").cast("long"),
                           F.col("n").cast("long")))
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.root}/cells/epoch={epoch_id}")
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
+        self._write_epoch(merged.coalesce(1), "cells", epoch_id)
 
     def compact(self) -> int:
         """OPTIMIZE-style maintenance (judge r5 item #6): epoch N already
@@ -107,15 +78,12 @@ class StreamingCmsIndex:
         crash-safe with no staging (a partial delete never touches the
         newest epoch; reads are unchanged at every point). Run only past
         the stream's checkpoint, like every compaction here."""
-        from dbsync_spark.streaming.state import prune_epochs
-
         return prune_epochs(self.root, "cells")
 
     def estimates(self, keys: DataFrame) -> DataFrame:
         """(key, est_n) point estimates for `keys` from the latest
         matrix — empty-sketch estimates (all 0) before the first
         batch."""
-        eps = self._epochs()
-        state = self._state(eps[-1] if eps else None)
-        return count_min_estimate(state, keys, self.key_col,
+        return count_min_estimate(self._latest("cells", _STATE_SCHEMA),
+                                  keys, self.key_col,
                                   depth=self.depth, width=self.width)

@@ -40,7 +40,7 @@ from dbsync_spark.functions.dedup import (
 )
 
 from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import EpochState, Tombstones
 
 _BANDS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -53,7 +53,7 @@ _DOCS_SCHEMA = StructType([
 ])
 
 
-class StreamingDedupIndex:
+class StreamingDedupIndex(EpochState):
     """Incremental LSH dedup index over parquet state dirs. Call
     `process_batch` per micro-batch (directly, or via
     `foreach_batch_handler()` from a writeStream)."""
@@ -63,18 +63,14 @@ class StreamingDedupIndex:
                  max_bucket: int | None = None):
         from dbsync_spark.functions.dedup import LSH_MAX_BUCKET
 
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.threshold = threshold
         self.k = k
         self.shingle_fn = shingle_fn
         self.max_bucket = LSH_MAX_BUCKET if max_bucket is None else max_bucket
 
     def _read(self, sub: str, schema: StructType) -> DataFrame:
-        # "no data yet" reads as empty; real corruption propagates
-        # (sources/tables.read_state, shared fleet-wide)
-        return read_state(self.spark, f"{self.root}/{sub}",
-                          read_schema=schema, empty_schema=schema)
+        return self._read_epochs(sub, schema)
 
     def process_batch(self, new_docs: DataFrame, epoch_id: int | None = None
                       ) -> DataFrame:
@@ -82,17 +78,15 @@ class StreamingDedupIndex:
         the batch's bands/docs, persist and return the new pairs.
         Batch doc_ids must be globally unique (the CDC id contract)."""
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "bands")
+            epoch_id = self._next_epoch("bands")
         new_docs = new_docs.select("doc_id", "text")
         # epoch-scoped subdir: replaying a failed epoch overwrites its own
         # files instead of double-appending (the foreachBatch idempotence
         # pattern for append-only parquet state)
-        new_docs.write.mode("overwrite").parquet(
-            f"{self.root}/docs/epoch={epoch_id}")
-        new_bands = _row_local_bands(new_docs, "text", "doc_id", self.k,
-                                     self.shingle_fn)
-        new_bands.write.mode("overwrite").parquet(
-            f"{self.root}/bands/epoch={epoch_id}")
+        self._write_epoch(new_docs, "docs", epoch_id)
+        self._write_epoch(_row_local_bands(new_docs, "text", "doc_id",
+                                           self.k, self.shingle_fn),
+                          "bands", epoch_id)
 
         index = self._read("bands", _BANDS_SCHEMA)
         new_ids = new_docs.select("doc_id")
@@ -110,17 +104,8 @@ class StreamingDedupIndex:
                                        self.k, self.shingle_fn,
                                        hashed=True)
         pairs = _verify_candidates(cands, sets, "doc_id", self.threshold)
-        pairs.write.mode("overwrite").parquet(
-            f"{self.root}/pairs/epoch={epoch_id}")
-        return self.spark.read.parquet(f"{self.root}/pairs/epoch={epoch_id}")
-
-    def foreach_batch_handler(self):
-        """Adapter for `writeStream.foreachBatch` over a (doc_id, text)
-        stream."""
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
+        self._write_epoch(pairs, "pairs", epoch_id)
+        return self.spark.read.parquet(self._path("pairs", epoch_id))
 
     def compact(self) -> None:
         """OPTIMIZE-style maintenance, same staged crash-safe contract as
@@ -134,28 +119,10 @@ class StreamingDedupIndex:
         docs table stores full document text. Run only when the feeding
         stream is quiescent past the compacted epochs (replaying an old
         epoch id afterwards would re-append rows)."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  list_epochs,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        for sub in ("docs", "bands", "pairs"):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-            eps = list_epochs(self.root, sub)
-            if not eps or (len(eps) <= 1 and not self._has_hidden_rows()):
-                continue
-            if sub == "pairs":
-                df = self.all_pairs()  # Forgetting: tombstone pairs gone
-            else:
-                df = self._read(
-                    sub, _DOCS_SCHEMA if sub == "docs" else _BANDS_SCHEMA)
-            staged_compact(df, self.root, sub, eps)
-
-    def _has_hidden_rows(self) -> bool:
-        """Overridden by ForgettingDedupIndex (pending tombstones make a
-        single-epoch compaction still worthwhile: physical erasure)."""
-        return False
+        self._compact_subs({
+            "docs": lambda: self._read("docs", _DOCS_SCHEMA),
+            "bands": lambda: self._read("bands", _BANDS_SCHEMA),
+            "pairs": self.all_pairs})  # Forgetting: tombstone pairs gone
 
     def all_pairs(self) -> DataFrame:
         """Every near-dup pair persisted so far (empty frame before the
@@ -168,13 +135,10 @@ class StreamingDedupIndex:
                               StructField("doc_a", LongType()),
                               StructField("doc_b", LongType()),
                               StructField("jaccard", DoubleType()),
-                          ]))
+                          ])).select("doc_a", "doc_b", "jaccard")
 
 
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-
-
-class ForgettingDedupIndex(StreamingDedupIndex):
+class ForgettingDedupIndex(Tombstones, StreamingDedupIndex):
     """StreamingDedupIndex with document removal (right-to-be-forgotten):
     `forget` writes a tombstone epoch; band/doc reads anti-join the
     tombstones (future probes can no longer match a forgotten doc) and
@@ -189,54 +153,15 @@ class ForgettingDedupIndex(StreamingDedupIndex):
     - <root>/forgets/epoch=N : (doc_id) tombstones
     """
 
-    def _forgotten(self) -> DataFrame:
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=_FORGETS_SCHEMA,
-                          empty_schema=_FORGETS_SCHEMA)
-
-    def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
-               ) -> None:
-        """Tombstone a frame of (doc_id) rows. Epoch-scoped overwrite —
-        replaying a forget rewrites identical tombstones."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (doc_ids.select(F.col("doc_id").cast("long")).distinct().coalesce(1)
-         .write.mode("overwrite").parquet(
-             f"{self.root}/forgets/epoch={epoch_id}"))
+    _ERASED = "docs"
 
     def _read(self, sub: str, schema: StructType) -> DataFrame:
-        df = super()._read(sub, schema)
-        if sub in ("bands", "docs"):
-            return df.join(self._forgotten(), on="doc_id", how="anti")
-        return df
-
-    def _has_hidden_rows(self) -> bool:
-        from dbsync_spark.streaming.state import list_epochs
-
-        return bool(list_epochs(self.root, "forgets"))
+        return self._hide(super()._read(sub, schema))
 
     def process_batch(self, new_docs: DataFrame,
                       epoch_id: int | None = None) -> DataFrame:
-        """Reject re-ingest of a forgotten doc_id: tombstones apply to
-        ALL epochs at read time (no epoch ordering), so a doc ingested
-        after its forget would be silently invisible forever. Forgotten
-        ids are permanently retired from the id space — a collision is a
-        caller bug, surfaced loudly instead of swallowed."""
-        clash = (new_docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-                 .join(self._forgotten(), on="doc_id", how="semi")
-                 .limit(5).collect())
-        if clash:
-            ids = sorted(r["doc_id"] for r in clash)
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under a fresh doc_id")
+        self._reject_retired(new_docs)
         return super().process_batch(new_docs, epoch_id)
 
     def all_pairs(self) -> DataFrame:
-        gone = self._forgotten()
-        return (super().all_pairs()
-                .join(gone.select(F.col("doc_id").alias("doc_a")),
-                      on="doc_a", how="anti")
-                .join(gone.select(F.col("doc_id").alias("doc_b")),
-                      on="doc_b", how="anti")
-                .select("doc_a", "doc_b", "jaccard"))
+        return self._hide_pairs(super().all_pairs())

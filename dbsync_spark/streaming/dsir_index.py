@@ -47,17 +47,16 @@ from dbsync_spark.functions.sampling import (DSIR_BUCKETS,
                                              dsir_weights_from_counts,
                                              hashed_gram_buckets,
                                              per_bucket_counts)
-from dbsync_spark.streaming.state import list_epochs, next_epoch
+from dbsync_spark.streaming.state import EpochState, Tombstones
 
 _TCOUNT_SCHEMA = StructType([StructField("bucket", LongType()),
                              StructField("t_n", LongType())])
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
 _DOCCOUNT_SCHEMA = StructType([StructField("doc_id", LongType()),
                                StructField("bucket", LongType()),
                                StructField("c", LongType())])
 
 
-class StreamingDsirIndex:
+class StreamingDsirIndex(EpochState):
     """Incremental DSIR target model over parquet state dirs. Call
     `process_batch` with each batch of target-domain documents (directly
     or via `foreach_batch_handler()`), then `select`/`score` raw
@@ -66,14 +65,10 @@ class StreamingDsirIndex:
     def __init__(self, spark: SparkSession, root: str,
                  n_buckets: int = DSIR_BUCKETS, text_col: str = "text",
                  id_col: str = "doc_id"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.n_buckets = n_buckets
         self.text_col = text_col
         self.id_col = id_col
-
-    def _epochs(self) -> list[int]:
-        return list_epochs(self.root, "tcounts")
 
     def _batch_counts(self, docs: DataFrame) -> DataFrame:
         return (hashed_gram_buckets(docs, self.id_col, self.text_col,
@@ -84,16 +79,10 @@ class StreamingDsirIndex:
                       epoch_id: int | None = None) -> None:
         """Fold one micro-batch of target exemplars into the model."""
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "tcounts")
+            epoch_id = self._next_epoch("tcounts")
         # <= n_buckets rows; one file keeps the model read O(n_epochs)
-        self._batch_counts(target_docs).coalesce(1).write.mode(
-            "overwrite").parquet(f"{self.root}/tcounts/epoch={epoch_id}")
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
+        self._write_epoch(self._batch_counts(target_docs).coalesce(1),
+                          "tcounts", epoch_id)
 
     def compact(self) -> None:
         """OPTIMIZE-style maintenance: count deltas are additive, so
@@ -102,23 +91,11 @@ class StreamingDsirIndex:
         integer addition is associative. Quiescent-caller discipline:
         run only past the stream's checkpoint (a replayed pre-compaction
         epoch would double-count into the merged sum)."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        if pending_compaction(self.root, "tcounts"):
-            finish_compact(self.root, "tcounts")
-        eps = self._epochs()
-        if len(eps) > 1:
-            staged_compact(self.target_counts(), self.root, "tcounts", eps)
+        self._compact_sub("tcounts", self.target_counts)
 
     def target_counts(self) -> DataFrame:
         """(bucket, t_n) summed over every epoch delta — the model."""
-        eps = self._epochs()
-        if not eps:
-            return self.spark.createDataFrame([], _TCOUNT_SCHEMA)
-        paths = [f"{self.root}/tcounts/epoch={e}" for e in eps]
-        return (self.spark.read.schema(_TCOUNT_SCHEMA).parquet(*paths)
+        return (self._read_epochs("tcounts", _TCOUNT_SCHEMA)
                 .groupBy("bucket").agg(F.sum("t_n").alias("t_n")))
 
     def weights(self, raw: DataFrame) -> DataFrame:
@@ -150,7 +127,7 @@ class StreamingDsirIndex:
                 .limit(k))
 
 
-class ForgettingDsirIndex(StreamingDsirIndex):
+class ForgettingDsirIndex(Tombstones, StreamingDsirIndex):
     """StreamingDsirIndex with target-document removal (the fourth
     persisted index family to honor right-to-be-forgotten, after search,
     dedup, and decontamination).
@@ -168,92 +145,49 @@ class ForgettingDsirIndex(StreamingDsirIndex):
     - <root>/forgets/epoch=N  : (doc_id) tombstones
     """
 
-    def _forgotten(self) -> DataFrame:
-        eps = list_epochs(self.root, "forgets")
-        if not eps:
-            return self.spark.createDataFrame([], _FORGETS_SCHEMA)
-        paths = [f"{self.root}/forgets/epoch={e}" for e in eps]
-        return self.spark.read.schema(_FORGETS_SCHEMA).parquet(*paths)
+    _ERASED = "doccount"
 
     def process_batch(self, target_docs: DataFrame,
                       epoch_id: int | None = None) -> None:
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "tcounts")
-        clash = (target_docs
-                 .select(F.col(self.id_col).cast("long").alias("doc_id"))
-                 .join(self._forgotten(), on="doc_id", how="semi")
-                 .limit(5).collect())
-        if clash:
-            ids = sorted(r["doc_id"] for r in clash)
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under a fresh doc_id")
-        (hashed_gram_buckets(target_docs, self.id_col, self.text_col,
-                             self.n_buckets)
-         .groupBy(F.col(self.id_col).cast("long").alias("doc_id"),
-                  "bucket")
-         .agg(F.count("*").alias("c"))
-         .coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/doccount/epoch={epoch_id}"))
+            epoch_id = self._next_epoch("tcounts")
+        self._reject_retired(target_docs)
+        self._write_epoch(
+            hashed_gram_buckets(target_docs, self.id_col, self.text_col,
+                                self.n_buckets)
+            .groupBy(F.col(self.id_col).cast("long").alias("doc_id"),
+                     "bucket")
+            .agg(F.count("*").alias("c")).coalesce(1), "doccount", epoch_id)
         super().process_batch(target_docs, epoch_id)
 
     def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
                ) -> None:
         """Tombstone a frame of (doc_id) rows, then physically rebuild
         every count epoch from the surviving attribution."""
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (doc_ids.select(F.col(self.id_col).cast("long").alias("doc_id"))
-         .distinct().coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/forgets/epoch={epoch_id}"))
+        self._write_forgets(doc_ids, epoch_id)
         self._rebuild()
 
     def compact(self) -> None:
         """Base compaction plus attribution/tombstones: doccount merges
         to the union of SURVIVING (doc_id, bucket, c) rows — physical
         erasure of forgotten docs' attribution, which forget()'s rebuild
-        erases from tcounts but previously left in per-epoch doccount
-        files — and forgets to one distinct tombstone epoch. A
-        post-compaction forget() rebuilds from the single doccount epoch
-        and overwrites the single tcounts epoch: the same fixed point as
-        rebuild-then-compact."""
-        from dbsync_spark.streaming.state import (erasure_pending,
-                                                  finish_compact,
-                                                  pending_compaction,
-                                                  record_erasure,
-                                                  staged_compact)
-
+        erases from tcounts — and forgets to one distinct tombstone
+        epoch. A post-compaction forget() rebuilds from the single
+        doccount epoch and overwrites the single tcounts epoch: the same
+        fixed point as rebuild-then-compact."""
         super().compact()
-        for sub in ("doccount", "forgets"):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-        dc_eps = list_epochs(self.root, "doccount")
-        # skip the staged rewrite when already forget-clean (r6 ADVICE;
-        # same marker discipline as ForgettingBloomIndex.compact)
-        n_forg = self._forgotten().distinct().count()
-        if dc_eps and (len(dc_eps) > 1
-                       or (n_forg and erasure_pending(
-                           self.root, "doccount", n_forg))):
-            paths = [f"{self.root}/doccount/epoch={e}" for e in dc_eps]
-            survivors = (self.spark.read.schema(_DOCCOUNT_SCHEMA)
-                         .parquet(*paths)
-                         .join(self._forgotten(), on="doc_id", how="anti"))
-            staged_compact(survivors, self.root, "doccount", dc_eps)
-            record_erasure(self.root, "doccount", n_forg)
-        fg_eps = list_epochs(self.root, "forgets")
-        if len(fg_eps) > 1:
-            staged_compact(self._forgotten().distinct(),
-                           self.root, "forgets", fg_eps)
+        self._compact_subs({
+            "doccount": lambda: self._hide(
+                self._read_epochs("doccount", _DOCCOUNT_SCHEMA))})
+        self._compact_sub("forgets", lambda: self._forgotten().distinct())
 
     def _rebuild(self) -> None:
         """Rewrite each tcounts epoch as the bucket-sum of its surviving
         (doc_id, bucket, c) rows — one anti-join + one bounded aggregate
         per epoch, the same work shape as process_batch run E times."""
-        gone = self._forgotten()
-        for e in list_epochs(self.root, "doccount"):
-            dc = self.spark.read.schema(_DOCCOUNT_SCHEMA).parquet(
-                f"{self.root}/doccount/epoch={e}")
-            (dc.join(gone, on="doc_id", how="anti")
-             .groupBy("bucket").agg(F.sum("c").alias("t_n"))
-             .coalesce(1).write.mode("overwrite")
-             .parquet(f"{self.root}/tcounts/epoch={e}"))
+        for e in self._epochs("doccount"):
+            self._write_epoch(
+                self._hide(self._read_epochs("doccount", _DOCCOUNT_SCHEMA,
+                                             [e]))
+                .groupBy("bucket").agg(F.sum("c").alias("t_n"))
+                .coalesce(1), "tcounts", e)

@@ -32,19 +32,17 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbsync_spark.functions.timeseries import dtw_to_query, series_arrays
-
-
+from dbsync_spark.functions.timeseries import dtw_to_query
 from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import EpochState
 
-class StreamingDtwMonitor:
+
+class StreamingDtwMonitor(EpochState):
     def __init__(self, spark: SparkSession, root: str, query_values,
                  id_col: str = "user_id", ts_col: str = "ts",
                  val_col=None, radius: int = 24,
                  window_buckets: int = 168, bucket: str = "hour"):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.query_values = [float(v) for v in query_values]
         self.id_col = id_col
         self.ts_col = ts_col
@@ -65,18 +63,16 @@ class StreamingDtwMonitor:
         """Ingest one micro-batch; returns (id, dtw_dist) for the keys
         the batch touched."""
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "buckets")
+            epoch_id = self._next_epoch("buckets")
         per_bucket = (batch_df
                       .groupBy(F.col(self.id_col).alias("_id"),
                                self._bucket(F.col(self.ts_col)).alias("_b"))
                       .agg(F.sum(self.val_col).alias("_v")))
-        (per_bucket.write.mode("overwrite")
-         .parquet(f"{self.root}/buckets/epoch={epoch_id}"))
+        self._write_epoch(per_bucket, "buckets", epoch_id)
 
         touched = per_bucket.select("_id").distinct()
         dists = self._score(touched)
-        (dists.write.mode("overwrite")
-         .parquet(f"{self.root}/dists/epoch={epoch_id}"))
+        self._write_epoch(dists, "dists", epoch_id)
         return dists
 
     def _score(self, keys: DataFrame) -> DataFrame:
@@ -108,12 +104,6 @@ class StreamingDtwMonitor:
                           .cast("double")).alias("values")))
         return dtw_to_query(series, np.asarray(self.query_values),
                             self.id_col, radius=self.radius)
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
 
     def distances(self) -> DataFrame:
         """Latest DTW distance per key across all processed batches."""

@@ -45,7 +45,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from dbsync_spark.functions.dedup import _sig_bank_rows, simhash
-from dbsync_spark.streaming.state import next_epoch
+from dbsync_spark.streaming.state import (EpochState, Tombstones,
+                                          remove_epochs)
 
 _BANKS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -61,11 +62,13 @@ _PAIRS_SCHEMA = StructType([
 _FPS_SCHEMA = StructType([StructField("simhash", LongType())])
 
 
-class StreamingSimhashIndex:
+class StreamingSimhashIndex(EpochState):
     """Incremental SimHash pair maintenance over parquet state dirs.
     Call `process_batch` per micro-batch of (doc_id, text) documents
     (directly or via `foreach_batch_handler()`). Batch doc_ids must be
     globally unique (the CDC id contract)."""
+
+    _PUBLISHED = ("banks", "fps", "pairs")
 
     def __init__(self, spark: SparkSession, root: str,
                  max_hamming: int = 3, bits: int = 32, banks: int = 4,
@@ -74,25 +77,16 @@ class StreamingSimhashIndex:
             raise ValueError(
                 f"pigeonhole recall requires max_hamming <= banks - 1 "
                 f"(got max_hamming={max_hamming}, banks={banks})")
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.max_hamming = max_hamming
         self.bits = bits
         self.banks = banks
         self.text_col = text_col
         self.id_col = id_col
 
-    def _epochs(self, sub: str) -> list[int]:
-        from dbsync_spark.streaming.state import list_epochs
-
-        return list_epochs(self.root, sub)
-
     def _read(self, sub: str, schema: StructType,
               epochs: list[int]) -> DataFrame:
-        if not epochs:
-            return self.spark.createDataFrame([], schema)
-        paths = [f"{self.root}/{sub}/epoch={e}" for e in epochs]
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self._read_epochs(sub, schema, epochs)
 
     def _bank_rows(self, docs: DataFrame) -> DataFrame:
         fp = simhash(docs, self.text_col, self.id_col, self.bits)
@@ -115,16 +109,14 @@ class StreamingSimhashIndex:
         batch's bank rows and exactly-the-new pairs; returns the new
         pairs. Epoch-scoped overwrite — a replayed epoch rewrites its
         own files with identical content."""
+        self._recover()
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "banks")
+            epoch_id = self._next_epoch("banks")
         before = [e for e in self._epochs("banks") if e < epoch_id]
         fps_before = [e for e in self._epochs("fps") if e < epoch_id]
 
-        new_rows = self._bank_rows(new_docs)
-        new_rows.write.mode("overwrite").parquet(
-            f"{self.root}/banks/epoch={epoch_id}")
-        new_rows = self.spark.read.schema(_BANKS_SCHEMA).parquet(
-            f"{self.root}/banks/epoch={epoch_id}")
+        self._write_epoch(self._bank_rows(new_docs), "banks", epoch_id)
+        new_rows = self._read_epochs("banks", _BANKS_SCHEMA, [epoch_id])
 
         # maintain the distinct-fingerprint table: persist only the fps
         # FIRST SEEN this epoch (epochs are therefore disjoint and their
@@ -133,10 +125,8 @@ class StreamingSimhashIndex:
         batch_fps = (new_rows.where(F.col("bank") == 0)
                      .select("simhash").distinct())
         fresh = batch_fps.join(prior_fps, on="simhash", how="anti")
-        fresh.write.mode("overwrite").parquet(
-            f"{self.root}/fps/epoch={epoch_id}")
-        fresh = self.spark.read.schema(_FPS_SCHEMA).parquet(
-            f"{self.root}/fps/epoch={epoch_id}")
+        self._write_epoch(fresh, "fps", epoch_id)
+        fresh = self._read_epochs("fps", _FPS_SCHEMA, [epoch_id])
         all_fps = prior_fps.unionByName(fresh)
 
         # fp-level pigeonhole probe: batch fingerprints vs all
@@ -172,47 +162,37 @@ class StreamingSimhashIndex:
                          F.greatest("doc_n", "doc_o").alias("doc_b"),
                          "hamming")
                  .distinct())
-        pairs.write.mode("overwrite").parquet(
-            f"{self.root}/pairs/epoch={epoch_id}")
-        return self.spark.read.schema(_PAIRS_SCHEMA).parquet(
-            f"{self.root}/pairs/epoch={epoch_id}")
-
-    def foreach_batch_handler(self):
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
+        self._write_epoch(pairs, "pairs", epoch_id)
+        return self._read_epochs("pairs", _PAIRS_SCHEMA, [epoch_id])
 
     def compact(self) -> None:
-        """OPTIMIZE-style maintenance: banks and pairs are both plain
+        """OPTIMIZE-style maintenance: banks, fps and pairs are plain
         append-only unions over epochs (pairs() distincts anyway), so
-        each sub independently merges into one epoch dir via the shared
-        crash-safe staged swap — a crash between the two subs leaves
-        both individually consistent. Quiescent-caller discipline: run
-        only past the stream's checkpoint (a replay of a pre-compaction
-        epoch id would re-append rows the merged epoch already holds)."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction,
-                                                  staged_compact)
+        each merges into one epoch dir. The staged state is the READ-path
+        view, so the Forgetting subclass's tombstoned rows and dead
+        fingerprints are physically erased here.
 
+        The three subs publish together under the `_compact_ready`
+        marker (state.publish): the Forgetting subclass drops its death
+        deltas in the same committed window, since a delta surviving
+        the fps rewrite would falsely re-kill a revived fingerprint. A
+        crash anywhere leaves either the old state intact or a committed
+        set of consistent stagings that the next operation publishes
+        verbatim. Quiescent-caller discipline: run only past the
+        stream's checkpoint (a replay of a pre-compaction epoch id would
+        re-append rows the merged epoch already holds)."""
+        self._recover()
+        n = self._erasure()
+        stages = []
         for sub, schema in (("banks", _BANKS_SCHEMA),
                             ("fps", _FPS_SCHEMA),
                             ("pairs", _PAIRS_SCHEMA)):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
             eps = self._epochs(sub)
-            if eps and (len(eps) > 1 or self._erasure_pending()):
-                # the staged state is the READ-path view, so the
-                # Forgetting subclass's tombstoned rows erase here
-                staged_compact(self._read(sub, schema, eps).distinct(),
-                               self.root, sub, eps)
-        self._mark_erased()
-
-    def _erasure_pending(self) -> bool:
-        return False
-
-    def _mark_erased(self) -> None:
-        return None
+            if eps and (len(eps) > 1 or n):
+                stages.append((sub, self._read(sub, schema, eps).distinct(),
+                               eps))
+        self._publish(stages)
+        self._mark_erased(n)
 
     def pairs(self) -> DataFrame:
         """Distinct accumulated pairs (a pair is emitted by exactly one
@@ -221,10 +201,7 @@ class StreamingSimhashIndex:
                           self._epochs("pairs")).distinct()
 
 
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-
-
-class ForgettingSimhashIndex(StreamingSimhashIndex):
+class ForgettingSimhashIndex(Tombstones, StreamingSimhashIndex):
     """StreamingSimhashIndex with right-to-be-forgotten — the seventh
     forgetting family, and the first flushed out by the structural
     guard (tests/test_forget.py::test_every_doc_attributed_index_has_
@@ -258,12 +235,7 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
     never-fed-index behavior. Forgotten doc ids are permanently retired
     (re-ingest raises), matching the other families."""
 
-    def _forgotten(self) -> DataFrame:
-        from dbsync_spark.sources.tables import read_state
-
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=_FORGETS_SCHEMA,
-                          empty_schema=_FORGETS_SCHEMA)
+    _ERASED = "banks"
 
     def _dead(self) -> DataFrame:
         """Fingerprints with no surviving holder, derived by folding
@@ -285,38 +257,18 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
                 .select("simhash"))
 
     def _read_raw_deadfps(self, eps: list[int]) -> DataFrame:
-        paths = [f"{self.root}/deadfps/epoch={e}" for e in eps]
-        return self.spark.read.schema(_FPS_SCHEMA).parquet(*paths)
+        return self._read_epochs("deadfps", _FPS_SCHEMA, eps)
 
     def _read(self, sub: str, schema: StructType,
               epochs: list[int]) -> DataFrame:
         df = super()._read(sub, schema, epochs)
         if sub == "banks":
-            return df.join(self._forgotten(), on="doc_id", how="anti")
+            return self._hide(df)
         if sub == "fps":
             return df.join(self._dead(), on="simhash", how="anti")
         if sub == "pairs":
-            gone = self._forgotten()
-            return (df.join(gone.select(F.col("doc_id").alias("doc_a")),
-                            on="doc_a", how="anti")
-                    .join(gone.select(F.col("doc_id").alias("doc_b")),
-                          on="doc_b", how="anti")
-                    # string-keyed joins move the key column to the
-                    # front; restore the schema order
-                    .select(*schema.fieldNames()))
+            return self._hide_pairs(df)
         return df
-
-    def _forgotten_before(self, epoch_id: int) -> DataFrame:
-        """Tombstones recorded by forget epochs STRICTLY BEFORE
-        `epoch_id` — the view a replay of epoch `epoch_id` must compute
-        against (reading `_forgotten()` lazily and then overwriting this
-        epoch's file would re-scan and see the replayed event's own
-        ids, emptying its death delta on replay)."""
-        eps = [e for e in self._epochs("forgets") if e < epoch_id]
-        if not eps:
-            return self.spark.createDataFrame([], _FORGETS_SCHEMA)
-        paths = [f"{self.root}/forgets/epoch={e}" for e in eps]
-        return self.spark.read.schema(_FORGETS_SCHEMA).parquet(*paths)
 
     def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
                ) -> None:
@@ -327,40 +279,35 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
         immediate replay rewrites identical content (the shared
         epoch-replay contract).
 
-        Re-forgotten ids contribute NOTHING (round-9 ADVICE, medium):
-        under at-least-once deletion redelivery the same doc can arrive
-        in two separate forget events with fresh epoch ids; without the
-        anti-join below the second event would write a SECOND death
-        delta for the same fingerprint, breaking the deaths/revivals
-        strict alternation the derived dead test (deaths >= occurrences)
-        depends on — a later revival batch would then re-register the fp
-        (occurrences=2) yet still count as dead (deaths=2), silently
-        dropping its near-dup pairs and letting compact() erase the live
-        fingerprint. The pre-epoch read keeps the guard replay-stable:
-        replaying epoch E re-filters against exactly the epochs < E."""
-        self._recover_compact()
-        ids = doc_ids.select(F.col("doc_id").cast("long")).distinct()
+        Re-forgotten ids contribute NOTHING: under at-least-once
+        deletion redelivery the same doc can arrive in two separate
+        forget events with fresh epoch ids; without the anti-join below
+        the second event would write a SECOND death delta for the same
+        fingerprint, breaking the deaths/revivals strict alternation the
+        derived dead test (deaths >= occurrences) depends on — a later
+        revival batch would then re-register the fp (occurrences=2) yet
+        still count as dead (deaths=2), silently dropping its near-dup
+        pairs and letting compact() erase the live fingerprint. The
+        pre-epoch read (tombstones of epochs < E) keeps the guard
+        replay-stable: replaying epoch E re-filters against exactly the
+        epochs < E, never against its own earlier write."""
+        self._recover()
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        eff = ids.join(self._forgotten_before(epoch_id), on="doc_id",
-                       how="anti")
-        (eff.coalesce(1).write.mode("overwrite")
-         .parquet(f"{self.root}/forgets/epoch={epoch_id}"))
-        eff = self.spark.read.schema(_FORGETS_SCHEMA).parquet(
-            f"{self.root}/forgets/epoch={epoch_id}")
-        eps = self._epochs("banks")
+            epoch_id = self._next_epoch("forgets")
+        self._write_forgets(
+            self._hide(doc_ids, self.id_col, before=epoch_id), epoch_id)
+        eff = self._forgotten(epochs=[epoch_id])
         raw0 = (StreamingSimhashIndex._read(self, "banks", _BANKS_SCHEMA,
-                                            eps)
+                                            self._epochs("banks"))
                 .where(F.col("bank") == 0))
         gone_fps = (raw0.join(eff, on="doc_id", how="semi")
                     .select("simhash").distinct())
-        surviving = raw0.join(self._forgotten(), on="doc_id", how="anti")
-        still_held = (surviving.join(gone_fps, on="simhash", how="semi")
+        still_held = (self._hide(raw0)
+                      .join(gone_fps, on="simhash", how="semi")
                       .select("simhash").distinct())
         new_dead = gone_fps.join(still_held, on="simhash", how="anti")
-        (new_dead.select("simhash").distinct().coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{self.root}/deadfps/epoch={epoch_id}"))
+        self._write_epoch(new_dead.distinct().coalesce(1), "deadfps",
+                          epoch_id)
 
     def process_batch(self, new_docs: DataFrame,
                       epoch_id: int | None = None) -> DataFrame:
@@ -368,108 +315,15 @@ class ForgettingSimhashIndex(StreamingSimhashIndex):
         # fp lands it in this epoch's FIRST-SEEN delta (the dead set is
         # subtracted from the prior-fps view), and that re-appearance
         # itself flips the derived dead test (deaths >= occurrences)
-        self._recover_compact()
-        clash = (new_docs.select(F.col(self.id_col).alias("doc_id"))
-                 .join(self._forgotten(), on="doc_id", how="semi"))
-        if not clash.isEmpty():
-            ids = [r.doc_id for r in clash.limit(5).collect()]
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under new ids")
+        self._reject_retired(new_docs)
         return super().process_batch(new_docs, epoch_id)
 
-    def _drop_dead_deltas(self) -> None:
-        import shutil
-
-        for e in self._epochs("deadfps"):
-            shutil.rmtree(f"{self.root}/deadfps/epoch={e}",
-                          ignore_errors=True)
-
-    def _recover_compact(self) -> None:
-        """Finish a crashed compact() (round-9 ADVICE, low): the
-        `_compact_ready` marker means every staged sub is a complete
-        consistent copy — publish any still pending, then drop the
-        death deltas (the published fps rewrite already erased dead
-        values and deduped revived fps back to ONE occurrence, so a
-        surviving delta would falsely re-kill a revived fingerprint:
-        deaths=1 >= occurrences=1). Marker absent: any `_compacting`
-        dir is garbage from a pre-marker crash; stage_compact clears
-        it before restaging. Called from every mutating operation
-        (process_batch / forget / compact), so recovery is automatic
-        on the next operation — the same protocol ForgettingSpanIndex
-        uses for its cross-sub swap."""
-        import os
-
-        marker = f"{self.root}/_compact_ready"
-        if not os.path.exists(marker):
-            return
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  pending_compaction)
-
-        for sub in ("banks", "fps", "pairs"):
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-        self._drop_dead_deltas()
-        os.remove(marker)
-
-    def compact(self) -> None:
-        """Physically erase tombstoned bank/pair rows and dead fps (the
-        staged state is the filtered read view), then drop the death
-        deltas — post-erasure the fps files no longer contain those
-        values, so a future re-introduction is fresh by absence alone,
-        and a surviving delta would falsely re-kill it (deaths >=
-        occurrences starts over at occurrences=1).
-
-        Cross-sub crash safety (round-9 ADVICE, low — the window the
-        plain super().compact() + delta-drop sequence left open): all
-        three subs are STAGED first from the filtered read view, a
-        `_compact_ready` marker commits, then all are published and the
-        deltas dropped. A crash anywhere leaves either the old state
-        intact (marker absent — stale stagings are garbage) or a
-        marker-committed set of consistent staged copies that the next
-        operation publishes verbatim via _recover_compact()."""
-        import os
-        import shutil
-
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  stage_compact)
-
-        self._recover_compact()
-        marker = f"{self.root}/_compact_ready"
-        staged: list[str] = []
-        for sub, schema in (("banks", _BANKS_SCHEMA),
-                            ("fps", _FPS_SCHEMA),
-                            ("pairs", _PAIRS_SCHEMA)):
-            eps = self._epochs(sub)
-            if eps and (len(eps) > 1 or self._erasure_pending()):
-                shutil.rmtree(f"{self.root}/{sub}/_compacting",
-                              ignore_errors=True)
-                stage_compact(self._read(sub, schema, eps).distinct(),
-                              self.root, sub, eps)
-                staged.append(sub)
-        if staged:
-            with open(marker, "w") as fh:
-                fh.write("ready\n")
-            for sub in staged:
-                finish_compact(self.root, sub)
-        # non-vacuous deltas imply a forget since the last compact,
-        # which implies _erasure_pending() staged fps above; reaching
-        # here un-staged means the deltas are empty files — safe either
-        # way to drop them now
-        self._drop_dead_deltas()
-        if staged:
-            os.remove(marker)
-        self._mark_erased()
-
-    def _erasure_pending(self) -> bool:
-        from dbsync_spark.streaming.state import erasure_pending
-
-        n = self._forgotten().count()
-        return bool(n) and erasure_pending(self.root, "banks", n)
-
-    def _mark_erased(self) -> None:
-        from dbsync_spark.streaming.state import record_erasure
-
-        n = self._forgotten().count()
-        if n:
-            record_erasure(self.root, "banks", n)
+    def _after_publish(self) -> None:
+        """Drop the death deltas inside the publish window: the
+        published fps rewrite already erased dead values and deduped
+        revived fps back to ONE occurrence, so a surviving delta would
+        falsely re-kill a revived fingerprint (deaths=1 >= occurrences=1).
+        Non-vacuous deltas imply a forget since the last compact, which
+        made the erasure pending and staged fps; a compact that staged
+        nothing drops only empty deltas."""
+        remove_epochs(self.root, "deadfps", self._epochs("deadfps"))

@@ -48,9 +48,6 @@ raw text — unlike the LSH index, no text column needs persisting.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, LongType,
@@ -63,8 +60,9 @@ from dbsync_spark.functions.dedup import (_chunked_union,
                                           simjoin_probe,
                                           simjoin_rank_prefix,
                                           simjoin_verify_arrays)
-from dbsync_spark.sources.tables import read_state
-from dbsync_spark.streaming.state import next_epoch, write_parts
+from dbsync_spark.streaming.state import (EpochState, Tombstones,
+                                          count_files, read_json,
+                                          write_json, write_parts)
 
 _SETS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -107,7 +105,7 @@ def _in_list(col: str, vals) -> F.Column:
     return F.expr(f"{col} IN ({','.join(str(int(v)) for v in vals)})")
 
 
-class StreamingSimJoinIndex:
+class StreamingSimJoinIndex(EpochState):
     """Incremental exact similarity join over parquet state dirs. Call
     `process_batch` per micro-batch (directly, or via
     `foreach_batch_handler()` from a writeStream).
@@ -135,8 +133,7 @@ class StreamingSimJoinIndex:
                  shingle_fn=None, n_buckets: int = 32,
                  full_reprobe: bool = False,
                  verify_chunks: int | None = None):
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.num = threshold_num
         self.den = threshold_den
         self.shingle_fn = shingle_fn
@@ -154,14 +151,11 @@ class StreamingSimJoinIndex:
         # first use (round-8 ADVICE): a transient read failure or
         # malformed content on an EXISTING index must propagate, not
         # silently re-pin a different modulus over live state.
-        meta_path = f"{self.root}/_meta.json"
-        try:
-            with open(meta_path) as fh:
-                n_buckets = int(json.load(fh)["n_buckets"])
-        except FileNotFoundError:
-            os.makedirs(self.root, exist_ok=True)
-            with open(meta_path, "w") as fh:
-                json.dump({"n_buckets": n_buckets}, fh)
+        meta = read_json(f"{self.root}/_meta.json")
+        if meta is None:
+            write_json(f"{self.root}/_meta.json", {"n_buckets": n_buckets})
+        else:
+            n_buckets = int(meta["n_buckets"])
         self.nb = n_buckets
 
     # -- state reads (Forgetting subclass filters these) ---------------
@@ -172,62 +166,39 @@ class StreamingSimJoinIndex:
             fields.append(StructField(extra, IntegerType()))
         return self.spark.createDataFrame([], StructType(fields))
 
-    def _state(self, sub: str, schema: StructType,
-               bucket_col: str | None) -> DataFrame:
-        df = read_state(self.spark, f"{self.root}/{sub}",
-                        read_schema=schema, empty_schema=None)
-        if df is None:
-            return self._empty(schema, bucket_col)
-        if bucket_col and bucket_col not in df.columns:
-            # state dir exists but every epoch is empty (no leaf files),
-            # so partition discovery found no bucket dirs
-            df = df.withColumn(bucket_col, F.lit(None).cast("int"))
-        cols = schema.fieldNames() + ([bucket_col] if bucket_col else [])
-        return df.select(*cols)  # project away the epoch partition col
-
-    def _state_before(self, sub: str, schema: StructType,
-                      bucket_col: str | None, epoch_id: int) -> DataFrame:
-        """State from epochs STRICTLY BEFORE `epoch_id` — the probe's
-        view while the current epoch's delta writes run CONCURRENTLY
-        (round-10: the writes are off the critical path, so the probe
-        must not race the directory listing against them; the batch's
-        own contribution is unioned in-memory by the caller instead)."""
-        from dbsync_spark.streaming.state import list_epochs
-
-        eps = [e for e in list_epochs(self.root, sub) if e < epoch_id]
+    def _state(self, sub: str, schema: StructType, bucket_col: str | None,
+               before: int | None = None) -> DataFrame:
+        """Every epoch of `sub` with its bucket partition column; with
+        `before`, only epochs STRICTLY BEFORE it — the probe's view while
+        the current epoch's delta writes run CONCURRENTLY (the writes
+        are off the critical path, so the probe must not race the
+        directory listing against them; the batch's own contribution is
+        unioned in-memory by the caller instead)."""
+        eps = [e for e in self._epochs(sub) if before is None or e < before]
         if not eps:
             return self._empty(schema, bucket_col)
         df = (self.spark.read.schema(schema)
               .option("basePath", f"{self.root}/{sub}")
-              .parquet(*[f"{self.root}/{sub}/epoch={e}" for e in eps]))
+              .parquet(*[self._path(sub, e) for e in eps]))
         if bucket_col and bucket_col not in df.columns:
+            # every epoch is empty (no leaf files), so partition
+            # discovery found no bucket dirs
             df = df.withColumn(bucket_col, F.lit(None).cast("int"))
         cols = schema.fieldNames() + ([bucket_col] if bucket_col else [])
-        return df.select(*cols)
+        return df.select(*cols)  # project away the epoch partition col
 
     # identity in the base class; the Forgetting subclass anti-joins
     # tombstones here so BOTH the full and the before-epoch readers
     # see the filtered view
-    def _filter_sets(self, df: DataFrame) -> DataFrame:
+    def _filter(self, df: DataFrame) -> DataFrame:
         return df
 
-    def _filter_arrays(self, df: DataFrame) -> DataFrame:
-        return df
+    def _sets(self, before: int | None = None) -> DataFrame:
+        return self._filter(self._state("sets", _SETS_SCHEMA, "_b", before))
 
-    def _sets(self) -> DataFrame:
-        return self._filter_sets(self._state("sets", _SETS_SCHEMA, "_b"))
-
-    def _arrays(self) -> DataFrame:
-        return self._filter_arrays(
-            self._state("arrays", _ARRAYS_SCHEMA, "_d"))
-
-    def _sets_before(self, epoch_id: int) -> DataFrame:
-        return self._filter_sets(
-            self._state_before("sets", _SETS_SCHEMA, "_b", epoch_id))
-
-    def _arrays_before(self, epoch_id: int) -> DataFrame:
-        return self._filter_arrays(
-            self._state_before("arrays", _ARRAYS_SCHEMA, "_d", epoch_id))
+    def _arrays(self, before: int | None = None) -> DataFrame:
+        return self._filter(
+            self._state("arrays", _ARRAYS_SCHEMA, "_d", before))
 
     def _dfreq_for(self, token_df: DataFrame, buckets: list[int],
                    hs: list | None,
@@ -240,12 +211,8 @@ class StreamingSimJoinIndex:
         driver action runs here. `before_epoch` restricts to earlier
         epochs (the concurrent-write probe view); the caller adds the
         batch's own in-memory delta."""
-        if before_epoch is None:
-            df = self._state("dfreq", _DFREQ_SCHEMA, "_b")
-        else:
-            df = self._state_before("dfreq", _DFREQ_SCHEMA, "_b",
-                                    before_epoch)
-        df = df.where(_in_list("_b", buckets))
+        df = (self._state("dfreq", _DFREQ_SCHEMA, "_b", before_epoch)
+              .where(_in_list("_b", buckets)))
         if hs is not None:
             df = df.where(_in_list("_h", hs))
         else:
@@ -305,15 +272,11 @@ class StreamingSimJoinIndex:
         forgets) only biases K slightly conservative."""
         path = f"{self.root}/_widths.json"
         try:
-            with open(path) as fh:
-                data = json.load(fh)
+            data = read_json(path, {"epochs": {}})
         except (OSError, ValueError):
             data = {"epochs": {}}
         data["epochs"][str(epoch_id)] = [rows, docs]
-        tmp = f"{path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(data, fh)
-        os.replace(tmp, path)
+        write_json(path, data)
         tot_r = sum(r for r, _ in data["epochs"].values())
         tot_d = sum(d for _, d in data["epochs"].values())
         return tot_r / max(tot_d, 1)
@@ -402,7 +365,7 @@ class StreamingSimJoinIndex:
             buckets, hs = tok_buckets, None
         else:
             buckets, hs = self._prune_info(new_prefix, "_h")
-        probe = (self._sets_before(epoch_id)
+        probe = (self._sets(before=epoch_id)
                  .where(_in_list("_b", buckets))
                  .unionByName(b_sets.where(_in_list("_b", buckets))))
         if hs is not None:
@@ -432,7 +395,7 @@ class StreamingSimJoinIndex:
                    .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
                    .distinct().persist())
         dbuckets, ids = self._prune_info(touched, "doc_id")
-        arrays = (self._arrays_before(epoch_id)
+        arrays = (self._arrays(before=epoch_id)
                   .where(_in_list("_d", dbuckets))
                   .unionByName(b_arrays.where(_in_list("_d", dbuckets))
                                .select(*(["doc_id", "_sh", "_d"]))))
@@ -477,7 +440,7 @@ class StreamingSimJoinIndex:
         from concurrent.futures import ThreadPoolExecutor
 
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "sets")
+            epoch_id = self._next_epoch("sets")
         new_docs = new_docs.select("doc_id", "text")
         if self.full_reprobe:
             return self._process_batch_full(new_docs, epoch_id)
@@ -531,9 +494,8 @@ class StreamingSimJoinIndex:
             # moves only the VERIFIED pairs (threshold survivors, orders
             # of magnitude fewer than candidates), so the verify keeps
             # its own width and the file count stays write_parts.
-            (pairs.repartition(write_parts(self.spark))
-             .write.mode("overwrite")
-             .parquet(f"{self.root}/pairs/epoch={epoch_id}"))
+            self._write_epoch(pairs.repartition(write_parts(self.spark)),
+                              "pairs", epoch_id)
         finally:
             # join the writers even when the probe raised — leaving
             # them running against a to-be-replayed epoch would race
@@ -546,8 +508,7 @@ class StreamingSimJoinIndex:
         if release is not None:
             release()
         batch_sh.unpersist()
-        return self.spark.read.parquet(
-            f"{self.root}/pairs/epoch={epoch_id}")
+        return self.spark.read.parquet(self._path("pairs", epoch_id))
 
     def _process_batch_full(self, new_docs: DataFrame,
                             epoch_id: int) -> DataFrame:
@@ -570,19 +531,9 @@ class StreamingSimJoinIndex:
         all_sh.unpersist()
         # repartition, not coalesce — same verify-width reasoning as the
         # default path's pairs write (process_batch above)
-        (pairs.repartition(write_parts(self.spark))
-         .write.mode("overwrite")
-         .parquet(f"{self.root}/pairs/epoch={epoch_id}"))
-        return self.spark.read.parquet(
-            f"{self.root}/pairs/epoch={epoch_id}")
-
-    def foreach_batch_handler(self):
-        """Adapter for `writeStream.foreachBatch` over a (doc_id, text)
-        stream."""
-        def handle(batch_df: DataFrame, epoch_id: int) -> None:
-            self.process_batch(batch_df, epoch_id)
-
-        return handle
+        self._write_epoch(pairs.repartition(write_parts(self.spark)),
+                          "pairs", epoch_id)
+        return self.spark.read.parquet(self._path("pairs", epoch_id))
 
     def all_pairs(self) -> DataFrame:
         """Every qualifying pair persisted so far."""
@@ -592,10 +543,7 @@ class StreamingSimJoinIndex:
         """Parquet-leaf count under a state sub — the quantity probe
         cost actually tracks (files touched per bucket read), counted
         driver-side from the directory tree (no Spark job)."""
-        n = 0
-        for _dir, _subdirs, files in os.walk(f"{self.root}/{sub}"):
-            n += sum(f.endswith(".parquet") for f in files)
-        return n
+        return count_files(f"{self.root}/{sub}")
 
     def should_compact(self, files_factor: int = 8) -> bool:
         """Compaction trigger derived from the OBSERVED file count
@@ -631,49 +579,23 @@ class StreamingSimJoinIndex:
         contributions (erasing the one place forgotten docs could still
         leave a trace — the candidate-order heuristic). Run only when
         the feeding stream is quiescent past the compacted epochs."""
-        from dbsync_spark.streaming.state import (finish_compact,
-                                                  list_epochs,
-                                                  pending_compaction,
-                                                  staged_compact)
-
-        plan = {"sets": (self._sets, ["_b"], ["_h"]),
-                "arrays": (self._arrays, ["_d"], ["doc_id"]),
-                "pairs": (self.all_pairs, None, None)}
-        for sub, (reader, parts, sort) in plan.items():
-            if pending_compaction(self.root, sub):
-                finish_compact(self.root, sub)
-            eps = list_epochs(self.root, sub)
-            if not eps or (len(eps) <= 1 and not self._has_hidden_rows()):
-                continue
-            staged_compact(reader(), self.root, sub, eps,
-                           partition_by=parts, sort_within=sort)
-        # dfreq: recompute from the surviving (read-path-filtered) set
-        # rows — for the base class identical to summing the deltas
-        # (each doc's tokens counted once either way); for Forgetting,
-        # this is the physical erasure of forgotten docs' counts
-        if pending_compaction(self.root, "dfreq"):
-            finish_compact(self.root, "dfreq")
-        eps = list_epochs(self.root, "dfreq")
-        if eps and (len(eps) > 1 or self._has_hidden_rows()):
-            clean = (self._sets()
-                     .groupBy("_h").agg(F.count("*").alias("_df"))
-                     .withColumn("_b", F.pmod(F.col("_h"),
-                                              F.lit(self.nb)).cast("int")))
-            staged_compact(clean, self.root, "dfreq", eps,
-                           partition_by=["_b"], sort_within=["_h"])
-        self._mark_erased()
-
-    def _has_hidden_rows(self) -> bool:
-        return False
-
-    def _mark_erased(self) -> None:
-        return None
+        layout = {"partition_by": ["_b"], "sort_within": ["_h"]}
+        self._compact_subs({
+            "sets": (self._sets, layout),
+            "arrays": (self._arrays, {"partition_by": ["_d"],
+                                      "sort_within": ["doc_id"]}),
+            "pairs": self.all_pairs,
+            # dfreq: recomputed from the surviving (read-path-filtered)
+            # set rows — for the base class identical to summing the
+            # deltas (each doc's tokens counted once either way); for
+            # Forgetting, the physical erasure of forgotten docs' counts
+            "dfreq": (lambda: self._sets()
+                      .groupBy("_h").agg(F.count("*").alias("_df"))
+                      .withColumn("_b", F.pmod(F.col("_h"), F.lit(self.nb))
+                                  .cast("int")), layout)})
 
 
-_FORGETS_SCHEMA = StructType([StructField("doc_id", LongType())])
-
-
-class ForgettingSimJoinIndex(StreamingSimJoinIndex):
+class ForgettingSimJoinIndex(Tombstones, StreamingSimJoinIndex):
     """StreamingSimJoinIndex with right-to-be-forgotten: `forget`
     tombstones doc ids; set/array reads anti-join the tombstones
     (future probes can never match a forgotten doc) and `all_pairs`
@@ -685,65 +607,17 @@ class ForgettingSimJoinIndex(StreamingSimJoinIndex):
     docstring). Forgotten ids are permanently retired (re-ingest
     raises), matching the other forgetting families."""
 
-    def _forgotten(self) -> DataFrame:
-        return read_state(self.spark, f"{self.root}/forgets",
-                          read_schema=_FORGETS_SCHEMA,
-                          empty_schema=_FORGETS_SCHEMA)
-
-    def forget(self, doc_ids: DataFrame, epoch_id: int | None = None
-               ) -> None:
-        if epoch_id is None:
-            epoch_id = next_epoch(self.root, "forgets")
-        (doc_ids.select(F.col("doc_id").cast("long")).distinct().coalesce(1)
-         .write.mode("overwrite").parquet(
-             f"{self.root}/forgets/epoch={epoch_id}"))
+    _ERASED = "sets"
 
     # filtering at the hook covers BOTH the full readers and the
     # before-epoch probe readers (the concurrent-write probe path)
-    def _filter_sets(self, df: DataFrame) -> DataFrame:
-        return df.join(self._forgotten(), on="doc_id", how="anti")
-
-    def _filter_arrays(self, df: DataFrame) -> DataFrame:
-        return df.join(self._forgotten(), on="doc_id", how="anti")
+    def _filter(self, df: DataFrame) -> DataFrame:
+        return self._hide(df)
 
     def process_batch(self, new_docs: DataFrame,
                       epoch_id: int | None = None) -> DataFrame:
-        clash = (new_docs.select("doc_id")
-                 .join(self._forgotten(), on="doc_id", how="semi"))
-        if not clash.isEmpty():
-            ids = [r.doc_id for r in clash.limit(5).collect()]
-            raise ValueError(
-                f"doc_ids {ids} were forgotten and are permanently "
-                "retired; re-ingest under new ids")
+        self._reject_retired(new_docs)
         return super().process_batch(new_docs, epoch_id)
 
     def all_pairs(self) -> DataFrame:
-        gone = self._forgotten()
-        pairs = super().all_pairs()
-        return (pairs
-                .join(gone.select(F.col("doc_id").alias("doc_a")),
-                      on="doc_a", how="anti")
-                .join(gone.select(F.col("doc_id").alias("doc_b")),
-                      on="doc_b", how="anti")
-                # string-keyed joins move the key column to the front;
-                # restore the schema order
-                .select(*_PAIRS_SCHEMA.fieldNames()))
-
-    def _has_hidden_rows(self) -> bool:
-        """True while tombstones exist that compaction has not yet
-        physically applied (streaming/state.erasure_pending marker —
-        without it every maintenance tick would re-run the full staged
-        rewrite of already-erased state, O(state) work per tick)."""
-        from dbsync_spark.streaming.state import erasure_pending
-
-        n = self._forgotten().count()
-        if n == 0:
-            return False
-        return erasure_pending(self.root, "sets", n)
-
-    def _mark_erased(self) -> None:
-        from dbsync_spark.streaming.state import record_erasure
-
-        n = self._forgotten().count()
-        if n:
-            record_erasure(self.root, "sets", n)
+        return self._hide_pairs(super().all_pairs())

@@ -49,7 +49,7 @@ from pyspark.sql.types import (LongType, StringType, StructField,
 from pyspark.sql.window import Window
 
 from dbsync_spark.functions.text import tokens
-from dbsync_spark.sources.tables import read_state
+from dbsync_spark.streaming.state import EpochState, prune_epochs
 
 _SUMMARY_SCHEMA = StructType([
     StructField("tok", StringType()),
@@ -61,7 +61,7 @@ _META_SCHEMA = StructType([
 ])
 
 
-class StreamingTopkIndex:
+class StreamingTopkIndex(EpochState):
     """Continuous heavy-hitters summary over parquet state dirs. Call
     `process_batch` per micro-batch (directly, or via
     `foreach_batch_handler()` from a writeStream)."""
@@ -69,44 +69,23 @@ class StreamingTopkIndex:
     def __init__(self, spark: SparkSession, root: str, capacity: int = 200):
         if capacity < 1:
             raise ValueError(f"capacity must be >= 1, got {capacity}")
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.capacity = capacity
 
     # -- state access -------------------------------------------------------
 
-    def _epochs(self) -> list[int]:
-        import os
-        import re
-
-        try:
-            entries = os.listdir(f"{self.root}/summary")
-        except FileNotFoundError:
-            return []
-        out = []
-        for e in entries:
-            m = re.fullmatch(r"epoch=(\d+)", e)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
-
-    def _latest_epoch(self) -> int | None:
-        eps = self._epochs()
-        return eps[-1] if eps else None
-
-    def _state(self, epoch: int | None):
-        if epoch is None:
-            empty = self.spark.createDataFrame([], _SUMMARY_SCHEMA)
-            return empty, 0, 0
-        summary = read_state(
-            self.spark, f"{self.root}/summary/epoch={epoch}",
-            read_schema=_SUMMARY_SCHEMA, empty_schema=_SUMMARY_SCHEMA)
-        meta = read_state(
-            self.spark, f"{self.root}/meta/epoch={epoch}",
-            read_schema=_META_SCHEMA, empty_schema=_META_SCHEMA).first()
+    def _state(self, before: int | None = None):
+        """(summary, total_n, err) of the newest epoch (< `before` when
+        given); empty before the first batch."""
+        eps = self._newest("summary", before)
+        summary = self._read_epochs("summary", _SUMMARY_SCHEMA, eps)
+        if not eps:
+            return summary, 0, 0
+        meta = (self._read_epochs("meta", _META_SCHEMA, eps).first()
+                if eps[0] in self._epochs("meta") else None)
         if meta is None:  # summary dir exists but meta missing: corrupt
             raise RuntimeError(
-                f"topk state epoch {epoch} has a summary but no meta row "
+                f"topk state epoch {eps[0]} has a summary but no meta row "
                 f"under {self.root}/meta — refusing to guess total/err")
         return summary, meta["total_n"], meta["err"]
 
@@ -115,15 +94,12 @@ class StreamingTopkIndex:
     def process_batch(self, new_docs: DataFrame, epoch_id: int | None = None,
                       text_col: str = "text") -> None:
         """Merge one (.., text) micro-batch into the summary."""
-        from dbsync_spark.streaming.state import next_epoch
-
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "summary")
+            epoch_id = self._next_epoch("summary")
         # cumulative state: epoch N is a pure function of the newest
         # state STRICTLY BEFORE N — so a replay of epoch N reads the
         # same predecessor it read the first time, never itself
-        before = [e for e in self._epochs() if e < epoch_id]
-        summary, total_n, err = self._state(before[-1] if before else None)
+        summary, total_n, err = self._state(before=epoch_id)
 
         toks = (new_docs.select(F.explode(tokens(F.col(text_col)))
                                 .alias("tok"))
@@ -156,13 +132,11 @@ class StreamingTopkIndex:
                 "tok", (F.col("nhat") - F.lit(d)).alias("nhat"))
                 .where(F.col("nhat") > 0))
 
-        merged.select("tok", F.col("nhat").cast("long")) \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(f"{self.root}/summary/epoch={epoch_id}")
-        self.spark.createDataFrame(
-            [(int(total_n + batch_n), int(err + d))], _META_SCHEMA) \
-            .write.mode("overwrite") \
-            .parquet(f"{self.root}/meta/epoch={epoch_id}")
+        self._write_epoch(merged.select("tok", F.col("nhat").cast("long"))
+                          .coalesce(1), "summary", epoch_id)
+        self._write_epoch(self.spark.createDataFrame(
+            [(int(total_n + batch_n), int(err + d))], _META_SCHEMA),
+            "meta", epoch_id)
 
     def foreach_batch_handler(self, text_col: str = "text"):
         """Adapter for `writeStream.foreachBatch` over a document
@@ -179,8 +153,6 @@ class StreamingTopkIndex:
         newest epoch of each sub is never touched, and both subs share
         epoch ids, so reads resolve the same pair at every intermediate
         point)."""
-        from dbsync_spark.streaming.state import prune_epochs
-
         return (prune_epochs(self.root, "meta")
                 + prune_epochs(self.root, "summary"))
 
@@ -189,8 +161,7 @@ class StreamingTopkIndex:
     def summary(self) -> DataFrame:
         """(tok, nhat, err, total_n) for the latest epoch — empty frame
         before the first batch."""
-        latest = self._latest_epoch()
-        s, total_n, err = self._state(latest)
+        s, total_n, err = self._state()
         return s.select("tok", "nhat", F.lit(err).cast("long").alias("err"),
                         F.lit(total_n).cast("long").alias("total_n"))
 
@@ -203,7 +174,7 @@ class StreamingTopkIndex:
                 .where(F.col("rank") <= k))
 
 
-class StreamingTrendingIndex:
+class StreamingTrendingIndex(EpochState):
     """Per-window heavy hitters: the same mergeable Misra-Gries state,
     kept independently per time bucket — "what's trending TODAY", not
     all-time. State is (bucket, tok, nhat) + per-bucket (total_n, err);
@@ -228,8 +199,7 @@ class StreamingTrendingIndex:
                  ts_col: str = "ts", bucket: str = "day"):
         if capacity < 1:
             raise ValueError(f"capacity must be >= 1, got {capacity}")
-        self.spark = spark
-        self.root = root.rstrip("/")
+        super().__init__(spark, root)
         self.capacity = capacity
         self.ts_col = ts_col
         self.bucket = bucket
@@ -239,39 +209,22 @@ class StreamingTrendingIndex:
             StructField("err", LongType()),
         ])
 
-    def _epochs(self) -> list[int]:
-        import os
-        import re
-
-        try:
-            entries = os.listdir(f"{self.root}/summary")
-        except FileNotFoundError:
-            return []
-        return sorted(int(m.group(1)) for e in entries
-                      if (m := re.fullmatch(r"epoch=(\d+)", e)))
-
-    def _state(self, epoch: int | None):
-        if epoch is None:
-            return (self.spark.createDataFrame([], self._SUM_SCHEMA),
-                    self.spark.createDataFrame([], self._meta_schema))
-        summary = read_state(self.spark, f"{self.root}/summary/epoch={epoch}",
-                             read_schema=self._SUM_SCHEMA,
-                             empty_schema=self._SUM_SCHEMA)
-        meta = read_state(self.spark, f"{self.root}/meta/epoch={epoch}",
-                          read_schema=self._meta_schema,
-                          empty_schema=self._meta_schema)
-        return summary, meta
+    def _state(self, before: int | None = None):
+        """(summary, meta) frames of the newest epoch (< `before` when
+        given); empty before the first batch."""
+        eps = self._newest("summary", before)
+        return (self._read_epochs("summary", self._SUM_SCHEMA, eps),
+                self._read_epochs("meta", self._meta_schema,
+                                  [e for e in eps
+                                   if e in self._epochs("meta")]))
 
     def process_batch(self, new_docs: DataFrame,
                       epoch_id: int | None = None,
                       text_col: str = "text",
                       pre_tokenized: bool = False) -> None:
-        from dbsync_spark.streaming.state import next_epoch
-
         if epoch_id is None:
-            epoch_id = next_epoch(self.root, "summary")
-        before = [e for e in self._epochs() if e < epoch_id]
-        summary, meta = self._state(before[-1] if before else None)
+            epoch_id = self._next_epoch("summary")
+        summary, meta = self._state(before=epoch_id)
 
         # pre_tokenized: text_col already holds ONE token per row (e.g. a
         # categorical event_type) — count it verbatim instead of
@@ -322,11 +275,10 @@ class StreamingTrendingIndex:
                      + F.coalesce(F.col("_d"), F.lit(0)))
                     .cast("long").alias("err"))
         )
-        compressed.select("bucket", "tok", F.col("nhat").cast("long")) \
-            .coalesce(1).write.mode("overwrite") \
-            .parquet(f"{self.root}/summary/epoch={epoch_id}")
-        new_meta.coalesce(1).write.mode("overwrite") \
-            .parquet(f"{self.root}/meta/epoch={epoch_id}")
+        self._write_epoch(compressed.select("bucket", "tok",
+                                            F.col("nhat").cast("long"))
+                          .coalesce(1), "summary", epoch_id)
+        self._write_epoch(new_meta.coalesce(1), "meta", epoch_id)
 
     def foreach_batch_handler(self, text_col: str = "text",
                               pre_tokenized: bool = False):
@@ -339,15 +291,12 @@ class StreamingTrendingIndex:
     def compact(self) -> int:
         """Same cumulative-state compaction as StreamingTopkIndex: drop
         every epoch dir but the newest of meta and summary."""
-        from dbsync_spark.streaming.state import prune_epochs
-
         return (prune_epochs(self.root, "meta")
                 + prune_epochs(self.root, "summary"))
 
     def trending(self, k: int = 10) -> DataFrame:
         """(bucket, tok, nhat, err, total_n, rank): top-k per bucket."""
-        eps = self._epochs()
-        summary, meta = self._state(eps[-1] if eps else None)
+        summary, meta = self._state()
         w = Window.partitionBy("bucket").orderBy(
             F.col("nhat").desc(), F.col("tok"))
         return (summary.join(meta, on="bucket")

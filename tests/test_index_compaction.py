@@ -412,14 +412,18 @@ def test_dsir_compact_preserves_model_and_erases_attribution(
 def test_every_index_service_has_compact():
     """Architecture guard: every persisted epoch-dir streaming service
     must expose OPTIMIZE-style compact() — a new index family added
-    without one silently regrows the O(n_epochs) file problem."""
+    without one silently regrows the O(n_epochs) file problem. Services
+    are the EpochState subclasses of the *_index modules, and every
+    Streaming*/Forgetting* class there must be one, so the guard cannot
+    pass by matching nothing."""
     import importlib
     import inspect
     import pkgutil
 
     import dbsync_spark.streaming as st
+    from dbsync_spark.streaming.state import EpochState
 
-    missing = []
+    services, missing = [], []
     for m in pkgutil.iter_modules(st.__path__):
         if not m.name.endswith("_index"):
             continue
@@ -427,7 +431,11 @@ def test_every_index_service_has_compact():
         for name, cls in inspect.getmembers(mod, inspect.isclass):
             if cls.__module__ != mod.__name__:
                 continue
-            src = inspect.getsource(cls)
-            if "epoch=" in src and not hasattr(cls, "compact"):
-                missing.append(f"{m.name}.{name}")
+            if name.startswith(("Streaming", "Forgetting")):
+                assert issubclass(cls, EpochState), f"{m.name}.{name}"
+            if issubclass(cls, EpochState):
+                services.append(name)
+                if not hasattr(cls, "compact"):
+                    missing.append(f"{m.name}.{name}")
+    assert len(services) >= 22, services
     assert not missing, f"epoch-dir services without compact(): {missing}"

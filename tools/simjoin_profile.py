@@ -82,7 +82,8 @@ def main() -> int:
     idx._prune_info = timed_prune
     wrap(idx, "_write_deltas")
     wrap(idx, "_probe")
-    wrap(idx, "_state_before")
+    # the probe reads before-epoch state only
+    wrap(idx, "_state", "_state_before")
     wrap(idx, "_batch_frames")
     wrap(idx, "_dfreq_for")
     orig_cu = sji._chunked_union

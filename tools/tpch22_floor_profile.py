@@ -26,7 +26,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 TPCH = [
     "q_pricing_summary", "q_min_cost_supplier", "q_top_revenue_orders",
