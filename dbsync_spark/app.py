@@ -26,9 +26,11 @@ from dbsync_spark.monitor.health import (
     evaluate_rules,
     status_endpoints,
 )
-from dbsync_spark.operators.retention import sweep
+from dbsync_spark.operators.retention import (expired_segments, sweep,
+                                              sweep_into_place)
 from dbsync_spark.operators.status import status_counts
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA, SYNC_STATUS_SCHEMA
+from dbsync_spark.sinks.layout import compact, recover_dir
 from dbsync_spark.sources.tables import read_state
 from dbsync_spark.streaming.pipeline import SyncPipeline
 
@@ -108,11 +110,8 @@ class DbSyncApp:
                 n_buckets=self.config.sys.targetBuckets,
                 max_retry=self.config.sys.maxRetry,
             )
-            from dbsync_spark.operators.retention import recover_sweep
-            from dbsync_spark.sinks.layout import recover_compaction
-
-            recover_sweep(pipe.log_path)  # crashed retention sweep, if any
-            recover_compaction(status_path)  # crashed status compaction
+            recover_dir(pipe.log_path)  # crashed retention sweep, if any
+            recover_dir(status_path)  # crashed status compaction
             os.makedirs(pipe.log_path, exist_ok=True)
             self.pipelines.append(pipe)
             self.registry.register(f"pipeline:{key}->{tgt_key}",
@@ -187,21 +186,18 @@ class DbSyncApp:
         already processed). File-granular, converges as segments age.
 
         mode="rewrite" (maintenance windows / drained pipelines):
-        row-exact sweep — ONE staged write + directory swap, crash-
-        recovered by recover_sweep (operators/retention.py). Rewriting
+        row-exact sweep — ONE staged write + directory swap through
+        sinks/layout.replace_dir, whose recover_dir runs before each
+        log is read, so a crashed sweep is settled first. Rewriting
         produces NEW file names, which a RUNNING stream would treat as
         fresh input; never use it under live queries."""
-        from dbsync_spark.operators.retention import (expired_segments,
-                                                      recover_sweep,
-                                                      sweep_into_place)
-
         cutoff_expr = F.lit(now) if now is not None else F.current_timestamp()
         cutoff = cutoff_expr - F.expr(
             f"INTERVAL {self.config.sys.dataKeepHours} HOURS")
         with self._control_lock:  # see sync_state
             for db in {r.source_db for r in self.config.syncs}:
                 log_path = os.path.join(self.base_dir, "log", db)
-                recover_sweep(log_path)
+                recover_dir(log_path)
                 log = read_state(self.spark, log_path,
                                  read_schema=SYNC_DATA_SCHEMA)
                 if log is None:
@@ -232,8 +228,6 @@ class DbSyncApp:
         retention_pass's job, not this one's). Runs on the retention tick
         — the reference likewise VACUUMs its status tables after the
         clean sweep (PgOperation.scala:378-385). Returns dirs compacted."""
-        from dbsync_spark.sinks.layout import compact
-
         threshold = (self.config.sys.statusCompactFiles
                      if max_files is None else max_files)
         if threshold <= 0:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbsync_spark.functions.text import h15
+from dbsync_spark.sinks.layout import replace_partitions, restore_asides
 
 
 def shard_assign(df: DataFrame, key_col: str, n_shards: int) -> DataFrame:
@@ -101,17 +102,14 @@ def update_shards(spark, path: str, new_df: DataFrame, key_col: str,
     shards|), independent of corpus size (the export-side analogue of
     BucketedTable.merge_changes, sinks/table.py).
 
-    Crash-safe via the same per-directory rename-aside swap: a touched
-    shard is always present as either its live dir or its `.old` aside,
-    and `recover_shards` runs FIRST (before the layout is read) so a
-    re-run after a mid-swap crash sees the restored pre-crash rows — not
-    an empty shard it would then "merge" the batch into alone. The
-    sharding rule must match the layout's pinned `_META.json`. Returns
-    the touched shard ids."""
-    import os
-    import shutil
-
-    recover_shards(path)
+    Crash-safe via the same per-directory rename-aside swap
+    (replace_partitions): a touched shard is always present as either its
+    live dir or its aside, and restore_asides runs FIRST (before the
+    layout is read) so a re-run after a mid-swap crash sees the restored
+    pre-crash rows — not an empty shard it would then "merge" the batch
+    into alone. The sharding rule must match the layout's pinned
+    `_META.json`. Returns the touched shard ids."""
+    restore_asides(path)
     _check_meta(path, key_col, n_shards)
     assigned = shard_assign(new_df, key_col, n_shards).localCheckpoint()
     touched = sorted(r[0] for r in
@@ -131,30 +129,11 @@ def update_shards(spark, path: str, new_df: DataFrame, key_col: str,
                     .join(assigned.select(key_col), on=key_col,
                           how="left_anti"))
         merged = existing.unionByName(assigned)
-    staging = path.rstrip("/") + ".staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    (merged.repartition(len(touched), F.col("shard"))
-     .sortWithinPartitions("shard", order)
-     .write.mode("overwrite").partitionBy("shard").parquet(staging))
-    from dbsync_spark.sinks.layout import promote_dir
-
-    os.makedirs(path, exist_ok=True)
-    for s in touched:
-        src = os.path.join(staging, f"shard={s}")
-        if os.path.isdir(src):
-            promote_dir(src, os.path.join(path, f"shard={s}"))
-    shutil.rmtree(staging, ignore_errors=True)
+    replace_partitions(merged.repartition(len(touched), F.col("shard"))
+                       .sortWithinPartitions("shard", order),
+                       path, "shard", touched)
     _write_meta(path, key_col, n_shards)  # pin on first (empty-dir) refresh
     return touched
-
-
-def recover_shards(path: str) -> None:
-    """Close update_shards' crash window: restore any `shard=K.old`
-    whose live dir is missing; drop asides whose swap completed.
-    Runs automatically at the top of every update_shards."""
-    from dbsync_spark.sinks.layout import restore_asides
-
-    restore_asides(path)
 
 
 def shard_manifest(df: DataFrame, key_col: str, n_shards: int,

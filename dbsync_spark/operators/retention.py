@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbsync_spark.sinks.layout import replace_dir
+
 
 def expired(log: DataFrame, status: DataFrame, cutoff: Column,
             id_col: str = "id") -> DataFrame:
@@ -75,48 +77,10 @@ def expired_segments(log: DataFrame, status: DataFrame, cutoff: Column,
     return [unquote(urlparse(u).path) for u in uris]
 
 
-SWEEP_SUFFIX = ".sweeping"
-
-
 def sweep_into_place(kept: DataFrame, log_path: str) -> None:
-    """Commit a sweep with ONE data write: write the kept rows to a
-    sibling staging dir, then swap directories (delete old, rename new).
-    The old double-rewrite (staging write + read-back + second overwrite
-    of the original path) paid 2x the log in write amplification AND had
-    a corruption window — a crash between the two overwrites lost the
-    log. Here the only unsafe window is between rmtree and rename, and
-    `recover_sweep` closes it: the staging dir is complete (parquet
-    _SUCCESS committed) before the old dir is touched."""
-    import os
-    import shutil
-
-    tmp = log_path.rstrip("/") + SWEEP_SUFFIX
-    shutil.rmtree(tmp, ignore_errors=True)  # stale staging from a crash
-    kept.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(log_path)
-    os.replace(tmp, log_path)
-
-
-def recover_sweep(log_path: str) -> str | None:
-    """Crash recovery for sweep_into_place, run before any read of the
-    log. Returns the action taken (or None).
-
-    - crash after staging write, before rmtree: log intact, staging is an
-      orphan -> drop the staging dir (the sweep simply re-runs later);
-    - crash after rmtree, before rename: log gone, staging complete
-      (_SUCCESS present) -> rename staging into place."""
-    import os
-    import shutil
-
-    tmp = log_path.rstrip("/") + SWEEP_SUFFIX
-    if not os.path.isdir(tmp):
-        return None
-    committed = os.path.exists(os.path.join(tmp, "_SUCCESS"))
-    if os.path.isdir(log_path):
-        shutil.rmtree(tmp)
-        return "dropped-stale-staging"
-    if committed:
-        os.replace(tmp, log_path)
-        return "promoted-staging"
-    shutil.rmtree(tmp)  # incomplete staging AND no log: nothing usable
-    return "dropped-incomplete-staging"
+    """Commit a sweep with ONE data write: the kept rows are written to a
+    staging sibling and swapped in by replace_dir (sinks/layout.py). The
+    live log is renamed aside, never deleted, until the swept copy is in
+    place, so a kill at any point leaves the whole pre-sweep log or the
+    whole swept one — never a partial log, and never a lost pending row."""
+    replace_dir(log_path, kept.write.mode("overwrite").parquet)

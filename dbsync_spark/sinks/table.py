@@ -19,11 +19,11 @@ Two layouts, one interface (`read` / `merge_changes`):
   keys) bytes at every target size; at 100 TB the advisory is set to a
   parquet-friendly 128-512 MB per bucket.
 
-Spark cannot overwrite parquet partitions it is reading in the same job,
-so both layouts break lineage from the files before the swap
-(localCheckpoint for the bucketed merge — the merged touched-bucket frame
-is batch-sized, not target-sized). Crash mid-commit can leave a subset of
-partitions new — safe, because merge_snapshot is replay-idempotent
+Spark cannot overwrite parquet files it is reading in the same job, so
+neither layout writes in place: ParquetTable writes the next version dir,
+and BucketedTable writes the merged buckets to a staging dir that
+`sinks/layout.replace_partitions` swaps in. Crash mid-commit can leave a
+subset of buckets new — safe, because merge_snapshot is replay-idempotent
 (`_last_id` watermark): the streaming checkpoint re-runs the batch and
 re-merging is a no-op on already-updated buckets.
 """
@@ -37,6 +37,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
+
+from dbsync_spark.sinks.layout import (recover_dir, replace_dir,
+                                       replace_partitions, restore_asides)
 
 
 # --- scale-adaptive bucket sizing (OPTIMIZATION r11, guide §2/§6) -------
@@ -70,26 +73,6 @@ def right_sized_buckets(total_bytes: int) -> int:
     while n < cap and n * target < total_bytes:
         n *= 2
     return n
-
-
-def _recover_table_dir(path: str) -> None:
-    """Close rebucket()'s crash windows before a table dir is opened:
-    if `path` is missing, a complete `.rebucketing` sibling (built fully
-    before the old dir moves) is promoted, else the `.old` rename-aside
-    is restored; if `path` exists, stale siblings are garbage from a
-    finished or abandoned resize and are dropped. Without this, the
-    makedirs in the constructor would mask the crash state and silently
-    open an EMPTY table."""
-    path = path.rstrip("/")
-    tmp, aside = path + ".rebucketing", path + ".old"
-    if not os.path.isdir(path):
-        if os.path.isdir(tmp):
-            os.replace(tmp, path)
-        elif os.path.isdir(aside):
-            os.replace(aside, path)
-    else:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(aside, ignore_errors=True)
 
 
 class ParquetTable:
@@ -167,7 +150,9 @@ class BucketedTable:
                  n_buckets: int | None = 64):
         self.path = path
         self.key_cols = list(key_cols)
-        _recover_table_dir(path)
+        # before makedirs: a crashed rebucket/migration must be restored,
+        # not masked by a fresh EMPTY table dir
+        recover_dir(path)
         os.makedirs(path, exist_ok=True)
         meta_path = os.path.join(path, "_META.json")
         if (not os.path.exists(meta_path)
@@ -209,17 +194,8 @@ class BucketedTable:
             F.xxhash64(*[F.col(k).cast("string") for k in self.key_cols]),
             F.lit(self.n_buckets)).cast("int")
 
-    def _recover_buckets(self) -> None:
-        """Close the bucket-swap crash window: a kill between the two
-        renames leaves `_bucket=K.old` behind — if the live dir is
-        missing, the .old copy IS the table (restore it); if the live dir
-        exists, the swap completed and .old is garbage (drop it)."""
-        from dbsync_spark.sinks.layout import restore_asides
-
-        restore_asides(self.data_path)
-
     def _read_raw(self, spark: SparkSession) -> DataFrame | None:
-        self._recover_buckets()
+        restore_asides(self.data_path)  # a crashed bucket swap
         if not os.path.isdir(self.data_path):
             return None
         from dbsync_spark.sources.tables import read_state
@@ -260,16 +236,16 @@ class BucketedTable:
            clustered on the bucket column: ONE exchange (one partition per
            touched bucket) feeds both the LWW reduce and the write, so
            each touched bucket comes out as ~1 file;
-        4. write the merged buckets to a STAGING dir (one write, reading
-           the live files normally — no self-overwrite), then swap each
-           touched bucket in with two atomic renames (live -> .old,
-           staging -> live; .old dropped last). Untouched partitions are
-           never opened or rewritten.
+        4. replace_partitions: write the merged buckets to a STAGING dir
+           (one write, reading the live files normally — no
+           self-overwrite), then swap each touched bucket in with the
+           rename-aside promote. Untouched partitions are never opened
+           or rewritten.
 
         Crash safety: mid-swap, a bucket is always present as either its
-        live dir or its `.old` rename (never deleted before the new copy
-        is in place) — `_recover_buckets` restores/cleans on the next
-        read. Some buckets new and some old is safe because
+        live dir or its aside (never deleted before the new copy is in
+        place) — restore_asides restores/cleans before the next read.
+        Some buckets new and some old is safe because
         merge_snapshot is replay-idempotent (_last_id watermark): the
         streaming checkpoint re-runs the batch and re-merging an
         already-updated bucket is a no-op. (A localCheckpoint + dynamic
@@ -288,20 +264,7 @@ class BucketedTable:
         touched, out = self._merged_slice(spark, changes)
         if not touched:
             return
-        staging = self.data_path + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        (out.write.mode("overwrite")
-         .partitionBy(self.BUCKET_COL).parquet(staging))
-        from dbsync_spark.sinks.layout import promote_dir
-
-        os.makedirs(self.data_path, exist_ok=True)
-        for b in touched:
-            src = os.path.join(staging, f"{self.BUCKET_COL}={b}")
-            if os.path.isdir(src):
-                # atomic rename-aside, never rmtree the only copy
-                promote_dir(src, os.path.join(
-                    self.data_path, f"{self.BUCKET_COL}={b}"))
-        shutil.rmtree(staging, ignore_errors=True)
+        replace_partitions(out, self.data_path, self.BUCKET_COL, touched)
         if self.auto_sized:
             self._maybe_resize(spark)
 
@@ -324,7 +287,7 @@ class BucketedTable:
         # biggest slice of the fixed per-batch floor). The bucket column
         # is not inferred from multi-path reads; it is recomputed from
         # the keys.
-        self._recover_buckets()
+        restore_asides(self.data_path)
         paths = [os.path.join(self.data_path, f"{self.BUCKET_COL}={b}")
                  for b in touched]
         paths = [p for p in paths if os.path.isdir(p)]
@@ -387,6 +350,27 @@ def snapshot_as_changes(snap: DataFrame) -> DataFrame:
         *[c for c in snap.columns if c not in (LAST_ID_COL, DELETED_COL)])
 
 
+def _rebuild_bucketed(spark: SparkSession, path: str,
+                      snap: DataFrame | None, key_cols: list[str],
+                      n_buckets: int, auto: bool = False) -> "BucketedTable":
+    """Replace the table dir at `path` with a BucketedTable of `n_buckets`
+    holding `snap` (watermarks and tombstones preserved), built in full
+    in a staging sibling while the old table stays readable (replace_dir:
+    a crash leaves the old table or the new one, never neither)."""
+    def build(staging: str) -> None:
+        tbl = BucketedTable(staging, key_cols, n_buckets)
+        if snap is not None:
+            tbl.merge_changes(spark, snapshot_as_changes(snap), key_cols)
+        if auto:
+            # an auto-sized table stays auto-sized after a resize (flag
+            # set after the rebuild merge so it cannot recurse)
+            tbl.auto_sized = True
+            tbl._write_meta()
+
+    replace_dir(path, build)
+    return BucketedTable(path, key_cols, n_buckets)
+
+
 def migrate_snapshot_to_bucketed(spark: SparkSession, path: str,
                                  key_cols: list[str],
                                  n_buckets: int = 64) -> "BucketedTable":
@@ -394,56 +378,20 @@ def migrate_snapshot_to_bucketed(spark: SparkSession, path: str,
     (ParquetTable) as a BucketedTable AT THE SAME PATH, preserving the
     snapshot's `_last_id` watermarks and tombstones so the streaming
     checkpoint resumes exactly where it left off (an older replayed
-    change still cannot clobber a migrated row). The bucketed copy is
-    built fully in a `.rebucketing` sibling while the snapshot stays
-    readable, then swapped in with the same atomic renames as
-    rebucket() — every crash window is covered by _recover_table_dir
-    (either the snapshot or the complete bucketed table is at — or restorable
-    to — `path`, never neither)."""
-    old = ParquetTable(path)
-    snap = old.read(spark)
-    tmp = path.rstrip("/") + ".rebucketing"
-    shutil.rmtree(tmp, ignore_errors=True)
-    bt_tmp = BucketedTable(tmp, key_cols, n_buckets)
-    if snap is not None:
-        bt_tmp.merge_changes(spark, snapshot_as_changes(snap), key_cols)
-    aside = path.rstrip("/") + ".old"
-    shutil.rmtree(aside, ignore_errors=True)
-    os.replace(path, aside)
-    os.replace(tmp, path)
-    shutil.rmtree(aside, ignore_errors=True)
-    return BucketedTable(path, key_cols, n_buckets)
+    change still cannot clobber a migrated row)."""
+    recover_dir(path)  # before ParquetTable's makedirs, as in BucketedTable
+    snap = ParquetTable(path).read(spark)
+    return _rebuild_bucketed(spark, path, snap, key_cols, n_buckets)
 
 
 def rebucket(spark: SparkSession, path: str, key_cols: list[str],
              new_n_buckets: int) -> "BucketedTable":
     """Resize a BucketedTable's bucket count in place (the OPTIMIZE-style
     maintenance op for when the original n_buckets no longer fits the
-    batch key count — see the sizing rule in the class docstring).
-
-    Builds the re-bucketed copy in a sibling dir from the current
-    snapshot (watermarks/tombstones preserved, same replay guarantees as
-    migrate_snapshot_to_bucketed), then swaps directories with atomic
-    renames: a crash leaves either the old table or the new one complete
-    at `path` (plus a recoverable .old/.rebucketing sibling), never
-    neither."""
+    batch key count — see the sizing rule in the class docstring), with
+    the same replay guarantees as migrate_snapshot_to_bucketed."""
     old_tbl = BucketedTable(path, key_cols)
     if old_tbl.n_buckets == new_n_buckets:
         return old_tbl
-    snap = old_tbl.read(spark)
-    tmp = path.rstrip("/") + ".rebucketing"
-    shutil.rmtree(tmp, ignore_errors=True)
-    new_tbl = BucketedTable(tmp, key_cols, new_n_buckets)
-    if snap is not None:
-        new_tbl.merge_changes(spark, snapshot_as_changes(snap), key_cols)
-    if old_tbl.auto_sized:
-        # an auto-sized table stays auto-sized after a resize (flag set
-        # after the rebuild merge so the rebuild itself cannot recurse)
-        new_tbl.auto_sized = True
-        new_tbl._write_meta()
-    aside = path.rstrip("/") + ".old"
-    shutil.rmtree(aside, ignore_errors=True)
-    os.replace(path, aside)
-    os.replace(tmp, path)
-    shutil.rmtree(aside, ignore_errors=True)
-    return BucketedTable(path, key_cols, new_n_buckets)
+    return _rebuild_bucketed(spark, path, old_tbl.read(spark), key_cols,
+                             new_n_buckets, auto=old_tbl.auto_sized)

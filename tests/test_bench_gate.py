@@ -8,12 +8,15 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _bench():
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py")
+        "bench", os.path.join(REPO, "bench.py"))
     mod = importlib.util.module_from_spec(spec)
     sys.modules["bench"] = mod
     spec.loader.exec_module(mod)
@@ -144,7 +147,7 @@ def test_stdout_line_fits_the_driver_tail_capture():
     against the REAL committed cell set plus headroom for a few added
     cells; the renaming floor (key names alone ~1.5 KB) is documented in
     OPTIMIZATION_r11.md."""
-    with open("/root/repo/BENCH_r10.json") as fh:
+    with open(os.path.join(REPO, "BENCH_r10.json")) as fh:
         real = json.load(fh)["parsed"]
     queries = dict(real["queries"])
     # headroom: the cells this round ADDs (additions only, never renames)

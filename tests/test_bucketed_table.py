@@ -10,6 +10,8 @@ Contracts pinned here:
 - pipeline end-to-end: SyncPipeline with the default bucketed layout
   matches the batch LWW result (the q_streaming_apply oracle covers the
   value-level check; here we pin layout-specific behavior).
+The crash windows of the bucket swap and of rebucketing are pinned with
+the other directory swaps in tests/test_dir_swap.py.
 """
 
 from __future__ import annotations
@@ -206,33 +208,6 @@ def test_layout_mismatch_refused_and_migration_works(spark, sf_dir, tmp_path):
         ParquetTable(path)
 
 
-def test_bucket_swap_crash_recovery(spark, sf_dir, tmp_path):
-    """Simulate a kill between the two swap renames: the live bucket dir
-    was renamed aside (.old) but the staged copy never landed — the next
-    read restores the .old copy; a completed swap's leftover .old is
-    dropped."""
-    import os
-    import shutil
-
-    ch = _changes(spark, sf_dir)
-    bt = BucketedTable(str(tmp_path / "bt"), ["o_orderkey"], n_buckets=4)
-    bt.merge_changes(spark, ch, ["o_orderkey"])
-    n = live_rows(bt.read(spark)).count()
-    buckets = [d for d in os.listdir(bt.data_path)
-               if d.startswith("_bucket=")]
-    victim = os.path.join(bt.data_path, buckets[0])
-
-    # window: live renamed aside, new copy never arrived
-    os.replace(victim, victim + ".old")
-    assert live_rows(bt.read(spark)).count() == n  # restored transparently
-    assert os.path.isdir(victim) and not os.path.isdir(victim + ".old")
-
-    # window: swap completed but .old cleanup was killed
-    shutil.copytree(victim, victim + ".old")
-    assert live_rows(bt.read(spark)).count() == n  # .old ignored+dropped
-    assert not os.path.isdir(victim + ".old")
-
-
 def test_empty_batch_is_a_no_op(spark, sf_dir, tmp_path):
     ch = _changes(spark, sf_dir)
     bt = BucketedTable(str(tmp_path / "bt"), ["o_orderkey"], n_buckets=8)
@@ -269,39 +244,6 @@ def test_rebucket_resizes_preserving_state(spark, sf_dir, tmp_path):
     assert live_rows(bt2.read(spark)).count() == n
     # same-size resize is a no-op object
     assert rebucket(spark, path, ["o_orderkey"], 16).n_buckets == 16
-
-
-def test_rebucket_crash_windows_recovered(spark, sf_dir, tmp_path):
-    """Every rebucket/migration crash window leaves a recoverable state:
-    (a) path renamed aside, new copy not yet promoted -> next open
-    promotes the complete .rebucketing copy; (b) only .old remains ->
-    restored; (c) stale siblings next to a live table -> dropped."""
-    import shutil
-
-    ch = _changes(spark, sf_dir).limit(200)
-    path = str(tmp_path / "t")
-    bt = BucketedTable(path, ["o_orderkey"], n_buckets=4)
-    bt.merge_changes(spark, ch, ["o_orderkey"])
-    n = live_rows(bt.read(spark)).count()
-
-    # (a) crash between the two renames: path gone, .rebucketing complete
-    shutil.copytree(path, path + ".rebucketing")
-    shutil.move(path, path + ".old")
-    bt2 = BucketedTable(path, ["o_orderkey"])
-    assert live_rows(bt2.read(spark)).count() == n
-    assert not os.path.isdir(path + ".rebucketing")
-
-    # (b) only .old remains
-    shutil.move(path, path + ".old")
-    bt3 = BucketedTable(path, ["o_orderkey"])
-    assert live_rows(bt3.read(spark)).count() == n
-
-    # (c) stale siblings beside a live table are dropped
-    os.makedirs(path + ".rebucketing")
-    os.makedirs(path + ".old")
-    BucketedTable(path, ["o_orderkey"])
-    assert not os.path.isdir(path + ".rebucketing")
-    assert not os.path.isdir(path + ".old")
 
 
 @pytest.mark.parametrize("n_merges,n_buckets", [(6, 8), (25, 32)])

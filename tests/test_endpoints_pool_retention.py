@@ -5,8 +5,8 @@
 - the bounded connection pool (DatasourcePools.scala:16-42): maxActive
   bound, connect retries with backoff, acquire timeout, stats counters,
   session query-timeout statement;
-- crash-safe single-write retention sweep (sweep_into_place +
-  recover_sweep) covering both crash windows.
+- crash-safe single-write retention sweep (sweep_into_place): a kill
+  while the pre-sweep log is deleted loses no row.
 """
 
 from __future__ import annotations
@@ -287,33 +287,59 @@ def _mk_log(spark, path, n=100):
      .write.mode("overwrite").parquet(path))
 
 
-def test_sweep_into_place_single_write_and_recovery(spark, tmp_path):
-    from dbsync_spark.operators.retention import recover_sweep, sweep_into_place
+def test_sweep_into_place_single_write_and_recovery(spark, tmp_path,
+                                                   monkeypatch):
+    """One data write per sweep, and a kill while the pre-sweep log's
+    files are being deleted loses no row: the swap renames the live log
+    aside before it deletes anything, so recovery finds either the whole
+    pre-sweep log or the whole swept one, never a partial log. (The swap's
+    own crash windows are in tests/test_dir_swap.py.)"""
+    from dbsync_spark.operators.retention import sweep, sweep_into_place
+    from dbsync_spark.sinks.layout import recover_dir
 
     log = str(tmp_path / "log")
     _mk_log(spark, log)
     kept = spark.read.parquet(log).where(F.col("id") % 2 == 0)
     sweep_into_place(kept, log)
     assert spark.read.parquet(log).count() == 50
-    assert not os.path.isdir(log + ".sweeping")  # staging gone after swap
+    assert os.listdir(tmp_path) == ["log"]  # no staging or aside left
 
-    # crash window 1: staged write done, old log never deleted
-    kept2 = spark.read.parquet(log).where(F.col("id") % 4 == 0)
-    kept2.write.mode("overwrite").parquet(log + ".sweeping")
-    assert recover_sweep(log) == "dropped-stale-staging"
-    assert spark.read.parquet(log).count() == 50  # original intact
+    # three files; ids divisible by 3 are OK-acked and expired, the rest
+    # are pending and must survive any kill
+    log = str(tmp_path / "log3")
+    (spark.range(60)
+     .select("id", F.lit("2020-01-01").cast("timestamp").alias("createTime"))
+     .repartition(3).write.parquet(log))
+    pre_files = {f for f in os.listdir(log) if f.endswith(".parquet")}
+    assert len(pre_files) == 3
+    acks = spark.range(0, 60, 3).select(F.col("id").alias("dataId"),
+                                        F.lit("OK").alias("status"))
+    cutoff = F.lit("2021-01-01").cast("timestamp")
 
-    # crash window 2: old log deleted, rename pending
-    kept2.write.mode("overwrite").parquet(log + ".sweeping")
-    shutil.rmtree(log)
-    assert recover_sweep(log) == "promoted-staging"
-    assert spark.read.parquet(log).count() == 25  # staging promoted
+    def ids():
+        return sorted(r["id"] for r in spark.read.parquet(log).collect())
 
-    # incomplete staging (no _SUCCESS) and no log -> dropped, not promoted
-    os.makedirs(log + ".sweeping", exist_ok=True)
-    shutil.rmtree(log)
-    assert recover_sweep(log) == "dropped-incomplete-staging"
-    assert not os.path.isdir(log)
+    pre, swept = ids(), [i for i in range(60) if i % 3]
+    real_rmtree = shutil.rmtree
+
+    def killed_rmtree(path, *args, **kwargs):
+        # deletes one pre-sweep file, then the process dies
+        victims = (sorted(pre_files & set(os.listdir(path)))
+                   if os.path.isdir(path) else [])
+        if victims:
+            os.unlink(os.path.join(path, victims[0]))
+            raise OSError("killed while deleting the pre-sweep log")
+        real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", killed_rmtree)
+    with pytest.raises(OSError, match="killed"):
+        sweep_into_place(sweep(spark.read.parquet(log), acks, cutoff), log)
+    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
+
+    recover_dir(log)
+    assert ids() in (pre, swept)
+    sweep_into_place(sweep(spark.read.parquet(log), acks, cutoff), log)
+    assert ids() == swept
 
 
 def test_app_retention_still_correct(spark, sf_dir, tmp_path):

@@ -23,7 +23,6 @@ from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
 from dbsync_spark.config import parse_config
 from dbsync_spark.functions.export import (export_shards, shard_assign,
                                            shard_manifest)
-from dbsync_spark.sinks.layout import compact, recover_compaction
 
 APP_YAML = """
 sys: {maxPollWait: 5000, dataKeepHours: 24, statusCompactFiles: 8}
@@ -122,37 +121,6 @@ def test_status_compaction_waits_for_ack_lock(spark, sf_dir, tmp_path):
     app.stop()
 
 
-def test_compact_crash_windows_recoverable(spark, tmp_path):
-    path = str(tmp_path / "acks")
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    for i in range(6):
-        df.where(F.col("id") % 6 == i).write.mode("append").parquet(path)
-    rows = sorted(r["id"] for r in spark.read.parquet(path).collect())
-
-    # crash AFTER the aside rename, before the tmp promote: live dir
-    # missing, .old holds the original -> recover restores it
-    tmp = path + ".compacting"
-    df.write.mode("overwrite").parquet(tmp)
-    os.replace(path, path + ".old")
-    recover_compaction(path)
-    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == rows
-    assert not os.path.isdir(path + ".old") and not os.path.isdir(tmp)
-
-    # crash DURING the tmp write (half-written copy, live dir intact):
-    # recover drops the garbage and keeps the live dir
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as f:
-        f.write(b"not parquet")
-    recover_compaction(path)
-    assert not os.path.isdir(tmp)
-    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == rows
-
-    # a real compaction bounds the file count with the data unchanged
-    n = compact(spark, path, target_files=2)
-    assert n <= 2
-    assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == rows
-
-
 def test_export_shards_layout_roundtrip_determinism(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     out = str(tmp_path / "shards")
@@ -201,7 +169,7 @@ def test_update_shards_touches_only_affected_dirs(spark, sf_dir, tmp_path):
     export_shards(docs, out, "doc_id", n_shards=8, order_col="doc_id")
 
     # 3 updated docs + 2 brand-new ones
-    from dbsync_spark.functions.export import recover_shards, update_shards
+    from dbsync_spark.functions.export import update_shards
     upd = (docs.limit(3)
            .withColumn("text", F.concat(F.col("text"), F.lit(" v2"))))
     new = (docs.limit(2)
@@ -241,13 +209,4 @@ def test_update_shards_touches_only_affected_dirs(spark, sf_dir, tmp_path):
 
     # idempotent: re-applying the same batch changes nothing
     update_shards(spark, out, batch, "doc_id", 8, order_col="doc_id")
-    assert spark.read.parquet(out).count() == full.count()
-
-    # crash window: live dir renamed aside but staging not promoted ->
-    # recover restores the aside
-    s0 = touched[0]
-    live = os.path.join(out, f"shard={s0}")
-    os.replace(live, live + ".old")
-    recover_shards(out)
-    assert os.path.isdir(live) and not os.path.isdir(live + ".old")
     assert spark.read.parquet(out).count() == full.count()

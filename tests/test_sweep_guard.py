@@ -7,9 +7,11 @@ oracle evidence."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def test_every_registered_query_has_committed_sweep_evidence():

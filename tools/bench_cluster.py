@@ -22,7 +22,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 RAW = "/tmp/bench_cluster_raw.json"
 
@@ -37,14 +38,14 @@ def main() -> int:
         "SPARK_GRAFT_DRIVER_MEM": "16g",
         "SPARK_GRAFT_BENCH_OUT": RAW,
     })
-    rc = subprocess.call([sys.executable, "/root/repo/bench.py"], env=env)
+    rc = subprocess.call([sys.executable, os.path.join(REPO, "bench.py")], env=env)
     if rc != 0:
         print(f"bench under local-cluster failed rc={rc}",
               file=sys.stderr)
         return rc
     with open(RAW) as fh:
         cluster = json.load(fh)
-    with open("/root/repo/BENCH_LOCAL.json") as fh:
+    with open(os.path.join(REPO, "BENCH_LOCAL.json")) as fh:
         local = json.load(fh)
     lq, cq = local.get("queries", {}), cluster.get("queries", {})
     ratios = {k: round(cq[k] / lq[k], 3) for k in cq
@@ -64,7 +65,7 @@ def main() -> int:
         "calibration": cluster.get("calibration"),
         "noise_gate": cluster.get("noise_gate"),
     }
-    with open("/root/repo/BENCH_CLUSTER.json", "w") as fh:
+    with open(os.path.join(REPO, "BENCH_CLUSTER.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({"n_cells": len(cq), "n_over_2x": len(over2x),
                       "worst": dict(list(over2x.items())[:5])}))

@@ -22,7 +22,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.drive_contract import run_contract  # noqa: E402
 
@@ -72,7 +73,7 @@ def main() -> int:
     print(f"master={execs} "
           f"defaultParallelism={spark.sparkContext.defaultParallelism}")
     os.environ.setdefault("CONTRACT_CLUSTER_JSON",
-                          "/root/repo/CONTRACT_CLUSTER.json")
+                          os.path.join(REPO, "CONTRACT_CLUSTER.json"))
     rc = run_contract(
         spark, sf_dir, only, out_env="CONTRACT_CLUSTER_JSON",
         extra_meta={"master": f"local-cluster[{n_exec},{cores},{mem_mb}]",

@@ -19,7 +19,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _dir_bytes(path: str) -> int:
@@ -99,7 +100,7 @@ def main() -> int:
         "write_amplification_saved": round(
             full_bytes / max(tail["delta_bytes"], 1), 2),
     }
-    with open("/root/repo/CLUSTER_SOAK.json", "w") as fh:
+    with open(os.path.join(REPO, "CLUSTER_SOAK.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({kk: out[kk] for kk in out if kk != "epochs"}))
     spark.stop()

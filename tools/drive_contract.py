@@ -8,10 +8,12 @@ Usage: python tools/drive_contract.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]

@@ -26,10 +26,12 @@ Usage: python tools/family_forget_soak.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _rows(df):
@@ -292,7 +294,7 @@ def main() -> int:
           and result["ivf"]["all_match_rebuild"]
           and not result["ivf"]["any_phantom"])
     result["ok"] = ok
-    with open("/root/repo/FAMILY_FORGET_SOAK.json", "w") as fh:
+    with open(os.path.join(REPO, "FAMILY_FORGET_SOAK.json"), "w") as fh:
         json.dump(result, fh, indent=1)
     print(json.dumps({k: (v if not isinstance(v, dict)
                           else {kk: vv for kk, vv in v.items()

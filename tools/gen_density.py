@@ -25,7 +25,7 @@ the copies x base-group id arithmetic of the main fixture is untouched.
 
 Usage: python tools/gen_density.py [out_dir] [copies] [dup_pct]
            [plant_per_band]
-       (defaults /root/repo/.scratch/sfd1, 10, 20, 10)
+       (defaults .scratch/sfd1, 10, 20, 10)
 """
 
 from __future__ import annotations
@@ -34,7 +34,8 @@ import hashlib
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 PLANT_BASE = 10**12
@@ -73,7 +74,7 @@ def main() -> int:
 
     from dbsync_spark.session import get_spark
 
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sfd1"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sfd1")
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     dup_pct = int(sys.argv[3]) if len(sys.argv) > 3 else 20
     plant_per_band = int(sys.argv[4]) if len(sys.argv) > 4 else 10

@@ -5,9 +5,11 @@ exist, this renders them."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -40,7 +42,7 @@ def main() -> None:
         doc = doc.replace("|", "\\|")
         mode = "SQL-exact" if name in oracles else "rows-only"
         lines.append(f"| `{name}` | {mode} | {doc} |")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"QUERIES.md: {len(qs)} queries ({len(oracles)} oracle-checked)")
 

@@ -18,7 +18,7 @@ Replication is KEY-SPACE scaling, not row duplication games:
   structure for the same reason.
 
 Usage: python tools/gen_sf1.py [out_dir] [copies]
-       (defaults /root/repo/.scratch/sf1, 10; copies=30 writes the
+       (defaults .scratch/sf1, 10; copies=30 writes the
         sf3-equivalent decade-and-a-half fixture for tools/scaling.py's
         third datapoint on the worst-alpha operators)
 """
@@ -28,7 +28,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1"
 COPIES = 10  # overridden by argv[2]
@@ -40,7 +41,7 @@ def main() -> int:
     from dbsync_spark.session import get_spark
 
     global COPIES
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sf1")
     if len(sys.argv) > 2:
         COPIES = int(sys.argv[2])
     os.makedirs(out, exist_ok=True)

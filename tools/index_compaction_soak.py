@@ -17,7 +17,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _count_files(root: str) -> int:

@@ -8,11 +8,13 @@ Measurement only. Usage: python tools/microbatch_ab.py [sf_dir] [reps]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:

@@ -25,7 +25,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def measure(spark, sf_dir: str) -> dict:
@@ -85,8 +86,8 @@ def measure(spark, sf_dir: str) -> dict:
 def main() -> int:
     from dbsync_spark.session import get_spark
 
-    sf1 = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
-    sf3 = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf3"
+    sf1 = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sf1")
+    sf3 = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, ".scratch/sf3")
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("minhash-alpha")
     spark.sparkContext.setLogLevel("ERROR")
@@ -103,7 +104,7 @@ def main() -> int:
         r = b[key] / max(a[key], 1)
         out[f"growth_{key}"] = round(r, 3)
         out[f"alpha_{key}"] = round(math.log(r) / math.log(ratio_docs), 3)
-    with open("/root/repo/MINHASH_ALPHA.json", "w") as fh:
+    with open(os.path.join(REPO, "MINHASH_ALPHA.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({k: v for k, v in out.items() if k != "legs"}))
     spark.stop()

@@ -19,7 +19,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def dir_bytes(path: str) -> int:
@@ -90,7 +91,7 @@ def main() -> int:
             results.append(row)
             print(json.dumps(row), flush=True)
     out = {"sf_dir": sf_dir, "results": results}
-    with open("/root/repo/NBUCKETS_SWEEP.json", "w") as fh:
+    with open(os.path.join(REPO, "NBUCKETS_SWEEP.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     spark.stop()
     return 0

@@ -24,11 +24,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-SF1 = "/root/repo/.scratch/sf1"
-SF3 = "/root/repo/.scratch/sf3"
+SF1 = os.path.join(REPO, ".scratch/sf1")
+SF3 = os.path.join(REPO, ".scratch/sf3")
 # one per operator family: LWW apply kernel, LSH dedup, fact-fact join,
 # ANN, text scan, TPC-H agg/join, window, graph iteration
 QUERIES = [
@@ -70,7 +71,7 @@ SF1_QUERIES = [
 # the r4-flagged fleet-worst exponents get a THIRD decade-step (sf1 ->
 # sf3, a 3x data step): proves the sf0.1->sf1 exponent was not a
 # crossover artifact (judge r4 item #7). Generate with
-# `python tools/gen_sf1.py /root/repo/.scratch/sf3 30`.
+# `python tools/gen_sf1.py .scratch/sf3 30`.
 SF3_QUERIES = ["q_minhash_char", "q_apply_upsert", "q_dup_spans",
                "q_minhash_dedup"]
 

@@ -19,11 +19,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 LADDER = [("sf0.1", "/root/testdata/sf0.1"),
-          ("sfd1", "/root/repo/.scratch/sfd1"),
-          ("sfd3", "/root/repo/.scratch/sfd3")]
+          ("sfd1", os.path.join(REPO, ".scratch/sfd1")),
+          ("sfd3", os.path.join(REPO, ".scratch/sfd3"))]
 QUERIES = ["q_minhash_char", "q_minhash_dedup",
            # round-7: the EXACT similarity join — candidate count is
            # quadratic on the ~100%-dense sf1 fixture (298M candidates,
@@ -38,7 +39,7 @@ def main() -> int:
     from dbsync_spark import queries as Q
     from dbsync_spark.session import get_spark
 
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/SCALING.json"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "SCALING.json")
     for _, d in LADDER:
         if not os.path.isdir(d):
             print(f"missing fixture {d} — run tools/gen_density.py first",

@@ -20,10 +20,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF01 = "/root/testdata/sf0.1"
-SF1 = "/root/repo/.scratch/sf1"
+SF1 = os.path.join(REPO, ".scratch/sf1")
 
 TPCH = [
     "q_pricing_summary", "q_min_cost_supplier", "q_top_revenue_orders",
@@ -41,7 +42,7 @@ def main() -> int:
     import __spark_entry__ as mod
     from dbsync_spark.session import get_spark
 
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/SCALING.json"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "SCALING.json")
     if not os.path.isdir(SF1):
         print("sf1 fixture missing: run python tools/gen_sf1.py first")
         return 2

@@ -34,7 +34,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 _H15 = "('0x' || substr(md5({s}), 1, 15))::BIGINT"
 
@@ -67,7 +68,7 @@ def main() -> int:
     from dbsync_spark.session import get_spark
     from dbsync_spark.sources.tables import read_table
 
-    sf1 = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1"
+    sf1 = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sf1")
     mod = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("sf1-sampled-oracles")
@@ -153,7 +154,7 @@ SELECT node AS doc_id, min(lab) AS canonical_id FROM reach GROUP BY node
     print(results["q_dedup_cluster"], flush=True)
     spark.stop()
 
-    art = "/root/repo/CONTRACT_SF1_DEDUP.json"
+    art = os.path.join(REPO, "CONTRACT_SF1_DEDUP.json")
     with open(art) as fh:
         data = json.load(fh)
     for k, v in results.items():

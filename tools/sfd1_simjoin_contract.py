@@ -32,7 +32,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SIMJOIN_SH_SAMPLED = """sh AS MATERIALIZED (
   SELECT DISTINCT doc_id,
@@ -78,7 +79,7 @@ def main() -> int:
 
     from dbsync_spark.session import get_spark
 
-    sfd1 = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sfd1"
+    sfd1 = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sfd1")
     mod = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("sfd1-simjoin-contract")
@@ -290,8 +291,8 @@ FROM inter JOIN sizes sa ON sa.doc_id = doc_a
 
     # merge with an existing artifact so subset re-runs update in place
     prev: dict = {}
-    if os.path.exists("/root/repo/CONTRACT_SFD1_R8.json"):
-        with open("/root/repo/CONTRACT_SFD1_R8.json") as fh:
+    if os.path.exists(os.path.join(REPO, "CONTRACT_SFD1_R8.json")):
+        with open(os.path.join(REPO, "CONTRACT_SFD1_R8.json")) as fh:
             prev = json.load(fh).get("results", {})
     prev.update(results)
     results = prev
@@ -314,7 +315,7 @@ FROM inter JOIN sizes sa ON sa.doc_id = doc_a
         "failures": [k for k, v in results.items()
                      if v["status"] != "MATCH"],
     }
-    with open("/root/repo/CONTRACT_SFD1_R8.json", "w") as fh:
+    with open(os.path.join(REPO, "CONTRACT_SFD1_R8.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({k: v["status"] for k, v in results.items()}))
     spark.stop()

@@ -13,7 +13,7 @@ CONSTRUCTION; this proves it at adversarial density), plus driver-JVM
 peak heap. Writes SFD3_STREAM.json.
 
 Usage: python tools/sfd3_stream_ingest.py [fixture] [n_batches]
-       (defaults /root/repo/.scratch/sfd3, 10)
+       (defaults .scratch/sfd3, 10)
 """
 
 from __future__ import annotations
@@ -24,7 +24,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -36,7 +37,7 @@ def main() -> int:
     from dbsync_spark.streaming.simjoin_index import StreamingSimJoinIndex
 
     fixture = (sys.argv[1] if len(sys.argv) > 1
-               else "/root/repo/.scratch/sfd3")
+               else os.path.join(REPO, ".scratch/sfd3"))
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("sfd3-stream")
@@ -94,7 +95,7 @@ def main() -> int:
         "compare_secs": t_cmp,
         "driver_heap_used_gb_at_end": heap_used_gb,
     }
-    with open("/root/repo/SFD3_STREAM.json", "w") as fh:
+    with open(os.path.join(REPO, "SFD3_STREAM.json"), "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps({k: v for k, v in out.items() if k != "batches"}))
     spark.stop()

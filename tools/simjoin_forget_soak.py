@@ -18,10 +18,12 @@ Usage: python tools/simjoin_forget_soak.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -100,7 +102,7 @@ def main() -> int:
               "all_match_rebuild": all(s["match_rebuild"] for s in steps),
               "any_resurfaced": any(s["forgotten_pairs_resurfaced"]
                                     for s in steps)}
-    with open("/root/repo/SIMJOIN_FORGET_SOAK.json", "w") as fh:
+    with open(os.path.join(REPO, "SIMJOIN_FORGET_SOAK.json"), "w") as fh:
         json.dump(result, fh, indent=1)
     print(json.dumps({k: v for k, v in result.items() if k != "steps"}))
     spark.stop()

@@ -7,7 +7,7 @@ deltas — interop documented in simjoin_index) and times exactly one
 full-reprobe batch vs one delta batch at the same index size.
 
 Usage: python tools/simjoin_full_spot.py [K] [batch_size] [fixture]
-       (defaults 40, 500, /root/repo/.scratch/sfd1)
+       (defaults 40, 500, .scratch/sfd1)
 Appends a `full_spot_k{K}_b{B}` entry into SIMJOIN_SOAK.json.
 """
 
@@ -19,7 +19,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -32,7 +33,7 @@ def main() -> int:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 40
     batch_size = int(sys.argv[2]) if len(sys.argv) > 2 else 500
     fixture = (sys.argv[3] if len(sys.argv) > 3
-               else "/root/repo/.scratch/sfd1")
+               else os.path.join(REPO, ".scratch/sfd1"))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("simjoin-full-spot")
     spark.sparkContext.setLogLevel("ERROR")
@@ -81,7 +82,7 @@ def main() -> int:
         "pairs_match": pairs_full == pairs_delta,
         "n_pairs": len(pairs_delta),
     }
-    out_path = "/root/repo/SIMJOIN_SOAK.json"
+    out_path = os.path.join(REPO, "SIMJOIN_SOAK.json")
     data = json.load(open(out_path)) if os.path.exists(out_path) else {}
     data.setdefault("runs", {})[f"full_spot_k{k}_b{batch_size}"] = result
     with open(out_path, "w") as fh:

@@ -9,7 +9,7 @@ collects, the three delta writes, the candidate measure pass, and the
 verify+write remainder.
 
 Usage: python tools/simjoin_profile.py [warmup] [batch_size] [fixture]
-       (defaults 20, 500, /root/repo/.scratch/sfd1)
+       (defaults 20, 500, .scratch/sfd1)
 """
 
 from __future__ import annotations
@@ -20,7 +20,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -33,7 +34,7 @@ def main() -> int:
     warmup = int(sys.argv[1]) if len(sys.argv) > 1 else 20
     batch_size = int(sys.argv[2]) if len(sys.argv) > 2 else 500
     fixture = (sys.argv[3] if len(sys.argv) > 3
-               else "/root/repo/.scratch/sfd1")
+               else os.path.join(REPO, ".scratch/sfd1"))
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("simjoin-profile")
     spark.sparkContext.setLogLevel("ERROR")

@@ -18,7 +18,7 @@ corpus (match_batch_recompute). Emits SIMJOIN_SOAK.json.
 
 Usage: python tools/simjoin_soak.py [K] [batch_size] [fixture_dir]
            [full_until] [compact_every]
-       (defaults 12, 1500, /root/repo/.scratch/sfd1, K, 0)
+       (defaults 12, 1500, .scratch/sfd1, K, 0)
 
 `full_until` stops the full-reprobe baseline after that many epochs
 (judge r8 item #2: its GROWTH is the point, not its endpoint — the
@@ -36,7 +36,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
@@ -50,7 +51,7 @@ def main() -> int:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 12
     batch_size = int(sys.argv[2]) if len(sys.argv) > 2 else 1500
     fixture = (sys.argv[3] if len(sys.argv) > 3
-               else "/root/repo/.scratch/sfd1")
+               else os.path.join(REPO, ".scratch/sfd1"))
     full_until = int(sys.argv[4]) if len(sys.argv) > 4 else k
     # "auto" = file-count-triggered maintain() (judge r9 item #7)
     # instead of a hand-tuned every-N cadence
@@ -161,7 +162,7 @@ def main() -> int:
     }
     # merge by config so a large-batch and a small-batch (pushdown
     # regime) series can coexist in one artifact
-    out_path = "/root/repo/SIMJOIN_SOAK.json"
+    out_path = os.path.join(REPO, "SIMJOIN_SOAK.json")
     data = {}
     if __import__("os").path.exists(out_path):
         with open(out_path) as fh:

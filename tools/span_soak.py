@@ -10,11 +10,13 @@ Usage: python tools/span_soak.py [K] [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
