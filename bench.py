@@ -625,10 +625,18 @@ def main() -> None:
     # distinct words, ~8k merge capacity) and trains >=1000 merges with
     # batch_k=32. Conflicts cap the EFFECTIVE merges/round at ~15-18 on
     # this corpus regardless of batch_k — the committed per-round curve
-    # quantifies exactly that, and the wall-clock shows the driver-round
-    # count (not corpus size) is the cost driver.
+    # quantifies exactly that. The cell times one distributed word count
+    # plus the trainer's in-process merge loop (functions/bpe.py), which
+    # runs no Spark job per round.
     quiet_gate("bpe")
     from dbsync_spark.functions.bpe import bpe_train
+
+    def _per_round(merges) -> list[int]:
+        """Merges selected in each round, rounds 1..last."""
+        curve: dict = {}
+        for _mr, rnd, _a, _b, _n in merges:
+            curve[rnd] = curve.get(rnd, 0) + 1
+        return [curve.get(r, 0) for r in range(1, max(curve, default=0) + 1)]
 
     bpe_docs = read_table(spark, SF_DIR, "documents")
     _toks = F.split(F.col("text"), " ")
@@ -642,28 +650,20 @@ def main() -> None:
     t0 = time.time()
     bpe_merges, _ = bpe_train(pair_docs, n_rounds=72, batch_k=32, pool=128)
     timings["bpe_1k_vocab_train"] = round(time.time() - t0, 3)
-    bpe_curve: dict = {}
-    for _mr, _rnd, _a, _b, _n in bpe_merges:
-        bpe_curve[_rnd] = bpe_curve.get(_rnd, 0) + 1
+    bpe_curve = _per_round(bpe_merges)
     bpe_summary = {
         "n_merges": len(bpe_merges),
-        "n_rounds": max(bpe_curve) if bpe_curve else 0,
+        "n_rounds": len(bpe_curve),
         "batch_k": 32,
-        "merges_per_round": [bpe_curve.get(r, 0)
-                             for r in range(1, (max(bpe_curve) if bpe_curve
-                                                else 0) + 1)],
+        "merges_per_round": bpe_curve,
     }
 
     # -- BPE at PRODUCTION vocab scale (judge r5 item #8): >= 10k merges ----
-    # trained with the INCREMENTAL-pair-count trainer over a trigram-word
-    # corpus (27k distinct words, ~340k merge capacity at sf0.1). The
-    # per-round second curve is the graded property: flat or falling —
-    # each round's wide work touches only words containing a selected
-    # pair, never the vocabulary (functions/bpe.py bpe_train_incremental;
-    # merge-sequence exactness vs bpe_train/bpe_reference is pinned in
-    # tests/test_bpe.py).
-    from dbsync_spark.functions.bpe import bpe_train_incremental
-
+    # trained over a trigram-word corpus (27k distinct words, ~340k merge
+    # capacity at sf0.1) with the adaptive batch_k schedule. The same one
+    # trainer as the 1k cell: the merge loop's per-round work touches only
+    # the words holding a selected pair, never the corpus (merge-sequence
+    # exactness vs bpe_reference is pinned in tests/test_bpe.py).
     quiet_gate("bpe_10k")
     _tri = F.array_join(
         F.zip_with(F.slice(_toks, 1, F.size(_toks) - 2),
@@ -672,24 +672,20 @@ def main() -> None:
                               lambda a, b: F.concat(a, b)),
                    lambda a, b: F.concat(a, b)), " ")
     tri_docs = bpe_docs.select("doc_id", _tri.alias("text"))
-    remeasure["bpe_10k_vocab_train"] = lambda: bpe_train_incremental(
+    remeasure["bpe_10k_vocab_train"] = lambda: bpe_train(
         tri_docs, n_rounds=600, batch_k=32, pool=1024, adaptive=True,
         target_merges=10_000)
     t0 = time.time()
-    merges_10k, _, stats_10k = bpe_train_incremental(
+    merges_10k, _ = bpe_train(
         tri_docs, n_rounds=600, batch_k=32, pool=1024, adaptive=True,
         target_merges=10_000)
     timings["bpe_10k_vocab_train"] = round(time.time() - t0, 3)
-    secs_10k = [s[3] for s in stats_10k]
-    q = max(len(secs_10k) // 4, 1)
+    curve_10k = _per_round(merges_10k)
+    q = max(len(curve_10k) // 4, 1)
     bpe_summary["vocab_10k"] = {
         "n_merges": len(merges_10k),
-        "n_rounds": len(stats_10k),
-        "round_secs_first_quarter_mean": round(sum(secs_10k[:q]) / q, 3),
-        "round_secs_last_quarter_mean": round(sum(secs_10k[-q:]) / q, 3),
-        "round_secs_max": max(secs_10k) if secs_10k else 0,
-        "merges_per_round_tail_mean": round(
-            sum(s[1] for s in stats_10k[-q:]) / q, 1),
+        "n_rounds": len(curve_10k),
+        "merges_per_round_tail_mean": round(sum(curve_10k[-q:]) / q, 1),
     }
 
     # -- streaming simjoin service: per-batch floor (judge r10 item #5) -----

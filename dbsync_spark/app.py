@@ -28,7 +28,7 @@ from dbsync_spark.monitor.health import (
 )
 from dbsync_spark.operators.retention import (expired_segments, sweep,
                                               sweep_into_place)
-from dbsync_spark.operators.status import status_counts
+from dbsync_spark.operators.status import current_status, status_counts
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA, SYNC_STATUS_SCHEMA
 from dbsync_spark.sinks.layout import compact, recover_dir
 from dbsync_spark.sources.tables import read_state
@@ -85,9 +85,10 @@ class DbSyncApp:
     # -- bootstrap ----------------------------------------------------------
     def bootstrap(self) -> None:
         os.makedirs(self.base_dir, exist_ok=True)
-        if self._listener is None:
-            from dbsync_spark.monitor.listener import HeartbeatListener
+        from dbsync_spark.monitor.listener import (HeartbeatListener,
+                                                  component_name)
 
+        if self._listener is None:
             self._listener = HeartbeatListener(
                 self.registry, interval_ms=self.config.sys.maxPollWait or 60000)
             self.spark.streams.addListener(self._listener)
@@ -114,7 +115,9 @@ class DbSyncApp:
             recover_dir(status_path)  # crashed status compaction
             os.makedirs(pipe.log_path, exist_ok=True)
             self.pipelines.append(pipe)
-            self.registry.register(f"pipeline:{key}->{tgt_key}",
+            # the entry the listener beats on the query's every progress
+            # and idle event (the query is named after the pipeline)
+            self.registry.register(component_name(pipe.name),
                                    interval_ms=self.config.sys.maxPollWait or 60000)
 
     def run_all_available(self) -> None:
@@ -127,14 +130,28 @@ class DbSyncApp:
         exactly why bootstrap hands pipelines on the same source a shared
         ack_lock — concurrent parquet appends to one path corrupt each
         other's committer temp files."""
-        queries = [(pipe, pipe.start(available_now=True))
-                   for pipe in self.pipelines]
-        for pipe, q in queries:
+        queries = [pipe.start(available_now=True) for pipe in self.pipelines]
+        for q in queries:
             q.awaitTermination()
-            self.registry.heartbeat(
-                f"pipeline:{pipe.rule.source_db}.{pipe.rule.source_schema}."
-                f"{pipe.rule.source_table}->{pipe.rule.target_db}."
-                f"{'.'.join(pipe.rule.resolved_target())}")
+
+    def start_pipelines(self) -> list:
+        """Start every pipeline in continuous mode: a processing-time
+        trigger every maxPollWait, 5 s at most. Spark posts an idle event
+        instead of progress on a trigger that finds no new data, by
+        default at most once per 10 s; the queries start with that
+        throttle off, so the listener beats each pipeline's entry on every
+        trigger, busy or quiet. The conf is read when a query starts, so
+        its previous value is restored right after."""
+        period_ms = min(self.config.sys.maxPollWait or 60000, 5000)
+        key = "spark.sql.streaming.noDataProgressEventInterval"
+        old = self.spark.conf.get(key)
+        self.spark.conf.set(key, "0")
+        try:
+            return [p.start(available_now=False,
+                            processing_time=f"{period_ms} milliseconds")
+                    for p in self.pipelines]
+        finally:
+            self.spark.conf.set(key, old)
 
     # -- control loops -------------------------------------------------------
     def _status_df(self, source_db: str):
@@ -156,7 +173,11 @@ class DbSyncApp:
                                  read_schema=SYNC_DATA_SCHEMA)
                 if log is None:
                     continue
-                rows = status_counts(log, self._status_df(db)).collect()
+                # one row per change, by its latest status: the ack log
+                # is append-only, so a retried change has one row per
+                # status it has held
+                rows = status_counts(
+                    log, current_status(self._status_df(db))).collect()
                 part = SyncState.from_status_counts(
                     [{"status": r["status"], "cnt": r["cnt"]} for r in rows])
                 for f_ in ("pending", "blocked", "error", "success", "others"):
@@ -492,8 +513,7 @@ def main(argv: list[str] | None = None) -> int:
     app.start_control_loops()  # retry/retention/monitor interval jobs
     while True:
         app._reloaded = False
-        queries = [p.start(available_now=False, processing_time="5 seconds")
-                   for p in app.pipelines]
+        queries = app.start_pipelines()
         try:
             for q in queries:
                 q.awaitTermination()

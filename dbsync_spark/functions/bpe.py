@@ -1,25 +1,27 @@
-"""Distributed BPE (byte-pair-encoding) tokenizer training with BATCHED
-merge rounds — the scale fix for the classic driver-sequential loop.
+"""BPE (byte-pair-encoding) tokenizer training with BATCHED merge rounds:
+one distributed word count, then an incremental merge loop in one process.
 
 Scale shape:
-- state lives in the (word, cnt, enc) word-frequency table, which is
-  post-aggregation data — at 100 TB of corpus this is the distinct-word
-  table (millions of rows, not trillions of tokens), spread across the
-  cluster;
-- each ROUND is one map-side-combined pair-count aggregate plus a
-  TakeOrdered(pool) top-k (no full sort), and the ONLY driver state is
-  that bounded candidate pool per round — the k-means/BPE "tiny
-  aggregate crosses the driver" shape;
-- per round, up to `batch_k` NON-CONFLICTING merges (pairs sharing no
-  symbol with any earlier-selected pair of the round, nor with a
-  symbol an earlier selection creates) are applied together, so a
-  30k-merge vocabulary costs ~30k/batch_k driver rounds instead of 30k
-  sequential Spark jobs;
-- applying a merge is a narrow per-row literal `replace` (JVM codegen,
-  no Python), lineage truncated per round.
+- the corpus is touched by ONE distributed pass, `words_table`'s
+  explode + map-side-combined aggregate into the (word, cnt)
+  distinct-word table; only that table is collected (931 words
+  on the bench's pair corpus, 27k on its trigram corpus — the
+  post-aggregation size, not the token count);
+- the merge rounds then run in one process with NO Spark job per round.
+  The loop keeps the (a, b) -> n pair counts and a pair -> words index
+  as state; each round ranks the top `pool` pairs, selects up to
+  `batch_k` non-conflicting merges and rewrites only the words that
+  contain a selected pair, subtracting their old pairs from the counts
+  and adding their new ones. Per-round work is bounded by the touched
+  words and the pair table, never the corpus, and the number of Spark
+  jobs per call does not depend on `n_rounds`;
+- the trained segmentation comes back as a (word, cnt, enc) DataFrame,
+  so encoding a corpus (`bpe_token_counts`) is a distributed join
+  against the distinct-word table.
 
-Batched recurrence (the spec both engines and the pure-Python
-reference implement identically — `batch_k=1` IS classic greedy BPE):
+Batched recurrence (the spec the trainer, the DuckDB oracle and the
+pure-Python reference implement identically — `batch_k=1` IS classic
+greedy BPE):
   round r: count adjacent symbol pairs weighted by word count;
            rank by (n DESC, a ASC, b ASC); keep the top `pool`;
            scan ranked candidates in order, selecting a pair iff
@@ -49,16 +51,16 @@ tests/test_bpe.py vs the pure-Python reference):
   consumes one of the two delimiters on each side, so back-to-back
   merge sites ("abab") still match, while overlapping sites ("aaa")
   resolve left-to-right non-overlapping — exactly Python's
-  str.replace greedy semantics. Spark's `replace`, DuckDB's
-  `replace`, and Python's `str.replace` all scan left-to-right
-  non-overlapping, so all three segmentations are bit-identical;
+  str.replace greedy semantics. The trainer's `str.replace` and
+  DuckDB's `replace` both scan left-to-right non-overlapping, so the
+  trainer's and the oracle's segmentations are bit-identical;
 - ties in the pair-count ranking break by (count DESC, left ASC,
-  right ASC) in both engines — integer counts, no floats anywhere.
+  right ASC) on both sides — integer counts, no floats anywhere.
 """
 
 from __future__ import annotations
 
-import time as _time
+import heapq
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -78,32 +80,13 @@ def words_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("word").agg(F.count("*").alias("cnt")))
 
 
-def _encode(col):
-    """word -> '##'-delimited character segmentation ('ab' -> '##a##b##')."""
-    return F.concat(F.regexp_replace(col, "(.)", "##$1"), F.lit("##"))
-
-
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(a, b, n): total adjacent-pair frequencies under the current
-    segmentation, weighted by word count (overlapping positions each
-    count, as in reference BPE)."""
-    syms = F.filter(F.split("enc", "##"), lambda s: s != F.lit(""))
-    return (words.withColumn("syms", syms)
-            .select("cnt", F.explode(F.arrays_zip(
-                F.slice("syms", 1, F.size("syms") - 1).alias("a"),
-                F.slice("syms", 2, F.size("syms") - 1).alias("b")))
-                .alias("p"))
-            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "cnt")
-            .groupBy("a", "b").agg(F.sum("cnt").alias("n")))
-
-
 def select_merges(ranked: list[tuple[str, str, int]],
                   batch_k: int) -> list[tuple[str, str, int]]:
     """Greedy non-conflicting selection over (a, b, n) candidates already
     in (n DESC, a ASC, b ASC) rank order: a pair is selected iff neither
     of its symbols appears in any earlier selection's
-    {left, right, left+right}. The single definition both the Spark
-    trainer and the pure-Python reference call."""
+    {left, right, left+right}. The single definition both the trainer
+    and the pure-Python reference call."""
     used: set[str] = set()
     sel: list[tuple[str, str, int]] = []
     for a, b, n in ranked:
@@ -118,259 +101,80 @@ def select_merges(ranked: list[tuple[str, str, int]],
 
 def bpe_train(docs: DataFrame, text_col: str = "text",
               n_rounds: int = BPE_ROUNDS, batch_k: int = 1,
-              pool: int = BPE_POOL, reliable: bool = False):
-    """Train BPE merges over the corpus in `n_rounds` batched rounds of
-    up to `batch_k` non-conflicting merges each (see module docstring
-    for the exact recurrence; batch_k=1 is classic greedy BPE).
+              pool: int = BPE_POOL, adaptive: bool = False,
+              target_merges: int | None = None):
+    """Train BPE merges over the corpus in up to `n_rounds` batched
+    rounds of up to `batch_k` non-conflicting merges each (see module
+    docstring for the exact recurrence; batch_k=1 is classic greedy
+    BPE). Stops early once `target_merges` merges exist.
 
-    `reliable=True` pins the per-round state with a SparkContext
-    checkpoint instead of localCheckpoint — survives executor loss on a
-    real cluster at the cost of a write+read per round (judge r6 item
-    #4; the merge sequence is bit-identical under both modes, pinned in
-    tests/test_bpe.py).
+    `adaptive=True` doubles batch_k, capped at max(min(pool // 4, 128),
+    batch_k), after every round whose selection FILLED the batch:
+    conflicts thin out as the symbol alphabet grows, so later rounds
+    take bigger non-conflicting batches. The schedule is deterministic
+    given the data and mirrored by bpe_reference(adaptive=True).
 
     Returns (merges, words): `merges` a list of
-    (merge_rank, round, left, right, n) driver rows (bounded: at most
-    batch_k per round), `words` the final segmented (word, cnt, enc)
-    DataFrame for downstream encoding."""
-    from dbsync_spark.functions.checkpointing import pin
-
+    (merge_rank, round, left, right, n) rows, `words` the final
+    segmented (word, cnt, enc) DataFrame for downstream encoding."""
     if batch_k < 1 or pool < batch_k:
         raise ValueError(f"need 1 <= batch_k <= pool, got {batch_k}/{pool}")
-    # NOTE (r10): pins must stay EAGER. A lazy localCheckpoint under AQE
-    # never gets its lineage truncated (the deferred materialization
-    # rides jobs whose doCheckpoint does not reach the marked RDD), so
-    # round plans stack until executor tasks die with
-    # java.lang.StackOverflowError — measured before abandoning it:
-    # the 72-round cell went 13.5 s -> 33 s and the 10k-round trainer
-    # overflowed around stage 1700.
-    spark = docs.sparkSession
-    words = pin(words_table(docs, text_col)
-                .withColumn("enc", _encode(F.col("word"))), reliable)
-    # size-derived state width + AQE off for the round loop (see
-    # _bpe_train_incremental: per-round shuffles move KBs of
-    # post-aggregation state; AQE's per-exchange re-optimization
-    # barrier costs more than it saves at that size). Confs restored
-    # in the finally; values are partitioning-independent.
-    n_words = words.count()
-    n_state_parts = max(1, min(spark.sparkContext.defaultParallelism,
-                               (n_words + 199_999) // 200_000))
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_parts))
+    cnt = {r["word"]: r["cnt"]
+           for r in words_table(docs, text_col).collect()}
+    enc = {w: "##" + "##".join(w) + "##" for w in cnt}
+    counts: dict[tuple[str, str], int] = {}
+    holders: dict[tuple[str, str], set[str]] = {}
+    for w, e in enc.items():
+        _shift(w, [], _pairs(e), cnt[w], counts, holders)
     merges: list[tuple[int, int, str, str, int]] = []
-    try:
-        for rnd in range(1, n_rounds + 1):
-            top = (_pair_counts(words)
-                   .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-                   .limit(pool).collect())
-            sel = select_merges([(r["a"], r["b"], int(r["n"]))
-                                 for r in top], batch_k)
-            if not sel:
-                break
-            # one SQL string instead of batch_k Column objects — the
-            # driver-side Py4J construction cost is measurable at high
-            # batch_k (symbols are [a-z]+ — no quoting hazards)
-            enc_sql = "enc"
-            for a, b, n in sel:
-                merges.append((len(merges) + 1, rnd, a, b, n))
-                enc_sql = f"replace({enc_sql}, '#{a}##{b}#', '#{a}{b}#')"
-            words = pin(words.withColumn("enc", F.expr(enc_sql)),
-                        reliable)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-    return merges, words
-
-
-def bpe_train_incremental(docs: DataFrame, text_col: str = "text",
-                          n_rounds: int = BPE_ROUNDS, batch_k: int = 1,
-                          pool: int = BPE_POOL, adaptive: bool = False,
-                          target_merges: int | None = None,
-                          reliable: bool = False):
-    """bpe_train with INCREMENTAL pair-count maintenance (judge r5 item
-    #8) — the production-vocab trainer: instead of re-aggregating every
-    adjacent pair of every word each round, the (a, b, n) pair-count
-    table is persisted STATE, and each round applies a delta computed
-    from only the words that actually contain a selected pair:
-
-        P += pairs(touched, after merges) - pairs(touched, before)
-
-    Pair counts are integer sums over words, so state == full recompute
-    exactly, and the merge sequence is BIT-IDENTICAL to bpe_train /
-    bpe_reference under the same (n_rounds, batch_k, pool) — pinned in
-    tests/test_bpe.py. Per-round wide work is now proportional to the
-    TOUCHED words (which shrink as merges specialize), not the corpus
-    vocabulary: the flat-or-falling per-round cost the 30k-vocab run
-    needs. The untouched words are carried by a narrow filter + union
-    (no shuffle, one localCheckpoint write per round).
-
-    `adaptive=True` grows batch_k (x2, capped at min(pool // 4, 128))
-    every round whose selection FILLED the batch — conflicts thin out
-    as the symbol alphabet grows, so later rounds safely take bigger
-    non-conflicting batches. The 128 cap bounds the per-round nested
-    replace chain (codegen cost). The schedule is deterministic given
-    the data and mirrored by bpe_reference(adaptive=True). The pool cap
-    stays fixed (it is part of the recurrence).
-
-    Returns (merges, words, round_stats) — merges/words as bpe_train;
-    round_stats a list of (round, n_selected, n_touched_words,
-    seconds) for cost-curve reporting (n_touched_words is -1 unless
-    `collect_stats`).
-
-    Per-round job budget (the wall-clock driver at small SF is Spark's
-    per-job scheduling floor, not data): FOUR jobs — the top-k collect
-    over the pair state, one fused materialization carrying the touched
-    words' old AND new encodings (so the delta never rescans the words
-    lineage), the pair-state merge, and the words-table union write.
-    Every round checkpoints: the per-round replace chain (up to cur_k
-    nested replaces) must evaluate exactly once, on the touched rows —
-    stacking those chains across rounds multiplies codegen and
-    evaluation cost into the minutes."""
-    return _bpe_train_incremental(docs, text_col, n_rounds, batch_k,
-                                  pool, adaptive, collect_stats=False,
-                                  target_merges=target_merges,
-                                  reliable=reliable)
-
-
-def _bpe_train_incremental(docs: DataFrame, text_col: str,
-                           n_rounds: int, batch_k: int, pool: int,
-                           adaptive: bool, collect_stats: bool,
-                           checkpoint_every: int = 1,
-                           target_merges: int | None = None,
-                           reliable: bool = False):
-    from dbsync_spark.functions.checkpointing import pin
-
-    if batch_k < 1 or pool < batch_k:
-        raise ValueError(f"need 1 <= batch_k <= pool, got {batch_k}/{pool}")
-    spark = docs.sparkSession
-    words = pin(words_table(docs, text_col)
-                .withColumn("enc", _encode(F.col("word"))), reliable)
-    # SIZE-DERIVED state partitioning (r10, guide §2): the per-round
-    # driver floor is jobs x stages x tasks, and a fixed max(8, cores/4)
-    # floor schedules 8+ tasks per tiny-state job at every scale. Derive
-    # the partition count from the measured vocabulary instead (~200k
-    # words per partition — post-aggregation rows, small): 1 partition
-    # for bench-scale corpora, growing with the real distinct-word count
-    # on a cluster, capped at the parallelism. The count is one cheap
-    # job against the just-pinned blocks, paid once.
-    n_words = words.count()
-    sc = spark.sparkContext
-    n_state_parts = max(1, min(sc.defaultParallelism,
-                               (n_words + 199_999) // 200_000))
-    # Per-round shuffles move KBs of post-aggregation state; AQE's
-    # stage-by-stage re-optimization inserts a scheduling barrier per
-    # exchange, which at this size costs more than it saves (measured:
-    # ~0.2 s/round). Pin the shuffle width to the size-derived state
-    # partition count and turn AQE off for the duration of the loop —
-    # values are partitioning-independent, and both confs are restored
-    # in the finally.
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_state_parts))
-    try:
-        return _bpe_incremental_loop(
-            spark, words, n_rounds, batch_k, pool, adaptive,
-            collect_stats, checkpoint_every, target_merges, reliable,
-            n_state_parts, pin)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
-
-
-def _bpe_incremental_loop(spark, words, n_rounds, batch_k, pool, adaptive,
-                          collect_stats, checkpoint_every, target_merges,
-                          reliable, n_state_parts, pin):
-    # shuffle.partitions == n_state_parts, so the groupBy already lands
-    # on the state partitioning — no explicit repartition exchange
-    pairs = pin(_pair_counts(words), reliable)
-    merges: list[tuple[int, int, str, str, int]] = []
-    round_stats: list[tuple[int, int, int, float]] = []
-    # NOTE (r10): pins stay EAGER — a lazy localCheckpoint under AQE
-    # never gets truncated (plans stack until StackOverflowError;
-    # measured before abandoning). The round floor is cut structurally
-    # instead: per round, THREE driver jobs — the top-k collect, the
-    # fused touched-words materialization (`both`, which pins this
-    # round's replace-chain output), and ONE tagged-union checkpoint
-    # carrying the pairs state and the words state together.
-    # checkpoint_every > 1 (words carried as a filter/union view over
-    # the pinned frames between pins) was measured and REJECTED: the
-    # view re-analysis grows ~0.15 s/round inside each window, so even
-    # ce=2 loses to pinning every round (82.7 s vs 69.7 s / 96 rounds).
-    _null_s = F.lit(None).cast("string")
-    _null_l = F.lit(None).cast("long")
     cur_k = batch_k
-    since_pin = 0
     for rnd in range(1, n_rounds + 1):
-        _t0 = _time.time()
-        top = (pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-               .limit(pool).collect())
-        sel = select_merges([(r["a"], r["b"], int(r["n"])) for r in top],
-                            cur_k)
+        top = heapq.nsmallest(pool, ((-n, a, b)
+                                     for (a, b), n in counts.items()))
+        sel = select_merges([(a, b, -n) for n, a, b in top], cur_k)
         if not sel:
             break
-        # single-expression hit filter and replace chain: building these
-        # as ~100 Column objects costs ~0.15 s/round of driver-side
-        # Py4J round-trips at batch_k=32; one SQL string is one call
-        # (symbols are [a-z]+ by construction — no quoting hazards)
-        hit = F.expr(" OR ".join(
-            f"contains(enc, '#{a}##{b}#')" for a, b, _ in sel))
-        touched = words.where(hit)
-        enc_sql = "enc"
         for a, b, n in sel:
             merges.append((len(merges) + 1, rnd, a, b, n))
-            enc_sql = f"replace({enc_sql}, '#{a}##{b}#', '#{a}{b}#')"
-        # carry both encodings through ONE materialization so the delta
-        # (old negative, new positive) never rescans the words lineage
-        both = pin(touched.select("word", "cnt",
-                                  F.col("enc").alias("_enc_old"),
-                                  F.expr(enc_sql).alias("enc"))
-                   .coalesce(n_state_parts), reliable)
-        merged = both.select("word", "cnt", "enc")
-        n_touched = both.count() if collect_stats else -1
-        delta = (_pair_counts(both.select("word", "cnt",
-                                          F.col("_enc_old").alias("enc")))
-                 .select("a", "b", (-F.col("n")).alias("n"))
-                 .unionByName(_pair_counts(merged)))
-        new_pairs = (pairs.unionByName(delta)
-                     .groupBy("a", "b").agg(F.sum("n").alias("n"))
-                     .where(F.col("n") > 0))
-        # coalesce before every checkpoint: a plain union ADDS partitions
-        # each round and localCheckpoint pins them, so without this the
-        # per-round job grows linearly in tasks (measured: 0.2 -> 3.2 s
-        # by round 14) — quadratic total wall
-        new_words = (words.where(~hit).unionByName(merged)
-                     .coalesce(2 * n_state_parts))
-        since_pin += 1
-        if since_pin >= checkpoint_every:
-            # ONE pin job for both states: tag-union them, checkpoint,
-            # split back with narrow filters over the pinned blocks.
-            # Values are untouched — only which job materializes them.
-            fused = pin(
-                new_pairs.select(
-                    F.lit(0).alias("_tag"), "a", "b", "n",
-                    _null_s.alias("word"), _null_l.alias("cnt"),
-                    _null_s.alias("enc"))
-                .unionByName(new_words.select(
-                    F.lit(1).alias("_tag"), _null_s.alias("a"),
-                    _null_s.alias("b"), _null_l.alias("n"),
-                    "word", "cnt", "enc")), reliable)
-            pairs = fused.where(F.col("_tag") == 0).select("a", "b", "n")
-            words = fused.where(F.col("_tag") == 1).select("word", "cnt",
-                                                           "enc")
-            since_pin = 0
-        else:
-            pairs = pin(new_pairs, reliable)
-            words = new_words
-        round_stats.append((rnd, len(sel), n_touched,
-                            round(_time.time() - _t0, 3)))
+            site, merged = f"#{a}##{b}#", f"#{a}{b}#"
+            for w in list(holders[(a, b)]):
+                old = _pairs(enc[w])
+                enc[w] = enc[w].replace(site, merged)
+                _shift(w, old, _pairs(enc[w]), cnt[w], counts, holders)
         if target_merges is not None and len(merges) >= target_merges:
             break
         if adaptive and len(sel) == cur_k:
             cur_k = min(cur_k * 2, max(min(pool // 4, 128), batch_k))
-    return merges, pin(words, reliable), round_stats
+    words = docs.sparkSession.createDataFrame(
+        [(w, cnt[w], e) for w, e in enc.items()],
+        "word string, cnt bigint, enc string")
+    return merges, words
+
+
+def _pairs(enc: str) -> list[tuple[str, str]]:
+    """Adjacent symbol pairs of one '##'-delimited encoding, in order
+    (overlapping positions each count, as in reference BPE)."""
+    syms = enc[2:-2].split("##")
+    return list(zip(syms, syms[1:]))
+
+
+def _shift(word: str, old: list[tuple[str, str]],
+           new: list[tuple[str, str]], cnt: int, counts: dict,
+           holders: dict) -> None:
+    """Move `word` (weight `cnt`) from its `old` pair occurrences to its
+    `new` ones in the pair counts and the pair -> words index. A pair no
+    word holds any more leaves both."""
+    for p in old:
+        counts[p] -= cnt
+    for p in new:
+        counts[p] = counts.get(p, 0) + cnt
+    for p in set(new).difference(old):
+        holders.setdefault(p, set()).add(word)
+    for p in set(old).difference(new):
+        held = holders[p]
+        held.discard(word)
+        if not held:
+            del holders[p], counts[p]
 
 
 def bpe_token_counts(docs: DataFrame, words: DataFrame,

@@ -1056,10 +1056,10 @@ def q_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-dependent greedy algorithm that still hash-matches a DuckDB
     oracle because the recurrence (ranking, pool cap, disjoint-symbol
     selection, in-order replace application) is pinned identically on
-    both sides and all arithmetic is integer. The batching is the
-    judge-asked scale fix: a 30k-merge vocabulary costs ~30k/batch_k
-    driver rounds, each one map-side-combined pair aggregate + a
-    TakeOrdered(pool), instead of 30k sequential argmax jobs."""
+    both sides and all arithmetic is integer. Training is one
+    distributed word count, then ~merges/batch_k rounds of an
+    in-process incremental merge loop over the distinct-word table,
+    with no Spark job per round."""
     from dbsync_spark.functions.bpe import bpe_train
 
     docs = read_table(spark, sf_dir, "documents")

@@ -34,10 +34,6 @@ SLOW_TESTS = {
     "test_bloom_index.py::test_flag_sound_when_bitmap_write_lost",
     "test_bloom_index.py::test_incremental_eval_sets_accumulate",
     "test_bloom_index.py::test_stream_equals_batch",
-    "test_bpe.py::test_batched_vs_greedy_segmentation_divergence_pinned",
-    "test_bpe.py::test_incremental_train_equals_batch_and_reference",
-    "test_bpe.py::test_reliable_checkpoint_mode_is_bit_identical",
-    "test_bpe.py::test_spark_train_equals_reference[6-1-16]",
     "test_bucketed_table.py::test_bucketed_matches_snapshot_path",
     "test_bucketed_table.py::test_trickle_merge_never_fragments_buckets[25-32]",
     "test_cluster_index.py::test_compact_preserves_canonical",

@@ -375,3 +375,34 @@ def test_status_read_is_serialized_with_retention(spark, tmp_path,
     # retention ran after the read: the all-OK segment is gone
     assert len([f for f in os.listdir(pipe.log_path)
                 if f.endswith(".parquet")]) == 1
+
+
+def test_sync_state_counts_each_change_once(spark, tmp_path):
+    """/status/sync counts each change once, by its latest status: after
+    the failure loop converges, error and blocked are back to 0 although
+    the append-only ack log still holds the ERR and BLK rows."""
+    from dbsync_spark.app import DbSyncApp
+    from dbsync_spark.config import parse_config
+
+    changes = [c for c in LOG if c[2] != BAD]
+    app = DbSyncApp(spark, parse_config(APP_YAML), str(tmp_path / "app"),
+                    {"db1.public.kv": SCHEMA})
+    app.bootstrap()
+    pipe = app.pipelines[0]
+    pipe.failure_policy = _policy
+    _write_log(spark, pipe.log_path, changes)
+    try:
+        pipe.process_batch(spark.read.schema(SYNC_DATA_SCHEMA)
+                           .parquet(pipe.log_path), 0)
+        first = app.sync_state()
+        ticks = 0
+        while pipe.retry_pass():
+            ticks += 1
+            assert ticks <= 3, "retry loop failed to converge"
+        state = app.sync_state()
+    finally:
+        app.stop()
+    n = len(changes)
+    assert (first.success, first.error, first.blocked) == (n - 4, 2, 2)
+    assert (state.success, state.error, state.blocked, state.pending,
+            state.others) == (n, 0, 0, 0, 0)

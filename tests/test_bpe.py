@@ -1,4 +1,4 @@
-"""BPE batched-merge training (functions/bpe.py): the Spark trainer, the
+"""BPE batched-merge training (functions/bpe.py): the trainer, the
 pure-Python reference, and the DuckDB oracle all implement ONE pinned
 recurrence. Covers judge r3 item #2 (batch the driver-sequential merge
 loop) and the r3 ADVICE finding (module shipped with no executed
@@ -7,6 +7,7 @@ coverage)."""
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 
@@ -17,6 +18,9 @@ from dbsync_spark.functions.bpe import (
     select_merges,
     words_table,
 )
+
+# job counting as the apply-path pins do it (one job group per call)
+from test_apply_path import _jobs
 
 TEXTS = [
     "the cat sat on the mat and the cat ran",
@@ -223,83 +227,66 @@ def test_batched_vs_greedy_segmentation_divergence_pinned(spark, sf_dir):
 
 
 def test_incremental_train_equals_batch_and_reference(spark):
-    """Judge r5 item #8: the incremental-pair-count trainer produces the
-    BIT-IDENTICAL merge sequence and final segmentation as the
-    full-recompute trainer and the pure-Python reference — pair counts
-    are integer sums over words, so state == recompute exactly."""
-    from dbsync_spark.functions.bpe import bpe_train_incremental
-
+    """The trainer keeps pair counts incrementally (only the words that
+    hold a selected pair are re-counted), yet its merge sequence and
+    final segmentation are BIT-IDENTICAL to the pure-Python reference,
+    which recounts every pair every round: pair counts are integer sums
+    over words, so state == recompute exactly."""
     rng = random.Random(11)
     words = ["".join(rng.choice("abcdefghij")
                      for _ in range(rng.randint(2, 8))) for _ in range(300)]
     texts = [" ".join(rng.choices(words, k=30)) for _ in range(30)]
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
-    inc, inc_words, stats = bpe_train_incremental(
-        docs, n_rounds=5, batch_k=4, pool=32)
-    bat, bat_words = bpe_train(docs, n_rounds=5, batch_k=4, pool=32)
+    got, got_words = bpe_train(docs, n_rounds=5, batch_k=4, pool=32)
     exp, segs = bpe_reference(texts, n_rounds=5, batch_k=4, pool=32)
-    assert inc == bat == exp
-    enc_i = {r["word"]: r["enc"] for r in inc_words.collect()}
-    enc_b = {r["word"]: r["enc"] for r in bat_words.collect()}
-    assert enc_i == enc_b
-    assert len(stats) == 5
-    # touched-word counts are bounded by the vocabulary and decrease in
-    # aggregate as merges specialize (weak monotonicity: last < first)
-    assert all(t <= len(enc_i) for _, _, t, _s in stats)
+    assert got == exp
+    assert got[-1][1] == 5
+    enc = {r["word"]: r["enc"] for r in got_words.collect()}
+    assert enc == {w: "##" + "##".join(syms) + "##"
+                   for w, syms in segs.items()}
 
 
 def test_incremental_adaptive_schedule_matches_reference(spark):
     """adaptive=True doubles batch_k after every FILLED round (capped at
     pool // 4) — the deterministic schedule is mirrored by the
-    reference, so the merge sequences stay identical."""
-    from dbsync_spark.functions.bpe import bpe_train_incremental
-
+    reference, so the merge sequences and segmentations stay identical."""
     rng = random.Random(12)
     words = ["".join(rng.choice("abcdefghijklmn")
                      for _ in range(rng.randint(3, 9))) for _ in range(400)]
     texts = [" ".join(rng.choices(words, k=40)) for _ in range(40)]
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
-    inc, _, stats = bpe_train_incremental(
-        docs, n_rounds=6, batch_k=2, pool=64, adaptive=True)
-    exp, _ = bpe_reference(texts, n_rounds=6, batch_k=2, pool=64,
-                           adaptive=True)
-    assert inc == exp
-    per_round = [s[1] for s in stats]
-    assert max(per_round) > 2, per_round  # the schedule actually grew
+    got, got_words = bpe_train(docs, n_rounds=6, batch_k=2, pool=64,
+                               adaptive=True)
+    exp, segs = bpe_reference(texts, n_rounds=6, batch_k=2, pool=64,
+                              adaptive=True)
+    assert got == exp
+    enc = {r["word"]: r["enc"] for r in got_words.collect()}
+    assert enc == {w: "##" + "##".join(syms) + "##"
+                   for w, syms in segs.items()}
+    per_round = Counter(rnd for _, rnd, _, _, _ in got)
+    assert max(per_round.values()) > 2, per_round  # the schedule grew
 
 
-def test_reliable_checkpoint_mode_is_bit_identical(spark):
-    """Judge r6 item #4: reliable=True swaps localCheckpoint (executor
-    memory, dies with an executor) for SparkContext checkpoint (durable
-    dir, survives executor loss). Pinning changes WHERE rows live, never
-    their values: merge sequences and final segmentations must be
-    bit-identical under both modes, for both trainers."""
-    from dbsync_spark.functions.bpe import bpe_train_incremental
-
-    rng = random.Random(13)
-    words = ["".join(rng.choice("abcdefgh")
-                     for _ in range(rng.randint(2, 7))) for _ in range(200)]
-    texts = [" ".join(rng.choices(words, k=25)) for _ in range(25)]
+def test_train_jobs_do_not_grow_with_rounds(spark):
+    """The merge rounds run no Spark job: a 40-round training runs the
+    same jobs as a 4-round one (the word count only)."""
+    rng = random.Random(14)
+    words = ["".join(rng.choice("abcdefghijkl")
+                     for _ in range(rng.randint(3, 10))) for _ in range(300)]
+    texts = [" ".join(rng.choices(words, k=40)) for _ in range(40)]
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string")
+    runs = {}
 
-    fast, fast_words = bpe_train(docs, n_rounds=4, batch_k=3, pool=24)
-    rel, rel_words = bpe_train(docs, n_rounds=4, batch_k=3, pool=24,
-                               reliable=True)
-    assert fast == rel
-    assert ({r["word"]: r["enc"] for r in fast_words.collect()}
-            == {r["word"]: r["enc"] for r in rel_words.collect()})
+    def train(n_rounds):
+        runs[n_rounds] = bpe_train(docs, n_rounds=n_rounds, batch_k=2,
+                                   pool=16)[0]
 
-    inc_f, _, _ = bpe_train_incremental(docs, n_rounds=4, batch_k=3, pool=24)
-    inc_r, inc_r_words, _ = bpe_train_incremental(
-        docs, n_rounds=4, batch_k=3, pool=24, reliable=True)
-    assert inc_f == inc_r == fast
-    # the reliable path really went through the checkpoint dir
-    assert spark.sparkContext.getCheckpointDir() is not None
-    assert ({r["word"]: r["enc"] for r in inc_r_words.collect()}
-            == {r["word"]: r["enc"] for r in fast_words.collect()})
+    jobs = {n: _jobs(spark, lambda n=n: train(n)) for n in (4, 40)}
+    assert runs[40][-1][1] == 40  # all 40 rounds really ran
+    assert jobs[4] == jobs[40], jobs
 
 
 def test_bpe_encode_counts_and_wordless_docs(spark):

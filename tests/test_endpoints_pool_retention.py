@@ -106,6 +106,45 @@ def test_all_seven_routes(spark, sf_dir, tmp_path):
         app.stop()
 
 
+def test_idle_pipeline_heartbeat_stays_live(spark, tmp_path):
+    """A running pipeline has ONE registry entry, beaten by the listener
+    on every progress and idle event: sitting idle on a processing-time
+    trigger for over 6 s at maxPollWait 1000 (RED at 5 missed beats),
+    no component reads RED and a heartbeatLostOver: 0 rule never trips."""
+    import time
+
+    from dbsync_spark.monitor.health import RED, ActionDispatcher
+    from dbsync_spark.monitor.listener import component_name
+
+    cfg = parse_config(APP_YAML.replace("maxPollWait: 5000",
+                                        "maxPollWait: 1000")
+                       + "monitor:\n  - {heartbeatLostOver: 0, "
+                         "action: restart}\n")
+    restarts = []
+    app = DbSyncApp(spark, cfg, str(tmp_path / "app"),
+                    {"db1.public.orders": ORDERS_PAYLOAD_SCHEMA},
+                    dispatcher=ActionDispatcher(
+                        restart=lambda reason: restarts.append(reason)))
+    app.bootstrap()
+    entry = component_name(app.pipelines[0].name)
+    queries = app.start_pipelines()
+    seen = []
+    try:
+        deadline = time.monotonic() + 7
+        while time.monotonic() < deadline:
+            seen.append(app.registry.statuses())
+            time.sleep(0.5)
+        tripped = app.monitor_pass()
+        assert queries[0].isActive
+    finally:
+        for q in queries:
+            q.stop()
+        app.stop()
+    assert all(set(st) == {entry} for st in seen), seen[-1]
+    assert not [st for st in seen if st[entry] == RED], seen
+    assert tripped == [] and restarts == []
+
+
 def test_config_selects_target_layout(spark, tmp_path):
     """sys.targetLayout/targetBuckets flow from YAML into the pipelines."""
     from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA

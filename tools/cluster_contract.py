@@ -6,10 +6,7 @@ serialization boundaries of the mapInPandas codec closures, broadcast
 sizing, and localCheckpoint block placement on remote executors.
 
 No code path is special-cased for the mode: the exact compare loop from
-tools/drive_contract.py runs under the cluster session, and the one
-config difference (reliable checkpointing for the iterative BPE/label
-operators, via their public `reliable` option where exercised) is
-plumbed through the operators' documented API, not monkey-patching.
+tools/drive_contract.py runs unchanged in `local-cluster` mode.
 
 Emits CONTRACT_CLUSTER.json.
 
