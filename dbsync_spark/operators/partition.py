@@ -63,13 +63,6 @@ def assign_partitions_portable(df: DataFrame, num_partitions: int,
         "partition", portable_partition_id(key, num_partitions))
 
 
-def repartition_by_key(df: DataFrame, num_partitions: int, key: Column) -> DataFrame:
-    """Physical co-location: one shuffle, all rows of a key in one task —
-    the Spark-native equivalent of the reference's per-partition queues
-    (sync/QueueManager.scala:20-27)."""
-    return df.repartition(num_partitions, key)
-
-
 # ---------------------------------------------------------------------------
 # Pure-Python parity spec of Spark's Murmur3_x86_32 over UTF-8 strings
 # (org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes, seed 42).

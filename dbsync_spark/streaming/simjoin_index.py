@@ -53,13 +53,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, IntegerType, LongType,
                                StructField, StructType)
 
-from dbsync_spark.functions.dedup import (_chunked_union,
-                                          _measure_for_chunks,
+from dbsync_spark.functions.dedup import (candidate_ids,
                                           hashed_shingle_sets,
-                                          similarity_join_incremental,
-                                          simjoin_probe,
+                                          jaccard_verify, simjoin_probe,
                                           simjoin_rank_prefix,
-                                          simjoin_verify_arrays)
+                                          verify_candidates)
 from dbsync_spark.streaming.state import (EpochState, Tombstones,
                                           count_files, read_json,
                                           write_json, write_parts)
@@ -110,40 +108,22 @@ class StreamingSimJoinIndex(EpochState):
     `process_batch` per micro-batch (directly, or via
     `foreach_batch_handler()` from a writeStream).
 
-    Memory contract per batch: the verify step materializes the batch's
-    candidate frame in the block store (dedup._pair_sets — eager
-    checkpoint + count), count-adaptively serialized above
+    Memory contract per batch: the verify (dedup.verify_candidates, the
+    batch operators' verify) materializes the batch's candidate frame
+    in the block store, count-adaptively serialized above
     _PAIR_DESER_MAX so adversarially dup-dense batches spill to disk
-    instead of exhausting the heap, AND the verify join itself is
-    chunk-bounded (`verify_chunks`, auto-selected per batch from the
-    measured candidate count like the batch operators) so the peak
-    candidates-x-arrays payload stays under the same budget; steady-
-    state memory is otherwise candidate-proportional and released at
-    the end of each batch.
-
-    `full_reprobe=True` switches to the pre-r8 implementation — a full
-    similarity_join_incremental over the re-read union state each batch
-    (index-proportional per-batch cost). Retained ONLY as the measured
-    baseline for tools/simjoin_soak.py's flat-vs-growing comparison and
-    as a property cross-check in tests; the default path is the one to
-    deploy."""
+    instead of exhausting the heap, and chunks the verify join by the
+    measured candidate count so the peak candidates-x-arrays payload
+    stays under the same budget; steady-state memory is otherwise
+    candidate-proportional and released at the end of each batch."""
 
     def __init__(self, spark: SparkSession, root: str,
                  threshold_num: int = 4, threshold_den: int = 5,
-                 shingle_fn=None, n_buckets: int = 32,
-                 full_reprobe: bool = False,
-                 verify_chunks: int | None = None):
+                 shingle_fn=None, n_buckets: int = 32):
         super().__init__(spark, root)
         self.num = threshold_num
         self.den = threshold_den
         self.shingle_fn = shingle_fn
-        self.full_reprobe = full_reprobe
-        # None = auto-select per batch from the measured candidate
-        # count x mean set width (dedup._auto_verify_chunks — same
-        # budget the batch operators use), so an adversarially
-        # dup-dense batch gets its verify payload bounded without the
-        # operator folklore; an explicit K pins it.
-        self.verify_chunks = verify_chunks
         # bucket count is a physical-layout constant for the index's
         # lifetime: pin it in a root-level meta file on first use so a
         # reopened handle can never mis-bucket probes against state
@@ -242,15 +222,16 @@ class StreamingSimJoinIndex(EpochState):
     def _batch_frames(self, batch_sh: DataFrame
                       ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """The batch's own (sets, dfreq, arrays) contributions as
-        IN-MEMORY frames over the persisted shingle rows — the same
-        plans the delta writers persist. The probe unions these with
-        the before-epoch state reads, so it never depends on (or races)
-        the concurrent delta writes."""
+        IN-MEMORY frames over the persisted shingle rows, bucket column
+        included. The delta writers persist exactly these frames; the
+        probe unions them with the before-epoch state reads, so it never
+        depends on (or races) the concurrent delta writes."""
         bucket = F.pmod(F.col("_h"), F.lit(self.nb)).cast("int")
         sizes = batch_sh.groupBy("doc_id").agg(F.count("*").alias("_n"))
         sets = (batch_sh.join(sizes, on="doc_id")
                 .withColumn("_b", bucket))
-        dfreq = batch_sh.groupBy("_h").agg(F.count("*").alias("_df"))
+        dfreq = (batch_sh.groupBy("_h").agg(F.count("*").alias("_df"))
+                 .withColumn("_b", bucket))
         arrays = (batch_sh.groupBy("doc_id")
                   .agg(F.sort_array(F.collect_list(F.col("_h")
                                                    .cast("int")))
@@ -281,77 +262,50 @@ class StreamingSimJoinIndex(EpochState):
         tot_d = sum(d for _, d in data["epochs"].values())
         return tot_r / max(tot_d, 1)
 
-    def _delta_writers(self, batch_sh: DataFrame,
-                       epoch_id: int) -> list:
-        """The three delta-write thunks (epoch-scoped overwrites: a
-        replay of a failed epoch rewrites its own files instead of
-        double-appending); every delta is a pure function of the batch,
-        so replay and out-of-order epochs leave the summed/unioned
-        state identical. Callers run them as concurrent Spark jobs —
-        and, on the default probe path, CONCURRENTLY WITH the probe
-        itself (round-10, judge r9 item #2: the writes were ~the whole
-        fixed per-batch floor; the probe now reads before-epoch state +
-        the in-memory batch frames, so nothing orders it after the
+    def _delta_writers(self, frames: tuple, epoch_id: int) -> list:
+        """The three delta-write thunks for the _batch_frames frames
+        (epoch-scoped overwrites: a replay of a failed epoch rewrites
+        its own files instead of double-appending); every delta is a
+        pure function of the batch, so replay and out-of-order epochs
+        leave the summed/unioned state identical. process_batch runs
+        them as concurrent Spark jobs, CONCURRENTLY WITH the probe
+        (round-10, judge r9 item #2: the writes were ~the whole fixed
+        per-batch floor; the probe reads before-epoch state + the
+        in-memory batch frames, so nothing orders it after the
         writes)."""
-        bucket = F.pmod(F.col("_h"), F.lit(self.nb)).cast("int")
-        sizes = batch_sh.groupBy("doc_id").agg(F.count("*").alias("_n"))
+        sets, dfreq, arrays = frames
+        parts = write_parts(self.spark)
 
         # sort leads with the partition column so the writer's required
         # ordering is already satisfied and the _h order (row-group
         # min/max skipping for the IN pushdown) survives to the files
-        def _w_sets() -> None:
-            (batch_sh.join(sizes, on="doc_id").withColumn("_b", bucket)
-             .repartition(write_parts(self.spark), "_b")
-             .sortWithinPartitions("_b", "_h")
-             .write.partitionBy("_b").mode("overwrite")
-             .parquet(f"{self.root}/sets/epoch={epoch_id}"))
+        def writer(sub: str, df: DataFrame, part: str, key: str):
+            return lambda: (df.sortWithinPartitions(part, key)
+                            .write.partitionBy(part).mode("overwrite")
+                            .parquet(f"{self.root}/{sub}/epoch={epoch_id}"))
 
-        def _w_dfreq() -> None:
-            (batch_sh.groupBy("_h").agg(F.count("*").alias("_df"))
-             .withColumn("_b", bucket)
-             .coalesce(1).sortWithinPartitions("_b", "_h")
-             .write.partitionBy("_b").mode("overwrite")
-             .parquet(f"{self.root}/dfreq/epoch={epoch_id}"))
+        return [writer("sets", sets.repartition(parts, "_b"), "_b", "_h"),
+                writer("dfreq", dfreq.coalesce(1), "_b", "_h"),
+                writer("arrays", arrays.repartition(parts, "_d"),
+                       "_d", "doc_id")]
 
-        def _w_arrays() -> None:
-            (batch_sh.groupBy("doc_id").agg(
-                F.sort_array(F.collect_list(F.col("_h").cast("int")))
-                .alias("_sh"))
-             .withColumn("_d", F.pmod(F.col("doc_id"),
-                                      F.lit(self.nb)).cast("int"))
-             .repartition(write_parts(self.spark), "_d")
-             .sortWithinPartitions("_d", "doc_id")
-             .write.partitionBy("_d").mode("overwrite")
-             .parquet(f"{self.root}/arrays/epoch={epoch_id}"))
-
-        return [_w_sets, _w_dfreq, _w_arrays]
-
-    def _write_deltas(self, batch_sh: DataFrame, epoch_id: int) -> None:
-        """Blocking form (full_reprobe path and tests): run the three
-        delta writers as concurrent Spark jobs and join them."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            for fut in [pool.submit(w) for w in
-                        self._delta_writers(batch_sh, epoch_id)]:
-                fut.result()
-
-    def _probe(self, batch_sh: DataFrame, tok_buckets: list[int],
-               tok_hs: list | None, epoch_id: int,
-               mean_width: float | None = None) -> DataFrame:
+    def _probe(self, batch_sh: DataFrame, frames: tuple,
+               tok_buckets: list[int], tok_hs: list | None, epoch_id: int,
+               mean_width: float) -> DataFrame:
         """New pairs (lazy) for a batch: before-epoch state reads
-        unioned with the batch's OWN in-memory frames (round-10 — the
+        unioned with the batch's OWN in-memory `frames` (round-10 — the
         probe no longer waits for, or races, the epoch's delta writes;
         new-vs-new pairs come from the in-memory side of the same
         union). Caller materializes the result, then calls the returned
         release hook to drop the persists."""
-        b_sets, b_dfreq, b_arrays = self._batch_frames(batch_sh)
+        b_sets, b_dfreq, b_arrays = frames
         dfreq = (self._dfreq_for(batch_sh, tok_buckets, tok_hs,
                                  before_epoch=epoch_id)
-                 .unionByName(b_dfreq)
+                 .unionByName(b_dfreq.select("_h", "_df"))
                  .groupBy("_h").agg(F.sum("_df").alias("_df")))
         new_prefix = simjoin_rank_prefix(batch_sh, dfreq, "doc_id",
                                          self.num, self.den).persist()
+        held = [new_prefix]
         if tok_hs is None:
             # the batch's distinct tokens already overflowed _ISIN_CAP,
             # so the narrower prefix-token collect cannot yield an
@@ -373,62 +327,49 @@ class StreamingSimJoinIndex(EpochState):
         probe = probe.select(F.col("doc_id").alias("doc_a"), "_h",
                              F.col("_n").alias("_na"))
         cand = simjoin_probe(probe, new_prefix, self.num, self.den)
-        # Materialize the candidate frame once (serialized, spill-safe)
-        # and derive the verify chunk count from its measured size
-        # (round-8 ADVICE: bound the per-batch verify payload, not just
-        # its storage level). `mean_width` is max(batch, corpus) mean
-        # set width from the persisted width stat (round-9 ADVICE: the
-        # verify arrays come from the WHOLE index, so a short-doc batch
-        # probing a long-doc index must not underestimate K). The
-        # `touched` scan below reads the materialized blocks instead of
-        # re-running the probe.
-        cand, chunks, n_cands = _measure_for_chunks(
-            cand, batch_sh, "doc_id", mean_width=mean_width)
-        if self.verify_chunks is not None:
-            chunks = self.verify_chunks
-        # observability for soaks/ops: what the auto-selection measured
-        # and chose for the LAST processed batch
-        self.last_batch_stats = {"n_candidates": n_cands,
-                                 "verify_chunks": chunks,
-                                 "mean_width": mean_width}
-        touched = (cand.select(F.col("doc_a").alias("doc_id"))
-                   .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-                   .distinct().persist())
-        dbuckets, ids = self._prune_info(touched, "doc_id")
-        arrays = (self._arrays(before=epoch_id)
-                  .where(_in_list("_d", dbuckets))
-                  .unionByName(b_arrays.where(_in_list("_d", dbuckets))
-                               .select(*(["doc_id", "_sh", "_d"]))))
-        if ids is not None:
-            arrays = arrays.where(_in_list("doc_id", ids))
-        else:
-            arrays = arrays.join(touched, on="doc_id", how="leftsemi")
-        # The verify join broadcasts the candidate pairs (narrow ids),
-        # so its map parallelism is the ARRAYS-scan partitioning — a
-        # handful of small state files, i.e. 2-5 tasks regardless of
-        # core count (r11 event-log profile: an 11 s verify stage of 5
-        # tasks carrying ~55 task-seconds of intersect work). Demanded
-        # work is n_candidates x mean set width; hash-repartition the
-        # touched arrays (tiny: <= prune-capped docs x one array row)
-        # so the intersect runs as wide as that work warrants.
-        ver_parts = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, int(n_cands * max(mean_width or 1.0, 1.0)) // 2_000_000
-                + 1))
-        arr_sets = arrays.select("doc_id", "_sh").repartition(
-            ver_parts, "doc_id")
-        pairs = _chunked_union(
-            cand, chunks,
-            lambda c: simjoin_verify_arrays(
-                c, arr_sets, "doc_id", self.num, self.den,
-                # whole-frame call (K==1): reuse the measured count so
-                # _pair_sets skips a duplicate serialize+count pass
-                n_cands=n_cands if c is cand else None),
-            materialized=True)
+
+        def arrays_for(cand: DataFrame, n_cands: int) -> DataFrame:
+            # the candidate-touched docs' arrays only; `cand` is the
+            # measured (materialized) frame, so this scan reads its
+            # blocks instead of re-running the probe
+            touched = candidate_ids(cand, "doc_id").persist()
+            held.append(touched)
+            dbuckets, ids = self._prune_info(touched, "doc_id")
+            arrays = (self._arrays(before=epoch_id)
+                      .where(_in_list("_d", dbuckets))
+                      .unionByName(b_arrays.where(_in_list("_d", dbuckets))
+                                   .select("doc_id", "_sh", "_d")))
+            if ids is not None:
+                arrays = arrays.where(_in_list("doc_id", ids))
+            else:
+                arrays = arrays.join(touched, on="doc_id", how="leftsemi")
+            # The verify join broadcasts the candidate pairs (narrow
+            # ids), so its map parallelism is the ARRAYS-scan
+            # partitioning — a handful of small state files, i.e. 2-5
+            # tasks regardless of core count (r11 event-log profile: an
+            # 11 s verify stage of 5 tasks carrying ~55 task-seconds of
+            # intersect work). Demanded work is n_candidates x mean set
+            # width; hash-repartition the touched arrays (tiny: <=
+            # prune-capped docs x one array row) so the intersect runs
+            # as wide as that work warrants.
+            ver_parts = min(
+                self.spark.sparkContext.defaultParallelism,
+                max(1, int(n_cands * max(mean_width, 1.0)) // 2_000_000
+                    + 1))
+            return arrays.select("doc_id", "_sh").repartition(
+                ver_parts, "doc_id")
+
+        # `mean_width` is max(batch, corpus) mean set width from the
+        # persisted width stat (round-9 ADVICE: the verify arrays come
+        # from the WHOLE index, so a short-doc batch probing a long-doc
+        # index must not underestimate the chunk count)
+        pairs = verify_candidates(cand, arrays_for, "doc_id",
+                                  jaccard_verify(self.num, self.den),
+                                  mean_width=lambda: mean_width)
 
         def release() -> None:
-            new_prefix.unpersist()
-            touched.unpersist()
+            for df in held:
+                df.unpersist()
 
         return pairs, release
 
@@ -441,11 +382,10 @@ class StreamingSimJoinIndex(EpochState):
 
         if epoch_id is None:
             epoch_id = self._next_epoch("sets")
-        new_docs = new_docs.select("doc_id", "text")
-        if self.full_reprobe:
-            return self._process_batch_full(new_docs, epoch_id)
         batch_sh = hashed_shingle_sets(
-            new_docs, shingle_fn=self.shingle_fn).persist()
+            new_docs.select("doc_id", "text"),
+            shingle_fn=self.shingle_fn).persist()
+        frames = self._batch_frames(batch_sh)
         # one collect answers empty-check + dfreq prune lists
         tok_buckets, tok_hs = self._prune_info(batch_sh, "_h")
         # delta writes run CONCURRENTLY WITH the probe (round-10, judge
@@ -457,7 +397,7 @@ class StreamingSimJoinIndex(EpochState):
         # the replay idempotent).
         pool = ThreadPoolExecutor(max_workers=4)
         futs = [pool.submit(w)
-                for w in self._delta_writers(batch_sh, epoch_id)]
+                for w in self._delta_writers(frames, epoch_id)]
         # the width stat rides the same concurrent pool (tiny agg over
         # the persisted shingle rows) so it adds no critical-path job
         stats_fut = (pool.submit(
@@ -477,11 +417,11 @@ class StreamingSimJoinIndex(EpochState):
                 corpus_w = self._record_width(epoch_id, stats._r,
                                               max(stats._d, 1))
                 mean_w = max(stats._r / max(stats._d, 1), corpus_w)
-                pairs, release = self._probe(batch_sh, tok_buckets,
+                pairs, release = self._probe(batch_sh, frames, tok_buckets,
                                              tok_hs, epoch_id, mean_w)
             # NOTE (round-8 ADVICE): this write is NOT the only
-            # materializing action — _probe eagerly materializes and
-            # counts each batch's candidate frame (_measure_for_chunks /
+            # materializing action — the verify eagerly materializes and
+            # counts each batch's candidate frame (verify_candidates /
             # _pair_sets), so every micro-batch holds a candidate-
             # proportional block-store copy while verifying. Storage for
             # that copy is count-adaptive (serialized MEMORY_AND_DISK
@@ -508,31 +448,6 @@ class StreamingSimJoinIndex(EpochState):
         if release is not None:
             release()
         batch_sh.unpersist()
-        return self.spark.read.parquet(self._path("pairs", epoch_id))
-
-    def _process_batch_full(self, new_docs: DataFrame,
-                            epoch_id: int) -> DataFrame:
-        """Pre-r8 path: full-state re-read + similarity_join_incremental
-        (which re-aggregates global frequencies and sizes per batch) —
-        the index-proportional shape SIMJOIN_SOAK measures against.
-        Writes the same state deltas, so the two modes interoperate on
-        one state dir and tests can cross-check their outputs."""
-        batch_sh = hashed_shingle_sets(
-            new_docs, shingle_fn=self.shingle_fn).persist()
-        self._write_deltas(batch_sh, epoch_id)
-        batch_sh.unpersist()
-        all_sets = self._sets().select("doc_id", "_h")
-        new_ids = new_docs.select("doc_id").distinct()
-        index_sets = all_sets.join(F.broadcast(new_ids), on="doc_id",
-                                   how="anti")
-        pairs, all_sh = similarity_join_incremental(
-            index_sets, new_docs, threshold_num=self.num,
-            threshold_den=self.den, shingle_fn=self.shingle_fn)
-        all_sh.unpersist()
-        # repartition, not coalesce — same verify-width reasoning as the
-        # default path's pairs write (process_batch above)
-        self._write_epoch(pairs.repartition(write_parts(self.spark)),
-                          "pairs", epoch_id)
         return self.spark.read.parquet(self._path("pairs", epoch_id))
 
     def all_pairs(self) -> DataFrame:

@@ -82,9 +82,9 @@ SLOW_TESTS = {
     "test_simjoin_index.py::test_compact_preserves_pairs_and_collapses_files",
     "test_simjoin_index.py::test_forget_equals_never_ingested",
     "test_simjoin_index.py::test_forgetting_compact_physically_erases",
-    "test_simjoin_index.py::test_full_reprobe_mode_matches_default",
+    "test_simjoin_index.py::test_epoch_pairs_match_incremental_operator",
     "test_simjoin_index.py::test_union_over_batches_equals_full",
-    "test_simjoin_index.py::test_verify_chunks_matches_one_shot",
+    "test_simjoin_index.py::test_chunked_verify_matches_one_shot",
     "test_streaming.py::test_property_merge_snapshot_any_batching",
     "test_streaming_joins.py::test_direct_process_batch_auto_assigns_epochs",
     "test_streaming_joins.py::test_streaming_dedup_index_equals_full_batch",

@@ -100,6 +100,10 @@ def _jobs(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by an asynchronous listener queue: on a
+    # loaded host fn's last job can still be queued when fn returns, so
+    # drain the bus before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty(120_000)
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 

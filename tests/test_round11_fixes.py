@@ -1,45 +1,8 @@
 """Focused pins for the round-11 optimizations (each changed an
-operator's internals while promising bit-identical outputs)."""
+operator's internals while promising bit-identical outputs). The
+verify-threshold rewrite's pin lives in tests/test_simjoin.py."""
 
 from __future__ import annotations
-
-import random
-
-from pyspark.sql import functions as F
-
-
-def test_verify_threshold_rewrite_equals_direct_jaccard(spark):
-    """simjoin_verify_arrays' pushed join condition was rewritten from
-    den*I >= num*(la+lb-I) to (den+num)*I >= num*(la+lb) (one intersect
-    per candidate). Property-check the algebra on random integer sets:
-    survivors and their (n_inter, n_union) values must equal the direct
-    Jaccard evaluation exactly."""
-    from dbsync_spark.functions.dedup import simjoin_verify_arrays
-
-    rng = random.Random(7)
-    docs = []
-    for i in range(40):
-        width = rng.randint(1, 30)
-        docs.append((i, sorted(rng.sample(range(60), width))))
-    sets = spark.createDataFrame(
-        [(i, [int(x) for x in s]) for i, s in docs],
-        "doc_id long, _sh array<int>")
-    cand = spark.createDataFrame(
-        [(a, b) for a in range(40) for b in range(a + 1, 40)],
-        "doc_a long, doc_b long")
-    num, den = 4, 5
-    got = {(r["doc_a"], r["doc_b"]): (r["n_inter"], r["n_union"])
-           for r in simjoin_verify_arrays(cand, sets, "doc_id",
-                                          num, den).collect()}
-    exp = {}
-    by_id = dict(docs)
-    for a in range(40):
-        for b in range(a + 1, 40):
-            inter = len(set(by_id[a]) & set(by_id[b]))
-            union = len(set(by_id[a]) | set(by_id[b]))
-            if den * inter >= num * union:
-                exp[(a, b)] = (inter, union)
-    assert got == exp
 
 
 def test_read_table_memoizes_per_session(spark, sf_dir):

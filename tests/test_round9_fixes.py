@@ -5,31 +5,20 @@
    between the publishes left the two subs at inconsistent epochs and
    every recovery path restaged from the corrupted view (ADVICE,
    medium). Now forget() uses the same marker protocol as compact().
-2. _simjoin_verify silently dropped verify_chunks when verify !=
-   'array' (ADVICE, low) — the relational path now chunks too.
-3. StreamingSimJoinIndex treated ANY OSError / malformed content on an
-   existing _meta.json as "first use" and re-pinned a possibly
-   different bucket modulus over live state (ADVICE, low) — now only a
-   missing file initializes; corruption propagates.
-4. stage_compact(partition_by=...) lost the within-file sort that
-   _write_deltas established, degrading post-compaction IN-list
-   pushdowns to full-file scans within buckets (ADVICE, low) — callers
-   now pass sort_within.
-5. _pair_sets is count-adaptive (judge item #1): serialized blocks
-   above _PAIR_DESER_MAX, deserialized below; both regimes must
-   produce identical results.
-6. verify_chunks auto-selection (judge item #8): K derived from the
-   measured candidate count x mean set width; default None equals any
-   explicit K.
-7. ForgettingSimhashIndex dead-fingerprint set is epoch-delta state
+2. ForgettingSimhashIndex dead-fingerprint set is epoch-delta state
    (judge item #6): per-event write bytes proportional to the event,
    prior deltas never rewritten, die -> revive -> die-again derived
    correctly.
-"""
+3. The verify's chunk count is derived from the measured candidates
+   (judge item #8): the automatically chosen K must give the same
+   output as any larger K.
 
+The round's other simjoin items (meta corruption, compaction sort,
+count-adaptive _pair_sets) live in tests/test_simjoin.py and
+tests/test_simjoin_index.py.
+"""
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -139,131 +128,7 @@ def test_span_compact_recovers_forget_crash_window(spark, tmp_path,
 
 
 # ---------------------------------------------------------------------------
-# 2./6. verify chunking: relational path honors K; auto-K equals explicit
-# ---------------------------------------------------------------------------
-
-def _sim_corpus(spark):
-    base = ("the quick brown fox jumps over the lazy dog while a patient "
-            "observer records every movement across the wide open field")
-    rows = [(1, base), (2, base.replace("field", "plain")),
-            (3, "a completely different treatise on computational topology")]
-    rows += [(10 + i, f"filler number {i} about topic {i * 3} and item "
-                      f"{i * 7} plus {i * 11} {i * 13}") for i in range(25)]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_relational_verify_honors_chunks(spark):
-    from dbsync_spark.functions.dedup import similarity_join
-
-    docs = _sim_corpus(spark)
-    want = _rows(similarity_join(docs, verify="array", verify_chunks=1))
-    assert want, "fixture must yield pairs"
-    got = _rows(similarity_join(docs, verify="relational", verify_chunks=3))
-    assert got == want
-
-
-def test_auto_chunks_default_equals_explicit(spark):
-    from dbsync_spark.functions.dedup import (containment_join,
-                                              similarity_join)
-
-    docs = _sim_corpus(spark)
-    assert _rows(similarity_join(docs)) == _rows(
-        similarity_join(docs, verify_chunks=4))
-    assert _rows(containment_join(docs)) == _rows(
-        containment_join(docs, verify_chunks=3))
-
-
-def test_auto_chunk_math():
-    from dbsync_spark.functions.dedup import (_VERIFY_PAYLOAD_BUDGET,
-                                              _auto_verify_chunks)
-
-    assert _auto_verify_chunks(0, 0.0) == 1
-    # realistic sf0.1 shape: ~3M candidates x ~200-wide arrays -> K=1
-    assert _auto_verify_chunks(3_000_000, 200.0) == 1
-    # the adversarial 30x leg: 77M candidates x ~1000-wide arrays
-    # ~= 616 GB -> close to the manually tuned 32
-    k = _auto_verify_chunks(77_000_000, 1000.0)
-    assert 24 <= k <= 40, k
-    # exact budget boundary never picks 0 chunks
-    assert _auto_verify_chunks(_VERIFY_PAYLOAD_BUDGET // 8, 1.0) == 1
-
-
-# ---------------------------------------------------------------------------
-# 3. simjoin meta corruption must propagate
-# ---------------------------------------------------------------------------
-
-def test_simjoin_meta_corruption_raises(spark, tmp_path):
-    from dbsync_spark.streaming.simjoin_index import StreamingSimJoinIndex
-
-    root = str(tmp_path / "sj")
-    idx = StreamingSimJoinIndex(spark, root, n_buckets=16)
-    assert idx.nb == 16
-    # reopen honors the pinned modulus regardless of the ctor arg
-    assert StreamingSimJoinIndex(spark, root, n_buckets=64).nb == 16
-
-    with open(f"{root}/_meta.json", "w") as fh:
-        fh.write("{not json")
-    with pytest.raises(ValueError):
-        StreamingSimJoinIndex(spark, root, n_buckets=64)
-    # the corrupted file must NOT have been overwritten by the attempt
-    with open(f"{root}/_meta.json") as fh:
-        assert fh.read() == "{not json"
-
-
-# ---------------------------------------------------------------------------
-# 4. compaction preserves the within-file sort for row-group skipping
-# ---------------------------------------------------------------------------
-
-def test_simjoin_compact_preserves_h_sort(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    from dbsync_spark.streaming.simjoin_index import StreamingSimJoinIndex
-
-    docs = _sim_corpus(spark)
-    root = str(tmp_path / "sj")
-    idx = StreamingSimJoinIndex(spark, root, n_buckets=8)
-    for e in range(3):
-        idx.process_batch(docs.where(F.col("doc_id") % 3 == e), epoch_id=e)
-    pairs_before = _rows(idx.all_pairs())
-    idx.compact()
-    assert _rows(idx.all_pairs()) == pairs_before
-
-    def _files(sub):
-        out = []
-        for dirpath, _dirs, files in os.walk(f"{root}/{sub}"):
-            out += [os.path.join(dirpath, f) for f in files
-                    if f.endswith(".parquet")]
-        return out
-
-    checked = 0
-    for sub, col in (("sets", "_h"), ("dfreq", "_h"), ("arrays", "doc_id")):
-        for path in _files(sub):
-            vals = pq.read_table(path, columns=[col])[col].to_pylist()
-            assert vals == sorted(vals), (sub, path)
-            checked += 1
-    assert checked > 0
-
-
-# ---------------------------------------------------------------------------
-# 5. count-adaptive _pair_sets: serialized regime produces identical output
-# ---------------------------------------------------------------------------
-
-def test_pair_sets_serialized_regime_identical(spark, monkeypatch):
-    from dbsync_spark.functions import dedup as dedup_mod
-    from dbsync_spark.functions.dedup import (minhash_near_dups,
-                                              similarity_join)
-
-    docs = _sim_corpus(spark)
-    want_sim = _rows(similarity_join(docs, verify_chunks=1))
-    want_mh = _rows(minhash_near_dups(docs))
-    # force every candidate frame down the large/serialized path
-    monkeypatch.setattr(dedup_mod, "_PAIR_DESER_MAX", 0)
-    assert _rows(similarity_join(docs, verify_chunks=1)) == want_sim
-    assert _rows(minhash_near_dups(docs)) == want_mh
-
-
-# ---------------------------------------------------------------------------
-# 7. simhash dead-fingerprint epoch deltas
+# 2. simhash dead-fingerprint epoch deltas
 # ---------------------------------------------------------------------------
 
 def test_simhash_dead_deltas_are_event_proportional(spark, tmp_path):
@@ -330,3 +195,23 @@ def test_simhash_die_revive_die_again(spark, tmp_path):
     assert not os.path.exists(f"{tmp_path}/sh/deadfps/epoch=0")
     assert idx._dead().isEmpty()
     assert _rows(idx.pairs()) == [(3, 4, 0)]
+
+
+# ---------------------------------------------------------------------------
+# 3. auto-chosen verify chunk count equals a forced larger one
+# ---------------------------------------------------------------------------
+
+def test_auto_chunks_default_equals_explicit(spark, monkeypatch):
+    from dbsync_spark.functions.dedup import (containment_join,
+                                              similarity_join)
+    from tests.test_simjoin import _corpus, chunk_spy, split_budget
+
+    docs = _corpus(spark, n_filler=25)
+    for op, k in ((similarity_join, 4), (containment_join, 3)):
+        monkeypatch.undo()  # default payload budget, fresh spy
+        seen = chunk_spy(monkeypatch)
+        auto = _rows(op(docs))
+        assert auto and seen[-1][2] == 1
+        split_budget(monkeypatch, seen, k=k)
+        assert _rows(op(docs)) == auto
+        assert seen[-1][2] >= k

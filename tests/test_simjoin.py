@@ -4,9 +4,13 @@ and incremental == full decomposition."""
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import functions as F
 
+from dbsync_spark.functions import dedup
 from dbsync_spark.functions.dedup import (MERSENNE31, char_shingles,
+                                          containment_join,
                                           hashed_shingle_sets,
                                           similarity_join,
                                           similarity_join_incremental)
@@ -127,8 +131,6 @@ def test_simjoin_empty_and_short_docs(spark):
 
 
 def test_containment_join_directional(spark):
-    from dbsync_spark.functions.dedup import containment_join
-
     quote = "the five boxing wizards jump quickly over the frozen river"
     big = ("a long host document that embeds a quotation verbatim: "
            + quote + " and then continues with plenty of additional "
@@ -145,9 +147,6 @@ def test_containment_join_directional(spark):
 
 
 def test_containment_join_equals_brute_force(spark):
-    from pyspark.sql import functions as F
-    from dbsync_spark.functions.dedup import containment_join
-
     docs = _corpus(spark, n_filler=40)
     sh = hashed_shingle_sets(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -164,19 +163,109 @@ def test_containment_join_equals_brute_force(spark):
     assert got == want and len(want) >= 2
 
 
-def test_chunked_verify_identical_output(spark):
-    """verify_chunks partitions the candidate set deterministically and
-    unions per-chunk verifies — output must be byte-identical to the
-    one-shot verify for both exact join operators."""
-    from dbsync_spark.functions.dedup import (containment_join,
-                                              similarity_join)
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
+
+def chunk_spy(monkeypatch) -> list:
+    """Record every measured verify's (candidates, mean width, chunk
+    count) choice."""
+    seen = []
+    real = dedup._auto_verify_chunks
+
+    def spy(n_cands, mean_width):
+        seen.append((n_cands, mean_width, real(n_cands, mean_width)))
+        return seen[-1][2]
+
+    monkeypatch.setattr(dedup, "_auto_verify_chunks", spy)
+    return seen
+
+
+def split_budget(monkeypatch, seen, k=3) -> None:
+    """Shrink the verify payload budget so the last measured verify's
+    payload splits into at least `k` chunks."""
+    n_cands, mean_width, _ = seen[-1]
+    monkeypatch.setattr(dedup, "_VERIFY_PAYLOAD_BUDGET",
+                        int(n_cands * 8.0 * mean_width) // k)
+
+
+def test_chunked_verify_identical_output(spark, monkeypatch):
+    """The verify's chunks partition the candidate set by pmod(doc_a, K)
+    and union per-chunk verifies: with K forced above 1 (a shrunken
+    payload budget), both exact join operators' output must be
+    identical to the one-shot K == 1 verify the default budget picks."""
     docs = _corpus(spark, n_filler=30)
-    one = {tuple(r) for r in similarity_join(docs).collect()}
-    chunked = {tuple(r) for r in
-               similarity_join(docs, verify_chunks=4).collect()}
-    assert one == chunked and one
-    c_one = {tuple(r) for r in containment_join(docs).collect()}
-    c_chunked = {tuple(r) for r in
-                 containment_join(docs, verify_chunks=3).collect()}
-    assert c_one == c_chunked
+    budget = dedup._VERIFY_PAYLOAD_BUDGET
+    seen = chunk_spy(monkeypatch)
+    for op in (similarity_join, containment_join):
+        monkeypatch.setattr(dedup, "_VERIFY_PAYLOAD_BUDGET", budget)
+        one = _rows(op(docs))
+        assert one and seen[-1][2] == 1
+        split_budget(monkeypatch, seen)
+        assert _rows(op(docs)) == one
+        assert seen[-1][2] >= 3
+
+
+def test_auto_chunk_math():
+    from dbsync_spark.functions.dedup import (_VERIFY_PAYLOAD_BUDGET,
+                                              _auto_verify_chunks)
+
+    assert _auto_verify_chunks(0, 0.0) == 1
+    # realistic sf0.1 shape: ~3M candidates x ~200-wide arrays -> K=1
+    assert _auto_verify_chunks(3_000_000, 200.0) == 1
+    # the adversarial 30x leg: 77M candidates x ~1000-wide arrays
+    # ~= 616 GB -> close to the 32 chunks that ran it on a 16g heap
+    k = _auto_verify_chunks(77_000_000, 1000.0)
+    assert 24 <= k <= 40, k
+    # exact budget boundary never picks 0 chunks
+    assert _auto_verify_chunks(_VERIFY_PAYLOAD_BUDGET // 8, 1.0) == 1
+
+
+def test_pair_sets_serialized_regime_identical(spark, monkeypatch):
+    """_pair_sets is count-adaptive: serialized blocks above
+    _PAIR_DESER_MAX, deserialized below; both regimes must produce
+    identical results."""
+    from dbsync_spark.functions.dedup import minhash_near_dups
+
+    docs = _corpus(spark, n_filler=25)
+    want_sim = _rows(similarity_join(docs))
+    want_mh = _rows(minhash_near_dups(docs))
+    # force every candidate frame down the large/serialized path
+    monkeypatch.setattr(dedup, "_PAIR_DESER_MAX", 0)
+    assert _rows(similarity_join(docs)) == want_sim
+    assert _rows(minhash_near_dups(docs)) == want_mh
+
+
+def test_verify_threshold_rewrite_equals_direct_jaccard(spark):
+    """jaccard_verify's pushed join condition is the rewrite
+    (den+num)*I >= num*(la+lb) of den*I >= num*(la+lb-I) (one intersect
+    per candidate). Property-check the algebra on random integer sets:
+    survivors and their (n_inter, n_union) values must equal the direct
+    Jaccard evaluation exactly."""
+    from dbsync_spark.functions.dedup import (jaccard_verify,
+                                              verify_candidates)
+
+    rng = random.Random(7)
+    docs = []
+    for i in range(40):
+        width = rng.randint(1, 30)
+        docs.append((i, sorted(rng.sample(range(60), width))))
+    sets = spark.createDataFrame(
+        [(i, [int(x) for x in s]) for i, s in docs],
+        "doc_id long, _sh array<int>")
+    cand = spark.createDataFrame(
+        [(a, b) for a in range(40) for b in range(a + 1, 40)],
+        "doc_a long, doc_b long")
+    num, den = 4, 5
+    got = {(r["doc_a"], r["doc_b"]): (r["n_inter"], r["n_union"])
+           for r in verify_candidates(cand, sets, "doc_id",
+                                      jaccard_verify(num, den)).collect()}
+    exp = {}
+    by_id = dict(docs)
+    for a in range(40):
+        for b in range(a + 1, 40):
+            inter = len(set(by_id[a]) & set(by_id[b]))
+            union = len(set(by_id[a]) | set(by_id[b]))
+            if den * inter >= num * union:
+                exp[(a, b)] = (inter, union)
+    assert got == exp

@@ -3,13 +3,21 @@ any batching), replay idempotence, right-to-be-forgotten, compaction."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from dbsync_spark.functions.dedup import similarity_join
+from dbsync_spark.functions import dedup
+from dbsync_spark.functions.dedup import (containment_join,
+                                          hashed_shingle_sets,
+                                          similarity_join,
+                                          similarity_join_incremental)
 from dbsync_spark.streaming.simjoin_index import (ForgettingSimJoinIndex,
                                                   StreamingSimJoinIndex)
-from tests.test_simjoin import _corpus
+# job counting as the apply-path pins do it (one job group per call)
+from test_apply_path import _jobs
+from tests.test_simjoin import _corpus, chunk_spy, split_budget
 
 
 def _pairs(df):
@@ -57,8 +65,6 @@ def test_forget_equals_never_ingested(spark, tmp_path):
 
 
 def test_compact_preserves_pairs_and_collapses_files(spark, tmp_path):
-    import os
-
     docs = _corpus(spark, n_filler=20)
     root = str(tmp_path / "sj")
     idx = StreamingSimJoinIndex(spark, root)
@@ -80,27 +86,28 @@ def test_compact_preserves_pairs_and_collapses_files(spark, tmp_path):
     assert _pairs(idx.all_pairs()) == before  # no near-dups introduced
 
 
-def test_full_reprobe_mode_matches_default(spark, tmp_path):
-    """The r8 additive-state probe and the retained full-recompute
-    baseline (full_reprobe=True) emit identical per-epoch pairs — the
-    cross-check that bucket pruning + lagged-frequency ranking changed
-    the COST shape only, never the output."""
+def test_epoch_pairs_match_incremental_operator(spark, tmp_path):
+    """Each epoch's pairs equal similarity_join_incremental's over the
+    same index and batch: bucket pruning, additive lagged frequencies
+    and the concurrent-write probe change the cost shape only, never
+    the output."""
     docs = _corpus(spark, n_filler=25)
-    fast = StreamingSimJoinIndex(spark, str(tmp_path / "fast"))
-    slow = StreamingSimJoinIndex(spark, str(tmp_path / "slow"),
-                                 full_reprobe=True)
+    idx = StreamingSimJoinIndex(spark, str(tmp_path / "sj"))
+    index_sh = hashed_shingle_sets(docs.where(F.lit(False)))
     for epoch in range(3):
         batch = docs.where(F.col("doc_id") % 3 == epoch)
-        assert (_pairs(fast.process_batch(batch, epoch_id=epoch))
-                == _pairs(slow.process_batch(batch, epoch_id=epoch)))
+        want, all_sh = similarity_join_incremental(index_sh, batch)
+        assert (_pairs(idx.process_batch(batch, epoch_id=epoch))
+                == _pairs(want))
+        index_sh.unpersist()
+        index_sh = all_sh
+    index_sh.unpersist()
 
 
 def test_bucketed_state_layout(spark, tmp_path):
     """At-rest pruning layout: set rows bucketed by token hash (_b),
     verify arrays by doc id (_d), dfreq deltas by token hash — the
     physical precondition for batch-proportional probe reads."""
-    import os
-
     docs = _corpus(spark, n_filler=10)
     root = str(tmp_path / "sj")
     idx = StreamingSimJoinIndex(spark, root, n_buckets=8)
@@ -120,10 +127,6 @@ def test_forgetting_compact_physically_erases(spark, tmp_path):
     rows, arrays, dfreq contributions, and pairs from the FILES (not
     just the read path), preserves bucket partition dirs, and the
     erasure marker keeps a second compact from re-rewriting."""
-    import os
-
-    from dbsync_spark.streaming.simjoin_index import ForgettingSimJoinIndex
-
     docs = _corpus(spark, n_filler=15)
     root = str(tmp_path / "sj")
     idx = ForgettingSimJoinIndex(spark, root)
@@ -159,18 +162,116 @@ def test_forgetting_compact_physically_erases(spark, tmp_path):
     assert _pairs(idx.all_pairs()) == before
 
 
-def test_verify_chunks_matches_one_shot(spark, tmp_path):
-    """Chunk-bounded per-batch verify (round-8 ADVICE: bound the
-    streaming verify PAYLOAD, not just its storage level) emits
-    byte-identical per-epoch pairs to the default auto path — the
-    chunks partition the candidate set, so the union re-assembles the
-    one-shot result exactly."""
+def test_chunked_verify_matches_one_shot(spark, tmp_path, monkeypatch):
+    """The per-batch verify is chunk-bounded like the batch operators'
+    (round-8 ADVICE: bound the streaming verify PAYLOAD, not just its
+    storage level). With K forced above 1 by a shrunken payload budget,
+    each epoch's pairs are identical to the one-shot K == 1 verify —
+    the chunks partition the candidate set."""
     docs = _corpus(spark, n_filler=25)
+    budget = dedup._VERIFY_PAYLOAD_BUDGET
+    seen = chunk_spy(monkeypatch)
     auto = StreamingSimJoinIndex(spark, str(tmp_path / "auto"))
-    chunked = StreamingSimJoinIndex(spark, str(tmp_path / "chunked"),
-                                    verify_chunks=3)
-    for epoch in range(2):
-        batch = docs.where(F.col("doc_id") % 2 == epoch)
-        assert (_pairs(auto.process_batch(batch, epoch_id=epoch))
-                == _pairs(chunked.process_batch(batch, epoch_id=epoch)))
+    chunked = StreamingSimJoinIndex(spark, str(tmp_path / "chunked"))
+    n_chunked = 0
+    for epoch in range(3):
+        batch = docs.where(F.col("doc_id") % 3 == epoch)
+        monkeypatch.setattr(dedup, "_VERIFY_PAYLOAD_BUDGET", budget)
+        n_seen = len(seen)
+        want = _pairs(auto.process_batch(batch, epoch_id=epoch))
+        # a batch with no candidates measures no chunk count
+        measured = len(seen) > n_seen
+        if measured:
+            assert seen[-1][2] == 1
+            split_budget(monkeypatch, seen)
+        assert _pairs(chunked.process_batch(batch, epoch_id=epoch)) == want
+        if measured:
+            assert seen[-1][2] >= 3
+            n_chunked += 1
+    assert n_chunked >= 2
     assert _pairs(chunked.all_pairs()) == _pairs(similarity_join(docs))
+
+
+def test_meta_corruption_raises(spark, tmp_path):
+    """Only a MISSING _meta.json means first use: malformed content on
+    an existing index propagates instead of re-pinning a possibly
+    different bucket modulus over live state."""
+    root = str(tmp_path / "sj")
+    idx = StreamingSimJoinIndex(spark, root, n_buckets=16)
+    assert idx.nb == 16
+    # reopen honors the pinned modulus regardless of the ctor arg
+    assert StreamingSimJoinIndex(spark, root, n_buckets=64).nb == 16
+
+    with open(f"{root}/_meta.json", "w") as fh:
+        fh.write("{not json")
+    with pytest.raises(ValueError):
+        StreamingSimJoinIndex(spark, root, n_buckets=64)
+    # the corrupted file must NOT have been overwritten by the attempt
+    with open(f"{root}/_meta.json") as fh:
+        assert fh.read() == "{not json"
+
+
+def test_compact_preserves_h_sort(spark, tmp_path):
+    """Compaction keeps the within-file sort the delta writers
+    establish (sets and dfreq by _h, arrays by doc id), so IN-list
+    pushdowns still skip row groups after a compact."""
+    import pyarrow.parquet as pq
+
+    docs = _corpus(spark, n_filler=25)
+    root = str(tmp_path / "sj")
+    idx = StreamingSimJoinIndex(spark, root, n_buckets=8)
+    for e in range(3):
+        idx.process_batch(docs.where(F.col("doc_id") % 3 == e), epoch_id=e)
+    pairs_before = _pairs(idx.all_pairs())
+    idx.compact()
+    assert _pairs(idx.all_pairs()) == pairs_before
+
+    def _files(sub):
+        out = []
+        for dirpath, _dirs, files in os.walk(f"{root}/{sub}"):
+            out += [os.path.join(dirpath, f) for f in files
+                    if f.endswith(".parquet")]
+        return out
+
+    checked = 0
+    for sub, col in (("sets", "_h"), ("dfreq", "_h"), ("arrays", "doc_id")):
+        for path in _files(sub):
+            vals = pq.read_table(path, columns=[col])[col].to_pylist()
+            assert vals == sorted(vals), (sub, path)
+            checked += 1
+    assert checked > 0
+
+
+# Spark jobs per call of the exact set-similarity family on
+# _corpus(n_filler=25), process_batch over the doc_id % 3 batches of a
+# ForgettingSimJoinIndex: a job more per call is latency on every batch
+# operator run, micro-batch or maintenance tick. _jobs counts only the
+# calling thread's jobs, so process_batch's concurrent delta writers
+# and width stat (pool threads) are not in these numbers.
+SIMJOIN_JOBS = {"similarity_join": 20, "containment_join": 20,
+                "similarity_join_incremental": 22,
+                "process_batch": [24, 37, 37], "forget": 2, "compact": 12,
+                "compact_repeat": 0}
+
+
+def test_simjoin_jobs_per_call(spark, tmp_path):
+    docs = _corpus(spark, n_filler=25)
+    got = {"similarity_join": _jobs(spark, lambda: similarity_join(docs)),
+           "containment_join": _jobs(spark,
+                                     lambda: containment_join(docs))}
+    index_sh = hashed_shingle_sets(docs.where(F.col("doc_id") % 3 != 2))
+    out = []
+    got["similarity_join_incremental"] = _jobs(
+        spark, lambda: out.extend(similarity_join_incremental(
+            index_sh, docs.where(F.col("doc_id") % 3 == 2))))
+    out[1].unpersist()
+    idx = ForgettingSimJoinIndex(spark, str(tmp_path / "sj"))
+    got["process_batch"] = [
+        _jobs(spark, lambda: idx.process_batch(
+            docs.where(F.col("doc_id") % 3 == e), epoch_id=e))
+        for e in range(3)]
+    got["forget"] = _jobs(spark, lambda: idx.forget(
+        spark.createDataFrame([(2,)], "doc_id long")))
+    got["compact"] = _jobs(spark, idx.compact)
+    got["compact_repeat"] = _jobs(spark, idx.compact)
+    assert got == SIMJOIN_JOBS
