@@ -183,8 +183,8 @@ def gate_baselines(repo_dir: str, cur_sf: float | None,
     another scale factor must not become the baseline), and so is one
     whose recorded `cpus` differs (judge r10 item #2: the driver's
     8-CPU scaling leg must never become the local[32] baseline).
-    Builder-side adjudication artifacts (BENCH_r10_TRY2.json & co.) are
-    not round anchors — only the driver's strict BENCH_r<digits>.json.
+    Suffixed artifacts (BENCH_r<n>_<tag>.json) are not round anchors —
+    only the strict BENCH_r<digits>.json names are.
     Returns ([(label, queries), ...] deduped, [labels])."""
     import re as _re
 

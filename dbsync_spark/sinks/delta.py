@@ -50,8 +50,7 @@ class DeltaSink:
         df.write.format("delta").mode("overwrite").save(self.path)
 
     def merge_changes(self, spark: SparkSession, changes: DataFrame,
-                      key_cols: list[str], id_col: str = "id",
-                      op_col: str = "operation") -> None:
+                      key_cols: list[str], pinned: bool = False) -> None:
         """Apply an I/U/D micro-batch with merge_snapshot's EXACT
         semantics: the batch is reduced last-writer-wins per key by
         merge_snapshot itself (one shared implementation, no drift), and
@@ -59,11 +58,13 @@ class DeltaSink:
         than physically deleting — so a replayed or out-of-order older
         event can neither clobber a newer row nor resurrect a deleted
         key. One MERGE: matched+newer -> update all, unmatched -> insert
-        (tombstones included). Read live rows via `live`."""
+        (tombstones included). Read live rows via `live`. `pinned` is
+        accepted for interface parity with BucketedTable (the MERGE reads
+        the batch once)."""
         from dbsync_spark.operators.apply import (
             DELETED_COL, LAST_ID_COL, merge_snapshot)
 
-        src = merge_snapshot(None, changes, key_cols, id_col, op_col)
+        src = merge_snapshot(None, changes, list(key_cols))
         if self.read(spark) is None:
             src.write.format("delta").save(self.path)
             return

@@ -93,7 +93,7 @@ class StreamingSearchIndex(EpochState):
         this is the storage-level-erasure counterpart of its read-time
         anti-join). Query results are unchanged by construction: the
         state is a set union over epochs and compaction only
-        re-associates it (pinned in tests + tools/search_soak.py).
+        re-associates it (pinned in tests).
 
         Crash-safe via the shared staged swap (state.staged_compact): a
         crash before the manifest leaves the old state untouched; a

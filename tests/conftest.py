@@ -6,101 +6,6 @@ import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
-# ---------------------------------------------------------------------------
-# `slow` marking (judge r10 item #2). The grading driver runs
-# `python -m pytest tests/ -x -q` in a bounded window; the full suite is
-# ~40 min and the r10 driver run truncated at ~58% (an INCOMPLETE run
-# graded as tests_ok=false). pytest.ini deselects -m slow by default;
-# the lists below were generated from a full-suite timing run
-# (`pytest -m "" --durations=80`, 2026-08-18, quiet host: 491 passed in
-# 40m14s; every listed test measured >= ~9 s, together ~28 min). The
-# deselected tests are deep multi-epoch schedules, property soaks and
-# oracle-parity sweeps whose operator coverage the driver's own
-# correctness phase (drive_contract / CORRECTNESS_r*.json) or a faster
-# sibling test still exercises. Run everything with `pytest -m ""`.
-# Regenerate after adding minutes-scale tests:
-#   python -m pytest tests/ -q -m "" --durations=120
-# and fold any new >=9 s entries in here.
-SLOW_MODULES = {
-    "test_forget_soak_mini.py",   # 9-family interleaved forget soak
-    "test_plan_audit.py",         # 157 s module fixture (plan sweep)
-    "test_training_pipeline.py",  # 2 e2e funnel runs, ~156 s
-}
-SLOW_TESTS = {
-    "test_analytics.py::test_analytic_surface_matches_oracle",
-    "test_bloom_index.py::test_bloom_via_real_foreachbatch",
-    "test_bloom_index.py::test_crashed_epoch_causes_no_false_clean",
-    "test_bloom_index.py::test_epoch_replay_is_idempotent",
-    "test_bloom_index.py::test_flag_sound_when_bitmap_write_lost",
-    "test_bloom_index.py::test_incremental_eval_sets_accumulate",
-    "test_bloom_index.py::test_stream_equals_batch",
-    "test_bucketed_table.py::test_bucketed_matches_snapshot_path",
-    "test_bucketed_table.py::test_trickle_merge_never_fragments_buckets[25-32]",
-    "test_cluster_index.py::test_compact_preserves_canonical",
-    "test_cluster_index.py::test_forget_survives_checkpointed_stream_epoch_numbering",
-    "test_cluster_index.py::test_forgetting_cluster_index",
-    "test_cluster_index.py::test_label_epochs_are_deltas_not_full_tables",
-    "test_cluster_index.py::test_replay_is_idempotent",
-    "test_cluster_index.py::test_stream_equals_batch_for_any_batching",
-    "test_dsir.py::test_forgetting_dsir_index",
-    "test_dtw_monitor.py::test_streaming_matches_single_batch_and_replay",
-    "test_export_compaction.py::test_status_compaction_preserves_rows_and_bounds_files",
-    "test_forget.py::test_ann_forget_equals_rebuild",
-    "test_forget.py::test_bloom_index_forget_equals_rebuild",
-    "test_forget.py::test_corpus_service_example_runs",
-    "test_forget.py::test_dedup_index_compaction_physically_erases",
-    "test_forget.py::test_dedup_index_forget_hides_docs_and_pairs",
-    "test_forget.py::test_reingest_after_forget_raises",
-    "test_forget.py::test_search_index_forget_equals_rebuild",
-    "test_forget.py::test_simhash_forget_equals_rebuild",
-    "test_forget.py::test_span_forget_rescores_surviving_neighborhood",
-    "test_functions.py::test_declared_ann_queries_pin_recall",
-    "test_functions.py::test_ivf_exact_matches_float_scores_on_overlap",
-    "test_functions.py::test_streaming_simhash_equals_batch",
-    "test_functions.py::test_training_queries_match_oracle",
-    "test_graph.py::test_bfs_property_random_graphs",
-    "test_graph.py::test_incremental_clusters_equal_full_recompute",
-    "test_graph.py::test_pagerank_property_random_graphs",
-    "test_index_compaction.py::test_bloom_compact_leaves_crashed_epoch_excluded",
-    "test_index_compaction.py::test_bloom_compact_preserves_flags_and_bounds_files",
-    "test_index_compaction.py::test_dsir_compact_preserves_model_and_erases_attribution",
-    "test_index_compaction.py::test_forgetting_bloom_compact_erases_attribution",
-    "test_index_compaction.py::test_simhash_compact_preserves_pairs",
-    "test_index_compaction.py::test_span_compact_crash_after_marker",
-    "test_index_compaction.py::test_span_compact_crash_windows",
-    "test_index_compaction.py::test_span_compact_preserves_spans",
-    "test_jdbc_rehearsal.py::test_sync_pipeline_into_sqlite_through_pool",
-    "test_layout.py::test_date_partitioned_retention_prunes",
-    "test_pipeline_failures.py::test_max_retry_dead_letters",
-    "test_pipeline_failures.py::test_streaming_with_failures_then_retry_converges",
-    "test_retry.py::test_property_convergence_equals_failure_free",
-    "test_round10_fixes.py::test_simhash_compact_crash_recovery",
-    "test_round10_fixes.py::test_simhash_double_forget_then_revival",
-    "test_round9_fixes.py::test_simhash_die_revive_die_again",
-    "test_round9_fixes.py::test_span_compact_recovers_forget_crash_window",
-    "test_round9_fixes.py::test_span_forget_crash_between_publishes_recovers",
-    "test_simjoin_index.py::test_compact_preserves_pairs_and_collapses_files",
-    "test_simjoin_index.py::test_forget_equals_never_ingested",
-    "test_simjoin_index.py::test_forgetting_compact_physically_erases",
-    "test_simjoin_index.py::test_epoch_pairs_match_incremental_operator",
-    "test_simjoin_index.py::test_union_over_batches_equals_full",
-    "test_simjoin_index.py::test_chunked_verify_matches_one_shot",
-    "test_streaming.py::test_property_merge_snapshot_any_batching",
-    "test_streaming_joins.py::test_direct_process_batch_auto_assigns_epochs",
-    "test_streaming_joins.py::test_streaming_dedup_index_equals_full_batch",
-    "test_streaming_joins.py::test_streaming_dedup_index_via_foreachbatch",
-    "test_text_search.py::test_search_index_compaction",
-    "test_text_search.py::test_streaming_search_via_real_foreachbatch",
-    "test_topk_index.py::test_arbitrary_batchings_keep_guarantees",
-}
-
-
-def pytest_collection_modifyitems(config, items):
-    for item in items:
-        base = item.fspath.basename
-        if base in SLOW_MODULES or f"{base}::{item.name}" in SLOW_TESTS:
-            item.add_marker(pytest.mark.slow)
-
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

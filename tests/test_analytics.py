@@ -3,6 +3,8 @@ physical-plan properties that make these shapes survive 100 TB."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
 from tests.compare import assert_matches
 
@@ -59,6 +61,7 @@ ANALYTIC_ORACLE_BACKED = [
 ]
 
 
+@pytest.mark.slow
 def test_analytic_surface_matches_oracle(spark, sf_dir, duck):
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     for name in ANALYTIC_ORACLE_BACKED:

@@ -128,8 +128,8 @@ def test_baseline_at_wrong_cpu_count_is_skipped(tmp_path):
 
 def test_builder_adjudication_artifacts_are_not_round_anchors(tmp_path):
     """Only the driver's strict BENCH_r<digits>.json is a round anchor:
-    builder-side adjudication files (BENCH_r10_TRY2.json & co., committed
-    as evidence of noisy attempts) must not outrank it lexically."""
+    suffixed files (BENCH_r<n>_<tag>.json, e.g. a core-count leg or a
+    repeated attempt) must not outrank it lexically."""
     _write(tmp_path / "BENCH_r06.json",
            {"queries": {"q": 1.0}, "sf": 0.1})
     _write(tmp_path / "BENCH_r06_TRY2.json",
@@ -163,3 +163,25 @@ def test_stdout_line_fits_the_driver_tail_capture():
     assert BENCH.stdout_line(
         {"metric": "m", "value": 0.004, "unit": "sec",
          "queries": {"q": 0.004}, "sf": 0.1})["queries"]["q"] == 0.004
+
+
+def test_gate_verdict_majority_cluster():
+    """A lone slow outlier anchor must not disable regression detection
+    when a consistent majority cluster exists."""
+    gate_verdict = BENCH.gate_verdict
+
+    # consistent anchors: each votes, any trip flags (unchanged)
+    assert not gate_verdict(1.0, [1.0, 1.1])
+    assert gate_verdict(3.0, [1.0, 1.1])
+    # two-anchor split: slowest stays canonical
+    assert not gate_verdict(5.2, [1.0, 5.0])
+    assert gate_verdict(8.5, [1.0, 5.0])
+    # 3+ anchors, one slow outlier, consistent fast majority: a new
+    # measurement regressing past the majority cluster trips even
+    # though it is under the outlier
+    assert gate_verdict(4.0, [1.0, 1.1, 9.0])
+    assert not gate_verdict(1.2, [1.0, 1.1, 9.0])
+    # 3+ anchors where the slowest IS majority-consistent: unchanged
+    # slowest-canonical behavior
+    assert not gate_verdict(9.5, [8.8, 1.0, 9.0])
+    assert gate_verdict(14.0, [8.8, 1.0, 9.0])

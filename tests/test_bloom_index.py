@@ -4,6 +4,7 @@ eval-set accumulation, and a real readStream drain."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.functions.sketch import decontaminate
@@ -15,6 +16,7 @@ def _rows(df):
     return sorted((r["doc_id"], r["n_shingles"]) for r in df.collect())
 
 
+@pytest.mark.slow
 def test_stream_equals_batch(spark, sf_dir, tmp_path):
     docs = read_table(spark, sf_dir, "documents")
     test = docs.where(F.col("source") == "src19")
@@ -30,6 +32,7 @@ def test_stream_equals_batch(spark, sf_dir, tmp_path):
     assert want, "fixture must leave some clean docs"
 
 
+@pytest.mark.slow
 def test_epoch_replay_is_idempotent(spark, sf_dir, tmp_path):
     """Replaying a non-latest epoch (the checkpointed-foreachBatch crash
     contract) rewrites exactly its own delta: state and flag output are
@@ -52,6 +55,7 @@ def test_epoch_replay_is_idempotent(spark, sf_dir, tmp_path):
     assert _rows(idx.flag(train)) == before
 
 
+@pytest.mark.slow
 def test_incremental_eval_sets_accumulate(spark, sf_dir, tmp_path):
     """New benchmarks arriving later only shrink the clean set, and the
     accumulated index equals the batch operator over the union of every
@@ -74,6 +78,7 @@ def test_incremental_eval_sets_accumulate(spark, sf_dir, tmp_path):
     assert clean2 == want
 
 
+@pytest.mark.slow
 def test_bloom_via_real_foreachbatch(spark, sf_dir, tmp_path):
     """The service on a real checkpointed readStream drain of the eval
     split equals the one-pass batch decontaminate."""
@@ -96,6 +101,7 @@ def test_bloom_via_real_foreachbatch(spark, sf_dir, tmp_path):
     assert _rows(idx.flag(train)) == want
 
 
+@pytest.mark.slow
 def test_flag_sound_when_bitmap_write_lost(spark, sf_dir, tmp_path):
     """Crash window between the shash and bitmap writes must NOT produce
     false-clean verdicts: an epoch whose bitmap is missing is excluded
@@ -128,6 +134,7 @@ def test_flag_sound_when_bitmap_write_lost(spark, sf_dir, tmp_path):
     assert _rows(idx.flag(train)) == full
 
 
+@pytest.mark.slow
 def test_crashed_epoch_causes_no_false_clean(spark, tmp_path):
     """Round-4 ADVICE: an epoch that persisted its shash delta but died
     before its bitmap write must not suppress a shared hash from a LATER

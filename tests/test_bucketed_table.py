@@ -32,6 +32,7 @@ def _changes(spark, sf_dir):
                          ORDERS_PAYLOAD_SCHEMA).cache()
 
 
+@pytest.mark.slow
 def test_bucketed_matches_snapshot_path(spark, sf_dir, tmp_path):
     ch = _changes(spark, sf_dir)
     batches = [ch.where(F.col("operation") == "I"),
@@ -246,7 +247,8 @@ def test_rebucket_resizes_preserving_state(spark, sf_dir, tmp_path):
     assert rebucket(spark, path, ["o_orderkey"], 16).n_buckets == 16
 
 
-@pytest.mark.parametrize("n_merges,n_buckets", [(6, 8), (25, 32)])
+@pytest.mark.parametrize("n_merges,n_buckets", [
+    (6, 8), pytest.param(25, 32, marks=pytest.mark.slow)])
 def test_trickle_merge_never_fragments_buckets(spark, n_merges, n_buckets):
     """File-count soak (judge r3 item #10, CI-sized): trickle merges with
     mixed U/D ops — after EVERY merge, no bucket dir holds more than the

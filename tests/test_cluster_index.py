@@ -6,6 +6,7 @@ preserves output with O(1) files.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.functions.dedup import dedup_clusters, minhash_near_dups
@@ -28,6 +29,7 @@ def _corpus(spark, sf_dir):
     return docs.unionByName(variants)
 
 
+@pytest.mark.slow
 def test_stream_equals_batch_for_any_batching(spark, sf_dir, tmp_path):
     corpus = _corpus(spark, sf_dir).cache()
     pairs = minhash_near_dups(corpus, threshold=0.5)
@@ -46,6 +48,7 @@ def test_stream_equals_batch_for_any_batching(spark, sf_dir, tmp_path):
         assert keeps == {d for d, c in want if d == c}
 
 
+@pytest.mark.slow
 def test_replay_is_idempotent(spark, sf_dir, tmp_path):
     """Replaying the last epoch (checkpointed-foreachBatch crash
     contract) recomputes byte-identical labels."""
@@ -59,6 +62,7 @@ def test_replay_is_idempotent(spark, sf_dir, tmp_path):
     assert _rows(idx.canonical()) == before
 
 
+@pytest.mark.slow
 def test_compact_preserves_canonical(spark, sf_dir, tmp_path):
     corpus = _corpus(spark, sf_dir).cache()
     idx = StreamingClusterIndex(spark, str(tmp_path / "ci"), threshold=0.5)
@@ -82,6 +86,7 @@ def test_compact_preserves_canonical(spark, sf_dir, tmp_path):
     assert labels[900000] == victim["doc_id"]
 
 
+@pytest.mark.slow
 def test_label_epochs_are_deltas_not_full_tables(spark, sf_dir, tmp_path):
     """Judge r6 item #1: bytes written per micro-batch must be
     proportional to the batch's perturbation, not the corpus — epoch N's
@@ -111,6 +116,7 @@ def test_label_epochs_are_deltas_not_full_tables(spark, sf_dir, tmp_path):
     assert _rows(idx.canonical()) == want
 
 
+@pytest.mark.slow
 def test_forget_survives_checkpointed_stream_epoch_numbering(
         spark, tmp_path):
     """Judge r6 ADVICE (medium): a checkpointed foreachBatch stream
@@ -146,6 +152,7 @@ def test_forget_survives_checkpointed_stream_epoch_numbering(
         idx.process_batch(corpus.where(F.col("doc_id") == 1))
 
 
+@pytest.mark.slow
 def test_forgetting_cluster_index(spark, sf_dir, tmp_path):
     """Forgetting is non-local for clusters: removing the minimum-id
     member RENAMES the cluster, removing a doc's only partner makes a

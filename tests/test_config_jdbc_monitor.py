@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 
 from dbsync_spark.config import parse_config
@@ -262,3 +265,32 @@ def test_default_action_handlers(monkeypatch):
     assert ("connect", "mail", 2525) in sent
     assert ("send", "dbsync alert", "errors over threshold") in sent
     assert d2.failures == []
+
+
+def test_registry_statuses_safe_under_concurrent_register():
+    from dbsync_spark.monitor.health import ComponentRegistry
+
+    reg = ComponentRegistry()
+    stop = threading.Event()
+    errors: list[Exception] = []
+
+    def writer():
+        i = 0
+        while not stop.is_set():
+            reg.register(f"q{i}", 1000.0)
+            i += 1
+
+    t = threading.Thread(target=writer)
+    t.start()
+    try:
+        deadline = time.monotonic() + 1.0
+        while time.monotonic() < deadline:
+            try:
+                reg.statuses()
+            except Exception as e:  # noqa: BLE001
+                errors.append(e)
+                break
+    finally:
+        stop.set()
+        t.join()
+    assert not errors, f"statuses() raced register(): {errors[0]!r}"

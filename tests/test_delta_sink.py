@@ -7,7 +7,8 @@ import inspect
 import pytest
 
 from dbsync_spark.sinks import delta as ds
-from dbsync_spark.sinks.table import ParquetTable
+from dbsync_spark.sinks.jdbc import JdbcTable
+from dbsync_spark.sinks.table import BucketedTable, ParquetTable
 
 
 def test_import_is_safe_and_gated(tmp_path):
@@ -20,11 +21,18 @@ def test_import_is_safe_and_gated(tmp_path):
 
 
 def test_interface_parity_with_parquet_table():
-    """DeltaSink is a drop-in for ParquetTable's read/overwrite surface."""
+    """DeltaSink is a drop-in for ParquetTable's read/overwrite surface,
+    and every pipeline target takes SyncPipeline.apply_changes' call
+    `merge_changes(spark, frame, keys, pinned=True)`."""
     for name in ("read", "overwrite_with"):
         p = inspect.signature(getattr(ParquetTable, name))
         d = inspect.signature(getattr(ds.DeltaSink, name))
         assert list(p.parameters) == list(d.parameters), name
+    want = inspect.signature(ParquetTable.merge_changes)
+    for target in (BucketedTable, JdbcTable, ds.DeltaSink):
+        got = inspect.signature(target.merge_changes)
+        assert list(got.parameters) == list(want.parameters), target
+        assert got.parameters["pinned"].default is False, target
 
 
 @pytest.mark.skipif(not ds.HAVE_DELTA, reason="delta-spark not installed")

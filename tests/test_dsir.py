@@ -8,6 +8,7 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -159,6 +160,7 @@ def test_streaming_dsir_equals_batch_and_matches_oracle(spark, sf_dir, duck):
     assert again.values.tolist() == want.values.tolist()
 
 
+@pytest.mark.slow
 def test_forgetting_dsir_index(spark, sf_dir):
     """forget(ids) == an index never fed those docs (physical rewrite of
     the count epochs); forgotten ids are permanently retired."""

@@ -11,6 +11,7 @@ Contracts:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.sources.tables import read_table
@@ -33,6 +34,7 @@ def _monitor(spark, root):
         val_col=F.col("value"), radius=6, window_buckets=24, bucket="hour")
 
 
+@pytest.mark.slow
 def test_streaming_matches_single_batch_and_replay(spark, sf_dir, tmp_path):
     ev = _events(spark, sf_dir)
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()

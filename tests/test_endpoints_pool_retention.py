@@ -15,6 +15,7 @@ import json
 import os
 import shutil
 import threading
+import time
 import urllib.request
 
 import pytest
@@ -23,7 +24,9 @@ from pyspark.sql import functions as F
 from dbsync_spark.app import DbSyncApp
 from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
 from dbsync_spark.config import parse_config
+from dbsync_spark.operators.route import SyncRule
 from dbsync_spark.sinks.pool import ConnectionPool, PoolExhausted, timeout_statement
+from dbsync_spark.streaming.pipeline import SyncPipeline
 
 APP_YAML = """
 sys: {maxPollWait: 5000, dataKeepHours: 24}
@@ -524,3 +527,75 @@ def test_get_pool_replaces_on_config_change():
     assert p2 is not p1 and closed == [c]                    # new factory
     p3 = get_pool("swap_test", factory_b, max_active=5)
     assert p3 is not p2                                      # new limit
+
+
+def test_replay_with_swept_log_file_does_not_wedge(spark, sf_dir, tmp_path):
+    """Crash between a batch's ack write and its checkpoint commit, with
+    segment retention having unlinked the batch's (fully OK-acked) file:
+    the restarted stream must skip the missing file and converge, not
+    fail FILE_NOT_EXIST forever."""
+    workdir = str(tmp_path / "wedge")
+    log = build_log_orders(spark, sf_dir).cache()
+    first = log.where(F.col("operation") == "I")
+    second = log.where(F.col("operation") != "I")
+
+    first.coalesce(1).write.mode("append").parquet(f"{workdir}/log")
+    rule = SyncRule("db1", "public", "orders", ("o_orderkey",))
+    pipe = SyncPipeline(
+        spark, rule, ORDERS_PAYLOAD_SCHEMA,
+        log_path=f"{workdir}/log", target_path=f"{workdir}/target",
+        status_path=f"{workdir}/status", checkpoint_path=f"{workdir}/ckpt")
+    pipe.run_to_completion()
+
+    before_files = set(os.listdir(f"{workdir}/log"))
+    second.coalesce(1).write.mode("append").parquet(f"{workdir}/log")
+    pipe.run_to_completion()  # batch 1 processed, acked, committed
+    from dbsync_spark.operators.apply import live_rows
+
+    want = sorted(r["o_orderkey"] for r in
+                  live_rows(pipe.target.read(spark))
+                  .select("o_orderkey").collect())
+
+    # simulate the crash: un-commit the latest batch (Spark will replay
+    # it from offsets/ on restart) AND sweep the file it read — exactly
+    # what segment retention does to a fully-acked expired file
+    commits = sorted(f for f in os.listdir(f"{workdir}/ckpt/commits")
+                     if f.isdigit())
+    os.remove(os.path.join(f"{workdir}/ckpt/commits", commits[-1]))
+    crc = os.path.join(f"{workdir}/ckpt/commits", f".{commits[-1]}.crc")
+    if os.path.exists(crc):  # stale Hadoop checksum would block re-commit
+        os.remove(crc)
+    for f in set(os.listdir(f"{workdir}/log")) - before_files:
+        p = os.path.join(f"{workdir}/log", f)
+        if f.endswith(".parquet"):
+            os.remove(p)
+
+    pipe2 = SyncPipeline(
+        spark, rule, ORDERS_PAYLOAD_SCHEMA,
+        log_path=f"{workdir}/log", target_path=f"{workdir}/target",
+        status_path=f"{workdir}/status", checkpoint_path=f"{workdir}/ckpt")
+    pipe2.run_to_completion()  # replay must not throw
+    got = sorted(r["o_orderkey"] for r in
+                 live_rows(pipe2.target.read(spark))
+                 .select("o_orderkey").collect())
+    assert got == want  # replay of already-merged changes was a no-op
+
+
+def test_pool_no_backoff_sleep_after_final_attempt():
+    from dbsync_spark.sinks.pool import ConnectionPool
+
+    def dead():
+        raise ConnectionError("down")
+
+    pool = ConnectionPool(dead, max_active=1, name="p",
+                          connect_retries=3, retry_backoff=0.2)
+    t0 = time.monotonic()
+    try:
+        pool.acquire()
+        raise AssertionError("expected ConnectionError")
+    except ConnectionError:
+        pass
+    elapsed = time.monotonic() - t0
+    # backoffs 0.2 + 0.4 between attempts; pre-fix added a pointless
+    # 0.8s sleep after the last failure
+    assert elapsed < 1.0, f"final-attempt backoff still present: {elapsed:.2f}s"

@@ -16,13 +16,14 @@ import os
 import shutil
 import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.app import DbSyncApp
 from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
 from dbsync_spark.config import parse_config
 from dbsync_spark.functions.export import (export_shards, shard_assign,
-                                           shard_manifest)
+                                           shard_manifest, update_shards)
 
 APP_YAML = """
 sys: {maxPollWait: 5000, dataKeepHours: 24, statusCompactFiles: 8}
@@ -59,6 +60,7 @@ def _mk_app(spark, sf_dir, tmp_path):
     return app
 
 
+@pytest.mark.slow
 def test_status_compaction_preserves_rows_and_bounds_files(
         spark, sf_dir, tmp_path):
     app = _mk_app(spark, sf_dir, tmp_path)
@@ -210,3 +212,16 @@ def test_update_shards_touches_only_affected_dirs(spark, sf_dir, tmp_path):
     # idempotent: re-applying the same batch changes nothing
     update_shards(spark, out, batch, "doc_id", 8, order_col="doc_id")
     assert spark.read.parquet(out).count() == full.count()
+
+
+def test_update_shards_pins_sharding_rule(spark, sf_dir, tmp_path):
+    import pytest
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    out = str(tmp_path / "shards")
+    export_shards(docs, out, "doc_id", n_shards=8)
+    batch = docs.limit(2)
+    with pytest.raises(ValueError, match="n_shards"):
+        update_shards(spark, out, batch, "doc_id", 4)
+    with pytest.raises(ValueError, match="key"):
+        update_shards(spark, out, batch, "text", 8)

@@ -3,6 +3,9 @@ must equal an index that never saw the forgotten documents."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.sources.tables import read_table
@@ -16,6 +19,7 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+@pytest.mark.slow
 def test_search_index_forget_equals_rebuild(spark, sf_dir, tmp_path):
     docs = read_table(spark, sf_dir, "documents")
     full = ForgettingSearchIndex(spark, str(tmp_path / "full"))
@@ -52,6 +56,7 @@ def test_search_index_forget_replay_idempotent(spark, sf_dir, tmp_path):
     assert _rows(idx.bm25(TERMS, k=10)) == before
 
 
+@pytest.mark.slow
 def test_dedup_index_forget_hides_docs_and_pairs(spark, tmp_path):
     base = ("spark table merge join filter scan window batch stream hash "
             "sort group row column value data query order part line key "
@@ -82,6 +87,7 @@ def test_dedup_index_forget_hides_docs_and_pairs(spark, tmp_path):
     assert any(r["doc_a"] == 100 or r["doc_b"] == 100 for r in new_pairs)
 
 
+@pytest.mark.slow
 def test_corpus_service_example_runs(spark, sf_dir):
     """The composed governed-corpus example (decontaminate -> index ->
     retrieve -> forget) runs end-to-end and its internal invariant
@@ -97,6 +103,7 @@ def test_corpus_service_example_runs(spark, sf_dir):
         __import__("sys").argv = old
 
 
+@pytest.mark.slow
 def test_reingest_after_forget_raises(spark, tmp_path):
     """Tombstones apply to all epochs at read time, so a forgotten id is
     permanently retired: re-ingesting it must fail loudly, not vanish
@@ -123,6 +130,7 @@ def test_reingest_after_forget_raises(spark, tmp_path):
     didx.process_batch(docs.where(F.col("doc_id") > 4), epoch_id=2)
 
 
+@pytest.mark.slow
 def test_bloom_index_forget_equals_rebuild(spark, tmp_path):
     """ForgettingBloomIndex: after forgetting eval docs, flag() must equal
     an index built from only the surviving eval docs — including the
@@ -172,6 +180,7 @@ def test_bloom_index_forget_equals_rebuild(spark, tmp_path):
         idx.process_batch(mk([(3, "kappa lambda mu nu")]), epoch_id=5)
 
 
+@pytest.mark.slow
 def test_dedup_index_compaction_physically_erases(spark, tmp_path):
     """ForgettingDedupIndex.compact(): pairs/docs/bands collapse to one
     epoch each, queryable state is unchanged, and the forgotten docs'
@@ -234,6 +243,7 @@ def _sh_corpus(spark, n=20):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
+@pytest.mark.slow
 def test_simhash_forget_equals_rebuild(spark, tmp_path):
     from dbsync_spark.streaming.simhash_index import ForgettingSimhashIndex
 
@@ -280,8 +290,6 @@ def test_simhash_forget_fp_death_and_revival(spark, tmp_path):
 
 
 def test_simhash_forget_reingest_raises_and_compact_erases(spark, tmp_path):
-    import pytest as _pytest
-
     from dbsync_spark.streaming.simhash_index import (_BANKS_SCHEMA,
                                                       ForgettingSimhashIndex)
 
@@ -297,10 +305,11 @@ def test_simhash_forget_reingest_raises_and_compact_erases(spark, tmp_path):
     raw = spark.read.schema(_BANKS_SCHEMA).parquet(
         str(tmp_path / "sh" / "banks"))
     assert raw.where(F.col("doc_id") == 0).isEmpty()  # physically gone
-    with _pytest.raises(ValueError, match="permanently"):
+    with pytest.raises(ValueError, match="permanently"):
         idx.process_batch(docs.where(F.col("doc_id") == 0), epoch_id=9)
 
 
+@pytest.mark.slow
 def test_span_forget_rescores_surviving_neighborhood(spark, tmp_path):
     """Span removal is non-local: forgetting one holder of a duplicated
     span must demote the SURVIVING holder's spans (min_docs no longer
@@ -340,8 +349,6 @@ def test_ann_forget_equals_rebuild(spark, sf_dir, tmp_path):
     centroids), so filtered queries equal a same-centroid index never
     fed the forgotten vectors. Centroids are aggregate routing state;
     erasing their INFLUENCE is the documented re-fit + rebuild path."""
-    import pytest as _pytest
-
     from dbsync_spark.streaming.ann_index import ForgettingIvfIndex
 
     emb = read_table(spark, sf_dir, "embeddings").where(
@@ -368,7 +375,7 @@ def test_ann_forget_equals_rebuild(spark, sf_dir, tmp_path):
     assert _rows(idx.query(queries, k=5)) == before
     raw = spark.read.parquet(str(tmp_path / "full" / "lists"))
     assert raw.where(F.col("vec_id") % 7 == 0).isEmpty()
-    with _pytest.raises(ValueError, match="permanently"):
+    with pytest.raises(ValueError, match="permanently"):
         idx.process_batch(emb.where(F.col("vec_id") % 7 == 0), epoch_id=9)
 
 
@@ -409,3 +416,171 @@ def test_every_doc_attributed_index_has_forgetting():
     assert not missing, (
         f"doc-attributed index families without a Forgetting variant "
         f"(forget + compact): {missing}")
+
+
+# ---------------------------------------------------------------------------
+# simhash: epoch-delta dead fingerprints
+# ---------------------------------------------------------------------------
+# Each forget event writes only its own death delta; a fingerprint is dead
+# while its deaths reach its occurrences, so revival needs no write. The
+# re-forgotten guard keeps redelivered forgets from adding deaths, and
+# compact() drops the deltas under the `_compact_ready` marker.
+
+
+_UNIQ = "omega phi chi psi upsilon tau sigma rho"
+
+
+def _one_doc(spark, doc_id, text=_UNIQ):
+    return spark.createDataFrame([(doc_id, text)], ["doc_id", "text"])
+
+
+def test_simhash_dead_deltas_are_event_proportional(spark, tmp_path):
+    """Each forget writes ONLY its own death delta; earlier delta files
+    are never rewritten."""
+    from dbsync_spark.streaming.simhash_index import ForgettingSimhashIndex
+
+    u1 = "omega phi chi psi upsilon tau sigma rho"
+    u2 = "north south east west above below within beyond"
+    docs = spark.createDataFrame(
+        [(1, u1), (2, u2), (3, "shared alpha " + u1.replace("rho", "pi"))],
+        ["doc_id", "text"])
+    idx = ForgettingSimhashIndex(spark, str(tmp_path / "sh"))
+    idx.process_batch(docs, epoch_id=0)
+
+    idx.forget(docs.where(F.col("doc_id") == 1).select("doc_id"),
+               epoch_id=0)
+    d0 = f"{tmp_path}/sh/deadfps/epoch=0"
+    files0 = {f: os.path.getmtime(os.path.join(d0, f))
+              for f in os.listdir(d0)}
+    dead_after_first = {r.simhash for r in idx._dead().collect()}
+    assert dead_after_first  # sole holder -> its fp died
+
+    idx.forget(docs.where(F.col("doc_id") == 2).select("doc_id"),
+               epoch_id=1)
+    # second event: own epoch dir, first event's files untouched
+    assert os.path.isdir(f"{tmp_path}/sh/deadfps/epoch=1")
+    assert files0 == {f: os.path.getmtime(os.path.join(d0, f))
+                      for f in os.listdir(d0)}
+    assert len({r.simhash for r in idx._dead().collect()}) == 2
+
+
+@pytest.mark.slow
+def test_simhash_die_revive_die_again(spark, tmp_path):
+    """The derived dead test (deaths >= occurrences) over a full
+    die -> revive -> die-again cycle, checked against a never-fed
+    rebuild at each step."""
+    from dbsync_spark.streaming.simhash_index import ForgettingSimhashIndex
+
+    uniq = "omega phi chi psi upsilon tau sigma rho"
+    idx = ForgettingSimhashIndex(spark, str(tmp_path / "sh"))
+    idx.process_batch(spark.createDataFrame([(1, uniq)],
+                                            ["doc_id", "text"]), epoch_id=0)
+    idx.forget(spark.createDataFrame([(1,)], ["doc_id"]), epoch_id=0)
+    assert not idx._dead().isEmpty()  # died
+
+    idx.process_batch(spark.createDataFrame([(2, uniq)],
+                                            ["doc_id", "text"]), epoch_id=1)
+    assert idx._dead().isEmpty()  # revived by re-introduction
+
+    idx.forget(spark.createDataFrame([(2,)], ["doc_id"]), epoch_id=1)
+    assert not idx._dead().isEmpty()  # died AGAIN (deaths=2, seen=2)
+
+    idx.process_batch(spark.createDataFrame([(3, uniq)],
+                                            ["doc_id", "text"]), epoch_id=2)
+    assert idx._dead().isEmpty()  # second revival
+    idx.process_batch(spark.createDataFrame([(4, uniq)],
+                                            ["doc_id", "text"]), epoch_id=3)
+    # only the post-revival pair exists; nothing touches docs 1 or 2
+    assert _rows(idx.pairs()) == [(3, 4, 0)]
+
+    # physical erasure drops the deltas; state equals a never-fed index
+    idx.compact()
+    assert not os.path.exists(f"{tmp_path}/sh/deadfps/epoch=0")
+    assert idx._dead().isEmpty()
+    assert _rows(idx.pairs()) == [(3, 4, 0)]
+
+
+@pytest.mark.slow
+def test_simhash_double_forget_then_revival(spark, tmp_path):
+    """Redelivery: forget the same sole-holder doc in TWO separate
+    forget events (fresh epoch each, as redelivery would), then revive
+    the fingerprint under a new id. The fp must count as alive, later
+    probes must pair with the survivor, and compact() must keep it."""
+    from dbsync_spark.streaming.simhash_index import ForgettingSimhashIndex
+
+    idx = ForgettingSimhashIndex(spark, str(tmp_path / "sh"))
+    idx.process_batch(_one_doc(spark, 1), epoch_id=0)
+    gone = _one_doc(spark, 1).select("doc_id")
+    idx.forget(gone)           # event 1: sole holder -> fp dies
+    idx.forget(gone)           # event 2: redelivery -> must be a no-op
+    deaths = idx._read_raw_deadfps(idx._epochs("deadfps")).count()
+    assert deaths == 1, f"re-forget wrote a duplicate death ({deaths})"
+
+    idx.process_batch(_one_doc(spark, 2), epoch_id=1)  # revival
+    assert idx._dead().isEmpty(), "revived fp still counted dead"
+    idx.process_batch(_one_doc(spark, 3), epoch_id=2)
+    assert _rows(idx.pairs()) == [(2, 3, 0)]
+
+    idx.compact()  # must NOT physically erase the live fingerprint
+    assert _rows(idx.pairs()) == [(2, 3, 0)]
+    # fp survival checked end-to-end via a fresh probe after compact
+    idx.process_batch(_one_doc(spark, 4), epoch_id=3)
+    assert _rows(idx.pairs()) == [(2, 3, 0), (2, 4, 0), (3, 4, 0)]
+
+
+def test_simhash_forget_replay_idempotent(spark, tmp_path):
+    """Replaying a forget EPOCH (same epoch_id, the epoch-replay
+    contract) must rewrite identical content — the re-forgotten guard
+    filters against epochs STRICTLY BEFORE the replayed one, so the
+    event's own prior write does not empty its death delta."""
+    from dbsync_spark.streaming.simhash_index import ForgettingSimhashIndex
+
+    idx = ForgettingSimhashIndex(spark, str(tmp_path / "sh"))
+    idx.process_batch(_one_doc(spark, 1), epoch_id=0)
+    gone = _one_doc(spark, 1).select("doc_id")
+    idx.forget(gone, epoch_id=0)
+    first = _rows(idx._read_raw_deadfps([0]))
+    assert first, "sole-holder forget must record a death"
+    idx.forget(gone, epoch_id=0)  # replay
+    assert _rows(idx._read_raw_deadfps([0])) == first
+
+
+@pytest.mark.slow
+def test_simhash_compact_crash_recovery(spark, tmp_path, monkeypatch):
+    """Fault injection on the compact crash window: crash AFTER the fps
+    staged swap publishes (revived fp deduped to one occurrence) but
+    BEFORE the death deltas drop. The marker must make the next
+    mutating operation finish the publish and drop the deltas, so the
+    revived fingerprint is not falsely re-killed."""
+    from dbsync_spark.streaming import state as st
+    from dbsync_spark.streaming.simhash_index import ForgettingSimhashIndex
+
+    root = str(tmp_path / "sh")
+    idx = ForgettingSimhashIndex(spark, root)
+    idx.process_batch(_one_doc(spark, 1), epoch_id=0)
+    idx.forget(_one_doc(spark, 1).select("doc_id"))
+    idx.process_batch(_one_doc(spark, 2), epoch_id=1)  # revival
+
+    real_finish = st.finish_compact
+
+    def crashing_finish(root_, sub):
+        if sub == "pairs":  # banks+fps published, deltas NOT dropped
+            raise RuntimeError("injected crash")
+        return real_finish(root_, sub)
+
+    monkeypatch.setattr(st, "finish_compact", crashing_finish)
+    try:
+        idx.compact()
+    except RuntimeError:
+        pass
+    monkeypatch.setattr(st, "finish_compact", real_finish)
+    assert os.path.exists(f"{root}/_compact_ready")
+    assert idx._epochs("deadfps"), "crash window: deltas still present"
+
+    # next mutating operation recovers automatically
+    idx2 = ForgettingSimhashIndex(spark, root)
+    idx2.process_batch(_one_doc(spark, 3), epoch_id=2)
+    assert not os.path.exists(f"{root}/_compact_ready")
+    assert not idx2._epochs("deadfps")
+    assert idx2._dead().isEmpty(), "revived fp falsely re-killed"
+    assert _rows(idx2.pairs()) == [(2, 3, 0)]

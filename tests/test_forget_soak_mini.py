@@ -18,7 +18,10 @@ the soak tools' job.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+pytestmark = pytest.mark.slow  # nine families, minutes-scale
 
 
 def _rows(df):

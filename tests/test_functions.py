@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -21,6 +22,7 @@ ORACLE_BACKED = [
 ]
 
 
+@pytest.mark.slow
 def test_training_queries_match_oracle(spark, sf_dir, duck):
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     for name in ORACLE_BACKED:
@@ -191,6 +193,7 @@ def test_srp_probe_hamming_three_expands_budget(spark, sf_dir):
     assert recall(3) >= recall(2) - 1e-9  # larger budget never hurts
 
 
+@pytest.mark.slow
 def test_declared_ann_queries_pin_recall(spark, sf_dir):
     """The rows-only ANN queries emit recall_at_k vs brute force — the
     graded quality number. Pins: IVF (data-adapted partitions, nprobe=3)
@@ -933,6 +936,7 @@ def test_simhash_pairs_equal_bruteforce(spark):
     assert want, "fixture must contain hamming<=3 pairs"
 
 
+@pytest.mark.slow
 def test_streaming_simhash_equals_batch(spark, tmp_path):
     """The streaming SimHash service over disjoint batches accumulates
     exactly the batch operator's pair set, replay included."""
@@ -973,6 +977,7 @@ def test_srp_exact_buckets_equal_numpy(spark, sf_dir):
     assert np_b == jvm_b
 
 
+@pytest.mark.slow
 def test_ivf_exact_matches_float_scores_on_overlap(spark, sf_dir):
     """floor(e*1024) quantization perturbs cosine by O(1e-3): wherever the
     integer-exact IVF (declared q_ann_ivf) and the exact float ranking
@@ -1064,3 +1069,50 @@ def test_lm_surprisal_exact_twin_bounds_float(spark):
         fn, fs = flt[doc_id]
         assert fn == n
         assert fs * n <= (q + n) / SURPRISAL_SCALE + 1e-9, (doc_id, fs, q)
+
+
+def test_read_table_memoizes_per_session(spark, sf_dir):
+    """read_table returns the SAME DataFrame handle for repeated
+    (session, sf_dir, table) calls — the ~100 ms/call schema inference
+    is paid once — and the memo key includes the applicationId so a
+    different session never sees this one's plans."""
+    from dbsync_spark.sources.tables import _TABLE_CACHE, read_table
+
+    a = read_table(spark, sf_dir, "nation")
+    b = read_table(spark, sf_dir, "nation")
+    assert a is b
+    key = (spark.sparkContext.applicationId, sf_dir, "nation")
+    assert _TABLE_CACHE[key] is a
+    # the handle is a live plan, not cached data: a fresh action over it
+    # still reads the fixture (row count matches a fresh uncached read)
+    assert a.count() == spark.read.parquet(f"{sf_dir}/nation.parquet").count()
+
+
+def test_fuzzy_dedup_banded_levenshtein_values(spark):
+    """fuzzy_dedup switched to threshold-form levenshtein (banded
+    O(len*k), -1 past the bound). Planted pairs straddling the bound:
+    survivors and their exact dist values must match the full-matrix
+    semantics (dist <= max_dist)."""
+    from dbsync_spark.functions.dedup import fuzzy_dedup
+
+    base = "abcdefghijklmnopqrstuvwxyzabcdefghijklmn"  # 40 chars
+    rows = []
+    # doc 0: base; doc 1: 5 edits (keep); doc 2: 12 edits (boundary keep);
+    # doc 3: 13 edits (drop); doc 4: identical (dist 0)
+    def mutate(s, k):
+        out = list(s)
+        for i in range(k):
+            out[i] = "Z"
+        return "".join(out)
+    texts = [base, mutate(base, 5), mutate(base, 12), mutate(base, 13), base]
+    for i, t in enumerate(texts):
+        rows.append((i, "en", len(t), t))
+    docs = spark.createDataFrame(
+        rows, "doc_id long, lang string, n_chars long, text string")
+    got = {(r["doc_a"], r["doc_b"]): r["dist"]
+           for r in fuzzy_dedup(docs).collect()}
+    assert got[(0, 4)] == 0
+    assert got[(0, 1)] == 5
+    assert got[(0, 2)] == 12          # boundary value survives exactly
+    assert (0, 3) not in got          # 13 > max_dist dropped
+    assert got[(1, 4)] == 5

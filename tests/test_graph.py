@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
 from dbsync_spark.functions import graph as gr
 from tests.compare import assert_matches
@@ -44,6 +46,7 @@ def test_pagerank_tracks_float_reference(spark):
     assert by_int[0] == 2
 
 
+@pytest.mark.slow
 def test_pagerank_property_random_graphs(spark):
     """Hypothesis: for arbitrary digraphs, the distributed integer
     recurrence equals a sequential python reimplementation exactly
@@ -79,6 +82,7 @@ def test_pagerank_property_random_graphs(spark):
     check()
 
 
+@pytest.mark.slow
 def test_incremental_clusters_equal_full_recompute(spark):
     """Hypothesis: for random pair graphs and random old/new edge splits,
     seeded label propagation (dedup_clusters_incremental) converges to
@@ -126,6 +130,7 @@ def test_bfs_matches_oracle(spark, sf_dir, duck):
                    os_["q_bfs_paths"])
 
 
+@pytest.mark.slow
 def test_bfs_property_random_graphs(spark):
     """Hypothesis: distributed fixed-depth BFS equals a sequential BFS
     (capped at the iteration count) on arbitrary digraphs and seed sets,

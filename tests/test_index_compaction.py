@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.sources.tables import read_table
@@ -103,6 +104,7 @@ def test_trending_compact_preserves_buckets(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
+@pytest.mark.slow
 def test_bloom_compact_preserves_flags_and_bounds_files(spark, sf_dir,
                                                         tmp_path):
     from dbsync_spark.streaming.bloom_index import StreamingBloomIndex
@@ -129,6 +131,7 @@ def test_bloom_compact_preserves_flags_and_bounds_files(spark, sf_dir,
     assert _rows(idx.flag(train)) == before
 
 
+@pytest.mark.slow
 def test_bloom_compact_leaves_crashed_epoch_excluded(spark, sf_dir,
                                                      tmp_path):
     """A shash epoch whose bitmap write never landed must survive
@@ -165,6 +168,7 @@ def test_bloom_compact_leaves_crashed_epoch_excluded(spark, sf_dir,
     assert _rows(idx.flag(train)) == _rows(full.flag(train))
 
 
+@pytest.mark.slow
 def test_forgetting_bloom_compact_erases_attribution(spark, sf_dir,
                                                      tmp_path):
     """After forget() + compact(), the forgotten doc's (doc_id, shash)
@@ -241,6 +245,7 @@ def _span_fixture(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.mark.slow
 def test_span_compact_preserves_spans(spark, tmp_path):
     from dbsync_spark.streaming.span_index import StreamingSpanIndex
 
@@ -266,6 +271,7 @@ def test_span_compact_preserves_spans(spark, tmp_path):
     assert {t[0] for t in after} >= {3, 9}
 
 
+@pytest.mark.slow
 def test_span_compact_crash_windows(spark, tmp_path):
     """Marker absent -> stale stagings are garbage, restage from live
     state. Marker present -> finish the staged swap verbatim."""
@@ -293,6 +299,7 @@ def test_span_compact_crash_windows(spark, tmp_path):
     assert not os.path.exists(f"{idx.root}/_compact_ready")
 
 
+@pytest.mark.slow
 def test_span_compact_crash_after_marker(spark, tmp_path):
     """Crash after the commit marker with only SOME subs published:
     re-running compact() finishes the remaining staged subs instead of
@@ -360,6 +367,7 @@ def test_ivf_compact_preserves_queries(spark, sf_dir, tmp_path):
     assert _n_epochs(tmp_path / "ivf", "lists") == 2
 
 
+@pytest.mark.slow
 def test_simhash_compact_preserves_pairs(spark, sf_dir, tmp_path):
     from dbsync_spark.streaming.simhash_index import StreamingSimhashIndex
 
@@ -378,6 +386,7 @@ def test_simhash_compact_preserves_pairs(spark, sf_dir, tmp_path):
     assert _rows(idx.pairs()) == before
 
 
+@pytest.mark.slow
 def test_dsir_compact_preserves_model_and_erases_attribution(
         spark, sf_dir, tmp_path):
     from dbsync_spark.streaming.dsir_index import ForgettingDsirIndex
@@ -439,3 +448,104 @@ def test_every_index_service_has_compact():
                     missing.append(f"{m.name}.{name}")
     assert len(services) >= 22, services
     assert not missing, f"epoch-dir services without compact(): {missing}"
+
+
+# ---------------------------------------------------------------------------
+# span forget: crash between the spans and rescored publishes
+# ---------------------------------------------------------------------------
+# forget() publishes its two subs under the `_compact_ready` marker, as
+# compact() does; a crash between the publishes must be finished verbatim
+# by either recovery path, never restaged from the half-swapped view.
+
+
+def _span_docs(spark):
+    dup = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+           "lambda mu nu xi omicron pi rho sigma tau upsilon")
+    rows = [(1, "intro one " + dup + " outro one"),
+            (2, "intro two " + dup + " outro two"),
+            (3, "intro three " + dup + " outro three"),
+            (4, "totally unrelated text about nothing shared at all here "
+                "with enough words to pass the window length easily okay")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.mark.slow
+def test_span_forget_crash_between_publishes_recovers(spark, tmp_path,
+                                                      monkeypatch):
+    """Crash after publishing spans but before rescored: the replayed
+    forget must finish the pending staged swap first (marker present ->
+    consistent staged copy), never restage from the half-swapped view."""
+    from dbsync_spark.streaming import state as state_mod
+    from dbsync_spark.streaming.span_index import ForgettingSpanIndex
+
+    docs = _span_docs(spark)
+    root = str(tmp_path / "span")
+    idx = ForgettingSpanIndex(spark, root)
+    for e in range(2):
+        idx.process_batch(docs.where(F.col("doc_id") % 2 == e), epoch_id=e)
+    gone = docs.where(F.col("doc_id") == 2).select("doc_id")
+
+    real_finish = state_mod.finish_compact
+
+    def crashing_finish(r, sub):
+        real_finish(r, sub)
+        if sub == "spans":
+            raise RuntimeError("injected crash between publishes")
+
+    monkeypatch.setattr(state_mod, "finish_compact", crashing_finish)
+    with pytest.raises(RuntimeError, match="injected"):
+        idx.forget(gone, epoch_id=0)
+    monkeypatch.setattr(state_mod, "finish_compact", real_finish)
+
+    # the crash window: marker on disk, spans published, rescored staged
+    assert os.path.exists(f"{root}/_compact_ready")
+    assert os.path.exists(f"{root}/rescored/_compacting/_covers.json")
+
+    idx.forget(gone, epoch_id=0)  # replayed forget = the recovery path
+    assert not os.path.exists(f"{root}/_compact_ready")
+
+    rebuilt = ForgettingSpanIndex(spark, str(tmp_path / "rebuilt"))
+    survivors = docs.where(F.col("doc_id") != 2)
+    for e in range(2):
+        rebuilt.process_batch(survivors.where(F.col("doc_id") % 2 == e),
+                              epoch_id=e)
+    assert _rows(idx.current_spans()) == _rows(rebuilt.current_spans())
+    assert not idx.current_spans().isEmpty()  # docs 1,3 still span-dup
+
+
+@pytest.mark.slow
+def test_span_compact_recovers_forget_crash_window(spark, tmp_path,
+                                                   monkeypatch):
+    """compact() is the OTHER documented recovery path for the same
+    crash window: it must finish the pending staged subs verbatim."""
+    from dbsync_spark.streaming import state as state_mod
+    from dbsync_spark.streaming.span_index import ForgettingSpanIndex
+
+    docs = _span_docs(spark)
+    root = str(tmp_path / "span")
+    idx = ForgettingSpanIndex(spark, root)
+    for e in range(2):
+        idx.process_batch(docs.where(F.col("doc_id") % 2 == e), epoch_id=e)
+    gone = docs.where(F.col("doc_id") == 2).select("doc_id")
+
+    real_finish = state_mod.finish_compact
+
+    def crashing_finish(r, sub):
+        real_finish(r, sub)
+        if sub == "spans":
+            raise RuntimeError("injected crash between publishes")
+
+    monkeypatch.setattr(state_mod, "finish_compact", crashing_finish)
+    with pytest.raises(RuntimeError, match="injected"):
+        idx.forget(gone, epoch_id=0)
+    monkeypatch.setattr(state_mod, "finish_compact", real_finish)
+
+    idx.compact()  # recovery
+    assert not os.path.exists(f"{root}/_compact_ready")
+
+    rebuilt = ForgettingSpanIndex(spark, str(tmp_path / "rebuilt"))
+    survivors = docs.where(F.col("doc_id") != 2)
+    for e in range(2):
+        rebuilt.process_batch(survivors.where(F.col("doc_id") % 2 == e),
+                              epoch_id=e)
+    assert _rows(idx.current_spans()) == _rows(rebuilt.current_spans())

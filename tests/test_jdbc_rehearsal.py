@@ -117,6 +117,7 @@ def _flaky_factory(db: str, conn_flag: str, exec_flag: str,
     return connect
 
 
+@pytest.mark.slow
 def test_sync_pipeline_into_sqlite_through_pool(spark, sf_dir):
     workdir = tempfile.mkdtemp(prefix="dbsync_jdbc_rehearsal_")
     log = build_log_orders(spark, sf_dir).localCheckpoint()

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.sinks.layout import (
@@ -46,6 +47,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+@pytest.mark.slow
 def test_date_partitioned_retention_prunes(spark, sf_dir):
     """Retention cutoff on a date-partitioned log shows up as a partition
     filter — the sweep never reads live partitions."""

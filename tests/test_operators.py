@@ -131,3 +131,19 @@ def test_analytic_queries_match_oracle(spark, sf_dir, duck):
                  "q_bootstrap_reset", "q_salted_lww", "q_window_count_daily",
                  "q_token_count_bpe"]:
         assert_matches(qs[name](spark, sf_dir), duck, os_[name])
+
+
+def test_sweep_not_multiplied_by_duplicate_acks(spark):
+    from dbsync_spark.operators.retention import sweep
+
+    log = spark.range(100).select(
+        F.col("id"),
+        F.timestamp_seconds(F.lit(1_000_000) + F.col("id")).alias("createTime"))
+    # every id acked OK TWICE (replayed micro-batch), half expired
+    acks = spark.range(100).select(
+        F.col("id").alias("dataId"), F.lit("OK").alias("status"))
+    acks = acks.unionByName(acks)
+    cutoff = F.timestamp_seconds(F.lit(1_000_050))  # ids 0..49 expired
+    kept = sweep(log, acks, cutoff)
+    assert kept.count() == 50              # NOT 100 (pre-fix: dup copies)
+    assert kept.select("id").distinct().count() == 50

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
@@ -16,6 +17,7 @@ def _fail_once_policy(changes):
     return F.when(F.col("o_orderkey") % 13 == 0, 1).otherwise(0)
 
 
+@pytest.mark.slow
 def test_streaming_with_failures_then_retry_converges(spark, sf_dir):
     """Full reference failure loop on the streaming pipeline: first drain
     leaves ERR (failed) + BLK (same-key followers) out of the target;
@@ -64,6 +66,7 @@ def test_streaming_with_failures_then_retry_converges(spark, sf_dir):
     assert pipe.retry_pass() is False
 
 
+@pytest.mark.slow
 def test_max_retry_dead_letters(spark, sf_dir):
     """sys.maxRetry semantics (reference PgOperation.scala:389-405): a
     permanently-failing key is retried while retry < maxRetry, then

@@ -2,6 +2,10 @@
 for scale-hostile operators. This is the 100 TB readiness gate — a query
 can be value-correct at sf0.01 and still be a cross join or a
 single-partition sort that dies at scale.
+
+The default run audits a fixed SAMPLE that touches every exception list
+below, the TPC-H suite and the training queries; the whole fleet (a
+minutes-scale plan sweep) runs under `-m slow`.
 """
 
 from __future__ import annotations
@@ -67,17 +71,41 @@ LOG_FIXTURE_CONSUMERS = {
 }
 
 
+# the default run's fixed sample (the `fleet` param audits every query)
+SAMPLE = (
+    "q_pricing_summary",      # TPC-H Q1, widest lineitem scan
+    "q_important_parts",      # TPC-H Q11; BNLJ_ALLOWED
+    "q_market_share",         # TPC-H Q8, eight-way join
+    "q_ntile_customers",      # GLOBAL_WINDOW_ALLOWED
+    "q_running_total",        # partitioned window: global-window negative
+    "q_apply_upsert",         # LOG_FIXTURE_CONSUMERS; full-row scan
+    "q_mixture_weights",      # training; BNLJ_ALLOWED
+    "q_hash_sample",          # training
+)
+
 from dbsync_spark.plans import plan_text as _plan  # noqa: E402
 
 
-@pytest.fixture(scope="module")
-def plans(spark, sf_dir):
-    out = {}
-    for name, fn in entrymod.queries().items():
-        if name in SETUP_HEAVY:
-            continue
-        out[name] = _plan(fn(spark, sf_dir))
-    return out
+@pytest.fixture(scope="module", params=[
+    "sample", pytest.param("fleet", marks=pytest.mark.slow)])
+def plans(request, spark, sf_dir):
+    queries = entrymod.queries()
+    names = SAMPLE if request.param == "sample" else queries
+    return {name: _plan(queries[name](spark, sf_dir)) for name in names
+            if name not in SETUP_HEAVY}
+
+
+def test_sample_covers_every_exception_class():
+    """The default-run sample keeps one query from each allow-list, the
+    TPC-H suite and the training queries, and stays small."""
+    modules = {entrymod.queries()[name].__module__ for name in SAMPLE}
+    assert len(SAMPLE) <= 12
+    assert not set(SAMPLE) & SETUP_HEAVY
+    for allowed in (BNLJ_ALLOWED, GLOBAL_WINDOW_ALLOWED,
+                    LOG_FIXTURE_CONSUMERS):
+        assert set(SAMPLE) & allowed
+    assert {"dbsync_spark.queries_tpch2",
+            "dbsync_spark.queries_training"} <= modules
 
 
 def test_no_cartesian_products(plans):

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -73,6 +74,7 @@ def test_blocking_preserves_per_key_order(spark):
         min_size=1, max_size=30),
     fail_keys=st.sets(st.integers(0, 4)),
 )
+@pytest.mark.slow
 def test_property_convergence_equals_failure_free(spark, ops, fail_keys):
     """Random I/U/D sequences + random injected failures: the converged
     state always equals the failure-free LWW reduction (idempotence under

@@ -269,3 +269,18 @@ def test_verify_threshold_rewrite_equals_direct_jaccard(spark):
             if den * inter >= num * union:
                 exp[(a, b)] = (inter, union)
     assert got == exp
+
+
+def test_auto_chunks_default_equals_explicit(spark, monkeypatch):
+    """The verify's chunk count is derived from the measured candidates:
+    the automatically chosen K gives the same output as a forced larger
+    K."""
+    docs = _corpus(spark, n_filler=25)
+    for op, k in ((similarity_join, 4), (containment_join, 3)):
+        monkeypatch.undo()  # default payload budget, fresh spy
+        seen = chunk_spy(monkeypatch)
+        auto = _rows(op(docs))
+        assert auto and seen[-1][2] == 1
+        split_budget(monkeypatch, seen, k=k)
+        assert _rows(op(docs)) == auto
+        assert seen[-1][2] >= k

@@ -24,6 +24,7 @@ def _pairs(df):
     return {(r.doc_a, r.doc_b, r.n_inter, r.n_union) for r in df.collect()}
 
 
+@pytest.mark.slow
 def test_union_over_batches_equals_full(spark, tmp_path):
     docs = _corpus(spark, n_filler=30)
     full = _pairs(similarity_join(docs))
@@ -51,6 +52,7 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert _pairs(idx.all_pairs()) == _pairs(similarity_join(docs))
 
 
+@pytest.mark.slow
 def test_forget_equals_never_ingested(spark, tmp_path):
     docs = _corpus(spark, n_filler=20)
     idx = ForgettingSimJoinIndex(spark, str(tmp_path / "sj"))
@@ -64,6 +66,7 @@ def test_forget_equals_never_ingested(spark, tmp_path):
         idx.process_batch(docs.where(F.col("doc_id") == 2), epoch_id=9)
 
 
+@pytest.mark.slow
 def test_compact_preserves_pairs_and_collapses_files(spark, tmp_path):
     docs = _corpus(spark, n_filler=20)
     root = str(tmp_path / "sj")
@@ -86,6 +89,7 @@ def test_compact_preserves_pairs_and_collapses_files(spark, tmp_path):
     assert _pairs(idx.all_pairs()) == before  # no near-dups introduced
 
 
+@pytest.mark.slow
 def test_epoch_pairs_match_incremental_operator(spark, tmp_path):
     """Each epoch's pairs equal similarity_join_incremental's over the
     same index and batch: bucket pruning, additive lagged frequencies
@@ -122,6 +126,7 @@ def test_bucketed_state_layout(spark, tmp_path):
     assert reopened.nb == 8
 
 
+@pytest.mark.slow
 def test_forgetting_compact_physically_erases(spark, tmp_path):
     """compact() on the forgetting variant removes tombstoned docs' set
     rows, arrays, dfreq contributions, and pairs from the FILES (not
@@ -162,6 +167,7 @@ def test_forgetting_compact_physically_erases(spark, tmp_path):
     assert _pairs(idx.all_pairs()) == before
 
 
+@pytest.mark.slow
 def test_chunked_verify_matches_one_shot(spark, tmp_path, monkeypatch):
     """The per-batch verify is chunk-bounded like the batch operators'
     (round-8 ADVICE: bound the streaming verify PAYLOAD, not just its

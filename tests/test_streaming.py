@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -118,6 +119,7 @@ from hypothesis import strategies as st
         min_size=1, max_size=20),
     cuts=st.sets(st.integers(1, 19), max_size=3),
 )
+@pytest.mark.slow
 def test_property_merge_snapshot_any_batching(spark, ops, cuts):
     """Invariant: applying a change log through merge_snapshot in ANY
     batch partitioning (including replays of the final batch) equals the

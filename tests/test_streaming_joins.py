@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA  # noqa: F401  (import check)
@@ -77,6 +78,7 @@ def test_dedup_within_watermark_stream(spark, sf_dir):
     assert got.where(F.col("c") != 1).count() == 0
 
 
+@pytest.mark.slow
 def test_streaming_dedup_index_equals_full_batch(spark, tmp_path):
     """Docs arriving over 3 micro-batches through the persisted LSH index
     emit, in union, exactly the full-corpus near-dup pairs — each found
@@ -105,6 +107,7 @@ def test_streaming_dedup_index_equals_full_batch(spark, tmp_path):
     assert emitted, "fixture should contain near-dup pairs"
 
 
+@pytest.mark.slow
 def test_streaming_dedup_index_via_foreachbatch(spark, tmp_path):
     """The same index wired to a real readStream/foreachBatch drain."""
     from dbsync_spark.functions.dedup import minhash_near_dups
@@ -241,6 +244,7 @@ class TestStreamingSpanIndex:
         assert all(r.n_windows == 3 for r in got)
 
 
+@pytest.mark.slow
 def test_direct_process_batch_auto_assigns_epochs(spark, tmp_path):
     """Calling process_batch WITHOUT an epoch (the natural direct-call
     pattern) must not overwrite earlier batches: epochs auto-increment,

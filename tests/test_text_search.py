@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import zlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbsync_spark.functions.text import (bm25_topk, build_posting_index,
@@ -160,6 +161,7 @@ def test_streaming_search_index_equals_batch(spark, sf_dir, tmp_path):
     assert sorted(map(tuple, idx.phrase(PHRASE).collect())) == want_phrase
 
 
+@pytest.mark.slow
 def test_streaming_search_via_real_foreachbatch(spark, sf_dir, tmp_path):
     """The search index wired to a real checkpointed readStream drain."""
     from dbsync_spark.streaming.search_index import StreamingSearchIndex
@@ -241,6 +243,7 @@ def test_empty_phrase_raises(spark):
         phrase_occurrences_rowlocal(docs, [])
 
 
+@pytest.mark.slow
 def test_search_index_compaction(spark, sf_dir, tmp_path):
     """compact() merges all posting/docstat epochs into one, leaves every
     query's results unchanged, keeps epoch ids advancing, and physically

@@ -6,6 +6,7 @@ from __future__ import annotations
 import tempfile
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -88,6 +89,7 @@ def test_replay_is_idempotent(spark):
     assert sorted(map(tuple, idx.summary().collect())) == first
 
 
+@pytest.mark.slow
 def test_arbitrary_batchings_keep_guarantees(spark):
     """Different batchings yield different summaries (MG merge is
     order-dependent) but every batching satisfies the same bounds."""

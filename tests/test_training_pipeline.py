@@ -3,9 +3,12 @@ funnel invariants + determinism."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from examples.training_pipeline import run_pipeline
+
+pytestmark = pytest.mark.slow  # two end-to-end funnel runs, ~156 s
 
 
 def test_pipeline_funnel_invariants(spark, sf_dir):

@@ -19,6 +19,10 @@ q_streaming_simjoin additionally proves union-over-batches == the same
 sampled brute force at this scale. q_bpe_encode has no pair structure
 and keeps its FULL oracle (vocabulary-bounded), run via drive_contract.
 
+`documents.parquet` may be a single file or a directory of parts. A
+corpus without the planted rows (doc_id >= gen_density.PLANT_BASE) is
+not an sfd1 fixture; the tool exits non-zero before any engine cell.
+
 Writes CONTRACT_SFD1_R8.json.
 
 Usage: python tools/sfd1_simjoin_contract.py [sfd1_dir] [mod]
@@ -77,20 +81,33 @@ def main() -> int:
     import duckdb
     from pyspark.sql import functions as F
 
+    from dbsync_spark.functions.dedup import (
+        containment_join, hashed_shingle_sets, similarity_join,
+        similarity_join_incremental)
     from dbsync_spark.session import get_spark
+    from dbsync_spark.streaming.simjoin_index import StreamingSimJoinIndex
+    from dbsync_spark.streaming.state import scratch_dir
+    from tools.gen_density import PLANT_BASE
 
     sfd1 = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sfd1")
     mod = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
-    spark = get_spark("sfd1-simjoin-contract")
-    spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     os.makedirs("/tmp/duckdb_spill", exist_ok=True)
     con.execute("SET temp_directory='/tmp/duckdb_spill'")
     con.execute("SET max_temp_directory_size='40GB'")
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{sfd1}/documents.parquet/*.parquet'")
+    src = f"{sfd1}/documents.parquet"
+    if os.path.isdir(src):
+        src += "/*.parquet"
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{src}'")
+    if not con.execute("SELECT count(*) FROM documents "
+                       f"WHERE doc_id >= {PLANT_BASE}").fetchone()[0]:
+        print(f"{sfd1}: not an sfd1 corpus (generate one with "
+              "tools/gen_density.py)", file=sys.stderr)
+        return 2
+
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    spark = get_spark("sfd1-simjoin-contract")
+    spark.sparkContext.setLogLevel("ERROR")
 
     sh_cte = SIMJOIN_SH_SAMPLED.format(mod=mod)
     in_sample = ((F.col("doc_a") % mod == 0)
@@ -117,15 +134,7 @@ def main() -> int:
 
     docs = spark.read.parquet(f"{sfd1}/documents.parquet")
 
-    def eng_simjoin():
-        from dbsync_spark.functions.dedup import similarity_join
-
-        return similarity_join(docs)
-
     def eng_incremental():
-        from dbsync_spark.functions.dedup import (
-            hashed_shingle_sets, similarity_join_incremental)
-
         index_docs = docs.where(F.col("doc_id") % 5 != 0)
         batch = docs.where(F.col("doc_id") % 5 == 0)
         pairs, _ = similarity_join_incremental(
@@ -133,10 +142,6 @@ def main() -> int:
         return pairs
 
     def eng_streaming():
-        from dbsync_spark.streaming.simjoin_index import \
-            StreamingSimJoinIndex
-        from dbsync_spark.streaming.state import scratch_dir
-
         idx = StreamingSimJoinIndex(spark,
                                     scratch_dir(prefix="sfd1_sj_"))
         for epoch in range(3):
@@ -144,13 +149,8 @@ def main() -> int:
                               epoch_id=epoch)
         return idx.all_pairs()
 
-    def eng_containment():
-        from dbsync_spark.functions.dedup import containment_join
-
-        return containment_join(docs)
-
     cells = {
-        "q_similarity_join": (eng_simjoin,
+        "q_similarity_join": (lambda: similarity_join(docs),
                               f"WITH {sh_cte}{JACCARD_TAIL}"),
         "q_simjoin_incremental": (
             eng_incremental,
@@ -158,7 +158,7 @@ def main() -> int:
             "  AND (doc_a % 5 = 0 OR doc_b % 5 = 0)"),
         "q_streaming_simjoin": (eng_streaming,
                                 f"WITH {sh_cte}{JACCARD_TAIL}"),
-        "q_containment_exact": (eng_containment,
+        "q_containment_exact": (lambda: containment_join(docs),
                                 f"WITH {sh_cte}{CONTAIN_SQL}"),
     }
     only = set(sys.argv[3:])
@@ -191,7 +191,6 @@ def main() -> int:
     # ids >= PLANT_BASE are the round-10 planted near-threshold pairs
     # (tools/gen_density.py::planted_rows) — excluded from the organic
     # copies x base-group arithmetic below, targeted by the @t0.8 cell
-    PLANT_BASE = 10**12
     organic = docs.where(F.col("doc_id") < PLANT_BASE)
     if not only or "q_simjoin_planted_census" in only:
         n_docs = organic.count()
@@ -209,8 +208,6 @@ def main() -> int:
         census_sql = (f"WITH {grouped}{JACCARD_TAIL}".replace(
             "WHERE 5 * n_inter >= 4 *", "WHERE 2 * n_inter >= 1 *"))
         t0 = time.time()
-        from dbsync_spark.functions.dedup import similarity_join
-
         got = canon([tuple(r) for r in
                      similarity_join(docs, threshold_num=1,
                                      threshold_den=2)
@@ -250,8 +247,6 @@ def main() -> int:
             "doc_id % 1 = 0", f"doc_id >= {PLANT_BASE}")
         assert "1000000000000" in sh_plant
         t0 = time.time()
-        from dbsync_spark.functions.dedup import similarity_join
-
         got = canon([tuple(r) for r in
                      similarity_join(docs)
                      .where((F.col("doc_a") >= PLANT_BASE)
