@@ -507,6 +507,7 @@ def main() -> None:
     # -- streaming micro-batch latency (BASELINE.md: <= 5 s / 10k-row batch) --
     from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
     from dbsync_spark.operators.route import SyncRule
+    from dbsync_spark.sinks.table import BucketedTable, ParquetTable
     from dbsync_spark.streaming.pipeline import SyncPipeline
 
     olog_rows = olog.count()
@@ -525,14 +526,17 @@ def main() -> None:
     def _run_microbatch(layout: str) -> None:
         mb_runs[layout] += 1
         tag = f"{layout}{mb_runs[layout]}"
+        target_path = f"{workdir}/starget_{tag}"
+        # None: the pipeline's auto-sized BucketedTable
+        target = ParquetTable(target_path) if layout == "snapshot" else None
         pipe = SyncPipeline(
             spark, SyncRule("db1", "public", "orders", ("o_orderkey",)),
             ORDERS_PAYLOAD_SCHEMA,
             log_path=f"{workdir}/slog",
-            target_path=f"{workdir}/starget_{tag}",
+            target_path=target_path,
             status_path=f"{workdir}/sstatus_{tag}",
             checkpoint_path=f"{workdir}/sckpt_{tag}",
-            max_files_per_trigger=1, target_layout=layout)
+            max_files_per_trigger=1, target_layout=target)
         pipe.run_to_completion()
 
     for layout in ("snapshot", "bucketed"):
@@ -561,8 +565,6 @@ def main() -> None:
     # seeded from direct change frames (no JSON round-trip — setup cost,
     # not the measured path; the seed merge includes the one-shot
     # auto-rebucket to the right-sized count).
-    from dbsync_spark.sinks.table import BucketedTable, ParquetTable
-
     quiet_gate("merge_sweep")
     keys2 = ["l_orderkey", "l_linenumber"]
     li_df = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")

@@ -107,8 +107,6 @@ class DbSyncApp:
                 # one lock per shared status dir: concurrent parquet appends
                 # to the same path corrupt each other's committer temp files
                 ack_lock=ack_locks.setdefault(status_path, threading.Lock()),
-                target_layout=self.config.sys.targetLayout,
-                n_buckets=self.config.sys.targetBuckets,
                 max_retry=self.config.sys.maxRetry,
             )
             recover_dir(pipe.log_path)  # crashed retention sweep, if any

@@ -34,13 +34,8 @@ class SysConfig:
     workDirectory: str = "."
     stateDirectory: str = "state"
     endpointPort: int = 8080
-    # engine-side extensions (no reference equivalent): physical layout
-    # of parquet targets — "bucketed" (hash-partitioned MERGE, the scale
-    # default) or "snapshot" (versioned full rewrite), and the bucket
-    # count (size well above the expected per-batch key count)
-    targetLayout: str = "bucketed"
-    targetBuckets: int = 64
-    # status-dir small-files compaction threshold (files); 0 disables.
+    # engine-side extension (no reference equivalent): status-dir
+    # small-files compaction threshold (files); 0 disables.
     # Swept on the retention tick — see SyncApp.status_compaction_pass.
     statusCompactFiles: int = 64
 

@@ -15,9 +15,10 @@ Scale notes:
   less shuffle I/O than the window row_number() formulation, and no per-
   partition full sort. One shuffle on the key columns; AQE coalesces/splits
   skewed partitions.
-- `merge_into` unions the existing target (as id=-1 inserts) with the new
-  changes and re-reduces: one shuffle, no driver-side collect, works
-  identically at 100 TB given a partitioned target layout.
+- `merge_snapshot` unions the existing target (its rows carry their
+  winning ids) with the new changes and re-reduces: one shuffle, no
+  driver-side collect, works identically at 100 TB given a partitioned
+  target layout.
 """
 
 from __future__ import annotations
@@ -78,24 +79,6 @@ def last_writer_wins(changes: DataFrame, key_cols: list[str],
     return kept.select(
         *[F.col(c) if c in key_cols else F.col(f"_w.{c}").alias(c) for c in payload_cols]
     )
-
-
-def merge_into(existing: DataFrame | None, changes: DataFrame,
-               key_cols: list[str], id_col: str = "id", op_col: str = "operation") -> DataFrame:
-    """MERGE semantics over an existing snapshot: existing rows are treated
-    as inserts that happened before every logged change (id = -1), then the
-    union is reduced last-writer-wins. This is the Spark-side equivalent of
-    the reference's upsert/delete sinks (S6/S9)."""
-    payload_cols = [c for c in changes.columns if c not in (id_col, op_col)]
-    if existing is None:
-        return last_writer_wins(changes, key_cols, id_col, op_col)
-    base = existing.select(
-        F.lit(-1).cast("long").alias(id_col),
-        F.lit(OP_INSERT).alias(op_col),
-        *payload_cols,
-    )
-    return last_writer_wins(base.unionByName(changes.select(id_col, op_col, *payload_cols)),
-                            key_cols, id_col, op_col)
 
 
 LAST_ID_COL = "_last_id"

@@ -280,6 +280,7 @@ def q_streaming_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbsync_spark.streaming.state import scratch_dir
 
     from dbsync_spark.operators.apply import live_rows
+    from dbsync_spark.sinks.table import BucketedTable
     from dbsync_spark.streaming.pipeline import SyncPipeline
 
     workdir = scratch_dir(prefix="dbsync_stream_q_")
@@ -292,7 +293,8 @@ def q_streaming_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_files_per_trigger=2,
         # bucket count sized to the fixture (n_buckets >> batch keys is
         # the 100 TB rule; at sf0.01 8 buckets keeps swap overhead small)
-        n_buckets=8)
+        target_layout=BucketedTable(f"{workdir}/target",
+                                    list(rule.source_keys), 8))
     pipe.run_to_completion()
     return live_rows(pipe.target.read(spark))
 

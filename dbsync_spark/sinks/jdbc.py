@@ -2,24 +2,29 @@
 
 Spark's JDBC writer has no MERGE mode, so live-DB targets get prepared-
 statement upserts issued per partition (the reference's batchUpdate path,
-sync/DataSyncer.scala:140). The SQL shapes re-express the reference's
-dialect semantics (not its code):
-- PostgreSQL: INSERT .. ON CONFLICT (keys) DO UPDATE SET c=EXCLUDED.c;
-  all-columns-are-keys degenerates to DO NOTHING
-  (spec: dbopt/PgOperation.scala:47-79)
-- MySQL: INSERT .. ON DUPLICATE KEY UPDATE c=VALUES(c); degenerate ->
-  INSERT IGNORE (spec: dbopt/MysqlOperation.scala:47-78)
-- Greenplum (no ON CONFLICT): update-else-insert, expressed as a CTE
-  UPDATE .. RETURNING / INSERT .. WHERE NOT EXISTS pair instead of the
-  reference's server-side PL/pgSQL gp_upsert (GpOperation.scala:47-96)
-- delete by key columns only (PgOperation.scala:81-96)
+sync/DataSyncer.scala:140). Every upsert and delete is guarded by a
+watermark column (a monotone change id stored in the target) and applies
+only when the change advances the row's watermark, so a replayed micro-
+batch or a re-delivered older change never clobbers newer target state.
+The SQL shapes re-express the reference's dialect semantics (not its
+code):
+- PostgreSQL: INSERT .. ON CONFLICT (keys) DO UPDATE SET c=EXCLUDED.c
+  WHERE EXCLUDED.wm > tgt.wm (spec: dbopt/PgOperation.scala:47-79)
+- MySQL: INSERT .. ON DUPLICATE KEY UPDATE c=IF(VALUES(wm) > wm,
+  VALUES(c), c) (spec: dbopt/MysqlOperation.scala:47-78)
+- Greenplum (no ON CONFLICT): update-else-insert as two plain statements
+  instead of the reference's server-side PL/pgSQL gp_upsert
+  (GpOperation.scala:47-96)
+- delete by key columns, guarded the same way (PgOperation.scala:81-96)
 - status ack upsert incrementing retry (PgOperation.scala:98-107)
 
-Everything here is a pure function of (schema, table, columns, keys) and
-unit-testable without a database. The writer groups rows per (table, op)
-and issues executemany batches — strictly better than the reference's
-run-length grouping of adjacent identical SQL (DataSyncer.scala:86-111),
-because a set-based upsert applies a whole group at once.
+The watermark column is never a key, so every upsert has a column to
+update. Everything here is a pure function of (schema, table, columns,
+keys) and unit-testable without a database. The writer groups rows per
+(table, op) and issues executemany batches — strictly better than the
+reference's run-length grouping of adjacent identical SQL
+(DataSyncer.scala:86-111), because a set-based upsert applies a whole
+group at once.
 """
 
 from __future__ import annotations
@@ -38,12 +43,10 @@ def _qual(schema: str, table: str, quote: str) -> str:
 
 
 def pg_upsert(schema: str, table: str, columns: list[str], keys: list[str],
-              watermark_col: str | None = None) -> str:
-    """With `watermark_col` (a monotone change-id column stored in the
-    target), the upsert becomes replay-idempotent IN the database:
-    `... DO UPDATE SET ... WHERE EXCLUDED.wm > tgt.wm` applies only when
-    the incoming change advances the row's watermark, so re-running a
-    micro-batch (streaming checkpoint recovery) or re-delivering an
+              watermark_col: str) -> str:
+    """`... DO UPDATE SET ... WHERE EXCLUDED.wm > tgt.wm` applies only
+    when the incoming change advances the row's watermark, so re-running
+    a micro-batch (streaming checkpoint recovery) or re-delivering an
     older change can never clobber newer target state — the same
     `_last_id` contract merge_snapshot enforces on parquet targets
     (SQLite parses this dialect too, incl. the INSERT alias)."""
@@ -51,70 +54,37 @@ def pg_upsert(schema: str, table: str, columns: list[str], keys: list[str],
     cols = ", ".join(f'"{_ident(c)}"' for c in columns)
     ph = ", ".join(["?"] * len(columns))
     key_cols = ", ".join(f'"{_ident(k)}"' for k in keys)
-    non_keys = [c for c in columns if c not in keys]
-    if not non_keys:  # all columns are keys -> nothing to update
-        action = "DO NOTHING"
-    else:
-        sets = ", ".join(f'"{_ident(c)}" = EXCLUDED."{_ident(c)}"' for c in non_keys)
-        action = f"DO UPDATE SET {sets}"
-        if watermark_col is not None:
-            wm = _ident(watermark_col)
-            action += f' WHERE EXCLUDED."{wm}" > tgt."{wm}"'
-    alias = " AS tgt" if watermark_col is not None else ""
-    return (f"INSERT INTO {tgt}{alias} ({cols}) VALUES ({ph}) "
-            f"ON CONFLICT ({key_cols}) {action}")
+    sets = ", ".join(f'"{_ident(c)}" = EXCLUDED."{_ident(c)}"'
+                     for c in columns if c not in keys)
+    wm = _ident(watermark_col)
+    return (f"INSERT INTO {tgt} AS tgt ({cols}) VALUES ({ph}) "
+            f"ON CONFLICT ({key_cols}) DO UPDATE SET {sets} "
+            f'WHERE EXCLUDED."{wm}" > tgt."{wm}"')
 
 
 def mysql_upsert(schema: str, table: str, columns: list[str], keys: list[str],
-                 watermark_col: str | None = None) -> str:
-    """With `watermark_col`, every SET clause is wrapped in
-    IF(VALUES(wm) > wm, new, old) — MySQL applies assignments LEFT TO
-    RIGHT with earlier assignments visible to later ones, so the
-    watermark column is assigned LAST and every payload guard reads the
-    row's OLD watermark (same replay-idempotence contract as
-    pg_upsert's DO UPDATE ... WHERE)."""
+                 watermark_col: str) -> str:
+    """Every SET clause is wrapped in IF(VALUES(wm) > wm, new, old) —
+    MySQL applies assignments LEFT TO RIGHT with earlier assignments
+    visible to later ones, so the watermark column is assigned LAST and
+    every payload guard reads the row's OLD watermark (same replay-
+    idempotence contract as pg_upsert's DO UPDATE ... WHERE)."""
     tgt = _qual(schema, table, "`")
     cols = ", ".join(f"`{_ident(c)}`" for c in columns)
     ph = ", ".join(["?"] * len(columns))
-    non_keys = [c for c in columns if c not in keys]
-    if not non_keys:
-        return f"INSERT IGNORE INTO {tgt} ({cols}) VALUES ({ph})"
-    if watermark_col is None:
-        sets = ", ".join(f"`{_ident(c)}` = VALUES(`{_ident(c)}`)"
-                         for c in non_keys)
-    else:
-        wm = _ident(watermark_col)
-        guarded = [c for c in non_keys if c != watermark_col] + [wm]
-        sets = ", ".join(
-            f"`{_ident(c)}` = IF(VALUES(`{wm}`) > `{wm}`, "
-            f"VALUES(`{_ident(c)}`), `{_ident(c)}`)" for c in guarded)
+    wm = _ident(watermark_col)
+    guarded = [c for c in columns if c not in keys and c != wm] + [wm]
+    sets = ", ".join(
+        f"`{_ident(c)}` = IF(VALUES(`{wm}`) > `{wm}`, "
+        f"VALUES(`{_ident(c)}`), `{_ident(c)}`)" for c in guarded)
     return (f"INSERT INTO {tgt} ({cols}) VALUES ({ph}) "
             f"ON DUPLICATE KEY UPDATE {sets}")
-
-
-def gp_upsert(schema: str, table: str, columns: list[str], keys: list[str]) -> str:
-    """Update-else-insert for engines without ON CONFLICT, as one
-    statement (parameters bound twice: once for UPDATE, once for INSERT).
-    The watermark-guarded variant is gp_upsert_steps (two statements —
-    the shape that also parses on SQLite for rehearsal)."""
-    tgt = _qual(schema, table, '"')
-    non_keys = [c for c in columns if c not in keys]
-    key_pred = " AND ".join(f'"{_ident(k)}" = ?' for k in keys)
-    cols = ", ".join(f'"{_ident(c)}"' for c in columns)
-    ph = ", ".join(["?"] * len(columns))
-    if not non_keys:
-        return (f"INSERT INTO {tgt} ({cols}) SELECT {ph} "
-                f"WHERE NOT EXISTS (SELECT 1 FROM {tgt} WHERE {key_pred})")
-    sets = ", ".join(f'"{_ident(c)}" = ?' for c in non_keys)
-    return (f"WITH upd AS (UPDATE {tgt} SET {sets} WHERE {key_pred} RETURNING 1) "
-            f"INSERT INTO {tgt} ({cols}) SELECT {ph} "
-            f"WHERE NOT EXISTS (SELECT 1 FROM upd)")
 
 
 def gp_upsert_steps(schema: str, table: str, columns: list[str],
                     keys: list[str], watermark_col: str
                     ) -> list[tuple[str, list[int]]]:
-    """Watermark-guarded update-else-insert as TWO plain-SQL statements
+    """Watermark-guarded update-else-insert as two plain-SQL statements
     (the reference's server-side gp_upsert shape, GpOperation.scala:47-96,
     done client-side):
 
@@ -150,20 +120,18 @@ def gp_upsert_steps(schema: str, table: str, columns: list[str],
 
 
 def delete_by_keys(schema: str, table: str, keys: list[str],
-                   dialect: str = "postgresql",
-                   watermark_col: str | None = None) -> str:
-    """With `watermark_col`, the delete only applies when the stored row
-    is OLDER than the delete's change id (`wm < ?` with the delete's id
-    bound as the trailing parameter) — a replayed stale delete cannot
-    remove a newer row. The delete itself is physical (no tombstone):
-    safe because Structured Streaming replays batches in order, so an
-    upsert older than an applied delete is never re-delivered after it."""
+                   dialect: str, watermark_col: str) -> str:
+    """The delete only applies when the stored row is OLDER than the
+    delete's change id (`wm < ?` with the delete's id bound as the
+    trailing parameter) — a replayed stale delete cannot remove a newer
+    row. The delete itself is physical (no tombstone): safe because
+    Structured Streaming replays batches in order, so an upsert older
+    than an applied delete is never re-delivered after it."""
     quote = "`" if dialect == "mysql" else '"'
     tgt = _qual(schema, table, quote)
     pred = " AND ".join(f"{quote}{_ident(k)}{quote} = ?" for k in keys)
-    if watermark_col is not None:
-        pred += f" AND {quote}{_ident(watermark_col)}{quote} < ?"
-    return f"DELETE FROM {tgt} WHERE {pred}"
+    wm = f"{quote}{_ident(watermark_col)}{quote}"
+    return f"DELETE FROM {tgt} WHERE {pred} AND {wm} < ?"
 
 
 def ack_upsert(sys_schema: str, dialect: str = "postgresql") -> str:
@@ -184,50 +152,25 @@ def ack_upsert(sys_schema: str, dialect: str = "postgresql") -> str:
             'retry="sync_data_status".retry+1, createTime=EXCLUDED.createTime')
 
 
-DIALECTS = {
-    "postgresql": pg_upsert,
-    "mysql": mysql_upsert,
-    "greenplum": gp_upsert,
-}
-
-
-def upsert_sql(dialect: str, schema: str, table: str,
-               columns: list[str], keys: list[str],
-               watermark_col: str | None = None) -> str:
-    """Single-statement upsert for the dialect. The greenplum watermark
-    variant is inherently two statements — use upsert_steps (the writer
-    does)."""
-    steps = upsert_steps(dialect, schema, table, columns, keys,
-                         watermark_col)
-    if len(steps) != 1:
-        raise ValueError(
-            f"{dialect!r} watermark upsert is {len(steps)} statements; "
-            "use upsert_steps")
-    return steps[0][0]
-
-
 def upsert_steps(dialect: str, schema: str, table: str,
-                 columns: list[str], keys: list[str],
-                 watermark_col: str | None = None
+                 columns: list[str], keys: list[str], watermark_col: str
                  ) -> list[tuple[str, list[int]]]:
     """Upsert as an ordered list of (sql, param_indices_into_columns)
     statements — one for the ON CONFLICT / ON DUPLICATE KEY dialects,
-    two for greenplum's watermark-guarded update-else-insert. All three
-    watermark variants enforce the same replay-idempotence contract
-    (apply only when the change advances the row's watermark)."""
-    if dialect not in DIALECTS:
-        raise ValueError(f"unsupported dialect {dialect!r}; "
-                         f"one of {sorted(DIALECTS)}")
+    two for greenplum's update-else-insert. All three enforce the same
+    replay-idempotence contract (apply only when the change advances the
+    row's watermark)."""
     ident = list(range(len(columns)))
-    if watermark_col is None:
-        return [(DIALECTS[dialect](schema, table, columns, keys), ident)]
     if dialect == "postgresql":
         return [(pg_upsert(schema, table, columns, keys, watermark_col),
                  ident)]
     if dialect == "mysql":
         return [(mysql_upsert(schema, table, columns, keys, watermark_col),
                  ident)]
-    return gp_upsert_steps(schema, table, columns, keys, watermark_col)
+    if dialect == "greenplum":
+        return gp_upsert_steps(schema, table, columns, keys, watermark_col)
+    raise ValueError(f"unsupported dialect {dialect!r}; one of "
+                     "['greenplum', 'mysql', 'postgresql']")
 
 
 def _sqlite_connect(path: str):
@@ -264,14 +207,15 @@ def duckdb_connect_factory(path: str):
 
 
 def write_upserts(df, dialect: str, url: str, schema: str, table: str,
-                  keys: list[str], batch_size: int = 1000,
+                  keys: list[str], watermark_col: str,
+                  batch_size: int = 1000,
                   connect=None, pool_name: str | None = None,
                   max_active: int = 15, acquire_timeout: float = 30.0,
                   connect_retries: int = 3,
-                  statement_timeout_ms: int = 0,
-                  watermark_col: str | None = None) -> None:
+                  statement_timeout_ms: int = 0) -> None:
     """Distributed JDBC-style upsert: each Spark partition takes one
-    connection and executes batched upserts (deletes for operation='D').
+    connection and executes batched upserts (deletes for operation='D'),
+    guarded by `watermark_col`, a column of `df` and of the target.
     `connect` is a zero-arg factory returning a DB-API connection —
     injectable for tests; defaults to raising (no JDBC driver here).
 
@@ -287,10 +231,8 @@ def write_upserts(df, dialect: str, url: str, schema: str, table: str,
     up_steps = upsert_steps(dialect, schema, table, columns, keys,
                             watermark_col)
     del_sql = delete_by_keys(schema, table, keys, dialect, watermark_col)
-    key_idx = [columns.index(k) for k in keys]
-    if watermark_col is not None:
-        # guarded delete binds the delete's own change id last
-        key_idx = key_idx + [columns.index(watermark_col)]
+    # the guarded delete binds the delete's own change id last
+    del_idx = [columns.index(c) for c in [*keys, watermark_col]]
 
     if connect is None:
         raise NotImplementedError(
@@ -300,11 +242,7 @@ def write_upserts(df, dialect: str, url: str, schema: str, table: str,
     from dbsync_spark.sinks.pool import (ConnectionPool, get_pool,
                                          timeout_statement)
 
-    tmo = timeout_statement(dialect, statement_timeout_ms)
-
-    def on_checkout(conn):
-        if tmo is not None:
-            conn.cursor().execute(tmo)
+    session_sql = timeout_statement(dialect, statement_timeout_ms)
 
     def apply_partition(rows: Iterable) -> None:
         # run-length batching: adjacent rows with the same statement shape
@@ -315,11 +253,11 @@ def write_upserts(df, dialect: str, url: str, schema: str, table: str,
             pool = get_pool(pool_name, connect, max_active=max_active,
                             acquire_timeout=acquire_timeout,
                             connect_retries=connect_retries,
-                            on_checkout=on_checkout)
+                            session_sql=session_sql)
         else:  # unpooled: still gets bounded connect retries
             pool = ConnectionPool(connect, max_active=1,
                                   connect_retries=connect_retries,
-                                  on_checkout=on_checkout)
+                                  session_sql=session_sql)
         with pool.connection() as conn:
             cur = conn.cursor()
             cur_op, buf = None, []
@@ -329,8 +267,8 @@ def write_upserts(df, dialect: str, url: str, schema: str, table: str,
                     if cur_op == "D":
                         cur.executemany(del_sql, buf)
                     else:
-                        # a multi-statement dialect (greenplum watermark
-                        # path) runs each step over the whole batch in
+                        # a multi-statement dialect (greenplum) runs
+                        # each step over the whole batch in
                         # order — executemany preserves row order within
                         # a step, and the steps are per-key independent
                         for sql, idxs in up_steps:
@@ -344,7 +282,7 @@ def write_upserts(df, dialect: str, url: str, schema: str, table: str,
                     flush()
                     cur_op = op
                 vals = [row[c] for c in columns]
-                buf.append([vals[i] for i in key_idx] if op == "D" else vals)
+                buf.append([vals[i] for i in del_idx] if op == "D" else vals)
                 if len(buf) >= batch_size:
                     flush()
             flush()
@@ -379,7 +317,7 @@ class JdbcTable:
     replay from id 0 also converges because it re-applies in order.
 
     The target table must contain the payload columns plus the
-    `watermark_col` (BIGINT). `n_writers` caps concurrent writer
+    `_last_id` watermark column (BIGINT). `n_writers` caps concurrent writer
     partitions — size it to the target's connection budget (for SQLite
     targets use 1-2; its writer lock serializes anyway)."""
 
@@ -388,8 +326,7 @@ class JdbcTable:
                  pool_name: str | None = None, n_writers: int = 4,
                  batch_size: int = 1000, max_active: int = 15,
                  acquire_timeout: float = 30.0, connect_retries: int = 3,
-                 statement_timeout_ms: int = 0,
-                 watermark_col: str = "_last_id"):
+                 statement_timeout_ms: int = 0):
         self.dialect = dialect
         self.url = url
         self.schema = schema
@@ -403,7 +340,6 @@ class JdbcTable:
         self.acquire_timeout = acquire_timeout
         self.connect_retries = connect_retries
         self.statement_timeout_ms = statement_timeout_ms
-        self.watermark_col = watermark_col
 
     def merge_changes(self, spark, changes, key_cols=None,
                       pinned: bool = False) -> None:
@@ -421,17 +357,16 @@ class JdbcTable:
                         if c not in ("id", "operation")]
         winners = merge_snapshot(None, changes, keys)
         rows = winners.select(
-            *payload_cols,
-            F.col(LAST_ID_COL).alias(self.watermark_col),
+            *payload_cols, LAST_ID_COL,
             F.when(F.col(DELETED_COL), OP_DELETE).otherwise(OP_INSERT)
             .alias("operation"))
         write_upserts(
             rows.coalesce(self.n_writers),
             dialect=self.dialect, url=self.url, schema=self.schema,
-            table=self.table, keys=keys, batch_size=self.batch_size,
+            table=self.table, keys=keys, watermark_col=LAST_ID_COL,
+            batch_size=self.batch_size,
             connect=self.connect, pool_name=self.pool_name,
             max_active=self.max_active,
             acquire_timeout=self.acquire_timeout,
             connect_retries=self.connect_retries,
-            statement_timeout_ms=self.statement_timeout_ms,
-            watermark_col=self.watermark_col)
+            statement_timeout_ms=self.statement_timeout_ms)

@@ -25,6 +25,7 @@ Features mirrored from the reference config surface:
 
 from __future__ import annotations
 
+import functools
 import threading
 import time
 
@@ -50,21 +51,22 @@ class ConnectionPool:
     def __init__(self, connect, max_active: int = 15,
                  acquire_timeout: float = 30.0, connect_retries: int = 3,
                  retry_backoff: float = 0.2, name: str = "",
-                 on_checkout=None):
+                 session_sql: str | None = None):
         self._connect = connect
-        # config snapshot for get_pool's replace-on-change comparison
+        # config snapshot for get_pool's replace-on-change comparison:
+        # plain values, so a repeat call from a freshly unpickled task
+        # compares equal
         self._config_kwargs = {
-            k: v for k, v in (("max_active", max_active),
-                              ("acquire_timeout", acquire_timeout),
-                              ("connect_retries", connect_retries),
-                              ("retry_backoff", retry_backoff),
-                              ("on_checkout", on_checkout))}
+            "max_active": max_active, "acquire_timeout": acquire_timeout,
+            "connect_retries": connect_retries,
+            "retry_backoff": retry_backoff, "session_sql": session_sql}
         self.max_active = max_active
         self.acquire_timeout = acquire_timeout
         self.connect_retries = connect_retries
         self.retry_backoff = retry_backoff
         self.name = name
-        self.on_checkout = on_checkout  # e.g. apply timeout_statement
+        # run once on each fresh connection (e.g. timeout_statement)
+        self.session_sql = session_sql
         self._cond = threading.Condition()
         self._idle: list = []
         self._active = 0
@@ -106,8 +108,8 @@ class ConnectionPool:
         if conn is None:
             try:
                 conn = self._open()
-                if self.on_checkout is not None:
-                    self.on_checkout(conn)
+                if self.session_sql is not None:
+                    conn.cursor().execute(self.session_sql)
             except Exception:
                 with self._cond:
                     self._active -= 1
@@ -166,6 +168,18 @@ class ConnectionPool:
             }
 
 
+def _same_factory(a, b) -> bool:
+    """True when two connect factories open the same connection: the same
+    object, or functools.partial objects with equal func, args and
+    keywords. Every Spark task unpickles its own copy of a factory, so an
+    identity test alone would never match across tasks."""
+    if a is b:
+        return True
+    return (isinstance(a, functools.partial)
+            and isinstance(b, functools.partial)
+            and (a.func, a.args, a.keywords) == (b.func, b.args, b.keywords))
+
+
 _REGISTRY: dict[str, ConnectionPool] = {}
 _REGISTRY_LOCK = threading.Lock()
 
@@ -196,7 +210,7 @@ def get_pool(name: str, connect=None, **kwargs) -> ConnectionPool:
             if v.default is not inspect.Parameter.empty and k != "name"}
         wanted = {**defaults, **kwargs}
         if connect is not None and (
-                connect is not pool._connect
+                not _same_factory(connect, pool._connect)
                 or wanted != pool._config_kwargs):
             replacement = ConnectionPool(connect, name=name, **kwargs)
             _REGISTRY[name] = replacement

@@ -162,8 +162,8 @@ class BucketedTable:
             # suppresses log replay, so the old state would be lost)
             raise ValueError(
                 f"{path} holds a versioned snapshot (found _CURRENT); "
-                "run migrate_snapshot_to_bucketed() or keep "
-                "target_layout='snapshot' for this target")
+                "run migrate_snapshot_to_bucketed() or open it as a "
+                "ParquetTable")
         try:
             with open(meta_path) as f:
                 meta = json.load(f)

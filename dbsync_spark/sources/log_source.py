@@ -1,12 +1,9 @@
-"""Change-log source readers — one schema, several wire formats.
+"""Change-log source readers: the sync_data shape (schemas.py) as parquet.
 
-The engine's input contract is the sync_data shape (schemas.py); the
-physical format is pluggable: parquet (columnar at-rest), JSON lines (what
-a Kafka topic dump or webhook spool looks like), CSV (legacy exports), ORC
-(the other columnar at-rest format Spark ships natively).
-Batch and streaming readers share the format handling, so a pipeline can
-switch formats with one config value. Explicit schema everywhere — never
-inferSchema (a schema inference pass over 100 TB is a full extra scan).
+The log is the reference's one change-log table (sync_data), stored as
+parquet files that the capture side appends. Batch and streaming readers
+declare SYNC_DATA_SCHEMA explicitly, never inferSchema (a schema inference
+pass over 100 TB is a full extra scan).
 """
 
 from __future__ import annotations
@@ -15,59 +12,22 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA
 
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
-FORMATS = ("parquet", "json", "csv", "orc")
-
-
-def _options(fmt: str) -> dict[str, str]:
-    if fmt == "json":
-        return {"timestampFormat": _TS_FMT}
-    if fmt == "csv":
-        # JSON payloads contain commas/quotes: quote-escape on write+read
-        return {"header": "true", "timestampFormat": _TS_FMT,
-                "quote": '"', "escape": '"', "multiLine": "true"}
-    return {}
+def read_log(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.schema(SYNC_DATA_SCHEMA).parquet(path)
 
 
-def read_log(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported log format {fmt!r}; one of {FORMATS}")
-    return (spark.read.format(fmt).options(**_options(fmt))
-            .schema(SYNC_DATA_SCHEMA).load(path))
-
-
-def read_log_stream(spark: SparkSession, path: str, fmt: str = "parquet",
-                    max_files_per_trigger: int | None = None,
-                    ignore_missing: bool = True) -> DataFrame:
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported log format {fmt!r}; one of {FORMATS}")
-    reader = (spark.readStream.format(fmt).options(**_options(fmt))
-              .schema(SYNC_DATA_SCHEMA))
+def read_log_stream(spark: SparkSession, path: str,
+                    max_files_per_trigger: int | None = None) -> DataFrame:
+    # segment-mode retention unlinks files whose every row is OK-acked —
+    # but acks are written inside foreachBatch, BEFORE the epoch's
+    # checkpoint commit. A crash in that window makes Spark replay the
+    # batch from the offset log's recorded file list, and a strict scan
+    # would fail forever on the swept file. Skipping it is safe exactly
+    # because of the unlink precondition: every row it held was already
+    # merged (replay is a no-op under the _last_id watermark) and acked.
+    reader = (spark.readStream.schema(SYNC_DATA_SCHEMA)
+              .option("ignoreMissingFiles", "true"))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    if ignore_missing:
-        # segment-mode retention unlinks files whose every row is
-        # OK-acked — but acks are written inside foreachBatch, BEFORE the
-        # epoch's checkpoint commit. A crash in that window makes Spark
-        # replay the batch from the offset log's recorded file list, and
-        # a strict scan would fail forever on the swept file. Skipping it
-        # is safe exactly because of the unlink precondition: every row
-        # it held was already merged (replay is a no-op under the
-        # _last_id watermark) and acked.
-        reader = reader.option("ignoreMissingFiles", "true")
-    return reader.load(path)
-
-
-def write_log(log: DataFrame, path: str, fmt: str = "parquet",
-              mode: str = "append") -> None:
-    if fmt not in FORMATS:
-        raise ValueError(f"unsupported log format {fmt!r}; one of {FORMATS}")
-    # conform to the wire schema at the writer boundary: readers declare
-    # SYNC_DATA_SCHEMA, and not every format coerces on read (ORC refuses
-    # NTZ->LTZ timestamps that parquet accepts)
-    from pyspark.sql import functions as F
-
-    conformed = log.select(
-        [F.col(f.name).cast(f.dataType) for f in SYNC_DATA_SCHEMA.fields])
-    conformed.write.format(fmt).options(**_options(fmt)).mode(mode).save(path)
+    return reader.parquet(path)

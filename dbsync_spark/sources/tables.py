@@ -35,6 +35,11 @@ from pyspark.sql.types import LongType, TimestampNTZType
 # table instead of a path would give. Keyed by applicationId so a fresh
 # session (the grading driver brings its own) never sees another
 # session's plans.
+# Assumes static fixtures: a handle keeps the file listing and schema it
+# resolved at first read, so a table directory regenerated in place
+# under a live session reads through a stale listing (missing or
+# vanished files) until the session ends. Entries are never evicted —
+# one per (session, fixture dir, table), a few dozen per session.
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 

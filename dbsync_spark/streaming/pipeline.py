@@ -37,7 +37,7 @@ from dbsync_spark.operators.retry import key_hash, run_pass
 from dbsync_spark.operators.route import SyncRule, condition
 from dbsync_spark.schemas import (STATUS_BLK, STATUS_ERR, STATUS_OK,
                                   SYNC_STATUS_SCHEMA)
-from dbsync_spark.sinks.table import BucketedTable, ParquetTable
+from dbsync_spark.sinks.table import BucketedTable
 
 
 # non-retryable dead-letter marker shared by the ack writer and the
@@ -50,38 +50,28 @@ FILTERED_MSG = "filtered by sync condition"
 class SyncPipeline:
     """Streaming apply of one sync rule onto one target table.
 
-    `target_layout` picks the target store: "bucketed" (default — hash-
-    partitioned on the merge key; a batch MERGE touches only the buckets
-    its keys hash into, so per-batch cost is independent of target size)
-    or "snapshot" (full-rewrite versioned ParquetTable — only for small
-    dimension targets / time-travel depth). Both produce identical merged
-    state (parity-tested); only the physical write pattern differs."""
+    `target_layout` is the target object: anything with the
+    `merge_changes` protocol (sinks/table.py's BucketedTable and
+    ParquetTable, sinks/jdbc.py's JdbcTable for live-DB delivery).
+    None builds the auto-sized BucketedTable at `target_path`, hash-
+    partitioned on the rule's keys: a batch MERGE touches only the
+    buckets its keys hash into, so per-batch cost is independent of
+    target size."""
 
     def __init__(self, spark: SparkSession, rule: SyncRule,
                  payload_schema: StructType, log_path: str, target_path: str,
                  status_path: str, checkpoint_path: str,
                  max_files_per_trigger: int | None = None,
-                 failure_policy=None,
-                 log_format: str = "parquet", ack_lock=None,
-                 target_layout: str = "bucketed",
-                 n_buckets: int | None = None,
+                 failure_policy=None, ack_lock=None,
+                 target_layout=None,
                  max_retry: int | None = None):
         self.spark = spark
         self.rule = rule
         self.payload_schema = payload_schema
         self.log_path = log_path
-        if hasattr(target_layout, "merge_changes"):
-            # a pre-built target object (e.g. sinks/jdbc.py::JdbcTable for
-            # live-DB delivery) — anything honouring the merge_changes
-            # protocol streams micro-batches the same way
-            self.target = target_layout
-        elif target_layout == "bucketed":
-            self.target = BucketedTable(target_path,
-                                        list(rule.source_keys), n_buckets)
-        elif target_layout == "snapshot":
-            self.target = ParquetTable(target_path)
-        else:
-            raise ValueError(f"unknown target_layout {target_layout!r}")
+        self.target = (target_layout if target_layout is not None else
+                       BucketedTable(target_path, list(rule.source_keys),
+                                     None))
         self.status_path = status_path
         self.checkpoint_path = checkpoint_path
         self.max_files_per_trigger = max_files_per_trigger
@@ -89,7 +79,6 @@ class SyncPipeline:
         # spec standing in for a flaky target (None = everything lands);
         # each apply call runs one retry pass, retry_pass runs the next
         self.failure_policy = failure_policy
-        self.log_format = log_format
         # pipelines that share one status path (multi-target rules over the
         # same source db) must not append parquet concurrently: the Hadoop
         # output committer's _temporary dir is per-path, and one job's
@@ -215,7 +204,7 @@ class SyncPipeline:
             & (F.col("message") != MALFORMED_MSG))
         if bad.isEmpty():
             return False
-        log = read_log(self.spark, self.log_path, self.log_format)
+        log = read_log(self.spark, self.log_path)
         self.apply_changes(self._decode(log).join(
             bad.select(F.col("dataId").alias("id"),
                        F.col("retry").alias("_tries0")),
@@ -225,7 +214,7 @@ class SyncPipeline:
     def start(self, available_now: bool = True, processing_time: str | None = None):
         from dbsync_spark.sources.log_source import read_log_stream
 
-        stream = read_log_stream(self.spark, self.log_path, self.log_format,
+        stream = read_log_stream(self.spark, self.log_path,
                                  self.max_files_per_trigger)
         writer = (
             stream.writeStream

@@ -1,0 +1,15 @@
+"""A connect factory for pool tests that Spark's Python workers import by
+reference (the package's parent directory is on their PYTHONPATH), so a
+functools.partial over it unpickles to an equal partial in every task."""
+
+from __future__ import annotations
+
+import os
+import sqlite3
+
+
+def counting_connect(db: str, opens_log: str):
+    """Open `db`, appending this process's pid to `opens_log`."""
+    with open(opens_log, "a") as f:
+        f.write(f"{os.getpid()}\n")
+    return sqlite3.connect(db, timeout=30)

@@ -3,7 +3,8 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
-from dbsync_spark.operators.apply import last_writer_wins, merge_into, parse_changes
+from dbsync_spark.operators.apply import (last_writer_wins, live_rows,
+                                          merge_snapshot, parse_changes)
 from tests.compare import assert_matches
 
 
@@ -42,18 +43,24 @@ def test_merge_into_idempotent_replay(spark, sf_dir):
     idempotent upserts, dbopt/PgOperation.scala:47-79)."""
     log = build_log_orders(spark, sf_dir)
     changes = parse_changes(log, ORDERS_PAYLOAD_SCHEMA)
-    once = last_writer_wins(changes, ["o_orderkey"])
-    twice = merge_into(once, changes, ["o_orderkey"])
+    once = merge_snapshot(None, changes, ["o_orderkey"])
+    twice = merge_snapshot(once, changes, ["o_orderkey"])
     assert once.count() == twice.count()
     assert once.exceptAll(twice).count() == 0
     assert twice.exceptAll(once).count() == 0
+    want = last_writer_wins(changes, ["o_orderkey"])
+    assert live_rows(twice).exceptAll(want).count() == 0
+    assert want.exceptAll(live_rows(twice)).count() == 0
 
 
 def test_merge_into_applies_increment(spark):
-    existing = spark.createDataFrame([(10, "old"), (20, "keep")], ["k", "v"])
+    existing = merge_snapshot(None, spark.createDataFrame(
+        [(1, "I", 10, "old"), (2, "I", 20, "keep")],
+        ["id", "operation", "k", "v"]), ["k"])
     inc = spark.createDataFrame(
-        [(1, "U", 10, "new"), (2, "I", 30, "ins"), (3, "D", 20, "keep")],
+        [(3, "U", 10, "new"), (4, "I", 30, "ins"), (5, "D", 20, "keep")],
         ["id", "operation", "k", "v"],
     )
-    out = {r["k"]: r["v"] for r in merge_into(existing, inc, ["k"]).collect()}
+    merged = live_rows(merge_snapshot(existing, inc, ["k"]))
+    out = {r["k"]: r["v"] for r in merged.collect()}
     assert out == {10: "new", 30: "ins"}

@@ -27,6 +27,7 @@ from dbsync_spark.operators.route import SyncRule
 from dbsync_spark.operators.status import current_status
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA
 from dbsync_spark.sinks.jdbc import JdbcTable, sqlite_connect_factory
+from dbsync_spark.sinks.table import BucketedTable
 from dbsync_spark.streaming.pipeline import MALFORMED_MSG, SyncPipeline
 
 SCHEMA = StructType([StructField("k", IntegerType()),
@@ -121,13 +122,16 @@ def _final(spark, status_path):
             current_status(spark.read.parquet(status_path)).collect()}
 
 
-def _pipe(spark, tmp_path, target="bucketed", rule=RULE, policy=None):
+def _pipe(spark, tmp_path, target=None, rule=RULE, policy=None):
+    target_path = str(tmp_path / "target")
+    if target is None:
+        target = BucketedTable(target_path, list(rule.source_keys), 4)
     return SyncPipeline(
         spark, rule, SCHEMA, log_path=str(tmp_path / "log"),
-        target_path=str(tmp_path / "target"),
+        target_path=target_path,
         status_path=str(tmp_path / "status"),
         checkpoint_path=str(tmp_path / "ckpt"),
-        failure_policy=policy, target_layout=target, n_buckets=4)
+        failure_policy=policy, target_layout=target)
 
 
 def _sqlite_target(tmp_path):
@@ -226,7 +230,7 @@ def test_failure_loop_converges(spark, tmp_path, kind):
     if kind == "policy_sqlite":
         target, db = _sqlite_target(tmp_path)
     else:
-        target = "bucketed"
+        target = None
     pipe = _pipe(spark, tmp_path, target=target, policy=_policy)
     jobs = _jobs(spark, lambda: pipe.process_batch(_batch(spark, tmp_path), 0))
     assert jobs == JOBS_PER_BATCH[kind]

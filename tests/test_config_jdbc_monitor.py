@@ -19,10 +19,10 @@ from dbsync_spark.monitor.health import (
 from dbsync_spark.sinks.jdbc import (
     ack_upsert,
     delete_by_keys,
-    gp_upsert,
+    gp_upsert_steps,
     mysql_upsert,
     pg_upsert,
-    upsert_sql,
+    upsert_steps,
 )
 
 DEMO_YAML = """
@@ -75,37 +75,66 @@ def test_parse_config_rejects_duplicate_db():
 
 
 def test_pg_upsert_sql():
-    sql = pg_upsert("s", "t", ["k", "v"], ["k"])
-    assert sql == ('INSERT INTO "s"."t" ("k", "v") VALUES (?, ?) '
-                   'ON CONFLICT ("k") DO UPDATE SET "v" = EXCLUDED."v"')
-    # degenerate all-key case (the reference's DO NOTHING path)
-    assert pg_upsert("s", "t", ["k1", "k2"], ["k1", "k2"]).endswith("DO NOTHING")
+    sql = pg_upsert("s", "t", ["k", "v", "wm"], ["k"], "wm")
+    assert sql == ('INSERT INTO "s"."t" AS tgt ("k", "v", "wm") '
+                   'VALUES (?, ?, ?) ON CONFLICT ("k") DO UPDATE SET '
+                   '"v" = EXCLUDED."v", "wm" = EXCLUDED."wm" '
+                   'WHERE EXCLUDED."wm" > tgt."wm"')
 
 
 def test_mysql_upsert_sql():
-    sql = mysql_upsert("s", "t", ["k", "v"], ["k"])
-    assert "ON DUPLICATE KEY UPDATE `v` = VALUES(`v`)" in sql
-    assert mysql_upsert("s", "t", ["k"], ["k"]).startswith("INSERT IGNORE")
+    sql = mysql_upsert("s", "t", ["wm", "k", "v"], ["k"], "wm")
+    # the watermark is assigned last, so every guard reads the old one
+    assert sql == ("INSERT INTO `s`.`t` (`wm`, `k`, `v`) VALUES (?, ?, ?) "
+                   "ON DUPLICATE KEY UPDATE "
+                   "`v` = IF(VALUES(`wm`) > `wm`, VALUES(`v`), `v`), "
+                   "`wm` = IF(VALUES(`wm`) > `wm`, VALUES(`wm`), `wm`)")
 
 
 def test_gp_upsert_update_else_insert():
-    sql = gp_upsert("s", "t", ["k", "v"], ["k"])
-    assert sql.startswith("WITH upd AS (UPDATE")
-    assert "WHERE NOT EXISTS (SELECT 1 FROM upd)" in sql
+    (upd, upd_idx), (ins, ins_idx) = gp_upsert_steps(
+        "s", "t", ["k", "v", "wm"], ["k"], "wm")
+    assert upd == ('UPDATE "s"."t" SET "v" = ?, "wm" = ? '
+                   'WHERE "k" = ? AND "wm" < ?')
+    assert upd_idx == [1, 2, 0, 2]
+    assert ins == ('INSERT INTO "s"."t" ("k", "v", "wm") SELECT ?, ?, ? '
+                   'WHERE NOT EXISTS (SELECT 1 FROM "s"."t" WHERE "k" = ?)')
+    assert ins_idx == [0, 1, 2, 0]
 
 
 def test_delete_and_ack_sql():
-    assert delete_by_keys("s", "t", ["k1", "k2"]) == (
-        'DELETE FROM "s"."t" WHERE "k1" = ? AND "k2" = ?')
+    assert delete_by_keys("s", "t", ["k1", "k2"], "postgresql", "wm") == (
+        'DELETE FROM "s"."t" WHERE "k1" = ? AND "k2" = ? AND "wm" < ?')
+    assert delete_by_keys("s", "t", ["k"], "mysql", "wm") == (
+        "DELETE FROM `s`.`t` WHERE `k` = ? AND `wm` < ?")
     assert 'retry="sync_data_status".retry+1' in ack_upsert("dbsync")
     assert "retry=retry+1" in ack_upsert("dbsync", "mysql")
 
 
+def test_flaky_target_sql_is_pinned():
+    """The statements JdbcTable sends a postgresql target for perfbench's
+    items table, byte for byte."""
+    cols = ["k", "qty", "price_cents", "name", "status", "_last_id"]
+    assert upsert_steps("postgresql", "main", "items", cols, ["k"],
+                        "_last_id") == [(
+        'INSERT INTO "main"."items" AS tgt ("k", "qty", "price_cents", '
+        '"name", "status", "_last_id") VALUES (?, ?, ?, ?, ?, ?) '
+        'ON CONFLICT ("k") DO UPDATE SET "qty" = EXCLUDED."qty", '
+        '"price_cents" = EXCLUDED."price_cents", "name" = EXCLUDED."name", '
+        '"status" = EXCLUDED."status", "_last_id" = EXCLUDED."_last_id" '
+        'WHERE EXCLUDED."_last_id" > tgt."_last_id"', [0, 1, 2, 3, 4, 5])]
+    assert delete_by_keys("main", "items", ["k"], "postgresql",
+                          "_last_id") == (
+        'DELETE FROM "main"."items" WHERE "k" = ? AND "_last_id" < ?')
+
+
 def test_upsert_sql_rejects_unknown_dialect_and_identifiers():
     with pytest.raises(ValueError, match="unsupported dialect"):
-        upsert_sql("oracle", "s", "t", ["k"], ["k"])
+        upsert_steps("oracle", "s", "t", ["k", "wm"], ["k"], "wm")
     with pytest.raises(ValueError, match="unsafe identifier"):
-        pg_upsert("s", 't"; DROP TABLE x;--', ["k"], ["k"])
+        pg_upsert("s", 't"; DROP TABLE x;--', ["k", "wm"], ["k"], "wm")
+    with pytest.raises(ValueError, match="unsafe identifier"):
+        delete_by_keys("s", "t", ["k"], "postgresql", 'wm" OR 1=1 --')
 
 
 def test_heartbeat_thresholds():
@@ -156,19 +185,21 @@ def test_write_upserts_end_to_end_sqlite(spark):
     if os.path.exists(_SQLITE_PATH):
         os.remove(_SQLITE_PATH)
     con = sqlite3.connect(_SQLITE_PATH)
-    con.execute('CREATE TABLE "t" (k INTEGER PRIMARY KEY, v TEXT)')
-    con.execute("INSERT INTO t VALUES (1, 'old'), (2, 'stays')")
+    con.execute('CREATE TABLE "t" (k INTEGER PRIMARY KEY, v TEXT, '
+                '"_last_id" INTEGER)')
+    con.execute("INSERT INTO t VALUES (1, 'old', 1), (2, 'stays', 2)")
     con.commit()
     con.close()
 
     from dbsync_spark.sinks.jdbc import sqlite_connect_factory, write_upserts
 
     df = spark.createDataFrame(
-        [("U", 1, "new"), ("I", 3, "ins"), ("D", 2, None)],
-        ["operation", "k", "v"],
+        [("U", 1, "new", 10), ("I", 3, "ins", 11), ("D", 2, None, 12)],
+        ["operation", "k", "v", "_last_id"],
     ).coalesce(1).sortWithinPartitions("k")
     write_upserts(df, "postgresql", url="", schema="main", table="t",
-                  keys=["k"], connect=sqlite_connect_factory(_SQLITE_PATH))
+                  keys=["k"], watermark_col="_last_id",
+                  connect=sqlite_connect_factory(_SQLITE_PATH))
 
     con = sqlite3.connect(_SQLITE_PATH)
     rows = dict(con.execute("SELECT k, v FROM t ORDER BY k").fetchall())

@@ -149,26 +149,23 @@ def test_idle_pipeline_heartbeat_stays_live(spark, tmp_path):
 
 
 def test_config_selects_target_layout(spark, tmp_path):
-    """sys.targetLayout/targetBuckets flow from YAML into the pipelines."""
+    """DbSyncApp builds the auto-sized BucketedTable for every rule; sys
+    keys SysConfig does not declare (a layout name, a bucket count) are
+    dropped at parse time and change nothing."""
     from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA
-    from dbsync_spark.sinks.table import BucketedTable, ParquetTable
+    from dbsync_spark.sinks.table import AUTO_MIN_BUCKETS, BucketedTable
 
-    snap_yaml = APP_YAML.replace(
+    extra_yaml = APP_YAML.replace(
         "sys: {maxPollWait: 5000, dataKeepHours: 24}",
-        "sys: {maxPollWait: 5000, targetLayout: snapshot}")
-    app = DbSyncApp(spark, parse_config(snap_yaml), str(tmp_path / "a"),
-                    {"db1.public.orders": ORDERS_PAYLOAD_SCHEMA})
-    app.bootstrap()
-    assert isinstance(app.pipelines[0].target, ParquetTable)
-
-    buck_yaml = APP_YAML.replace(
-        "sys: {maxPollWait: 5000, dataKeepHours: 24}",
-        "sys: {maxPollWait: 5000, targetBuckets: 8}")
-    app2 = DbSyncApp(spark, parse_config(buck_yaml), str(tmp_path / "b"),
-                     {"db1.public.orders": ORDERS_PAYLOAD_SCHEMA})
-    app2.bootstrap()
-    assert isinstance(app2.pipelines[0].target, BucketedTable)
-    assert app2.pipelines[0].target.n_buckets == 8
+        "sys: {maxPollWait: 5000, targetLayout: snapshot, targetBuckets: 8}")
+    for name, text in (("a", APP_YAML), ("b", extra_yaml)):
+        app = DbSyncApp(spark, parse_config(text), str(tmp_path / name),
+                        {"db1.public.orders": ORDERS_PAYLOAD_SCHEMA})
+        app.bootstrap()
+        target = app.pipelines[0].target
+        assert isinstance(target, BucketedTable)
+        assert target.auto_sized
+        assert target.n_buckets == AUTO_MIN_BUCKETS
 
 
 # -- connection pool ---------------------------------------------------------
@@ -289,7 +286,8 @@ def test_write_upserts_through_pool_with_faults(spark, tmp_path):
 
     db = str(tmp_path / "t.db")
     with sqlite3.connect(db) as c:
-        c.execute("CREATE TABLE s_t (k INTEGER PRIMARY KEY, v TEXT)")
+        c.execute("CREATE TABLE s_t (k INTEGER PRIMARY KEY, v TEXT, "
+                  "wm INTEGER)")
     flag = str(tmp_path / "failed_once")
 
     def flaky_connect(path=db, flag=flag):
@@ -303,10 +301,11 @@ def test_write_upserts_through_pool_with_faults(spark, tmp_path):
         return _sq.connect(path, timeout=30)
 
     df = spark.createDataFrame(
-        [("I", 1, "a"), ("U", 1, "b"), ("I", 2, "c"), ("D", 2, "c")],
-        ["operation", "k", "v"]).coalesce(1)
+        [("I", 1, "a", 1), ("U", 1, "b", 2), ("I", 2, "c", 3),
+         ("D", 2, "c", 4)],
+        ["operation", "k", "v", "wm"]).coalesce(1)
     # sqlite has no schema prefix: use main
-    write_upserts(df, "postgresql", "jdbc:none", "main", "s_t", ["k"],
+    write_upserts(df, "postgresql", "jdbc:none", "main", "s_t", ["k"], "wm",
                   connect=flaky_connect, pool_name="fault-test",
                   connect_retries=3)
     with sqlite3.connect(db) as c:
@@ -527,6 +526,44 @@ def test_get_pool_replaces_on_config_change():
     assert p2 is not p1 and closed == [c]                    # new factory
     p3 = get_pool("swap_test", factory_b, max_active=5)
     assert p3 is not p2                                      # new limit
+
+
+def test_write_upserts_reuses_pooled_connection(spark, tmp_path):
+    """Each task unpickles its own copy of the connect factory and of the
+    pool settings; the worker's pool must still match them and hand back
+    its idle connection, so batches open at most one connection per
+    worker process."""
+    import functools
+    import pickle
+    import sqlite3
+
+    from dbsync_spark.sinks.jdbc import write_upserts
+    from dbsync_spark.sinks.pool import get_pool
+    from tests.connect_probe import counting_connect
+
+    db, opens = str(tmp_path / "t.db"), str(tmp_path / "opens.log")
+    with sqlite3.connect(db) as c:
+        c.execute("CREATE TABLE t (k INTEGER PRIMARY KEY, v TEXT, "
+                  "wm INTEGER)")
+    factory = functools.partial(counting_connect, db, opens)
+    for b in range(5):
+        df = spark.createDataFrame([("I", b, "x", b + 1)],
+                                   ["operation", "k", "v", "wm"])
+        write_upserts(df.coalesce(1), "postgresql", "", "main", "t", ["k"],
+                      "wm", connect=factory,
+                      pool_name=f"reuse-{tmp_path.name}")
+    with sqlite3.connect(db) as c:
+        assert c.execute("SELECT count(*) FROM t").fetchone()[0] == 5
+    pids = open(opens).read().split()
+    assert len(pids) == len(set(pids)), pids
+
+    # the same check in-process, with a session statement configured
+    name = f"reuse-local-{tmp_path.name}"
+    sql = "SET statement_timeout = 5000"
+    pool = get_pool(name, factory, session_sql=sql)
+    copy = pickle.loads(pickle.dumps(factory))
+    assert copy is not factory
+    assert get_pool(name, copy, session_sql=sql) is pool
 
 
 def test_replay_with_swept_log_file_does_not_wedge(spark, sf_dir, tmp_path):

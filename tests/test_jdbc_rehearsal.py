@@ -173,7 +173,7 @@ def test_sync_pipeline_into_sqlite_through_pool(spark, sf_dir):
         log_path=f"{workdir}/log", target_path=f"{workdir}/ptarget",
         status_path=f"{workdir}/pstatus",
         checkpoint_path=f"{workdir}/pckpt",
-        max_files_per_trigger=1, target_layout="bucketed")
+        max_files_per_trigger=1)
     ppipe.run_to_completion()
     expected = {r["o_orderkey"]: (r["o_custkey"], r["o_orderstatus"],
                                   r["o_totalprice"], r["o_orderdate"],
@@ -264,7 +264,6 @@ def _translating_factory(db: str, keys: list[str]):
             key_cols = ", ".join(f'"{k}"' for k in keys)
             sql = sql.replace("ON DUPLICATE KEY UPDATE",
                               f"ON CONFLICT ({key_cols}) DO UPDATE SET")
-            sql = sql.replace("INSERT IGNORE", "INSERT OR IGNORE")
             # IF(VALUES("wm") > "wm", VALUES("c"), "c") ->
             #   CASE WHEN excluded."wm" > "wm" THEN excluded."c"
             #   ELSE "c" END

@@ -23,9 +23,10 @@ first P words — distinct-shingle Jaccard lands at (6P-4)/(2(6N-5)-
 Planted ids live at PLANT_BASE+ so census queries can isolate them and
 the copies x base-group id arithmetic of the main fixture is untouched.
 
-Usage: python tools/gen_density.py [out_dir] [copies] [dup_pct]
-           [plant_per_band]
-       (defaults .scratch/sfd1, 10, 20, 10)
+Usage: SPARK_GRAFT_SF_DIR=<sf0.1 dir> python tools/gen_density.py
+           [out_dir] [copies] [dup_pct] [plant_per_band]
+       (defaults .scratch/sfd1, 10, 20, 10; the source fixture as in
+        tools/gen_sf1.py)
 """
 
 from __future__ import annotations
@@ -37,7 +38,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SRC = "/root/testdata/sf0.1"
 PLANT_BASE = 10**12
 PLANT_N_WORDS = 100
 PLANT_IN_BANDS = (89, 90, 91, 93)
@@ -73,15 +73,17 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from dbsync_spark.session import get_spark
+    from tools.gen_sf1 import source_dir
 
     out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sfd1")
     copies = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     dup_pct = int(sys.argv[3]) if len(sys.argv) > 3 else 20
     plant_per_band = int(sys.argv[4]) if len(sys.argv) > 4 else 10
+    src = source_dir()
     os.makedirs(out, exist_ok=True)
     spark = get_spark("gen-density")
     spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet(f"{SRC}/documents.parquet")
+    docs = spark.read.parquet(f"{src}/documents.parquet")
     dk = docs.agg(F.max("doc_id")).first()[0] + 1
 
     def perm_text(c):

@@ -17,7 +17,7 @@ Replication is KEY-SPACE scaling, not row duplication games:
   md5-derived noise for copies 1-9, breaking cross-copy near-dup
   structure for the same reason.
 
-Usage: python tools/gen_sf1.py [out_dir] [copies]
+Usage: SPARK_GRAFT_SF_DIR=<sf0.1 dir> python tools/gen_sf1.py [out_dir] [copies]
        (defaults .scratch/sf1, 10; copies=30 writes the
         sf3-equivalent decade-and-a-half fixture for tools/scaling.py's
         third datapoint on the worst-alpha operators)
@@ -35,6 +35,18 @@ SRC = "/root/testdata/sf0.1"
 COPIES = 10  # overridden by argv[2]
 
 
+def source_dir() -> str:
+    """The sf0.1 fixture to replicate: $SPARK_GRAFT_SF_DIR, the variable
+    bench.py and tools/soak.py read, with the same default (SRC). Exits
+    with a message, before Spark starts, if it is not a directory."""
+    src = os.environ.get("SPARK_GRAFT_SF_DIR", SRC)
+    if not os.path.isdir(src):
+        sys.exit(f"{os.path.basename(sys.argv[0])}: source fixture {src!r} "
+                 "is not a directory; set SPARK_GRAFT_SF_DIR to an sf0.1 "
+                 "fixture")
+    return src
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -44,12 +56,13 @@ def main() -> int:
     out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scratch/sf1")
     if len(sys.argv) > 2:
         COPIES = int(sys.argv[2])
+    src = source_dir()
     os.makedirs(out, exist_ok=True)
     spark = get_spark("gen-sf1")
     spark.sparkContext.setLogLevel("ERROR")
 
     def rd(t):
-        return spark.read.parquet(f"{SRC}/{t}.parquet")
+        return spark.read.parquet(f"{src}/{t}.parquet")
 
     def wr(df, t, parts=8):
         df.repartition(parts).write.mode("overwrite").parquet(
