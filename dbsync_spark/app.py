@@ -26,20 +26,12 @@ from dbsync_spark.monitor.health import (
     evaluate_rules,
     status_endpoints,
 )
-from dbsync_spark.operators.retention import (expired_segments, sweep,
-                                              sweep_into_place)
+from dbsync_spark.operators.retention import expired_segments
 from dbsync_spark.operators.status import current_status, status_counts
 from dbsync_spark.schemas import SYNC_DATA_SCHEMA, SYNC_STATUS_SCHEMA
 from dbsync_spark.sinks.layout import compact, recover_dir
 from dbsync_spark.sources.tables import read_state
 from dbsync_spark.streaming.pipeline import SyncPipeline
-
-
-def poll_backoff_ms(batch_rows: int, batch_size: int, max_poll_wait_ms: int) -> int:
-    """S5 adaptive pacing law: sleep (1 - fill_ratio) * maxPollWait — full
-    batches poll immediately, empty ones wait (sync/DataPoller.scala:64-69)."""
-    fill = min(1.0, batch_rows / batch_size) if batch_size > 0 else 1.0
-    return int((1.0 - fill) * max_poll_wait_ms)
 
 
 class DbSyncApp:
@@ -109,7 +101,6 @@ class DbSyncApp:
                 ack_lock=ack_locks.setdefault(status_path, threading.Lock()),
                 max_retry=self.config.sys.maxRetry,
             )
-            recover_dir(pipe.log_path)  # crashed retention sweep, if any
             recover_dir(status_path)  # crashed status compaction
             os.makedirs(pipe.log_path, exist_ok=True)
             self.pipelines.append(pipe)
@@ -195,41 +186,27 @@ class DbSyncApp:
         sys.retryInterval in the reference)."""
         return any([p.retry_pass() for p in self.pipelines])
 
-    def retention_pass(self, now=None, mode: str = "segment") -> None:
-        """O8 sweep of each database's change log.
-
-        mode="segment" (default, streaming-safe): unlink only FILES whose
+    def retention_pass(self, now=None) -> None:
+        """O8 sweep of each database's change log: unlink only FILES whose
         every row is OK-acked and expired — no rewrite, so a live file-
         stream source neither re-ingests kept rows nor hits a vanishing
         file it was about to read (unlinked files are by construction
-        already processed). File-granular, converges as segments age.
-
-        mode="rewrite" (maintenance windows / drained pipelines):
-        row-exact sweep — ONE staged write + directory swap through
-        sinks/layout.replace_dir, whose recover_dir runs before each
-        log is read, so a crashed sweep is settled first. Rewriting
-        produces NEW file names, which a RUNNING stream would treat as
-        fresh input; never use it under live queries."""
+        already processed). File-granular, converges as segments age."""
         cutoff_expr = F.lit(now) if now is not None else F.current_timestamp()
         cutoff = cutoff_expr - F.expr(
             f"INTERVAL {self.config.sys.dataKeepHours} HOURS")
         with self._control_lock:  # see sync_state
             for db in {r.source_db for r in self.config.syncs}:
-                log_path = os.path.join(self.base_dir, "log", db)
-                recover_dir(log_path)
-                log = read_state(self.spark, log_path,
+                log = read_state(self.spark,
+                                 os.path.join(self.base_dir, "log", db),
                                  read_schema=SYNC_DATA_SCHEMA)
                 if log is None:
                     continue
-                if mode == "segment":
-                    for f in expired_segments(log, self._status_df(db), cutoff):
-                        try:
-                            os.remove(f)
-                        except FileNotFoundError:
-                            pass  # another tick won the race; same outcome
-                else:
-                    kept = sweep(log, self._status_df(db), cutoff)
-                    sweep_into_place(kept, log_path)
+                for f in expired_segments(log, self._status_df(db), cutoff):
+                    try:
+                        os.remove(f)
+                    except FileNotFoundError:
+                        pass  # another tick won the race; same outcome
             self.status_compaction_pass()
 
     def status_compaction_pass(self, max_files: int | None = None,

@@ -114,17 +114,6 @@ def cap_buckets(bands: DataFrame,
     return bands.join(ok, on=["band", "band_key"], how="leftsemi")
 
 
-def oversized_buckets(bands: DataFrame,
-                      max_bucket: int | None = LSH_MAX_BUCKET) -> DataFrame:
-    """(band, band_key, n_docs) audit frame of the buckets the cap will
-    skip — the observability hook for the documented-skip strategy."""
-    sizes = (bands.groupBy("band", "band_key")
-             .agg(F.count("*").alias("n_docs")))
-    if max_bucket is None:
-        return sizes.where(F.lit(False))
-    return sizes.where(F.col("n_docs") > max_bucket)
-
-
 def lsh_candidates(bands: DataFrame, id_col: str = "doc_id",
                    max_bucket: int | None = LSH_MAX_BUCKET) -> DataFrame:
     """Distinct (doc_a < doc_b) pairs sharing at least one band bucket.
@@ -1111,12 +1100,40 @@ def simjoin_rank_prefix(sh: DataFrame, dfreq: DataFrame,
     a worse order only admits more candidates, never loses a qualifying
     pair. The order is also the skew guard: a token shared by half the
     corpus ranks last and never enters a long doc's prefix."""
-    num, den = threshold_num, threshold_den
+    return _prefix(_ranked(sh.join(dfreq, on="_h"), id_col),
+                   id_col, threshold_num, threshold_den, side)
+
+
+def _self_frequency(sh: DataFrame) -> DataFrame:
+    """`sh` with each token's document frequency over `sh` itself, as a
+    window count: a groupBy joined back would be a join whose strategy
+    AQE picks at run time from whichever side finished first (see
+    _set_size)."""
+    return sh.withColumn("_df", F.count("*").over(Window.partitionBy("_h")))
+
+
+def _ranked(sh_df: DataFrame, id_col: str) -> DataFrame:
+    """Set rows carrying their token frequency `_df`, with each row's
+    rank _r in the doc's frequency order and the doc's set size _n."""
     w_rank = Window.partitionBy(id_col).orderBy("_df", "_h")
-    ranked = (sh.join(dfreq, on="_h")
-              .select(id_col, "_h",
-                      F.row_number().over(w_rank).alias("_r"),
-                      _set_size(id_col).alias("_n")))
+    return sh_df.select(id_col, "_h",
+                        F.row_number().over(w_rank).alias("_r"),
+                        _set_size(id_col).alias("_n"))
+
+
+def _loaded(df: DataFrame) -> DataFrame:
+    """`df` persisted and loaded before a join over it is planned, so
+    the planner sizes the join's sides from the loaded cache and fixes
+    the strategy up front. Sized at run time, the side whose stage
+    finishes first decides the strategy, and the Spark jobs per call
+    follow task timing."""
+    df = df.persist()
+    df.count()
+    return df
+
+
+def _prefix(ranked: DataFrame, id_col: str, num: int, den: int,
+            side: str) -> DataFrame:
     # prefix length p = n - ceil(t*n) + 1, via integer ceil division
     p = (F.col("_n")
          - F.expr(f"CAST(({num} * _n + {den - 1}) DIV {den} AS BIGINT)")
@@ -1300,19 +1317,18 @@ def similarity_join(df: DataFrame, text_col: str = "text",
     nature) and every internal persist is released before returning, so
     repeated calls never accumulate cached intermediates."""
     num, den = threshold_num, threshold_den
-    # persist, NOT localCheckpoint: sh is read three times (frequencies,
-    # ranking, verify) but at 10^8 set rows localCheckpoint's
+    # persist, NOT localCheckpoint: sh is read three times (ranking,
+    # verify arrays, width) but at 10^8 set rows localCheckpoint's
     # DESERIALIZED memory blocks overflow any single-JVM heap (measured:
     # 24 GB death at 150M rows); the columnar compressed cache holds the
     # same reuse and spills to disk instead of dying
     sh = hashed_shingle_sets(df, text_col, id_col, shingle_fn).persist()
-    dfreq = sh.groupBy("_h").agg(F.count("*").alias("_df"))
     # pin the ranked prefix: it feeds BOTH sides of the candidate
     # self-join, and without the persist Spark recomputes the
-    # dfreq-join + double-window tower once per side (measured 2x plan
+    # frequency + rank window tower once per side (measured 2x plan
     # duplication at sf0.1)
-    left = simjoin_rank_prefix(sh, dfreq, id_col, num, den,
-                               side="a").persist()
+    left = _loaded(_prefix(_ranked(_self_frequency(sh), id_col), id_col,
+                           num, den, "a"))
     right = left.select(F.col("doc_a").alias("doc_b"), "_h",
                         F.col("_na").alias("_nb"), F.col("_ra").alias("_rb"))
     # PPJoin POSITIONAL filter, applied per generation BEFORE the
@@ -1451,10 +1467,11 @@ def containment_join(df: DataFrame, text_col: str = "text",
     similarity_join."""
     num, den = threshold_num, threshold_den
     sh = hashed_shingle_sets(df, text_col, id_col, shingle_fn).persist()
-    dfreq = sh.groupBy("_h").agg(F.count("*").alias("_df"))
-    prefix = simjoin_rank_prefix(sh, dfreq, id_col, num, den, side="a")
-    probe = sh.select(F.col(id_col).alias("doc_b"), "_h",
-                      _set_size(id_col).alias("_nb"))
+    # prefix and probe both read ONE loaded ranked frame
+    ranked = _loaded(_ranked(_self_frequency(sh), id_col))
+    prefix = _prefix(ranked, id_col, num, den, "a")
+    probe = ranked.select(F.col(id_col).alias("doc_b"), "_h",
+                          F.col("_n").alias("_nb"))
     pos_bound = F.lit(1) + (F.col("_na") - F.col("_ra"))
     cand = (prefix.join(probe, on="_h")
             .where((F.col("doc_a") != F.col("doc_b"))
@@ -1466,5 +1483,6 @@ def containment_join(df: DataFrame, text_col: str = "text",
                             containment_verify(num, den),
                             mean_width=lambda: _mean_width(sh, id_col)
                             ).localCheckpoint(eager=True)
+    ranked.unpersist()
     sh.unpersist()
     return out

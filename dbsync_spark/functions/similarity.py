@@ -290,8 +290,7 @@ def kmeans_assign_exact(corpus: DataFrame, dim: int, n_clusters: int = 8,
                         id_col: str = "vec_id",
                         vec_col: str = "embedding") -> DataFrame:
     """(id, cluster) k-means assignment under the integer-exact Lloyd
-    discipline of ivf_ann_topk_exact — fully DuckDB-oracle-checkable
-    (the numpy/float kmeans_assign stays the batch-throughput variant)."""
+    discipline of ivf_ann_topk_exact — fully DuckDB-oracle-checkable."""
     qv = _quantize(corpus, scale, id_col, vec_col)
     qv.persist()
     cents = _lloyd_exact(qv, dim, n_clusters, iters, id_col)
@@ -430,23 +429,6 @@ def with_recall(ann: DataFrame, exact: DataFrame,
               .select("query_id",
                       (F.col("_n_hit") / F.col("_n_exact")).alias(recall_col)))
     return ann.join(F.broadcast(recall), "query_id", "left")
-
-
-def kmeans_assign(corpus: DataFrame, dim: int, n_clusters: int = 8,
-                  iters: int = 2, id_col: str = "vec_id",
-                  vec_col: str = "embedding") -> DataFrame:
-    """Distributed k-means clustering (Lloyd's) over an embedding column —
-    the corpus-organization primitive behind IVF indexing, semantic
-    sharding, and diversity-aware data selection.
-
-    Iterative-algorithm shape for 100 TB: per iteration, the ONLY driver
-    traffic is the aggregate state (n_clusters x dim float sums + counts);
-    assignment is a vectorized numpy matmul over Arrow batches and the
-    update is one groupBy — the data never leaves the executors, and the
-    iteration count is a small constant, not data-dependent."""
-    centroids = kmeans_centroids(corpus, dim, n_clusters, iters=iters,
-                                 id_col=id_col, vec_col=vec_col)
-    return _assign_clusters(corpus, centroids, id_col, vec_col, nprobe=1)
 
 
 def knn_classify(corpus: DataFrame, queries: DataFrame, k: int = 10,

@@ -902,23 +902,6 @@ def card_iin_length_sql(col: str) -> str:
         f" OR {p2} BETWEEN 38 AND 39) AND {ln} BETWEEN 14 AND 19))")
 
 
-def luhn_valid(col: Column, n_digits: int = 16) -> Column:
-    """Luhn checksum validity of an `n_digits`-long digit string —
-    integer-only (16 substring terms, whole-stage codegen), so the SQL
-    oracle mirrors it digit for digit. Right-position-even digits are
-    doubled (left position i is doubled iff (n_digits + 1 - i) is even),
-    with the >9 wraparound subtracting 9."""
-    total = None
-    for i in range(1, n_digits + 1):
-        d = F.substring(col, i, 1).cast("int")
-        if (n_digits + 1 - i) % 2 == 0:
-            t = F.when(d * 2 > 9, d * 2 - 9).otherwise(d * 2)
-        else:
-            t = d
-        total = t if total is None else total + t
-    return (total % 10) == 0
-
-
 def pii_card_scan(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id") -> DataFrame:
     """Credit-card-number PII detection the way production scanners do

@@ -103,8 +103,7 @@ def dtw_to_query(series: DataFrame, query_values, id_col: str,
                  radius: int = 24) -> DataFrame:
     """DTW distance from every key's series to `query_values` (a python
     list riding the UDF closure — the broadcast pattern for a single
-    query; for query BATCHES, join on a bucketized LB_Keogh lower bound
-    first). Returns (id, dtw_dist)."""
+    query). Returns (id, dtw_dist)."""
     import pyspark.sql.types as T
 
     q = np.asarray(query_values, dtype=np.float64)
@@ -123,115 +122,6 @@ def dtw_to_query(series: DataFrame, query_values, id_col: str,
                                 "dtw_dist": dists})
 
     return series.mapInPandas(compute, schema=out_schema)
-
-
-def _lb_kim(values: "pd.Series", q: np.ndarray) -> np.ndarray:
-    """LB_Kim-style lower bound valid for UNEQUAL-length series: every
-    DTW path must pay the first-cell and last-cell costs (distinct cells
-    whenever either series has length > 1), so
-    |a[0]-q[0]| + |a[-1]-q[-1]| <= DTW(a, q). Vectorized per batch."""
-    if len(q) == 0:
-        # DTW vs an empty query is inf for any non-empty series (the DP's
-        # (n>0, 0) corner is unreachable; 0 only when both are empty), so
-        # a zero lower bound is trivially valid either way
-        return np.zeros(len(values))
-    first = np.array([abs(float(v[0]) - q[0]) if len(v) else 0.0
-                      for v in values])
-    last = np.array([abs(float(v[-1]) - q[-1])
-                     if len(v) and (len(v) > 1 or len(q) > 1)
-                     else 0.0 for v in values])
-    # when both series are length 1, first and last are the SAME cell —
-    # don't double-count
-    both1 = np.array([len(v) == 1 for v in values]) & (len(q) == 1)
-    return np.where(both1, first, first + last)
-
-
-def _keogh_envelope(q: np.ndarray, radius: int) -> tuple[np.ndarray, np.ndarray]:
-    """(U, L) sliding max/min envelope of the query within the band."""
-    n = len(q)
-    U = np.array([q[max(0, i - radius):i + radius + 1].max() for i in range(n)])
-    L = np.array([q[max(0, i - radius):i + radius + 1].min() for i in range(n)])
-    return U, L
-
-
-def _lb_keogh(a: np.ndarray, U: np.ndarray, L: np.ndarray) -> float:
-    """LB_Keogh envelope bound — valid for EQUAL-length series under the
-    same Sakoe-Chiba radius as the DP: every row i of `a` must match some
-    q[j] with |i-j| <= radius, and the cheapest such cost is at least
-    (a[i]-U[i])+ + (L[i]-a[i])+; summing over i lower-bounds any path's
-    L1 cost. Much tighter than LB_Kim on dense same-spine series (the
-    series_arrays spine mode guarantees equal lengths)."""
-    return float((np.clip(a - U, 0, None) + np.clip(L - a, 0, None)).sum())
-
-
-def _lb_best(values: "pd.Series", q: np.ndarray, radius: int) -> np.ndarray:
-    """Per-row best available lower bound: max(LB_Kim, LB_Keogh) for
-    rows whose length equals the query's (both bounds valid -> their max
-    is valid), LB_Kim alone otherwise (Keogh needs equal lengths)."""
-    kim = _lb_kim(values, q)
-    if len(q) == 0:
-        return kim
-    U, L = _keogh_envelope(q, radius)
-    keogh = np.array([
-        _lb_keogh(np.asarray(v, dtype=np.float64), U, L)
-        if len(v) == len(q) else 0.0
-        for v in values])
-    return np.maximum(kim, keogh)
-
-
-def dtw_topk(series: DataFrame, query_values, id_col: str, k: int = 10,
-             radius: int = 24) -> DataFrame:
-    """Exact DTW top-k with lower-bound pruning — the scale path for
-    similarity SEARCH (vs dtw_to_query, which scores everything):
-
-    1. a cheap vectorized lower bound (max of LB_Kim first+last cells and
-       the LB_Keogh envelope bound on equal-length series) is computed
-       for every candidate — one narrow map, no DP;
-    2. exact DTW runs for the k candidates with the smallest bounds,
-       fixing a provisional threshold t = kth best exact distance;
-    3. exact DTW runs ONLY for remaining candidates with bound <= t —
-       anything with a bound above t provably cannot enter the top-k.
-
-    The result is exactly brute-force top-k (tested); at scale the DP —
-    the expensive part — touches the k seed rows plus the bound-
-    survivors instead of the whole corpus. Ties broken by id."""
-    import pyspark.sql.types as T
-
-    q = np.asarray(query_values, dtype=np.float64)
-    lb_schema = T.StructType([
-        series.schema[id_col], T.StructField("lb", T.DoubleType())])
-
-    def bounds(batches):
-        for pdf in batches:
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "lb": _lb_best(pdf["values"], q, radius)})
-
-    # truncate lineage once: three downstream actions (seed-id collect,
-    # seed DP, survivor DP) would otherwise each re-run the upstream
-    # series aggregation and the bound pass
-    series = series.localCheckpoint(eager=False)
-    lbs = series.mapInPandas(bounds, schema=lb_schema).localCheckpoint(
-        eager=False)
-    with_lb = series.join(lbs, on=id_col)
-
-    seed_ids = [r[0] for r in
-                lbs.orderBy("lb", id_col).limit(k).select(id_col).collect()]
-    seed = dtw_to_query(
-        with_lb.where(F.col(id_col).isin(seed_ids)).select(id_col, "values"),
-        query_values, id_col, radius)
-    seed_rows = seed.orderBy("dtw_dist", id_col).limit(k).collect()
-    if not seed_rows:
-        return seed
-    t = max(r["dtw_dist"] for r in seed_rows)
-
-    rest = (with_lb.where(~F.col(id_col).isin(seed_ids))
-            .where(F.col("lb") <= t).select(id_col, "values"))
-    rest_exact = dtw_to_query(rest, query_values, id_col, radius)
-    union = seed.unionByName(rest_exact)
-    from pyspark.sql.window import Window
-    w = Window.orderBy(F.col("dtw_dist"), F.col(id_col))
-    return (union.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= k).drop("_rn"))
 
 
 def cusum_changepoints(daily: DataFrame, key_col: str, day_col: str,

@@ -27,13 +27,3 @@ def poll_batch(log: DataFrame, polled: DataFrame, batch_size: int,
         .orderBy(id_col)
         .limit(batch_size)
     )
-
-
-def mark_polled(polled: DataFrame, batch: DataFrame,
-                id_col: str = "id", polled_id_col: str = "dataId") -> DataFrame:
-    """Append the batch ids to the polled set (PgOperation.scala:39-44)."""
-    new_rows = batch.select(
-        F.col(id_col).alias(polled_id_col),
-        F.current_timestamp().alias("createTime"),
-    )
-    return polled.unionByName(new_rows)

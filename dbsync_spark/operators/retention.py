@@ -4,11 +4,10 @@ Reference: every cleanInterval, delete sync_data rows whose status is OK
 and older than dataKeepHours, then VACUUM/OPTIMIZE
 (job/CleanWorker.scala:27-53, dbopt/PgOperation.scala:369-387).
 
-Spark-first: the sweep is an anti-filter written back to the log table
-(on Delta this is a partition-pruned DELETE + OPTIMIZE; on parquet an
-overwrite of affected partitions). Partitioning the log by date makes the
-cutoff predicate a partition-pruning filter — at 100 TB the sweep reads
-only expired partitions, not the full log.
+Spark-first: `sweep` is the row-exact log after the cleanup, as one left
+join (the `q_retention` query). The control loop deletes whole files
+instead (`expired_segments`), because a live file-stream source would
+re-ingest a rewritten log.
 """
 
 from __future__ import annotations
@@ -16,24 +15,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dbsync_spark.sinks.layout import replace_dir
-
-
-def expired(log: DataFrame, status: DataFrame, cutoff: Column,
-            id_col: str = "id") -> DataFrame:
-    """Rows eligible for deletion: status OK and createTime < cutoff."""
-    ok = status.where(F.col("status") == "OK").select(F.col("dataId").alias(id_col))
-    return log.join(ok, on=id_col, how="left_semi").where(F.col("createTime") < cutoff)
-
 
 def sweep(log: DataFrame, status: DataFrame, cutoff: Column,
           id_col: str = "id") -> DataFrame:
-    """The log after the retention sweep (complement of `expired`).
-    Single left join — not one scan per status class."""
+    """The log after the retention sweep: every row except those OK-acked
+    and created before `cutoff`. Single left join — not one scan per
+    status class."""
     # distinct: the ack log is append-only and at-least-once (a replayed
     # micro-batch re-acks the same dataId) — a LEFT join against the raw
-    # acks would emit one copy of every KEPT row per duplicate ack, and
-    # sweep_into_place would write the duplicates back permanently
+    # acks would emit one copy of every KEPT row per duplicate ack
     ok = (status.where(F.col("status") == "OK")
           .select(F.col("dataId").alias(id_col)).distinct()
           .withColumn("_ok", F.lit(True)))
@@ -49,9 +39,8 @@ def expired_segments(log: DataFrame, status: DataFrame, cutoff: Column,
     the cutoff) — the Kafka-style segment retention that is safe under a
     LIVE file-stream source: unlinking an already-processed file neither
     creates new input (no re-ingestion) nor touches anything a future
-    micro-batch will list. Row-exact sweeping (`sweep` + sweep_into_place)
-    rewrites kept rows into NEW files, which a running stream would
-    re-ingest wholesale — use that only in maintenance windows.
+    micro-batch will list. A row-exact rewrite (`sweep`) would put kept
+    rows into NEW files, which a running stream re-ingests wholesale.
 
     Retention becomes file-granular (a file with one unexpired row is
     kept whole), converging as segments age out — the standard log-
@@ -75,12 +64,3 @@ def expired_segments(log: DataFrame, status: DataFrame, cutoff: Column,
     uris = [r["_f"] for r in
             stats.where(F.col("_n") == F.col("_n_sweep")).collect()]
     return [unquote(urlparse(u).path) for u in uris]
-
-
-def sweep_into_place(kept: DataFrame, log_path: str) -> None:
-    """Commit a sweep with ONE data write: the kept rows are written to a
-    staging sibling and swapped in by replace_dir (sinks/layout.py). The
-    live log is renamed aside, never deleted, until the swept copy is in
-    place, so a kill at any point leaves the whole pre-sweep log or the
-    whole swept one — never a partial log, and never a lost pending row."""
-    replace_dir(log_path, kept.write.mode("overwrite").parquet)

@@ -6,11 +6,9 @@ where one row's key receives half the traffic, which would serialize the
 reference's per-key worker exactly the same way it concentrates one Spark
 shuffle partition.
 
-- `salted_last_writer_wins`: two-phase LWW — max_by is associative, so a
-  per-(key, salt) partial reduce followed by a per-key combine is exact
-  while spreading each hot key over `buckets` reducers.
-- `salted_join`: replicate the small side `buckets` times, salt the big
-  side once — each hot key's rows split across `buckets` join tasks.
+`salted_last_writer_wins` is a two-phase LWW: max_by is associative, so
+a per-(key, salt) partial reduce followed by a per-key combine is exact
+while spreading each hot key over `buckets` reducers.
 
 Salts derive from xxhash64 of the row id (deterministic, no RNG state).
 """
@@ -48,15 +46,3 @@ def salted_last_writer_wins(changes: DataFrame, key_cols: list[str],
     final = reduce_step(partial, list(key_cols))
     return (final.where(F.col(op_col) != "D")
             .select(*payload_cols))
-
-
-def salted_join(big: DataFrame, small: DataFrame, on: list[str],
-                buckets: int = 16, id_col: str | None = None) -> DataFrame:
-    """Inner equi-join resilient to hot join keys: the big side gets one
-    deterministic salt per row, the small side is exploded `buckets` times
-    so every (key, salt) pair still matches."""
-    salt_src = F.col(id_col) if id_col else F.monotonically_increasing_id()
-    big_s = big.withColumn("_salt", salt_col(salt_src, buckets))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)])))
-    return big_s.join(small_s, on=[*on, "_salt"]).drop("_salt")

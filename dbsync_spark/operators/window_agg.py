@@ -3,11 +3,10 @@
 Reference: StatisticsComponent.incr keeps per-hour / per-day counter maps
 with bounded retention (sync/ComponentManager.scala:68-106).
 
-Spark-first: tumbling-window aggregation. In batch this is
-groupBy(window(ts, '1 hour')); in streaming the same expression plus a
-watermark gives bounded state eviction (the reference's "retain last 7x24
-buckets" becomes `withWatermark` — state trimmed by event time, no manual
-map pruning).
+Spark-first: tumbling-window aggregation, groupBy(window(ts, '1 hour')).
+On a stream, the same function over `withWatermark(ts, ...)` gives bounded
+state eviction (the reference's "retain last 7x24 buckets" becomes the
+watermark — state trimmed by event time, no manual map pruning).
 """
 
 from __future__ import annotations
@@ -20,18 +19,6 @@ def hourly_counts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Rows per hour bucket; bucket exposed as its start timestamp."""
     return (
         df.groupBy(F.window(F.col(ts_col), "1 hour").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").alias("bucket_start"), "cnt")
-    )
-
-
-def hourly_counts_streaming(df: DataFrame, ts_col: str = "ts",
-                            watermark: str = "25 hours") -> DataFrame:
-    """Streaming variant: watermark bounds state like the reference's
-    bounded retention of counter buckets."""
-    return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), "1 hour").alias("w"))
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.start").alias("bucket_start"), "cnt")
     )
@@ -59,15 +46,3 @@ def merge_counts(snapshot: DataFrame, increment: DataFrame,
         .groupBy(bucket_col)
         .agg(F.sum(cnt_col).cast("long").alias(cnt_col))
     )
-
-
-def retain_recent_buckets(counts: DataFrame, n_buckets: int,
-                          bucket_col: str = "bucket_start") -> DataFrame:
-    """The reference's bounded counter retention (hour keeps 7x24, day
-    keeps 7 — sync/ComponentManager.scala:93-106): keep only the newest
-    n buckets. Top-k by bucket, no full sort."""
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(F.col(bucket_col).desc())
-    return (counts.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= n_buckets).drop("_rk"))

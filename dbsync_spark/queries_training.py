@@ -397,9 +397,7 @@ def q_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked since round 5 via the integer-exact Lloyd
     (similarity.kmeans_assign_exact: floor(e*1024) quantization,
     SUM-vector centroids, one-sqrt-one-divide scoring — see
-    ivf_ann_topk_exact); the DuckDB oracle unrolls the identical rounds.
-    The numpy/float kmeans_assign stays the batch-throughput variant,
-    geometry-pinned in tests."""
+    ivf_ann_topk_exact); the DuckDB oracle unrolls the identical rounds."""
     from dbsync_spark.functions.similarity import kmeans_assign_exact
 
     emb = read_table(spark, sf_dir, "embeddings")

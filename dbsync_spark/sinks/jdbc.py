@@ -134,24 +134,6 @@ def delete_by_keys(schema: str, table: str, keys: list[str],
     return f"DELETE FROM {tgt} WHERE {pred} AND {wm} < ?"
 
 
-def ack_upsert(sys_schema: str, dialect: str = "postgresql") -> str:
-    """Status ack: insert (dataId, status, message, retry=0) or bump retry
-    on conflict — the reference's batchAck (PgOperation.scala:98-107)."""
-    if dialect == "mysql":
-        return (f"INSERT INTO `{_ident(sys_schema)}`.`sync_data_status` "
-                "(dataId, status, message, retry, createTime) "
-                "VALUES (?, ?, ?, 0, CURRENT_TIMESTAMP) "
-                "ON DUPLICATE KEY UPDATE status=VALUES(status), "
-                "message=VALUES(message), retry=retry+1, "
-                "createTime=VALUES(createTime)")
-    return (f'INSERT INTO "{_ident(sys_schema)}"."sync_data_status" '
-            "(dataId, status, message, retry, createTime) "
-            "VALUES (?, ?, ?, 0, CURRENT_TIMESTAMP) "
-            "ON CONFLICT (dataId) DO UPDATE SET "
-            "status=EXCLUDED.status, message=EXCLUDED.message, "
-            'retry="sync_data_status".retry+1, createTime=EXCLUDED.createTime')
-
-
 def upsert_steps(dialect: str, schema: str, table: str,
                  columns: list[str], keys: list[str], watermark_col: str
                  ) -> list[tuple[str, list[int]]]:
@@ -185,25 +167,6 @@ def sqlite_connect_factory(path: str):
     import functools
 
     return functools.partial(_sqlite_connect, path)
-
-
-def _duckdb_connect(path: str):
-    import duckdb
-
-    return duckdb.connect(path)
-
-
-def duckdb_connect_factory(path: str):
-    """Picklable DB-API connect factory for a DuckDB file target. DuckDB
-    natively parses the PostgreSQL dialect — INSERT ... AS tgt ... ON
-    CONFLICT (k) DO UPDATE SET ... WHERE EXCLUDED.wm > tgt.wm, the
-    qualified-column ack upsert, the guarded delete — making it the
-    STRICT second parser for the generated pg statements (judge r5 item
-    #5): SQLite's lenient parser alone had been the only executor.
-    Single-writer engine: use n_writers=1."""
-    import functools
-
-    return functools.partial(_duckdb_connect, path)
 
 
 def write_upserts(df, dialect: str, url: str, schema: str, table: str,

@@ -170,14 +170,31 @@ class ConnectionPool:
 
 def _same_factory(a, b) -> bool:
     """True when two connect factories open the same connection: the same
-    object, or functools.partial objects with equal func, args and
-    keywords. Every Spark task unpickles its own copy of a factory, so an
-    identity test alone would never match across tasks."""
+    object; functools.partial objects with the same func and equal args
+    and keywords; or functions with equal code, defaults and closure
+    contents. Every Spark task unpickles its own copy of a factory, and a
+    function or closure that is not importable by name (a lambda, a
+    nested def) is pickled by value, so an identity test alone would
+    never match across tasks. A changed closure value (a rotated
+    password) still makes a different factory."""
     if a is b:
         return True
-    return (isinstance(a, functools.partial)
-            and isinstance(b, functools.partial)
-            and (a.func, a.args, a.keywords) == (b.func, b.args, b.keywords))
+    if isinstance(a, functools.partial) and isinstance(b, functools.partial):
+        return (_same_factory(a.func, b.func)
+                and (a.args, a.keywords) == (b.args, b.keywords))
+    code = getattr(a, "__code__", None)
+    if code is None or code != getattr(b, "__code__", None):
+        return False
+    if (a.__defaults__, a.__kwdefaults__) != (b.__defaults__,
+                                              b.__kwdefaults__):
+        return False
+    try:
+        ca = [c.cell_contents for c in a.__closure__ or ()]
+        cb = [c.cell_contents for c in b.__closure__ or ()]
+    except ValueError:  # a closure variable not yet assigned
+        return False
+    return len(ca) == len(cb) and all(
+        x is y or _same_factory(x, y) or x == y for x, y in zip(ca, cb))
 
 
 _REGISTRY: dict[str, ConnectionPool] = {}

@@ -92,7 +92,10 @@ class StreamingIvfIndex(EpochState):
         """The stored inverted-list rows (None before the first batch).
         The Forgetting subclass filters tombstoned vectors here, so
         every query path sees only surviving vectors."""
-        return read_state(self.spark, f"{self.root}/lists")
+        return read_state(
+            self.spark, f"{self.root}/lists",
+            read_schema=f"{self.id_col} LONG, cluster LONG, "
+                        f"{self.vec_col} ARRAY<DOUBLE>, epoch LONG")
 
     def query(self, queries: DataFrame, k: int = 10,
               nprobe: int = 2) -> DataFrame:

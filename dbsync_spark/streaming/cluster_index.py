@@ -54,9 +54,11 @@ from dbsync_spark.sources.tables import read_state
 from dbsync_spark.streaming.dedup_index import StreamingDedupIndex
 from dbsync_spark.streaming.state import EpochState, write_parts
 
-_LABELS_SCHEMA = StructType([
+# the label delta rows with their partition-discovered epoch column
+_LABEL_ROWS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("canonical_id", LongType()),
+    StructField("epoch", LongType()),
 ])
 
 
@@ -75,13 +77,9 @@ class StreamingClusterIndex(EpochState):
     def _label_rows(self) -> DataFrame:
         """Raw delta rows with their partition-discovered epoch column
         (empty, correctly typed, before the first batch)."""
-        df = read_state(self.spark, f"{self.root}/labels")
-        if df is None or "epoch" not in df.columns:
-            return self.spark.createDataFrame(
-                [], StructType(list(_LABELS_SCHEMA.fields)
-                               + [StructField("epoch", LongType())]))
-        return df.select("doc_id", "canonical_id",
-                         F.col("epoch").cast("long").alias("epoch"))
+        return read_state(self.spark, f"{self.root}/labels",
+                          read_schema=_LABEL_ROWS_SCHEMA,
+                          empty_schema=_LABEL_ROWS_SCHEMA)
 
     def _labels_asof(self, before_epoch: int | None) -> DataFrame:
         """Latest-epoch-wins label table over delta epochs < before_epoch

@@ -29,8 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import (DoubleType, LongType, StringType,
+                               StructField, StructType)
 
 from dbsync_spark.functions.dedup import (
     _candidate_shingle_sets,
@@ -50,6 +50,11 @@ _BANDS_SCHEMA = StructType([
 _DOCS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("text", StringType()),
+])
+_PAIRS_SCHEMA = StructType([
+    StructField("doc_a", LongType()),
+    StructField("doc_b", LongType()),
+    StructField("jaccard", DoubleType()),
 ])
 
 
@@ -105,7 +110,8 @@ class StreamingDedupIndex(EpochState):
                                        hashed=True)
         pairs = _verify_candidates(cands, sets, "doc_id", self.threshold)
         self._write_epoch(pairs, "pairs", epoch_id)
-        return self.spark.read.parquet(self._path("pairs", epoch_id))
+        return self.spark.read.schema(_PAIRS_SCHEMA).parquet(
+            self._path("pairs", epoch_id))
 
     def compact(self) -> None:
         """OPTIMIZE-style maintenance, same staged crash-safe contract as
@@ -127,15 +133,10 @@ class StreamingDedupIndex(EpochState):
     def all_pairs(self) -> DataFrame:
         """Every near-dup pair persisted so far (empty frame before the
         first batch; real corruption still propagates — read_state)."""
-        from pyspark.sql.types import (DoubleType, LongType, StructField,
-                                       StructType)
-
         return read_state(self.spark, f"{self.root}/pairs",
-                          empty_schema=StructType([
-                              StructField("doc_a", LongType()),
-                              StructField("doc_b", LongType()),
-                              StructField("jaccard", DoubleType()),
-                          ])).select("doc_a", "doc_b", "jaccard")
+                          read_schema=_PAIRS_SCHEMA,
+                          empty_schema=_PAIRS_SCHEMA).select(
+                              "doc_a", "doc_b", "jaccard")
 
 
 class ForgettingDedupIndex(Tombstones, StreamingDedupIndex):

@@ -32,9 +32,15 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyspark.sql.types import (DoubleType, LongType, StructField,
+                               StructType)
+
 from dbsync_spark.functions.timeseries import dtw_to_query
 from dbsync_spark.sources.tables import read_state
 from dbsync_spark.streaming.state import EpochState
+
+
+_EPOCH = StructField("epoch", LongType())  # the partition column
 
 
 class StreamingDtwMonitor(EpochState):
@@ -55,8 +61,6 @@ class StreamingDtwMonitor(EpochState):
     def _bucket(self, col) -> F.Column:
         return F.date_trunc(self.bucket, col)
 
-    def _read_buckets(self) -> DataFrame | None:
-        return read_state(self.spark, f"{self.root}/buckets")
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int | None = None
                       ) -> DataFrame:
@@ -71,12 +75,15 @@ class StreamingDtwMonitor(EpochState):
         self._write_epoch(per_bucket, "buckets", epoch_id)
 
         touched = per_bucket.select("_id").distinct()
-        dists = self._score(touched)
+        dists = self._score(touched, per_bucket.schema)
         self._write_epoch(dists, "dists", epoch_id)
         return dists
 
-    def _score(self, keys: DataFrame) -> DataFrame:
-        state = self._read_buckets()
+    def _score(self, keys: DataFrame, bucket_schema: StructType
+               ) -> DataFrame:
+        # every epoch's buckets have the batch frames' schema
+        state = read_state(self.spark, f"{self.root}/buckets",
+                           read_schema=StructType([*bucket_schema, _EPOCH]))
         # one epoch partition per batch; re-sum across epochs per (id, b)
         mine = (state.join(keys, on="_id", how="left_semi")
                 .groupBy("_id", "_b").agg(F.sum("_v").alias("_v")))
@@ -107,15 +114,10 @@ class StreamingDtwMonitor(EpochState):
 
     def distances(self) -> DataFrame:
         """Latest DTW distance per key across all processed batches."""
-        from pyspark.sql.types import (DoubleType, LongType,
-                                       StructField, StructType)
-
+        schema = StructType([StructField(self.id_col, LongType()),
+                             StructField("dtw_dist", DoubleType()), _EPOCH])
         d = read_state(self.spark, f"{self.root}/dists",
-                       empty_schema=StructType([
-                           StructField(self.id_col, LongType()),
-                           StructField("dtw_dist", DoubleType()),
-                           StructField("epoch", LongType()),
-                       ]))
+                       read_schema=schema, empty_schema=schema)
         return (d.groupBy(self.id_col)
                 .agg(F.max_by(F.col("dtw_dist"), F.col("epoch"))
                      .alias("dtw_dist")))

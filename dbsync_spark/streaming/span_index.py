@@ -55,6 +55,7 @@ _SPANS_SCHEMA = StructType([
     StructField("span_tokens", LongType()),
 ])
 _RESCORED_SCHEMA = StructType([StructField("doc_id", LongType())])
+_EPOCH = StructField("epoch", LongType())  # the partition column
 
 
 class StreamingSpanIndex(EpochState):
@@ -103,7 +104,8 @@ class StreamingSpanIndex(EpochState):
 
         self._write_epoch(spans, "spans", epoch_id)
         self._write_epoch(rescore, "rescored", epoch_id)
-        return self.spark.read.parquet(self._path("spans", epoch_id))
+        return self.spark.read.schema(_SPANS_SCHEMA).parquet(
+            self._path("spans", epoch_id))
 
     def _rescore_spans(self, index: DataFrame,
                        rescore: DataFrame) -> DataFrame:
@@ -155,8 +157,10 @@ class StreamingSpanIndex(EpochState):
         """The span table as of the latest processed epoch: each doc's
         rows from its HIGHEST rescore epoch (latest-epoch-wins; empty
         frame before the first batch)."""
-        res = read_state(self.spark, f"{self.root}/rescored")
-        spans = read_state(self.spark, f"{self.root}/spans")
+        res = read_state(self.spark, f"{self.root}/rescored",
+                         read_schema=StructType([*_RESCORED_SCHEMA, _EPOCH]))
+        spans = read_state(self.spark, f"{self.root}/spans",
+                           read_schema=StructType([*_SPANS_SCHEMA, _EPOCH]))
         if res is None or spans is None:
             return self.spark.createDataFrame([], _SPANS_SCHEMA)
         latest = res.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))

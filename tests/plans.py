@@ -1,10 +1,10 @@
-"""Physical-plan introspection: the 100 TB readiness audit as a library.
+"""Physical-plan introspection for the fleet-wide plan audit.
 
 A query can be value-correct at sf0.01 and still be a cross join, an
 unpartitioned window, or an unpruned scan that dies at scale. These
 helpers parse `explain("formatted")` output into a structured audit so
-pipelines (and tests/test_plan_audit.py, which runs this over every
-declared query) can gate on plan shape, not just results.
+tests (tests/test_plan_audit.py runs it over the declared queries) can
+gate on plan shape, not just results.
 
 The reference has no optimizer to audit (SURVEY.md §4) — its physical
 strategies are hard-coded; here the plan IS the contract, so we make it

@@ -1,4 +1,4 @@
-"""Syntactic validation for generated DDL (capture-mode control plane).
+"""Syntactic validation for the capture DDL that sources/capture.py generates.
 
 No live Pg/MySQL exists in this environment, so a syntax slip in the
 generated trigger/table DDL (dbopt/PgOperation.scala:110-268 runs these

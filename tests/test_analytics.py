@@ -259,64 +259,6 @@ def test_sketch_queries_accuracy_bounds(spark, sf_dir, duck):
             assert lo - slack <= target <= hi + slack, (ch, col, lo, hi, target)
 
 
-def test_lb_bounds_sound_vs_reference_dp():
-    """max(LB_Kim, LB_Keogh) must lower-bound the banded DP for every
-    series (equal AND unequal lengths, empty included), and Keogh must
-    be tighter than Kim somewhere on equal-length data (it's the point)."""
-    import numpy as np
-    import pandas as pd
-
-    from dbsync_spark.functions.timeseries import (_lb_best, _lb_kim,
-                                                   dtw_reference)
-
-    rng = np.random.RandomState(11)
-    radius = 4
-    q = np.arange(24, dtype=float)  # smooth ramp: tight envelope
-    series = [rng.randint(0, 100, size=n).astype(float)
-              for n in [24] * 5 + [1, 3, 17, 30, 24]]
-    # vertically shifted copies of the ramp: Kim pays only the two end
-    # cells (2c) while Keogh pays every cell above the envelope (~n(c-r))
-    series += [q + c for c in (8.0, 10.0, 15.0, 20.0, 30.0)]
-    series.append(np.array([]))
-    vals = pd.Series([list(s) for s in series])
-    lbs = _lb_best(vals, q, radius)
-    kims = _lb_kim(vals, q)
-    tighter = 0
-    for s, lb, kim in zip(series, lbs, kims):
-        exact = dtw_reference(list(s), list(q), radius)
-        assert lb <= exact + 1e-9, (len(s), lb, exact)
-        assert lb >= kim - 1e-9  # max() never loosens
-        if len(s) == len(q) and lb > kim + 1e-9:
-            tighter += 1
-    assert tighter >= 5  # Keogh genuinely prunes harder on dense series
-
-
-def test_dtw_topk_prune_equals_bruteforce(spark, sf_dir):
-    """LB pruning must never change the answer: dtw_topk == sort of
-    dtw_to_query over everything. Also check the bound is sound
-    (lb <= exact) on the fixture series."""
-    from pyspark.sql import functions as F
-
-    from dbsync_spark.functions import timeseries as ts
-    from dbsync_spark.queries_analytics import _cents
-    from dbsync_spark.sources.tables import read_table
-
-    ev = read_table(spark, sf_dir, "events")
-    series = ts.series_arrays(
-        ev, "user_id", F.date_trunc("hour", F.col("ts")),
-        _cents(F.col("value"))).cache()
-    qvals = series.where(F.col("user_id") == 1).first()["values"]
-    others = series.where(F.col("user_id") != 1)
-
-    pruned = [(r["user_id"], r["dtw_dist"]) for r in
-              ts.dtw_topk(others, qvals, "user_id", k=5, radius=12)
-              .orderBy("dtw_dist", "user_id").collect()]
-    brute = [(r["user_id"], r["dtw_dist"]) for r in
-             ts.dtw_to_query(others, qvals, "user_id", radius=12)
-             .orderBy("dtw_dist", "user_id").limit(5).collect()]
-    assert pruned == brute and len(pruned) == 5
-
-
 def test_profile_counts_nulls_and_distincts(spark):
     """Planted nulls/dups: the profile reports them exactly, and nulls
     are excluded from the distinct count."""

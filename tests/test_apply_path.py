@@ -167,6 +167,20 @@ def _last_job_id(sc) -> int:
     return top
 
 
+def test_targets_share_merge_changes_signature():
+    """Every pipeline target takes SyncPipeline.apply_changes' call
+    `merge_changes(spark, frame, keys, pinned=True)`."""
+    import inspect
+
+    from dbsync_spark.sinks.table import ParquetTable
+
+    want = inspect.signature(ParquetTable.merge_changes)
+    for target in (BucketedTable, JdbcTable):
+        got = inspect.signature(target.merge_changes)
+        assert list(got.parameters) == list(want.parameters), target
+        assert got.parameters["pinned"].default is False, target
+
+
 def test_trigger_runs_no_job_outside_foreach_batch(spark, tmp_path):
     """One trigger over 40 log files, more than Spark's default parallel-
     listing threshold (32): the trigger lists them on the driver, so the

@@ -269,7 +269,7 @@ def test_merge_shuffles_once(spark, tmp_path):
     """The frame merge_changes writes holds exactly ONE exchange, into an
     empty table and over a stored slice: the LWW reduce reuses the
     repartition by bucket that the ~1-file-per-bucket write needs."""
-    from dbsync_spark.plans import audit_plan
+    from tests.plans import audit_plan
 
     bt = BucketedTable(str(tmp_path / "bt"), ["k"], n_buckets=4)
     batch = spark.createDataFrame(

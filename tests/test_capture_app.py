@@ -3,7 +3,7 @@ from __future__ import annotations
 import json
 import urllib.request
 
-from dbsync_spark.app import DbSyncApp, poll_backoff_ms
+from dbsync_spark.app import DbSyncApp
 from dbsync_spark.config import parse_config
 from dbsync_spark.operators.route import SyncRule
 from dbsync_spark.sources.capture import (
@@ -64,12 +64,6 @@ def test_sys_table_ddl_both_dialects():
     assert any("BIGSERIAL" in s for s in pg)
     assert any("AUTO_INCREMENT" in s for s in my)
     assert len(pg) == len(my) == 5
-
-
-def test_poll_backoff_law():
-    assert poll_backoff_ms(10000, 10000, 60000) == 0       # saturated -> no sleep
-    assert poll_backoff_ms(0, 10000, 60000) == 60000       # empty -> full wait
-    assert poll_backoff_ms(7500, 10000, 60000) == 15000    # proportional
 
 
 APP_YAML = """

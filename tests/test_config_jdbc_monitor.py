@@ -17,7 +17,6 @@ from dbsync_spark.monitor.health import (
     heartbeat_status,
 )
 from dbsync_spark.sinks.jdbc import (
-    ack_upsert,
     delete_by_keys,
     gp_upsert_steps,
     mysql_upsert,
@@ -107,8 +106,6 @@ def test_delete_and_ack_sql():
         'DELETE FROM "s"."t" WHERE "k1" = ? AND "k2" = ? AND "wm" < ?')
     assert delete_by_keys("s", "t", ["k"], "mysql", "wm") == (
         "DELETE FROM `s`.`t` WHERE `k` = ? AND `wm` < ?")
-    assert 'retry="sync_data_status".retry+1' in ack_upsert("dbsync")
-    assert "retry=retry+1" in ack_upsert("dbsync", "mysql")
 
 
 def test_flaky_target_sql_is_pinned():

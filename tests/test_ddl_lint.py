@@ -21,7 +21,7 @@ from dbsync_spark.sources.capture import (
     sys_table_ddl,
     unique_index_ddl,
 )
-from dbsync_spark.sources.sqllint import (
+from tests.sqllint import (
     SqlLintError,
     check_sql,
     extract_inserts,
@@ -127,7 +127,7 @@ def test_literal_inside_dollar_body_is_data_not_code():
     genuinely unbalanced paren in body CODE must still raise."""
     import pytest
 
-    from dbsync_spark.sources.sqllint import SqlLintError, check_sql
+    from tests.sqllint import SqlLintError, check_sql
 
     ok = ("CREATE FUNCTION f() RETURNS trigger AS $$ BEGIN "
           "IF NEW.note = 'foo(' OR NEW.s = 'END IF' THEN "

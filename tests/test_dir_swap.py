@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 import dbsync_spark
 from dbsync_spark.functions.export import export_shards, update_shards
 from dbsync_spark.operators.apply import live_rows
-from dbsync_spark.operators.retention import sweep, sweep_into_place
 from dbsync_spark.sinks.layout import (ASIDE, STAGING, compact, recover_dir,
                                        restore_asides)
 from dbsync_spark.sinks.table import (BucketedTable, ParquetTable,
@@ -150,32 +149,9 @@ def _status_compaction(spark, root):
                 list(range(60)), list(range(60)))
 
 
-def _retention_sweep(spark, root):
-    log = str(root / "log")
-    (spark.range(30).select(
-        "id", F.lit("2020-01-01").cast("timestamp").alias("createTime"))
-     .repartition(3).write.parquet(log))
-    acks = spark.range(0, 30, 2).select(F.col("id").alias("dataId"),
-                                        F.lit("OK").alias("status"))
-
-    def read():
-        recover_dir(log)
-        return _ids(spark, log)
-
-    def run():  # DbSyncApp.retention_pass(mode="rewrite") for one db
-        recover_dir(log)
-        kept = sweep(spark.read.parquet(log), acks,
-                     F.lit("2021-01-01").cast("timestamp"))
-        sweep_into_place(kept, log)
-
-    return Swap(log, log + STAGING, read, run,
-                list(range(30)), list(range(1, 30, 2)))
-
-
 USERS = {"bucket_merge": _bucket_merge, "shard_refresh": _shard_refresh,
          "rebucket": _rebucket, "migration": _migration,
-         "status_compaction": _status_compaction,
-         "retention_sweep": _retention_sweep}
+         "status_compaction": _status_compaction}
 
 
 def _aside(sw):

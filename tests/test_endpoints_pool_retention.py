@@ -5,15 +5,13 @@
 - the bounded connection pool (DatasourcePools.scala:16-42): maxActive
   bound, connect retries with backoff, acquire timeout, stats counters,
   session query-timeout statement;
-- crash-safe single-write retention sweep (sweep_into_place): a kill
-  while the pre-sweep log is deleted loses no row.
+- segment retention through DbSyncApp.retention_pass.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import threading
 import time
 import urllib.request
@@ -317,74 +315,12 @@ def test_write_upserts_through_pool_with_faults(spark, tmp_path):
     assert os.path.exists(flag)
 
 
-# -- crash-safe retention ----------------------------------------------------
-
-
-def _mk_log(spark, path, n=100):
-    (spark.range(n)
-     .select(F.col("id"),
-             F.lit("x").alias("data"),
-             F.lit("2020-01-01").cast("timestamp").alias("createTime"))
-     .write.mode("overwrite").parquet(path))
-
-
-def test_sweep_into_place_single_write_and_recovery(spark, tmp_path,
-                                                   monkeypatch):
-    """One data write per sweep, and a kill while the pre-sweep log's
-    files are being deleted loses no row: the swap renames the live log
-    aside before it deletes anything, so recovery finds either the whole
-    pre-sweep log or the whole swept one, never a partial log. (The swap's
-    own crash windows are in tests/test_dir_swap.py.)"""
-    from dbsync_spark.operators.retention import sweep, sweep_into_place
-    from dbsync_spark.sinks.layout import recover_dir
-
-    log = str(tmp_path / "log")
-    _mk_log(spark, log)
-    kept = spark.read.parquet(log).where(F.col("id") % 2 == 0)
-    sweep_into_place(kept, log)
-    assert spark.read.parquet(log).count() == 50
-    assert os.listdir(tmp_path) == ["log"]  # no staging or aside left
-
-    # three files; ids divisible by 3 are OK-acked and expired, the rest
-    # are pending and must survive any kill
-    log = str(tmp_path / "log3")
-    (spark.range(60)
-     .select("id", F.lit("2020-01-01").cast("timestamp").alias("createTime"))
-     .repartition(3).write.parquet(log))
-    pre_files = {f for f in os.listdir(log) if f.endswith(".parquet")}
-    assert len(pre_files) == 3
-    acks = spark.range(0, 60, 3).select(F.col("id").alias("dataId"),
-                                        F.lit("OK").alias("status"))
-    cutoff = F.lit("2021-01-01").cast("timestamp")
-
-    def ids():
-        return sorted(r["id"] for r in spark.read.parquet(log).collect())
-
-    pre, swept = ids(), [i for i in range(60) if i % 3]
-    real_rmtree = shutil.rmtree
-
-    def killed_rmtree(path, *args, **kwargs):
-        # deletes one pre-sweep file, then the process dies
-        victims = (sorted(pre_files & set(os.listdir(path)))
-                   if os.path.isdir(path) else [])
-        if victims:
-            os.unlink(os.path.join(path, victims[0]))
-            raise OSError("killed while deleting the pre-sweep log")
-        real_rmtree(path, *args, **kwargs)
-
-    monkeypatch.setattr(shutil, "rmtree", killed_rmtree)
-    with pytest.raises(OSError, match="killed"):
-        sweep_into_place(sweep(spark.read.parquet(log), acks, cutoff), log)
-    monkeypatch.setattr(shutil, "rmtree", real_rmtree)
-
-    recover_dir(log)
-    assert ids() in (pre, swept)
-    sweep_into_place(sweep(spark.read.parquet(log), acks, cutoff), log)
-    assert ids() == swept
+# -- retention ---------------------------------------------------------------
 
 
 def test_app_retention_still_correct(spark, sf_dir, tmp_path):
-    """retention_pass end-to-end through the new single-write path."""
+    """retention_pass end-to-end: every row of the drained, OK-acked log
+    is past the cutoff, so every log file is unlinked."""
     import datetime as dt
 
     cfg = parse_config(APP_YAML)
@@ -399,8 +335,6 @@ def test_app_retention_still_correct(spark, sf_dir, tmp_path):
 
     assert spark.read.schema(SYNC_DATA_SCHEMA).parquet(
         app.pipelines[0].log_path).count() == 0
-    # the rewrite mode (maintenance windows) sweeps row-exactly too
-    app.retention_pass(now=dt.datetime(2030, 1, 1), mode="rewrite")
     app.stop()
 
 
@@ -527,43 +461,75 @@ def test_get_pool_replaces_on_config_change():
     p3 = get_pool("swap_test", factory_b, max_active=5)
     assert p3 is not p2                                      # new limit
 
+    # closures are compared by code and closure contents: a rebuilt
+    # factory with the same password reuses, a rotated one replaces
+    def make(password):
+        def connect():
+            assert password
+            return FakeConn()
+        return connect
+
+    p4 = get_pool("rotate_test", make("s3cret"))
+    assert get_pool("rotate_test", make("s3cret")) is p4
+    assert get_pool("rotate_test", make("rotated")) is not p4
+
+
+def _counting_closure(db, opens_log):
+    """A connect factory that Spark pickles by value (a nested def is not
+    importable by name): each task unpickles a new function object."""
+    def connect():
+        import os
+        import sqlite3
+
+        with open(opens_log, "a") as f:
+            f.write(f"{os.getpid()}\n")
+        return sqlite3.connect(db, timeout=30)
+    return connect
+
 
 def test_write_upserts_reuses_pooled_connection(spark, tmp_path):
     """Each task unpickles its own copy of the connect factory and of the
     pool settings; the worker's pool must still match them and hand back
     its idle connection, so batches open at most one connection per
-    worker process."""
+    worker process. Both factory kinds: a partial over a function workers
+    import by reference, and a closure pickled by value."""
     import functools
-    import pickle
     import sqlite3
+
+    from pyspark import cloudpickle
 
     from dbsync_spark.sinks.jdbc import write_upserts
     from dbsync_spark.sinks.pool import get_pool
     from tests.connect_probe import counting_connect
 
-    db, opens = str(tmp_path / "t.db"), str(tmp_path / "opens.log")
-    with sqlite3.connect(db) as c:
-        c.execute("CREATE TABLE t (k INTEGER PRIMARY KEY, v TEXT, "
-                  "wm INTEGER)")
-    factory = functools.partial(counting_connect, db, opens)
-    for b in range(5):
-        df = spark.createDataFrame([("I", b, "x", b + 1)],
-                                   ["operation", "k", "v", "wm"])
-        write_upserts(df.coalesce(1), "postgresql", "", "main", "t", ["k"],
-                      "wm", connect=factory,
-                      pool_name=f"reuse-{tmp_path.name}")
-    with sqlite3.connect(db) as c:
-        assert c.execute("SELECT count(*) FROM t").fetchone()[0] == 5
-    pids = open(opens).read().split()
-    assert len(pids) == len(set(pids)), pids
+    def partial(db, opens):
+        return functools.partial(counting_connect, db, opens)
 
-    # the same check in-process, with a session statement configured
-    name = f"reuse-local-{tmp_path.name}"
-    sql = "SET statement_timeout = 5000"
-    pool = get_pool(name, factory, session_sql=sql)
-    copy = pickle.loads(pickle.dumps(factory))
-    assert copy is not factory
-    assert get_pool(name, copy, session_sql=sql) is pool
+    for kind, make in (("partial", partial), ("closure", _counting_closure)):
+        db = str(tmp_path / f"{kind}.db")
+        opens = str(tmp_path / f"{kind}-opens.log")
+        with sqlite3.connect(db) as c:
+            c.execute("CREATE TABLE t (k INTEGER PRIMARY KEY, v TEXT, "
+                      "wm INTEGER)")
+        factory = make(db, opens)
+        for b in range(4):
+            df = spark.createDataFrame([("I", b, "x", b + 1)],
+                                       ["operation", "k", "v", "wm"])
+            write_upserts(df.coalesce(1), "postgresql", "", "main", "t",
+                          ["k"], "wm", connect=factory,
+                          pool_name=f"reuse-{kind}-{tmp_path.name}")
+        with sqlite3.connect(db) as c:
+            assert c.execute("SELECT count(*) FROM t").fetchone()[0] == 4
+        pids = open(opens).read().split()
+        assert len(pids) == len(set(pids)), (kind, pids)
+
+        # the same check in-process, with a session statement configured
+        name = f"reuse-local-{kind}-{tmp_path.name}"
+        sql = "SET statement_timeout = 5000"
+        pool = get_pool(name, factory, session_sql=sql)
+        copy = cloudpickle.loads(cloudpickle.dumps(factory))
+        assert copy is not factory
+        assert get_pool(name, copy, session_sql=sql) is pool
 
 
 def test_replay_with_swept_log_file_does_not_wedge(spark, sf_dir, tmp_path):

@@ -7,6 +7,7 @@ parquet target path."""
 
 from __future__ import annotations
 
+import functools
 import os
 import sqlite3
 import tempfile
@@ -359,16 +360,16 @@ def test_three_dialect_watermark_parity_on_sqlite(spark):
 
 
 def test_pg_dialect_on_duckdb_second_parser(spark):
-    """Judge r5 item #5: execute the UNMODIFIED generated PostgreSQL
-    statements (watermark upsert incl. the INSERT ... AS tgt alias and
-    DO UPDATE ... WHERE EXCLUDED guard, guarded delete, ack upsert) on
-    DuckDB — a strict Postgres-compatible parser — through the same
+    """Execute the UNMODIFIED generated PostgreSQL statements (watermark
+    upsert incl. the INSERT ... AS tgt alias and DO UPDATE ... WHERE
+    EXCLUDED guard, guarded delete) on DuckDB — a strict
+    Postgres-compatible parser — through the same
     JdbcTable/foreachPartition writer, and assert three-way state
     parity: DuckDB == SQLite == the LWW merge oracle."""
     import duckdb
 
-    from dbsync_spark.sinks.jdbc import (ack_upsert, duckdb_connect_factory,
-                                         sqlite_connect_factory)
+    from dbsync_spark.sinks.jdbc import sqlite_connect_factory
+    from tests.connect_probe import duckdb_connect
 
     workdir = tempfile.mkdtemp(prefix="dbsync_pg_duckdb_")
 
@@ -393,7 +394,7 @@ def test_pg_dialect_on_duckdb_second_parser(spark):
             with duckdb.connect(db) as c:
                 c.execute(ddl)
                 c.execute(seed)
-            connect = duckdb_connect_factory(db)
+            connect = functools.partial(duckdb_connect, db)
         else:
             with sqlite3.connect(db) as c:
                 c.execute(ddl)
@@ -428,16 +429,3 @@ def test_pg_dialect_on_duckdb_second_parser(spark):
                           F.col("w.operation").alias("op"))
                   .where(F.col("op") != "D").collect())
     assert duck == want
-
-    # ack upsert verbatim on DuckDB: insert then retry bump on conflict
-    with duckdb.connect(f"{workdir}/ack.db") as c:
-        c.execute("CREATE SCHEMA s")
-        c.execute('CREATE TABLE "s"."sync_data_status" ('
-                  "dataId BIGINT PRIMARY KEY, status VARCHAR, "
-                  "message VARCHAR, retry INT, createTime TIMESTAMP)")
-        cur = c.cursor()
-        cur.executemany(ack_upsert("s"), [[1, "OK", ""], [2, "ERR", "boom"]])
-        cur.executemany(ack_upsert("s"), [[1, "OK", ""]])
-        got = sorted(r[:4] for r in c.execute(
-            'SELECT * FROM "s"."sync_data_status"').fetchall())
-    assert got == [(1, "OK", "", 1), (2, "ERR", "boom", 0)]

@@ -5,7 +5,7 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from dbsync_spark.operators.poll import mark_polled, poll_batch
+from dbsync_spark.operators.poll import poll_batch
 from dbsync_spark.operators.route import SyncRule, condition
 from dbsync_spark.operators.status import ack
 from tests.compare import assert_matches
@@ -33,7 +33,11 @@ def test_poll_then_mark_advances(spark):
     b1 = poll_batch(log, polled, 10)
     ids1 = [r["id"] for r in b1.orderBy("id").collect()]
     assert ids1 == list(range(1, 11))
-    polled2 = mark_polled(polled, b1)
+    # marking = appending the batch's ids to the polled set
+    # (PgOperation.scala:39-44)
+    polled2 = polled.unionByName(b1.select(
+        F.col("id").alias("dataId"),
+        F.current_timestamp().alias("createTime")))
     b2 = poll_batch(log, polled2, 10)
     ids2 = [r["id"] for r in b2.orderBy("id").collect()]
     assert ids2 == list(range(11, 21))
@@ -71,40 +75,23 @@ def test_ack_retry_increments(spark):
 
 
 def test_retention_expired_complement(spark, sf_dir):
-    """expired() and sweep() partition the log exactly."""
+    """sweep() drops exactly the OK-acked rows created before the
+    cutoff and keeps every other row."""
     from pyspark.sql import functions as F
 
     from dbsync_spark.changelog import build_log_orders
-    from dbsync_spark.operators.retention import expired, sweep
+    from dbsync_spark.operators.retention import sweep
     from dbsync_spark.operators.status import derive_status_fixture
 
     log = build_log_orders(spark, sf_dir).cache()
     st = derive_status_fixture(log)
     cutoff = F.lit("1998-01-01").cast("timestamp")
-    n_exp = expired(log, st, cutoff).count()
+    ok = st.where(F.col("status") == "OK").select(F.col("dataId").alias("id"))
+    n_exp = (log.join(ok.distinct(), on="id", how="left_semi")
+             .where(F.col("createTime") < cutoff).count())
     n_kept = sweep(log, st, cutoff).count()
     assert n_exp + n_kept == log.count()
     assert n_exp > 0
-
-
-def test_counter_bucket_retention(spark, sf_dir):
-    """A2 bounded retention: keep only the newest N buckets
-    (sync/ComponentManager.scala:93-106 semantics)."""
-    from dbsync_spark.operators.window_agg import (
-        daily_counts,
-        hourly_counts,
-        retain_recent_buckets,
-    )
-    from dbsync_spark.sources.tables import read_table
-
-    events = read_table(spark, sf_dir, "events")
-    hourly = hourly_counts(events, "ts")
-    kept = retain_recent_buckets(hourly, 24)
-    assert kept.count() == 24
-    newest_all = hourly.agg(F.max("bucket_start")).first()[0]
-    assert kept.agg(F.max("bucket_start")).first()[0] == newest_all
-    daily = daily_counts(events, "ts")
-    assert retain_recent_buckets(daily, 7).count() == 7
 
 
 def test_approx_count_distinct_error_bound(spark, sf_dir):

@@ -83,7 +83,7 @@ SAMPLE = (
     "q_hash_sample",          # training
 )
 
-from dbsync_spark.plans import plan_text as _plan  # noqa: E402
+from tests.plans import plan_text as _plan  # noqa: E402
 
 
 @pytest.fixture(scope="module", params=[
@@ -122,7 +122,7 @@ def test_broadcast_nested_loop_only_where_intended(plans):
 def test_no_global_window_on_fact_tables(plans):
     """A window spec with an empty PARTITION BY forces every row through
     one task. Only allowed for declared dimension-table queries."""
-    from dbsync_spark.plans import _has_global_window
+    from tests.plans import _has_global_window
 
     bad = [name for name, plan in plans.items()
            if name not in GLOBAL_WINDOW_ALLOWED | LOG_FIXTURE_CONSUMERS
@@ -135,7 +135,7 @@ def test_audit_plan_api(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from dbsync_spark.plans import audit_plan
+    from tests.plans import audit_plan
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     good = (li.where(F.col("l_quantity") > 10)

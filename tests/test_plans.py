@@ -128,7 +128,7 @@ def test_from_json_schema_pruned_to_accessed_fields(spark, sf_dir):
     one column and nine."""
     from dbsync_spark.changelog import ORDERS_PAYLOAD_SCHEMA, build_log_orders
     from dbsync_spark.operators.apply import parse_changes
-    from dbsync_spark.plans import plan_text
+    from tests.plans import plan_text
 
     changes = parse_changes(build_log_orders(spark, sf_dir),
                             ORDERS_PAYLOAD_SCHEMA)

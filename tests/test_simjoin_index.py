@@ -254,7 +254,7 @@ def test_compact_preserves_h_sort(spark, tmp_path):
 # operator run, micro-batch or maintenance tick. _jobs counts only the
 # calling thread's jobs, so process_batch's concurrent delta writers
 # and width stat (pool threads) are not in these numbers.
-SIMJOIN_JOBS = {"similarity_join": 20, "containment_join": 20,
+SIMJOIN_JOBS = {"similarity_join": 19, "containment_join": 19,
                 "similarity_join_incremental": 22,
                 "process_batch": [24, 37, 37], "forget": 2, "compact": 12,
                 "compact_repeat": 0}

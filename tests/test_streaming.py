@@ -75,10 +75,7 @@ def test_streaming_hourly_counts_with_watermark(spark, sf_dir):
     stream equal the batch aggregation once the stream drains."""
     import tempfile
 
-    from dbsync_spark.operators.window_agg import (
-        hourly_counts,
-        hourly_counts_streaming,
-    )
+    from dbsync_spark.operators.window_agg import hourly_counts
     from dbsync_spark.sources.tables import read_table
 
     workdir = tempfile.mkdtemp(prefix="dbsync_wm_")
@@ -90,7 +87,7 @@ def test_streaming_hourly_counts_with_watermark(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{workdir}/events")
     )
-    agg = hourly_counts_streaming(stream, "ts", watermark="2 hours")
+    agg = hourly_counts(stream.withWatermark("ts", "2 hours"), "ts")
     q = (
         agg.writeStream.format("memory").queryName("wm_counts")
         .outputMode("complete")

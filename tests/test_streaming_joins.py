@@ -1,81 +1,10 @@
-"""Stream-stream interval join and streaming dedup: streaming results must
+"""Streaming index services (dedup, IVF, span): streaming results must
 equal the batch equivalents (the batch plan is the oracle)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
-
-from dbsync_spark.schemas import SYNC_DATA_SCHEMA  # noqa: F401  (import check)
-from dbsync_spark.sources.tables import read_table
-from dbsync_spark.streaming.joins import dedup_within_watermark, interval_join
-
-EVENTS_DDL = ("event_id LONG, ts TIMESTAMP, user_id LONG, "
-              "event_type STRING, value DOUBLE, props STRING")
-
-
-def _write_single_file(df, path):
-    df.coalesce(1).write.parquet(path)
-
-
-def test_interval_join_stream_equals_batch(spark, sf_dir):
-    """Purchases joined to views of the same user within 30 minutes:
-    the streaming interval join over file sources returns exactly the
-    batch join's rows."""
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props")
-    views = ev.where(F.col("event_type") == "view")
-    purchases = ev.where(F.col("event_type") == "purchase")
-
-    workdir = tempfile.mkdtemp(prefix="dbsync_ssj_")
-    _write_single_file(views, f"{workdir}/views")
-    _write_single_file(purchases, f"{workdir}/purchases")
-
-    vs = spark.readStream.schema(EVENTS_DDL).parquet(f"{workdir}/views")
-    ps = spark.readStream.schema(EVENTS_DDL).parquet(f"{workdir}/purchases")
-    joined = interval_join(vs, ps, key="user_id", left_ts="ts",
-                           right_ts="ts", max_delay="30 MINUTES")
-    out = joined.select("event_id", F.col("event_id_r").alias("purchase_id"))
-    q = (out.writeStream.format("memory").queryName("ssj")
-         .outputMode("append")
-         .option("checkpointLocation", f"{workdir}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = spark.sql("SELECT * FROM ssj")
-    expected = interval_join(views, purchases, key="user_id", left_ts="ts",
-                             right_ts="ts", max_delay="30 MINUTES").select(
-        "event_id", F.col("event_id_r").alias("purchase_id"))
-    assert got.count() == expected.count()
-    assert got.count() > 0
-    assert got.exceptAll(expected).count() == 0
-    assert expected.exceptAll(got).count() == 0
-
-
-def test_dedup_within_watermark_stream(spark, sf_dir):
-    """An at-least-once feed (every event delivered twice) deduped on
-    event_id yields exactly one row per event — via streaming state with
-    watermark eviction."""
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props")
-    dup = ev.unionByName(ev)  # exact replays, same event time
-
-    workdir = tempfile.mkdtemp(prefix="dbsync_dd_")
-    _write_single_file(dup, f"{workdir}/feed")
-    fs = spark.readStream.schema(EVENTS_DDL).parquet(f"{workdir}/feed")
-    deduped = dedup_within_watermark(fs, ["event_id"], "ts", "1 hour")
-    q = (deduped.writeStream.format("memory").queryName("dd")
-         .outputMode("append")
-         .option("checkpointLocation", f"{workdir}/ckpt")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = spark.sql("SELECT event_id, count(*) AS c FROM dd GROUP BY event_id")
-    n_events = ev.count()
-    assert got.count() == n_events
-    assert got.where(F.col("c") != 1).count() == 0
 
 
 @pytest.mark.slow
